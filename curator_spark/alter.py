@@ -39,19 +39,15 @@ from __future__ import annotations
 import re
 
 from .checkpoint import (
-    _mint_physical, column_mapping, detect_backend, make_ledger)
+    _mint_physical, column_mapping, make_ledger)
 
 __all__ = ["add_column", "drop_column", "rename_column"]
 
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
-def _ledger_and_meta(out_dir: str, backend: str | None, ledger=None):
-    ledger = ledger or make_ledger(out_dir,
-                                   backend or detect_backend(out_dir))
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("ALTER TABLE requires the commitlog ledger "
-                         "(markers tables keep no schema metadata)")
+def _ledger_and_meta(out_dir: str, ledger=None):
+    ledger = ledger or make_ledger(out_dir)
     meta = ledger.table_meta()
     if not meta.get("schema"):
         raise ValueError("table has no recorded schema yet — ALTER "
@@ -108,12 +104,11 @@ def _feature_needed(meta: dict) -> bool:
     return "column-mapping" not in set(proto.get("reader_features") or [])
 
 
-def rename_column(out_dir: str, old: str, new: str,
-                  backend: str | None = None, ledger=None) -> int:
+def rename_column(out_dir: str, old: str, new: str, ledger=None) -> int:
     """ALTER TABLE RENAME COLUMN old TO new — one metadata commit, zero
     data I/O, valid against every existing and in-flight file. Returns
     the commit version."""
-    ledger, meta = _ledger_and_meta(out_dir, backend, ledger)
+    ledger, meta = _ledger_and_meta(out_dir, ledger)
     if not _IDENT.match(new or ""):
         raise ValueError(f"invalid column name {new!r}")
     fields = [dict(f) for f in meta["schema"]["fields"]]
@@ -137,14 +132,13 @@ def rename_column(out_dir: str, old: str, new: str,
         "column_mapping": cm}, _feature_needed(meta))
 
 
-def drop_column(out_dir: str, col: str,
-                backend: str | None = None, ledger=None) -> int:
+def drop_column(out_dir: str, col: str, ledger=None) -> int:
     """ALTER TABLE DROP COLUMN — metadata-only: readers stop projecting
     the physical column; its bytes remain in existing files until
     compaction naturally rewrites them. The physical name is RETIRED so
     a later ADD of the same logical name can never read the dropped
     column's stale values. Returns the commit version."""
-    ledger, meta = _ledger_and_meta(out_dir, backend, ledger)
+    ledger, meta = _ledger_and_meta(out_dir, ledger)
     fields = [dict(f) for f in meta["schema"]["fields"]]
     names = [f["name"] for f in fields]
     if col not in names:
@@ -165,8 +159,7 @@ def drop_column(out_dir: str, col: str,
         "retired_physical": sorted(set(retired))}, _feature_needed(meta))
 
 
-def add_column(out_dir: str, col: str, ddl_type: str,
-               backend: str | None = None, ledger=None) -> int:
+def add_column(out_dir: str, col: str, ddl_type: str, ledger=None) -> int:
     """ALTER TABLE ADD COLUMN col ddl_type — the explicit-DDL face of
     the additive evolution `record_table_schema` already performs
     implicitly on widened writes. Always nullable (existing files hold
@@ -176,7 +169,7 @@ def add_column(out_dir: str, col: str, ddl_type: str,
         FloatType, IntegerType, LongType, StringType, StructField,
         TimestampType)
 
-    ledger, meta = _ledger_and_meta(out_dir, backend, ledger)
+    ledger, meta = _ledger_and_meta(out_dir, ledger)
     if not _IDENT.match(col or ""):
         raise ValueError(f"invalid column name {col!r}")
     fields = [dict(f) for f in meta["schema"]["fields"]]

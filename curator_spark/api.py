@@ -16,7 +16,7 @@ deterministic quality-filter payload:
 * Called with an input path → runs the checkpointed pipeline
   (per-partition ledger, resume, lineage, metrics) into a
   fingerprint-derived run directory under cache_dir and returns the
-  result DataFrame read back from storage — the analogue of the
+  committed snapshot read back from storage — the analogue of the
   reference's run-cache short-circuit (llm/llm.py:138-163 fingerprint,
   base_request_processor.py:282-303 cache load).
 """
@@ -27,7 +27,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .checkpoint import run_checkpointed, run_fingerprint
+from .checkpoint import (check_ledger_backend, read_committed,
+                         run_checkpointed, run_fingerprint)
 from .ingest import coerce_to_transcripts
 from .pipeline import run_pipeline_df
 
@@ -37,19 +38,17 @@ class QualityFilter:
                  broadcast_conv_aggs: bool | None = None,
                  params: dict | None = None,
                  strict: bool = False,
-                 ledger_backend: str = "markers") -> None:
+                 ledger_backend: str = "commitlog") -> None:
         """strict: fail-all policy — a durable run raises instead of
         committing when error rows are present (reference
         require_all_responses, base_request_processor.py:398-426).
-        ledger_backend: 'markers' (POSIX-rename marker files) or
-        'commitlog' (put-if-absent versioned transaction log with
-        log-defined data visibility — the object-store-safe protocol;
-        durable reads then go through the snapshot reader)."""
+        ledger_backend: the commit protocol; only 'commitlog' (the
+        put-if-absent versioned transaction log) exists."""
+        check_ledger_backend(ledger_backend)
         self.cache_dir = cache_dir
         self.broadcast_conv_aggs = broadcast_conv_aggs
         self.params = params or {}
         self.strict = strict
-        self.ledger_backend = ledger_backend
         self.last_run: dict | None = None  # summary of the last durable run
 
     def __call__(self, dataset=None, *,
@@ -78,11 +77,8 @@ class QualityFilter:
         self.last_run = run_checkpointed(
             spark, input_path, out_dir, params=self.params,
             broadcast_conv_aggs=self.broadcast_conv_aggs,
-            strict=self.strict, ledger_backend=self.ledger_backend)
-        if self.ledger_backend == "commitlog":
-            from .checkpoint import read_committed
-            return read_committed(spark, out_dir, self.ledger_backend)
-        return spark.read.parquet(os.path.join(out_dir, "data"))
+            strict=self.strict)
+        return read_committed(spark, out_dir)
 
     def metrics(self, spark: SparkSession) -> DataFrame | None:
         """Counter metrics of the last durable run (reference:

@@ -50,7 +50,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpoint import detect_backend, make_ledger
+from .checkpoint import make_ledger
 from .feed import _commit_cursor, consumer_position
 
 CHANGE_COL = "_change_type"
@@ -130,8 +130,7 @@ def _side_paths(out_dir: str, sides: dict[int, dict]) -> list[str]:
 
 
 def row_changes(spark: SparkSession, out_dir: str, since_version: int,
-                until_version: int | None = None,
-                backend: str | None = None) -> DataFrame:
+                until_version: int | None = None) -> DataFrame:
     """The row images changed in versions (since, until]: the table's
     columns plus `_change_type` in {'insert', 'delete'}, satisfying the
     exact multiset identity
@@ -144,11 +143,7 @@ def row_changes(spark: SparkSession, out_dir: str, since_version: int,
     from pyspark.sql.types import StructType
 
     from . import schema as _schema
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("row-level change feed requires the commitlog "
-                         "ledger")
+    ledger = make_ledger(out_dir)
     until = until_version if until_version is not None \
         else (ledger.latest_version() or 0)
     # validate bounds exactly like table_changes — a typo'd version must
@@ -228,8 +223,7 @@ def apply_row_changes(state: DataFrame, delta: DataFrame) -> DataFrame:
 
 def consume_row_changes(spark: SparkSession, out_dir: str,
                         consumer_id: str,
-                        sink: Callable[[DataFrame, int, int], None],
-                        backend: str | None = None) -> dict:
+                        sink: Callable[[DataFrame, int, int], None]) -> dict:
     """One poll of the ROW-LEVEL feed with the same durable cursor as
     `feed.consume_changes`: hand `sink(delta_df, since, until)` the
     window's row images, then advance the cursor. A window whose
@@ -237,11 +231,7 @@ def consume_row_changes(spark: SparkSession, out_dir: str,
     the cursor without starting a Spark job. Crash inside the sink →
     the identical window replays next poll (exactly-once end to end
     with an idempotent sink, e.g. a view snapshot keyed on `until`)."""
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("row-level change-feed consumption requires "
-                         "the commitlog ledger")
+    ledger = make_ledger(out_dir)
     since = consumer_position(out_dir, consumer_id)
     head = ledger.latest_version() or 0
     if head <= since:
@@ -251,7 +241,7 @@ def consume_row_changes(spark: SparkSession, out_dir: str,
     n_files = sum(len(v) for v in removed.values()) \
         + sum(len(v) for v in added.values())
     if n_files:
-        sink(row_changes(spark, out_dir, since, head, backend),
+        sink(row_changes(spark, out_dir, since, head),
              since, head)
     _commit_cursor(out_dir, consumer_id, head, 0)
     return {"since": since, "until": head, "advanced": True,
@@ -260,8 +250,7 @@ def consume_row_changes(spark: SparkSession, out_dir: str,
 
 def consume_into_view(spark: SparkSession, out_dir: str,
                       consumer_id: str, view_dir: str,
-                      keys: list[str], measures: dict[str, str],
-                      backend: str | None = None) -> dict:
+                      keys: list[str], measures: dict[str, str]) -> dict:
     """Incrementally maintain an additive aggregate view of the table —
     GROUP BY `keys` with SUM `measures` (SQL expressions over the
     table's columns) — from the row-level feed, exactly-once.
@@ -300,7 +289,7 @@ def consume_into_view(spark: SparkSession, out_dir: str,
             os.replace(tmp, final)
 
     os.makedirs(view_dir, exist_ok=True)
-    r = consume_row_changes(spark, out_dir, consumer_id, _sink, backend)
+    r = consume_row_changes(spark, out_dir, consumer_id, _sink)
     if r["advanced"] and r["planned_files"] == 0 and prev is not None:
         # metadata-only window: carry the previous snapshot forward so
         # read_view(cursor) always resolves

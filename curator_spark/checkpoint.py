@@ -10,39 +10,44 @@ Reference parity:
   skip partitions that have a ledger commit marker;
 * batch lifecycle state machine persisted after every transition
   (reference: batch_status_tracker.py:308-360, batch_objects.jsonl) →
-  one JSON marker file per committed partition, written AFTER the data
-  (write-data-then-marker ordering makes a crash between the two safe:
-  the partition is rewritten by dynamic partition overwrite on resume);
+  one log version per committed partition, published AFTER its data
+  files land (a crash between the two leaves only unreferenced files:
+  the partition has no commit and recomputes on resume);
 * counter metrics (reference: online_status_tracker.py:40-78) → a
   per-(run, part) metrics parquet table;
 * lineage rows in SQLite (reference: db.py:78-131) → _meta/run_*.json.
 
-Output layout (an Iceberg-commit stand-in):
+Output layout (a Delta/Iceberg-commit stand-in):
 
   out_dir/
-    data/part=K/*.parquet     scored+filtered turns
-    _ledger/part-K.json       commit marker: {run_id, part, status, n_rows}
+    data/part=K/*.parquet     scored+filtered turns (plus orphans of
+                              superseded commits until `vacuum`)
+    _commitlog/v<N>.json      the ledger: numbered immutable versions
+                              of add/remove/run-success/... actions
     _metrics/*.parquet        METRICS_SCHEMA rows
     _meta/run_<id>.json       lineage
     _scored-<run>-<shard>/    transient staged scoring scratch (scoped
                               per invocation so concurrent only_parts
                               shards never clobber each other; removed
                               after the shard's commits land)
-    _SUCCESS_RUN              whole-run completion marker (memoization)
 
-The ledger is PLUGGABLE (ledger_backend=): `markers` is the layout
-above (one POSIX-rename'd JSON marker per partition); `commitlog` is a
-Delta-protocol-style versioned transaction log (_commitlog/vNNN.json,
-put-if-absent commits) whose atomicity story transfers to object
-stores, where rename is not atomic — see CommitLogLedger. Both
-backends pass the identical kill/resume/corruption/concurrency suite
-(tests/test_checkpoint.py is parametrized over them).
+ONE ledger governs every table: CommitLogLedger, a versioned
+transaction log published with put-if-absent, whose atomicity transfers
+to object stores (where rename is not atomic). The commit manifests
+define which files are live; every read goes through the snapshot
+reader. The atomic store under it is pluggable (ATOMIC_STORES: os.link,
+conditional put, S3), and tests/test_checkpoint.py runs the
+kill/resume/corruption/concurrency suite over each store. Output dirs
+written by the retired per-partition marker layout (_ledger/ +
+_SUCCESS_RUN) are refused by every surface until `adopt_markers`
+converts them into one commit.
 
-Resume re-validates every committed partition (footer row counts vs
-ledger n_rows) before trusting its marker — including before honoring
-the whole-run memo marker, so corruption introduced after a completed
-run is still detected on the next invocation; mismatches recompute
-that partition (reference: base_request_processor.py:120-167).
+Resume re-validates every committed partition (footer rows/bytes vs
+its commit's file manifest) before trusting its commit — including
+before honoring the whole-run memo marker, so corruption introduced
+after a completed run is still detected on the next invocation;
+mismatches recompute that partition (reference:
+base_request_processor.py:120-167).
 """
 
 from __future__ import annotations
@@ -245,74 +250,6 @@ def get_atomic_store():
         "CURATOR_SPARK_ATOMIC_STORE", "oslink")]()
 
 
-class MarkerLedger:
-    """Commit ledger as one JSON marker file per partition plus a
-    whole-run _SUCCESS_RUN marker, each published with a POSIX
-    tmp-write + os.replace. Correct wherever rename is atomic (POSIX
-    filesystems, driver-attached storage); on object stores use
-    CommitLogLedger instead."""
-
-    name = "markers"
-    # markers backend: a partition's dir content IS its committed state
-    # (atomic dir swap at publish), so validation demands exact equality
-    # between manifest and on-disk file set
-    log_defined_visibility = False
-
-    def __init__(self, out_dir: str) -> None:
-        self.out_dir = out_dir
-        self.dir = os.path.join(out_dir, "_ledger")
-        self._success = os.path.join(out_dir, "_SUCCESS_RUN")
-
-    def committed(self) -> dict[int, dict | None]:
-        """{part: marker} for every committed partition; an unreadable
-        marker maps to None (revalidation treats it as invalid)."""
-        if not os.path.isdir(self.dir):
-            return {}
-        out: dict[int, dict | None] = {}
-        for fn in os.listdir(self.dir):
-            if fn.startswith("part-") and fn.endswith(".json"):
-                part = int(fn[len("part-"):-len(".json")])
-                try:
-                    with open(os.path.join(self.dir, fn)) as f:
-                        out[part] = json.load(f)
-                except Exception:
-                    out[part] = None
-        return out
-
-    def commit_part(self, marker: dict) -> None:
-        os.makedirs(self.dir, exist_ok=True)
-        part = int(marker["part"])
-        tmp = os.path.join(self.dir, f".part-{part}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(marker, f)
-        os.replace(tmp, os.path.join(self.dir, f"part-{part}.json"))
-
-    def drop_part(self, part: int) -> None:
-        try:
-            os.remove(os.path.join(self.dir, f"part-{part}.json"))
-        except FileNotFoundError:
-            pass
-
-    def run_success(self) -> dict | None:
-        try:
-            with open(self._success) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
-
-    def mark_run_success(self, run_id: str, n_parts: int) -> None:
-        tmp = self._success + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"run_id": run_id, "n_parts": int(n_parts)}, f)
-        os.replace(tmp, self._success)
-
-    def drop_run_success(self) -> None:
-        try:
-            os.remove(self._success)
-        except FileNotFoundError:
-            pass
-
-
 # -- protocol versioning (Delta's `protocol` action) ------------------
 # What THIS library build can read and write. A table carries a minimum
 # protocol requirement in its log; an implementation below it must
@@ -429,7 +366,7 @@ class CommitLogLedger:
     bounded by periodic snapshot/checkpoint files exactly as Delta
     does; at 10^5 partitions the raw replay is already driver-trivial.
 
-    Data visibility is LOG-DEFINED under this backend: publish never
+    Data visibility is LOG-DEFINED: publish never
     renames or displaces existing data — each shard's files land under
     data/part=K/ with shard-unique names (one put per file, no
     copy-based "rename" of old data on an object store), and the commit
@@ -439,9 +376,6 @@ class CommitLogLedger:
     it and reclaimed by `vacuum` — exactly Delta's add/remove +
     VACUUM semantics.
     """
-
-    name = "commitlog"
-    log_defined_visibility = True
 
     # every Nth commit also writes a LOG CHECKPOINT — the full replayed
     # state at that version as one file (Delta writes parquet
@@ -982,64 +916,66 @@ class CommitLogLedger:
         self._append([{"type": "clear_run_success"}])
 
 
-LEDGER_BACKENDS = {"markers": MarkerLedger, "commitlog": CommitLogLedger}
+LEGACY_MARKERS = ("_ledger", "_SUCCESS_RUN")
 
 
-def make_ledger(out_dir: str, backend: str = "markers"):
-    return LEDGER_BACKENDS[backend](out_dir)
+def check_ledger_backend(backend: str) -> None:
+    """The `backend`/`ledger_backend` keywords name the commit protocol;
+    the commit log is the only one."""
+    if backend != "commitlog":
+        raise ValueError(
+            f"unknown ledger backend {backend!r}: the commit log is the "
+            "only ledger ('commitlog')")
 
 
-def detect_backend(out_dir: str) -> str:
-    """Which ledger governs this output dir: 'commitlog' iff a
-    transaction log exists. Used as the default by the read-side
-    surfaces (read_committed, vacuum, run_status) so a caller can't
-    accidentally interrogate a run through the wrong backend — e.g.
-    vacuum'ing a markers-ledger table through an empty commit log,
-    which would classify every committed file as an orphan. A commit
-    log counts only when it holds at least one version (an empty
-    _commitlog dir is debris, not governance); true mixed dirs cannot
-    arise — run_checkpointed refuses to commit under a second backend."""
-    d = os.path.join(out_dir, "_commitlog")
-    if os.path.isdir(d) and any(f.startswith("v") and f.endswith(".json")
-                                for f in os.listdir(d)):
-        return "commitlog"
-    return "markers"
+def make_ledger(out_dir: str, backend: str = "commitlog"):
+    """The ledger governing `out_dir` — always a CommitLogLedger.
+    `backend` accepts only "commitlog" (check_ledger_backend).
+
+    Refuses a dir written by the retired per-partition marker layout
+    (_ledger/part-K.json + _SUCCESS_RUN) that has no commit log: every
+    surface opens its table here, so none of them can misread such a
+    dir as an empty table (vacuum would classify every file as an
+    orphan, a run would recompute everything). `adopt_markers` converts
+    it. A dir holding both is an adoption whose cleanup was cut short:
+    the commit log governs."""
+    check_ledger_backend(backend)
+    ledger = CommitLogLedger(out_dir)
+    if any(os.path.exists(os.path.join(out_dir, n))
+           for n in LEGACY_MARKERS) and not ledger._versions():
+        raise ValueError(
+            f"{out_dir} holds a legacy marker ledger (_ledger/, "
+            "_SUCCESS_RUN) and no commit log; convert it once with "
+            f"curator_spark.checkpoint.adopt_markers({out_dir!r})")
+    return ledger
 
 
 def create_table(out_dir: str) -> int:
-    """CREATE TABLE IF NOT EXISTS for the commitlog backend: publish an
-    empty version 1 (no actions — the Delta 'create' commit analogue)
-    so append-only writers (incremental appends, streaming ingestion)
-    can target a fresh directory without a prior batch run. Idempotent:
-    an existing commitlog table is left untouched (its head version is
-    returned); a markers-governed dir is refused — mixed governance
-    cannot arise."""
-    existing = detect_backend(out_dir)
-    if existing == "commitlog":
-        return make_ledger(out_dir, "commitlog").latest_version()
-    if os.path.isdir(out_dir) and any(
-            f.startswith("_ledger") for f in os.listdir(out_dir)):
-        raise ValueError(
-            f"{out_dir} is governed by the markers ledger; refusing to "
-            "overlay a commit log (mixed governance)")
+    """CREATE TABLE IF NOT EXISTS: publish an empty version 1 (no
+    actions — the Delta 'create' commit analogue) so append-only
+    writers (incremental appends, streaming ingestion) can target a
+    fresh directory without a prior batch run. Idempotent: an existing
+    table is left untouched (its head version is returned)."""
+    ledger = make_ledger(out_dir)
+    head = ledger.latest_version()
+    if head is not None:
+        return head
     os.makedirs(out_dir, exist_ok=True)
-    return make_ledger(out_dir, "commitlog")._append([])
+    return ledger._append([])
 
 
-def committed_parts(out_dir: str, backend: str = "markers") -> set[int]:
-    return set(make_ledger(out_dir, backend).committed())
+def committed_parts(out_dir: str) -> set[int]:
+    return set(make_ledger(out_dir).committed())
 
 
-def part_manifest(out_dir: str, part: int,
-                  lenient: bool = False) -> dict | None:
-    """{file name: {n_rows, n_bytes}} for a committed partition, read
-    from parquet footers + stat — no data I/O. None if the partition
-    dir is missing or (strict mode) any file is unreadable/truncated.
-    lenient=True instead SKIPS unreadable files — used by the
-    log-defined-visibility backend, where a corrupt ORPHAN (a file no
-    manifest references) must not invalidate the partition forever (a
-    referenced-but-corrupt file still fails validation, because its
-    manifest entry finds no on-disk match)."""
+def part_manifest(out_dir: str, part: int) -> dict | None:
+    """{file name: {n_rows, n_bytes}} for the readable parquet files in
+    a partition dir, from parquet footers + stat — no data I/O. None if
+    the partition dir is missing. Unreadable/truncated files are
+    SKIPPED: a corrupt ORPHAN (a file no manifest references) must not
+    invalidate the partition forever, while a referenced-but-corrupt
+    file still fails validation because its manifest entry finds no
+    on-disk match."""
     import pyarrow.parquet as pq
     d = os.path.join(out_dir, "data", f"part={part}")
     if not os.path.isdir(d):
@@ -1052,8 +988,7 @@ def part_manifest(out_dir: str, part: int,
                 out[fn] = {"n_rows": pq.ParquetFile(fp).metadata.num_rows,
                            "n_bytes": os.path.getsize(fp)}
             except Exception:  # truncated/corrupt file
-                if not lenient:
-                    return None
+                continue
     return out
 
 
@@ -1189,8 +1124,7 @@ def _bloom_may_contain(s: dict, val) -> bool:
 
 
 def build_bloom_index(spark: SparkSession, out_dir: str, col: str,
-                      m_bits: int = 2048, k: int = 4,
-                      backend: str | None = None) -> dict:
+                      m_bits: int = 2048, k: int = 4) -> dict:
     """Build a per-file BLOOM FILTER INDEX for `col` (Delta's bloom
     filter index / Iceberg's bloom write property, as a maintenance
     pass): after this, every EQUALITY probe on the column — read_committed
@@ -1222,10 +1156,7 @@ def build_bloom_index(spark: SparkSession, out_dir: str, col: str,
 
     from pyspark.sql.types import StructField, StructType
 
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("bloom index requires the commitlog ledger "
-                         "(the index lives in commit stats)")
+    ledger = make_ledger(out_dir)
     committed, _s, meta, _t = ledger.snapshot()
     pcol = physical_name(meta, col)
     pstruct = physical_struct(meta)
@@ -1380,8 +1311,6 @@ def record_table_schema(ledger, spark_schema) -> None:
     reads then PLAN with the declared schema — no footer-sampling
     inference I/O — and old files simply read nulls for later-added
     columns. Idempotent; widening commits one merged-meta version."""
-    if not getattr(ledger, "log_defined_visibility", False):
-        return
     old = ledger.table_meta().get("schema")
     new = spark_schema.jsonValue()
     merged = _merge_schema_json(old, new) if old else new
@@ -1511,93 +1440,153 @@ def _refuse_mapped(meta: dict, verb: str) -> None:
 def revalidate_committed(out_dir: str, ledger=None) -> tuple[set[int], set[int]]:
     """Cache-integrity verification on resume (reference:
     base_request_processor.py:120-167 — per chunk: files exist, counts
-    reconcile, else regenerate THAT chunk). For each ledger marker,
-    compare its recorded file manifest against the partition's on-disk
-    parquet footers; on mismatch/corruption drop the marker so the part
-    is recomputed. A committed ZERO-row partition legitimately has no
-    data directory — its marker records n_rows=0 with an empty
-    manifest and validates against a missing dir. Returns
+    reconcile, else regenerate THAT chunk). For each committed
+    partition, every file its manifest names must exist with matching
+    footer rows + size; on mismatch/corruption the partition's commit is
+    dropped so it recomputes. EXTRA on-disk files are orphans of
+    superseded commits, not corruption (vacuum reclaims them), and an
+    empty manifest (zero-row commit) is trivially satisfied. Returns
     (valid, invalidated)."""
-    ledger = ledger or MarkerLedger(out_dir)
-    log_vis = getattr(ledger, "log_defined_visibility", False)
+    ledger = ledger or make_ledger(out_dir)
     valid: set[int] = set()
     invalid: set[int] = set()
     for part, marker in sorted(ledger.committed().items()):
-        on_disk = part_manifest(out_dir, part, lenient=log_vis)
-        ok = False
-        if marker is not None:
-            files = marker.get("files")
-            if log_vis:
-                # log-defined visibility: the manifest's files must each
-                # exist with matching footer rows + size; EXTRA on-disk
-                # files are orphans of superseded commits, not
-                # corruption (vacuum reclaims them). An empty manifest
-                # (zero-row commit) is trivially satisfied.
-                on = on_disk or {}
-                ok = (files is not None
-                      and all(on.get(name) == meta
-                              for name, meta in files.items()))
-            elif int(marker.get("n_rows", -1)) == 0 and not files:
-                # empty partition: valid with no dir (or an empty one)
-                ok = not on_disk
-            elif on_disk is not None:
-                if "files" in marker:
-                    # file-level check: exact file set + per-file row
-                    # counts and sizes — catches a same-rowcount file
-                    # swap that a bare partition total would miss
-                    ok = files == on_disk
-                else:  # marker from an older layout: row-count reconcile
-                    ok = (int(marker.get("n_rows", -1))
-                          == sum(f["n_rows"] for f in on_disk.values()))
-        if ok:
+        files = (marker or {}).get("files")
+        on_disk = part_manifest(out_dir, part) or {}
+        if files is not None and all(on_disk.get(name) == meta
+                                     for name, meta in files.items()):
             valid.add(part)
-        else:
-            runs = (marker or {}).get("runs") or []
-            if len(runs) > 1:
-                # A multi-run partition (incremental appends) that fails
-                # validation must NOT silently recompute: run_checkpointed
-                # would rebuild it from ONE input and drop every other
-                # run's appended rows. Fail loudly with the rebuild path.
-                raise RuntimeError(
-                    f"partition {part} failed integrity validation but "
-                    f"holds appended data from runs {runs}; recomputing "
-                    "from a single input would drop the appended rows — "
-                    "rebuild it from the inputs recorded in _meta/ "
-                    "lineage, or drop its marker explicitly")
-            ledger.drop_part(part)
-            invalid.add(part)
+            continue
+        runs = (marker or {}).get("runs") or []
+        if len(runs) > 1:
+            # A multi-run partition (incremental appends) that fails
+            # validation must NOT silently recompute: run_checkpointed
+            # would rebuild it from ONE input and drop every other
+            # run's appended rows. Fail loudly with the rebuild path.
+            raise RuntimeError(
+                f"partition {part} failed integrity validation but "
+                f"holds appended data from runs {runs}; recomputing "
+                "from a single input would drop the appended rows — "
+                "rebuild it from the inputs recorded in _meta/ "
+                "lineage, or drop its marker explicitly")
+        ledger.drop_part(part)
+        invalid.add(part)
     return valid, invalid
 
 
-def _commit_part(out_dir: str, run_id: str, part: int, n_rows: int,
-                 ledger=None, files: dict | None = None,
-                 stats: dict | None = None) -> None:
-    ledger = ledger or MarkerLedger(out_dir)
-    if files is None:
-        files = (part_manifest(out_dir, part) or {}) if n_rows else {}
-        if stats is None and files:
-            d = os.path.join(out_dir, "data", f"part={int(part)}")
-            stats = {fn: file_column_stats(os.path.join(d, fn))
-                     for fn in files}
-    ledger.commit_part({
+def _part_marker(run_id: str | None, part: int, n_rows: int, files: dict,
+                 stats: dict | None = None) -> dict:
+    """The `add` action's marker for one committed partition."""
+    return {
         "run_id": run_id, "part": int(part), "status": "COMMITTED",
         "n_rows": int(n_rows),
-        # file-level manifest (name → rows/bytes from footers): the
-        # commit records exactly which files constitute the partition,
-        # so resume validation detects swapped/extra/missing files even
-        # when totals happen to agree. A zero-row partition commits an
-        # empty manifest (no data dir is its valid on-disk state).
-        # Under log-defined visibility the manifest is passed in
-        # explicitly (this shard's files only) and IS the partition.
+        # file-level manifest (name → rows/bytes from footers): exactly
+        # the files that constitute the partition, so resume validation
+        # detects swapped/missing files even when totals agree. A
+        # zero-row partition commits an empty manifest.
         "files": files,
         # per-file column min/max/null stats for read-side data
         # skipping (read_committed where=). OPTIONAL and validation-
         # inert: integrity checks compare only `files`, so stats can't
-        # invalidate a partition and older markers without them read
-        # fine (they just never prune).
+        # invalidate a partition (files without them just never prune).
         "stats": stats or {},
         "updated_at": datetime.now(timezone.utc).isoformat(),
-    })
+    }
+
+
+def adopt_markers(out_dir: str) -> dict:
+    """Convert an output dir written by the retired per-partition marker
+    layout (_ledger/part-K.json + _SUCCESS_RUN, data/part=K/ holding
+    exactly the committed files) into a commit-log table, in place and
+    without rewriting data.
+
+    Each marker is revalidated against its partition's parquet footers
+    first (the same file-level check resume applies; a marker without a
+    file list reconciles its row total). Partitions that validate are
+    published with fresh footer stats, together with the run-success
+    marker (carried only when every partition validated) and the
+    table's schema, as ONE commit-log version. A partition that fails
+    is left out: its files become orphans for `vacuum`, and the next
+    run recomputes it. Only after that version lands are _ledger/ and
+    _SUCCESS_RUN removed, so a crash at any point leaves a dir that a
+    rerun adopts to the same state (a dir that already has a commit log
+    only gets the cleanup).
+
+    Returns {version, parts_adopted, parts_dropped, run_success}."""
+    import shutil
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    ledger_dir = os.path.join(out_dir, "_ledger")
+    success_path = os.path.join(out_dir, "_SUCCESS_RUN")
+    ledger = CommitLogLedger(out_dir)
+    summary = {"version": ledger.latest_version(), "parts_adopted": [],
+               "parts_dropped": [], "run_success": False}
+    if summary["version"] is None:
+        if not any(os.path.exists(os.path.join(out_dir, n))
+                   for n in LEGACY_MARKERS):
+            raise ValueError(f"{out_dir} has no marker ledger to adopt")
+        markers: dict[int, dict | None] = {}
+        if os.path.isdir(ledger_dir):
+            for fn in os.listdir(ledger_dir):
+                if fn.startswith("part-") and fn.endswith(".json"):
+                    try:
+                        with open(os.path.join(ledger_dir, fn)) as f:
+                            markers[int(fn[5:-5])] = json.load(f)
+                    except (OSError, ValueError):
+                        markers[int(fn[5:-5])] = None
+        actions: list[dict] = []
+        table_schema = None
+        for part, marker in sorted(markers.items()):
+            on_disk = part_manifest(out_dir, part) or {}
+            n_rows = sum(f["n_rows"] for f in on_disk.values())
+            if marker is None:
+                ok = False
+            elif "files" in marker:
+                ok = marker["files"] == on_disk
+            else:  # a marker from before file manifests: row total
+                ok = int(marker.get("n_rows", -1)) == n_rows
+            if not ok:
+                summary["parts_dropped"].append(part)
+                continue
+            d = os.path.join(out_dir, "data", f"part={part}")
+            actions.append({"type": "add", "part": part,
+                            "marker": _part_marker(
+                                marker.get("run_id"), part, n_rows, on_disk,
+                                {fn: file_column_stats(os.path.join(d, fn))
+                                 for fn in on_disk})})
+            summary["parts_adopted"].append(part)
+            if table_schema is None and on_disk:
+                table_schema = from_arrow_schema(
+                    pq.read_schema(os.path.join(d, min(on_disk))))
+        try:
+            with open(success_path) as f:
+                success = json.load(f)
+        except (OSError, ValueError):
+            success = None
+        if success and not summary["parts_dropped"] \
+                and len(markers) >= int(success.get("n_parts", 0)):
+            actions.append({"type": "run_success",
+                            "run_id": success["run_id"],
+                            "n_parts": int(success["n_parts"])})
+            summary["run_success"] = True
+        if table_schema is not None:
+            # `part` is the directory-derived partition column, as in
+            # the schema a checkpointed run records
+            table_schema = StructType(
+                table_schema.fields
+                + [StructField("part", IntegerType(), True)])
+            actions.append({"type": "table_meta",
+                            "meta": {"schema": table_schema.jsonValue()}})
+        summary["version"] = ledger._append(actions)
+    shutil.rmtree(ledger_dir, ignore_errors=True)
+    try:
+        os.remove(success_path)
+    except FileNotFoundError:
+        pass
+    return summary
 
 
 def _gc_stale_scratch(out_dir: str) -> None:
@@ -1693,13 +1682,15 @@ def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
                      broadcast_conv_aggs: bool | None = None,
                      staged: bool = True,
                      strict: bool = False,
-                     ledger_backend: str = "markers",
+                     ledger_backend: str = "commitlog",
                      bucket: dict | None = None) -> dict:
     """Execute the pipeline with per-partition commit + resume.
 
+    ledger_backend: the commit protocol; only "commitlog" exists.
+
     bucket: the input's bucket spec, e.g. {"col": "conv_id",
     "n_parts": 8, "fn": "md5full"} — recorded once in the commit log's
-    table_meta (commitlog backend only) so snapshot reads can turn an
+    table_meta so snapshot reads can turn an
     equality probe on the bucketed column into partition pruning
     (Iceberg's bucket-transform pruning). Optional: without it, probes
     still skip files by manifest stats, just not whole partitions.
@@ -1725,27 +1716,14 @@ def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
     os.makedirs(out_dir, exist_ok=True)
     ledger = make_ledger(out_dir, ledger_backend)
 
-    # One out_dir is governed by ONE ledger protocol: committing under
-    # a second backend would fork the source of truth and leave every
-    # auto-detecting read surface (read_committed, run_status, --status)
-    # reporting whichever half it finds. Refuse up front.
-    other = "commitlog" if ledger_backend == "markers" else "markers"
-    other_ledger = make_ledger(out_dir, other)
-    if other_ledger.committed() or other_ledger.run_success() is not None:
-        raise ValueError(
-            f"{out_dir} already has commits under the '{other}' ledger; "
-            f"pass ledger_backend='{other}' (mixing backends in one "
-            "output dir is not supported)")
-
     if bucket is not None:
         if bucket.get("fn") not in BUCKET_FNS or not bucket.get("col") \
                 or not bucket.get("n_parts"):
             raise ValueError(
                 f"bucket spec needs col/n_parts/fn with fn in "
                 f"{sorted(BUCKET_FNS)}; got {bucket}")
-        if getattr(ledger, "log_defined_visibility", False) \
-                and ledger.table_meta().get("bucket") != bucket:
-            recorded = ledger.table_meta().get("bucket")
+        recorded = ledger.table_meta().get("bucket")
+        if recorded != bucket:
             if recorded is not None and ledger.committed():
                 # the table's committed layout was built under ANOTHER
                 # spec: silently overwriting the planning truth would
@@ -1834,14 +1812,21 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
         # upstream Delta-published corpus (any writer's) — the import
         # half of the open-format door feeding the flagship pipeline.
         # Columns are named by the log's declared schema; extra
-        # upstream columns are pruned to the transcripts shape.
+        # upstream columns are pruned to the transcripts shape, and a
+        # missing transcript column refuses the input (dropping it
+        # would ship rows the pipeline cannot score).
         from .export_delta import read_delta
         from .ingest import N_PARTS, part_expr
         dt = read_delta(spark, input_path)
         types = {f.name: f.dataType
                  for f in schema.TRANSCRIPTS_SCHEMA.fields}
+        missing = [c for c in types if c != "part" and c not in dt.columns]
+        if missing:
+            raise ValueError(
+                f"Delta input {input_path} lacks transcript column(s) "
+                f"{missing}; its schema has {sorted(dt.columns)}")
         cols = [F.col(c).cast(types[c]).alias(c)
-                for c in types if c != "part" and c in dt.columns]
+                for c in types if c != "part"]
         part_col = F.col("part").cast("int") if "part" in dt.columns \
             else part_expr("conv_id", N_PARTS)
         transcripts = dt.select(*cols, part_col.alias("part"))
@@ -1899,11 +1884,8 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
 
             # Stage THIS shard's output under its own scratch root (no two
             # concurrent jobs ever share a Hadoop committer staging dir),
-            # then publish each finished partition into data/ with an
-            # atomic directory swap. Disjoint todo sets → disjoint swaps,
-            # so concurrent shards are safe; a crash mid-publish leaves
-            # each partition either fully old or fully new (and an
-            # unpublished partition has no marker → recomputes).
+            # then move its files into data/ under shard-unique names and
+            # commit each partition's manifest (publish below).
             #
             # Salted repartition before the partitioned write: without it,
             # every upstream task can hold rows of every part, producing
@@ -1912,16 +1894,14 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
             # bounded file count AND no single-task serialization of a huge
             # part.
             n_out = max(len(todo) * WRITE_SALTS, 8)
-            tmeta: dict = {}
-            if getattr(ledger, "log_defined_visibility", False):
+            tmeta = ledger.table_meta()
+            if tmeta.get("column_mapping"):
+                # mapped table (ALTER history): record the schema FIRST
+                # so any new logical columns get physical names minted,
+                # then land physically-named files — idempotent with the
+                # publish-time record below
+                record_table_schema(ledger, result.schema)
                 tmeta = ledger.table_meta()
-                if tmeta.get("column_mapping"):
-                    # mapped table (ALTER history): record the schema
-                    # FIRST so any new logical columns get physical
-                    # names minted, then land physically-named files —
-                    # idempotent with the publish-time record below
-                    record_table_schema(ledger, result.schema)
-                    tmeta = ledger.table_meta()
             (to_physical(
                 result.repartition(n_out, F.col("part"),
                                    F.pmod(F.col("turn_idx"),
@@ -1957,80 +1937,59 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
                         "no partitions committed this invocation "
                         f"(staged output kept at {stage_out})")
 
-            # Publish: atomic per-partition swap into data/, then metrics,
-            # then markers — any prefix of this sequence is recoverable
-            # (an unpublished/half-published partition has no marker, so
-            # a rerun recomputes it; scratch is preserved once publish
-            # begins so new rows are never the casualty of a failed
-            # rename). The displaced old dir is parked under a
-            # dot-prefixed name, which Spark's partition discovery
-            # ignores — readers never see a bogus 'part=N.old' value.
+            # Publish: files into data/, then metrics, then one commit
+            # per partition — any prefix of this sequence is recoverable
+            # (a partition without a commit recomputes on rerun; scratch
+            # is preserved once publish begins so new rows are never the
+            # casualty of a failed move). Each staged file lands under
+            # its final partition dir with a shard-unique name — one put
+            # per NEW file, never a rename/copy of existing data (the
+            # object-store-safe shape) — and the commit's manifest
+            # defines the partition. A crash between file placement and
+            # commit leaves only invisible orphans (read_committed
+            # ignores them; vacuum reclaims them).
+            import pyarrow.parquet as pq
             data_dir = os.path.join(out_dir, "data")
             os.makedirs(data_dir, exist_ok=True)
             keep_scratch = True  # publish started: scratch holds new data
-            record_table_schema(ledger, result.schema)  # commitlog only
-            shard_files: dict[int, dict] = {}  # log-defined publish only
+            record_table_schema(ledger, result.schema)
+            shard_files: dict[int, dict] = {}
             shard_stats: dict[int, dict] = {}
-            if getattr(ledger, "log_defined_visibility", False):
-                # Log-defined publish: each staged file lands under its
-                # final partition dir with a shard-unique name — one put
-                # per NEW file, never a rename/copy of existing data (the
-                # object-store-safe shape) — and the commit's manifest
-                # defines the partition. A crash between file placement
-                # and marker commit leaves only invisible orphans
-                # (read_committed ignores them; vacuum reclaims them).
-                import pyarrow.parquet as pq
-                for p in todo:
-                    src = os.path.join(stage_out, f"part={int(p)}")
-                    if not os.path.isdir(src):
-                        continue  # partition had zero rows this run
-                    dst = os.path.join(data_dir, f"part={int(p)}")
-                    os.makedirs(dst, exist_ok=True)
-                    man: dict = {}
-                    stats: dict = {}
-                    for fn in sorted(os.listdir(src)):
-                        if not fn.endswith(".parquet"):
-                            continue
-                        newname = f"{shard}-{fn}"
-                        fsrc = os.path.join(src, fn)
-                        man[newname] = {
-                            "n_rows": pq.ParquetFile(fsrc).metadata.num_rows,
-                            "n_bytes": os.path.getsize(fsrc)}
-                        stats[newname] = file_column_stats(
-                            fsrc, stats_columns(tmeta))
-                        os.replace(fsrc, os.path.join(dst, newname))
-                    shard_files[int(p)] = man
-                    shard_stats[int(p)] = stats
-            else:
-                for p in todo:
-                    src = os.path.join(stage_out, f"part={int(p)}")
-                    if not os.path.isdir(src):
-                        continue  # partition had zero rows this run
-                    dst = os.path.join(data_dir, f"part={int(p)}")
-                    tmp_old = os.path.join(data_dir, f".old-part={int(p)}")
-                    shutil.rmtree(tmp_old, ignore_errors=True)  # stale crash debris
-                    if os.path.isdir(dst):
-                        os.replace(dst, tmp_old)
-                    os.replace(src, dst)
-                    shutil.rmtree(tmp_old, ignore_errors=True)
+            for p in todo:
+                src = os.path.join(stage_out, f"part={int(p)}")
+                if not os.path.isdir(src):
+                    continue  # partition had zero rows this run
+                dst = os.path.join(data_dir, f"part={int(p)}")
+                os.makedirs(dst, exist_ok=True)
+                man: dict = {}
+                stats: dict = {}
+                for fn in sorted(os.listdir(src)):
+                    if not fn.endswith(".parquet"):
+                        continue
+                    newname = f"{shard}-{fn}"
+                    fsrc = os.path.join(src, fn)
+                    man[newname] = {
+                        "n_rows": pq.ParquetFile(fsrc).metadata.num_rows,
+                        "n_bytes": os.path.getsize(fsrc)}
+                    stats[newname] = file_column_stats(
+                        fsrc, stats_columns(tmeta))
+                    os.replace(fsrc, os.path.join(dst, newname))
+                shard_files[int(p)] = man
+                shard_stats[int(p)] = stats
 
             wall_ms = int((time.monotonic() - t0) * 1000)
             _append_metrics(out_dir, run_id, shard, mrows, wall_ms)
 
-            staged_parts = set()
-            for r in mrows:
-                _commit_part(out_dir, run_id, int(r.part), int(r.n_in),
-                             ledger, files=shard_files.get(int(r.part)),
-                             stats=shard_stats.get(int(r.part)))
-                staged_parts.add(int(r.part))
+            n_rows = {int(r.part): int(r.n_in) for r in mrows}
             # A todo partition that produced ZERO output rows still gets
-            # a commit marker (n_rows=0, empty manifest) — without one
-            # it would re-enter todo on every rerun and the whole-run
-            # marker could never be written
-            for p in todo:
-                if int(p) not in staged_parts:
-                    _commit_part(out_dir, run_id, int(p), 0, ledger,
-                                 files={})
+            # a commit (n_rows=0, empty manifest) — without one it would
+            # re-enter todo on every rerun and the whole-run marker
+            # could never be written
+            for p in [int(r.part) for r in mrows] \
+                    + [int(p) for p in todo if int(p) not in n_rows]:
+                ledger.commit_part(_part_marker(
+                    run_id, p, n_rows.get(p, 0), shard_files.get(p, {}),
+                    shard_stats.get(p)))
             keep_scratch = False  # fully published + committed
         finally:
             # scratch is removed on full success and on pre-publish
@@ -2074,7 +2033,7 @@ def cancel_run(spark: SparkSession, run_id: str) -> None:
     spark.sparkContext.cancelJobGroup(f"curator-run-{run_id}")
 
 
-def snapshot_files(out_dir: str, backend: str | None = None,
+def snapshot_files(out_dir: str,
                    version: int | None = None,
                    where=None) -> list[str]:
     """The exact file paths a snapshot read would scan: the ledger's
@@ -2086,10 +2045,10 @@ def snapshot_files(out_dir: str, backend: str | None = None,
     the table, and the decision is made from the log alone — zero data
     I/O, zero Spark jobs. Files without recorded stats are always kept
     (skipping is sound, never speculative)."""
-    return _snapshot_plan(out_dir, backend, version, where)[0]
+    return _snapshot_plan(out_dir, version, where)[0]
 
 
-def _snapshot_plan(out_dir: str, backend: str | None = None,
+def _snapshot_plan(out_dir: str,
                    version: int | None = None,
                    where=None) -> tuple[list[str], dict, dict]:
     """(surviving file paths, table_meta, deletion vectors keyed by
@@ -2097,20 +2056,9 @@ def _snapshot_plan(out_dir: str, backend: str | None = None,
     snapshot_files and read_committed. A scan of any surviving file
     that carries a dv MUST mask those row positions out (the protocol
     gate makes builds that can't refuse the table wholesale)."""
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    if version is not None and \
-            not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            "time travel requires the commitlog ledger: the markers "
-            "backend keeps no history (its dir content is only ever "
-            "the current state)")
-    if getattr(ledger, "log_defined_visibility", False):
-        committed, _success, meta, _txns = ledger.snapshot(version=version)
-        bucket = meta.get("bucket") or {}
-    else:
-        committed = ledger.committed()
-        meta = {}
-        bucket = {}
+    committed, _success, meta, _txns = \
+        make_ledger(out_dir).snapshot(version=version)
+    bucket = meta.get("bucket") or {}
     conj = _normalize_where(where)
     # predicates arrive in LOGICAL column names; footer stats are keyed
     # by the immutable PHYSICAL names files actually hold — translate
@@ -2205,7 +2153,6 @@ def _apply_dv(spark: SparkSession, df: DataFrame,
 
 
 def read_committed(spark: SparkSession, out_dir: str,
-                   backend: str | None = None,
                    version: int | None = None,
                    where=None, as_of=None) -> DataFrame:
     """Snapshot read: exactly the files the ledger's commit manifests
@@ -2213,12 +2160,10 @@ def read_committed(spark: SparkSession, out_dir: str,
     snapshot scan). Orphan files from superseded or crashed commits are
     invisible here even before `vacuum` reclaims them. basePath keeps
     `part` a real partition column, so downstream partition pruning
-    still works. backend=None auto-detects which ledger governs the dir
-    (works for markers tables too — their manifests carry the same file
-    lists).
+    still works.
 
-    version: read the table AS OF that commit version (commitlog only —
-    Delta's time travel). Historical snapshots stay readable while
+    version: read the table AS OF that commit version (Delta's time
+    travel). Historical snapshots stay readable while
     their files survive `vacuum`'s retention window; a vacuumed
     snapshot raises with the missing files named rather than silently
     returning a partial table.
@@ -2242,11 +2187,8 @@ def read_committed(spark: SparkSession, out_dir: str,
         # or before the datetime, then read that version
         if version is not None:
             raise ValueError("pass version OR as_of, not both")
-        ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-        if not getattr(ledger, "log_defined_visibility", False):
-            raise ValueError("time travel requires the commitlog ledger")
-        version = ledger.version_at(as_of)
-    paths, meta, dv = _snapshot_plan(out_dir, backend, version, where)
+        version = make_ledger(out_dir).version_at(as_of)
+    paths, meta, dv = _snapshot_plan(out_dir, version, where)
     declared = StructType.fromJson(meta["schema"]) \
         if meta.get("schema") else None
     data_dir = os.path.join(out_dir, "data")
@@ -2281,7 +2223,6 @@ def read_committed(spark: SparkSession, out_dir: str,
 
 
 def table_column_minmax(out_dir: str, col: str,
-                        backend: str | None = None,
                         version: int | None = None) -> dict:
     """Metadata-only MIN/MAX for a stats-tracked column — the
     aggregate-pushdown cousin of `table_row_count` (Delta/Iceberg
@@ -2297,15 +2238,8 @@ def table_column_minmax(out_dir: str, col: str,
     column; when False the returned values are BOUNDS over the covered
     subset, and a caller needing exactness must scan. All-null files
     record min/max None and are covered-but-valueless."""
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    if version is not None and \
-            not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("time travel requires the commitlog ledger")
-    if getattr(ledger, "log_defined_visibility", False):
-        committed, _s, meta_, _t = ledger.snapshot(version=version)
-        col = physical_name(meta_, col)  # stats are keyed physically
-    else:
-        committed = ledger.committed()
+    committed, _s, meta_, _t = make_ledger(out_dir).snapshot(version=version)
+    col = physical_name(meta_, col)  # stats are keyed physically
     lo = hi = None
     n_files = n_covered = 0
     any_dv = False
@@ -2332,25 +2266,19 @@ def table_column_minmax(out_dir: str, col: str,
             and not any_dv}
 
 
-def table_row_count(out_dir: str, backend: str | None = None,
+def table_row_count(out_dir: str,
                     version: int | None = None) -> int:
     """Metadata-only COUNT(*): the sum of committed manifests' row
     counts — Delta answers bare counts from the log the same way. Zero
     data I/O, zero Spark jobs, valid at any time-travel version; the
     numbers are trustworthy because revalidation reconciles them
     against parquet footers on every resume."""
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    if version is not None and \
-            not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("time travel requires the commitlog ledger")
-    committed = ledger.committed(version=version) \
-        if version is not None else ledger.committed()
+    committed = make_ledger(out_dir).committed(version=version)
     return sum(int((m or {}).get("n_rows", 0)) for m in committed.values())
 
 
 def table_changes(out_dir: str, since_version: int,
-                  until_version: int | None = None,
-                  backend: str | None = None) -> dict:
+                  until_version: int | None = None) -> dict:
     """Change-data-feed at file granularity: what the data plane did in
     versions (since, until] — {inserts: {part: {file: meta}},
     rows_inserted, parts_recomputed, rows_deleted, versions}. Inserts
@@ -2360,9 +2288,7 @@ def table_changes(out_dir: str, since_version: int,
     partition is a recompute — reported in parts_recomputed because its
     files replace rather than extend. Consumed by read_changes for
     incremental downstream training."""
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("table_changes requires the commitlog ledger")
+    ledger = make_ledger(out_dir)
     # validate bounds (raises on a version beyond the log) — a typo'd
     # since_version must not silently read as an empty feed
     ledger._versions(upto=until_version)
@@ -2715,8 +2641,7 @@ def table_changes(out_dir: str, since_version: int,
 
 
 def read_changes(spark: SparkSession, out_dir: str, since_version: int,
-                 until_version: int | None = None,
-                 backend: str | None = None) -> DataFrame:
+                 until_version: int | None = None) -> DataFrame:
     """The rows INSERTED in versions (since, until] — the incremental-
     consumption feed (a downstream tokenizer/trainer processes only new
     data, never re-reads the corpus). Reads the ORIGINAL inserted files
@@ -2726,8 +2651,8 @@ def read_changes(spark: SparkSession, out_dir: str, since_version: int,
     from pyspark.sql.types import StructType
 
     from . import schema as _schema
-    ch = table_changes(out_dir, since_version, until_version, backend)
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
+    ch = table_changes(out_dir, since_version, until_version)
+    ledger = make_ledger(out_dir)
     meta = ledger.table_meta()
     declared = StructType.fromJson(meta["schema"]) \
         if meta.get("schema") else None
@@ -2761,25 +2686,17 @@ def read_changes(spark: SparkSession, out_dir: str, since_version: int,
         meta)
 
 
-def table_history(out_dir: str, backend: str | None = None) -> list[dict]:
-    """DESCRIBE HISTORY for a commitlog table: one row per commit
-    version with its timestamp, writer, action-type counts, and touched
-    partitions. Markers tables have no history (raises)."""
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("history requires the commitlog ledger")
-    return ledger.history()
+def table_history(out_dir: str) -> list[dict]:
+    """DESCRIBE HISTORY: one row per commit version with its timestamp,
+    writer, action-type counts, and touched partitions."""
+    return make_ledger(out_dir).history()
 
 
-def table_protocol(out_dir: str, backend: str | None = None) -> dict:
+def table_protocol(out_dir: str) -> dict:
     """The table's current protocol requirement — {min_reader,
     min_writer, reader_features, writer_features}. A table that never
     ratcheted is at the implicit floor (1, 1, none, none)."""
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("protocol versioning requires the commitlog "
-                         "ledger")
-    proto = ledger.table_meta().get("_protocol")
+    proto = make_ledger(out_dir).table_meta().get("_protocol")
     return dict(proto) if proto else {
         "min_reader": 1, "min_writer": 1,
         "reader_features": [], "writer_features": []}
@@ -2787,8 +2704,7 @@ def table_protocol(out_dir: str, backend: str | None = None) -> dict:
 
 def upgrade_protocol(out_dir: str, min_reader: int | None = None,
                      min_writer: int | None = None,
-                     reader_features=(), writer_features=(),
-                     backend: str | None = None) -> int:
+                     reader_features=(), writer_features=()) -> int:
     """Ratchet the table's protocol requirement (Delta's ALTER TABLE
     SET TBLPROPERTIES minReaderVersion / table-feature upgrade): one
     log commit; replay merges monotonically, so concurrent upgrades
@@ -2797,10 +2713,7 @@ def upgrade_protocol(out_dir: str, min_reader: int | None = None,
     the protocol). Refuses a requirement THIS build cannot itself
     honor: an upgrade beyond the running code would brick the table
     for its own writer. Returns the commit version."""
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("protocol versioning requires the commitlog "
-                         "ledger")
+    ledger = make_ledger(out_dir)
     req = {"min_reader": int(min_reader or 1),
            "min_writer": int(min_writer or 1),
            "reader_features": sorted(set(reader_features)),
@@ -2817,8 +2730,7 @@ def upgrade_protocol(out_dir: str, min_reader: int | None = None,
     return ledger._append([{"type": "protocol", "protocol": req}])
 
 
-def restore_table(out_dir: str, version: int | None = None,
-                  backend: str | None = None, as_of=None) -> dict:
+def restore_table(out_dir: str, version: int | None = None, as_of=None) -> dict:
     """RESTORE TABLE ... TO VERSION AS OF (Delta's RESTORE): make the
     live table state equal to its state at an earlier `version` (or at
     the latest commit <= the `as_of` datetime) by publishing ONE new
@@ -2843,9 +2755,7 @@ def restore_table(out_dir: str, version: int | None = None,
     batch_objects.jsonl ledger recovers an earlier run state
     (base_batch_request_processor.py:300-309); here recovery is a
     first-class, versioned table operation."""
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("restore requires the commitlog ledger")
+    ledger = make_ledger(out_dir)
     if (version is None) == (as_of is None):
         raise ValueError("pass exactly one of version / as_of")
     if as_of is not None:
@@ -2869,7 +2779,7 @@ def restore_table(out_dir: str, version: int | None = None,
                           for m in parts.values())}
 
 
-def vacuum(out_dir: str, backend: str | None = None,
+def vacuum(out_dir: str,
            min_age_s: float = 3600.0, dry_run: bool = False) -> int:
     """Reclaim data files no current commit manifest references —
     orphans of invalidated/superseded commits and of crashes between
@@ -2877,11 +2787,9 @@ def vacuum(out_dir: str, backend: str | None = None,
     number of files removed.
 
     Safety rails (each one guards a way to destroy live data):
-    * only log-defined-visibility backends — the markers backend swaps
-      whole partition dirs, leaves no orphans, and its files are ALL
-      live (raises ValueError); backend=None auto-detects;
-    * a missing/empty transaction log means NOTHING was committed under
-      this backend — refuse to classify the world as orphans (no-op);
+    * a missing/empty transaction log means NOTHING was committed here
+      — refuse to classify the world as orphans (no-op); a legacy
+      marker dir is refused outright (make_ledger);
     * min_age_s retention (Delta's deletedFileRetentionDuration): a
       file younger than the window is skipped, because a concurrent
       in-flight shard may have placed it ahead of its commit landing —
@@ -2898,12 +2806,7 @@ def vacuum(out_dir: str, backend: str | None = None,
     but delete nothing. Audit the blast radius (e.g. after a RESTORE,
     how much of the rolled-back era is about to become physical-only
     history) before committing to it."""
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            f"vacuum is not applicable to the '{backend}' ledger: every "
-            "file in a markers-managed data dir is live")
+    ledger = make_ledger(out_dir)
     committed = ledger.committed()
     if not committed and ledger.run_success() is None:
         return 0  # empty/absent log: nothing was ever committed here
@@ -2989,7 +2892,6 @@ def _zorder_key(src: DataFrame, cols: list[str], bits: int = 8):
 
 def compact_partition(spark: SparkSession, out_dir: str, part: int,
                       target_files: int = 1,
-                      backend: str | None = None,
                       sort_by: list[str] | None = None,
                       zorder: bool = False) -> dict:
     """Small-file compaction (Delta/Iceberg OPTIMIZE): rewrite a
@@ -3000,7 +2902,7 @@ def compact_partition(spark: SparkSession, out_dir: str, part: int,
     by per-file open overhead — compaction is the standard maintenance
     pass.
 
-    Protocol (commitlog backend only): read EXACTLY the files the
+    Protocol: read EXACTLY the files the
     current manifest references, rewrite them into shard-unique
     compacted files placed alongside (one put per file, no in-place
     mutation), verify the rewritten row count equals the manifest's,
@@ -3008,9 +2910,7 @@ def compact_partition(spark: SparkSession, out_dir: str, part: int,
     Readers see the old files or the new files, never a mix; a crash
     at any point leaves only unreferenced orphans for `vacuum`; a
     concurrent recompute makes the swap a stale no-op at replay (see
-    the replay handler). The markers backend raises — its directory
-    content IS its committed state, so an in-place file swap cannot be
-    made atomic there.
+    the replay handler).
 
     sort_by: cluster the rewrite by these columns (OPTIMIZE ... ZORDER's
     one-dimensional core): rows are range-partitioned across the
@@ -3037,13 +2937,7 @@ def compact_partition(spark: SparkSession, out_dir: str, part: int,
 
     import pyarrow.parquet as pq
 
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            f"compaction requires a log-defined-visibility ledger, not "
-            f"'{backend}': the markers backend's dir content IS its "
-            "committed state, so a file swap there cannot be atomic")
+    ledger = make_ledger(out_dir)
     committed_, _s_, meta_, _t_ = ledger.snapshot()
     marker = committed_.get(int(part))
     if not marker or not marker.get("files"):
@@ -3122,8 +3016,7 @@ def compact_partition(spark: SparkSession, out_dir: str, part: int,
 def optimize_table(spark: SparkSession, out_dir: str,
                    target_files: int = 1,
                    small_file_bytes: int | None = None,
-                   sort_by=None, zorder: bool = False,
-                   backend: str | None = None) -> dict:
+                   sort_by=None, zorder: bool = False) -> dict:
     """Whole-table OPTIMIZE (Delta's `OPTIMIZE` without a WHERE): walk
     every committed partition and compact the ones whose live layout
     warrants it, each in its OWN atomic `compact` commit — the table
@@ -3142,13 +3035,7 @@ def optimize_table(spark: SparkSession, out_dir: str,
 
     Returns {parts_compacted, parts_skipped, files_before, files_after,
     n_rows} (files counted over the compacted partitions only)."""
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            f"compaction requires a log-defined-visibility ledger, not "
-            f"'{backend}': the markers backend's dir content IS its "
-            "committed state, so a file swap there cannot be atomic")
+    ledger = make_ledger(out_dir)
     committed = ledger.committed()
     out = {"parts_compacted": [], "parts_skipped": [],
            "files_before": 0, "files_after": 0, "n_rows": 0}
@@ -3163,8 +3050,7 @@ def optimize_table(spark: SparkSession, out_dir: str,
             continue
         r = compact_partition(spark, out_dir, int(part),
                               target_files=int(target_files),
-                              sort_by=sort_by, zorder=zorder,
-                              backend=backend)
+                              sort_by=sort_by, zorder=zorder)
         if r["compacted"]:
             out["parts_compacted"].append(int(part))
             out["files_before"] += r["files_before"]
@@ -3185,8 +3071,7 @@ class ConcurrentRebucketError(RuntimeError):
     reclaims; retry against the new snapshot."""
 
 
-def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict,
-                   backend: str | None = None) -> dict:
+def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
     """Change the table's bucket spec (Iceberg's ALTER TABLE ... REPLACE
     PARTITION SPEC), made EAGER by rewriting every live row into the
     new layout in one atomic commit. Iceberg can evolve a spec lazily
@@ -3238,14 +3123,7 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict,
         raise ValueError(
             f"bucket spec needs col/n_parts/fn with fn in "
             f"{sorted(BUCKET_FNS)}; got {bucket}")
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            f"rebucket requires a log-defined-visibility ledger, not "
-            f"'{backend}': an atomic whole-table file swap cannot be "
-            "expressed when the directory content IS the committed "
-            "state")
+    ledger = make_ledger(out_dir)
     committed, _success, meta, _txns = ledger.snapshot()
     if (meta.get("bucket") or None) == bucket:
         return {"rebucketed": False, "version": ledger.latest_version(),
@@ -3269,7 +3147,7 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict,
     if "rebucket" not in set(proto.get("reader_features") or []) \
             or "rebucket" not in set(proto.get("writer_features") or []):
         upgrade_protocol(out_dir, reader_features=["rebucket"],
-                         writer_features=["rebucket"], backend=backend)
+                         writer_features=["rebucket"])
 
     tag = uuid.uuid4().hex[:12]
     live_files = [(int(p), f, (m or {}).get("dv", {}).get(f))
@@ -3396,7 +3274,7 @@ class ConcurrentDeleteError(RuntimeError):
 
 
 def delete_conversations(spark: SparkSession, out_dir: str,
-                         conv_ids, backend: str | None = None,
+                         conv_ids,
                          key: str = "conv_id") -> dict:
     """Row-level DELETE by key (Delta's DELETE shape; the
     right-to-be-forgotten operation a training-data platform must run
@@ -3426,13 +3304,7 @@ def delete_conversations(spark: SparkSession, out_dir: str,
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            f"delete requires a log-defined-visibility ledger, not "
-            f"'{backend}': a filtered file swap cannot be atomic when "
-            "the directory content IS the committed state")
+    ledger = make_ledger(out_dir)
     conv_ids = sorted(set(conv_ids))
     committed, _success, meta, _txns = ledger.snapshot()
     bucket = meta.get("bucket") or {}
@@ -3479,8 +3351,7 @@ def delete_conversations(spark: SparkSession, out_dir: str,
 
 
 def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
-                   key: str = "conv_id",
-                   backend: str | None = None) -> dict:
+                   key: str = "conv_id") -> dict:
     """Row-level DELETE via deletion vectors (Delta's DV mode): mark
     the matching row POSITIONS of each candidate file deleted in the
     log, rewriting nothing — a k-row targeted delete costs O(k) log
@@ -3510,13 +3381,7 @@ def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
 
     Returns {rows_deleted, files_marked, files_untouched,
     parts_touched}."""
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            "deletion vectors require the commitlog ledger: the mask "
-            "lives in the log, and enforcement needs the protocol "
-            "action")
+    ledger = make_ledger(out_dir)
     targets = sorted({str(c) for c in conv_ids})
     committed, _success, meta, _txns = ledger.snapshot()
     bucket = meta.get("bucket") or {}
@@ -3553,8 +3418,7 @@ def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
     # apply dvs must refuse the table wholesale from this point on
     proto = meta.get("_protocol") or {}
     if "deletion-vectors" not in set(proto.get("reader_features") or []):
-        upgrade_protocol(out_dir, reader_features=["deletion-vectors"],
-                         backend=backend)
+        upgrade_protocol(out_dir, reader_features=["deletion-vectors"])
 
     hits = (spark.read.option("basePath", data_dir)
             .parquet(*[c[2] for c in cand])
@@ -3672,8 +3536,7 @@ def _swap_filtered_rewrite(spark, out_dir, ledger, declared, part,
 
 
 def delete_matching(spark: SparkSession, out_dir: str, keys: DataFrame,
-                    key: str = "conv_id",
-                    backend: str | None = None) -> dict:
+                    key: str = "conv_id") -> dict:
     """Distributed row-level DELETE: the targets arrive as a DATAFRAME
     of keys, never as a driver-side list — the shape an upsert that
     revises 10^7 conversations needs (delete_conversations' Python list
@@ -3702,13 +3565,7 @@ def delete_matching(spark: SparkSession, out_dir: str, keys: DataFrame,
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StructType
 
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            f"delete requires a log-defined-visibility ledger, not "
-            f"'{backend}': a filtered file swap cannot be atomic when "
-            "the directory content IS the committed state")
+    ledger = make_ledger(out_dir)
     committed, _success, meta, _txns = ledger.snapshot()
     bucket = meta.get("bucket") or {}
     declared = None
@@ -3833,7 +3690,6 @@ def run_cost(spark: SparkSession, out_dir: str,
 
 
 def read_with_lineage(spark: SparkSession, out_dir: str,
-                      backend: str | None = None,
                       version: int | None = None) -> DataFrame:
     """Snapshot read + ROW-LEVEL PROVENANCE: every row annotated with
     `_lineage_file` (the parquet file holding it), `_lineage_part`,
@@ -3850,14 +3706,7 @@ def read_with_lineage(spark: SparkSession, out_dir: str,
     row-to-file attribution, so it is exact under compaction,
     restore, and time travel (the map is built from the SAME snapshot
     the read plans)."""
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if getattr(ledger, "log_defined_visibility", False):
-        committed = ledger.snapshot(version=version)[0]
-    else:
-        if version is not None:
-            raise ValueError("time travel requires the commitlog ledger")
-        committed = ledger.committed()
+    committed = make_ledger(out_dir).committed(version=version)
     rows = []
     for p, m in sorted((committed or {}).items()):
         if not m or m.get("status") != "COMMITTED":
@@ -3867,7 +3716,7 @@ def read_with_lineage(spark: SparkSession, out_dir: str,
         for fn in (m.get("files") or {}):
             rows.append((fn, int(p), fn, int(p),
                          m.get("run_id"), runs))
-    df = read_committed(spark, out_dir, backend=backend, version=version)
+    df = read_committed(spark, out_dir, version=version)
     if not rows:
         return (df.withColumn("_lineage_file",
                               F.lit(None).cast("string"))

@@ -46,7 +46,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "durable artifacts directly, no Spark session) "
                         "and exit")
     p.add_argument("--output", required=True,
-                   help="output dir (data/ + _ledger/ + _metrics/ + _meta/)")
+                   help="output table dir (data/ + _commitlog/ + _metrics/ "
+                        "+ _meta/)")
     p.add_argument("--partitions", type=int, default=None,
                    help="override spark.sql.shuffle.partitions")
     p.add_argument("--only-parts", type=str, default=None,
@@ -60,20 +61,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--strict", action="store_true",
                    help="fail the run (committing nothing) if any error "
                         "rows are produced — require_all_responses analogue")
-    p.add_argument("--ledger", choices=["markers", "commitlog"],
-                   default=None,
-                   help="commit protocol (default: markers for runs; "
-                        "auto-detected for --status): 'markers' = "
-                        "per-partition JSON "
-                        "markers via atomic rename (POSIX filesystems); "
-                        "'commitlog' = versioned put-if-absent transaction "
-                        "log with log-defined data visibility (object "
-                        "stores; read results via checkpoint.read_committed)")
     p.add_argument("--append", action="store_true",
                    help="incremental ingestion: score and append ONLY "
                         "the --input conversations whose content "
                         "fingerprint the committed --output table has "
-                        "never seen (commitlog ledger only)")
+                        "never seen")
     p.add_argument("--upsert", action="store_true",
                    help="MERGE: like --append, but a batch conv_id that "
                         "exists with DIFFERENT content REPLACES its old "
@@ -84,7 +76,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "and conditionally upsert it on --merge-key — "
                         "matched rows update (or delete with "
                         "--merge-matched delete), unmatched rows "
-                        "insert, one atomic commit (commitlog only)")
+                        "insert, one atomic commit")
     p.add_argument("--merge-key", type=str, default="conv_id",
                    help="MERGE join key column (default conv_id)")
     p.add_argument("--merge-matched", choices=["update", "delete", "none"],
@@ -142,7 +134,7 @@ def build_parser() -> argparse.ArgumentParser:
                    help="DELETE FROM --output WHERE <Spark SQL "
                         "boolean> and exit (stats-pruned, probe-exact "
                         "rewrite, one atomic commit; NULL-predicate "
-                        "rows survive; commitlog only) — no --input "
+                        "rows survive) — no --input "
                         "needed")
     p.add_argument("--update-set", type=str, default=None,
                    metavar="COL=EXPR[;COL=EXPR...]",
@@ -155,8 +147,8 @@ def build_parser() -> argparse.ArgumentParser:
                    help="WHERE predicate for --update-set")
     p.add_argument("--delete-ids", type=str, default=None, metavar="IDS",
                    help="comma-separated conv_ids to delete from "
-                        "--output (right-to-be-forgotten; commitlog "
-                        "only; physical after --vacuum) and exit — "
+                        "--output (right-to-be-forgotten; physical "
+                        "after --vacuum) and exit — "
                         "no --input needed")
     p.add_argument("--delete-mode", choices=["rewrite", "dv"],
                    default="rewrite",
@@ -180,11 +172,11 @@ def build_parser() -> argparse.ArgumentParser:
                         "pruned GDPR deletes)")
     p.add_argument("--vacuum", action="store_true",
                    help="after the run, reclaim data files no commit "
-                        "manifest references (commitlog backend only)")
+                        "manifest references")
     p.add_argument("--compact", type=int, default=None, metavar="N",
                    help="after the run, rewrite any committed partition "
                         "holding more than N files into N (small-file "
-                        "OPTIMIZE; commitlog backend only)")
+                        "OPTIMIZE)")
     p.add_argument("--zorder-by", type=str, default=None, metavar="COLS",
                    help="with --compact: cluster every rewrite by these "
                         "comma-separated columns — one column range-sorts "
@@ -196,15 +188,15 @@ def build_parser() -> argparse.ArgumentParser:
                    help="poll --output's change feed as consumer ID and "
                         "write the new rows to --consume-out/"
                         "batch-v<since+1>-v<until> (durable cursor: each "
-                        "row delivered once across polls and crashes; "
-                        "commitlog tables only) — no --input needed")
+                        "row delivered once across polls and crashes) "
+                        "— no --input needed")
     p.add_argument("--consume-out", type=str, default=None, metavar="DIR",
                    help="destination directory for --consume batches")
     p.add_argument("--restore", type=int, default=None, metavar="V",
                    help="roll --output back to commit version V and "
                         "exit (RESTORE TABLE ... VERSION AS OF; one new "
-                        "commit, history preserved, no Spark session; "
-                        "commitlog tables only) — no --input needed")
+                        "commit, history preserved, no Spark session) "
+                        "— no --input needed")
     p.add_argument("--restore-asof", type=str, default=None,
                    metavar="ISO8601",
                    help="RESTORE TABLE ... TIMESTAMP AS OF: roll "
@@ -218,8 +210,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "rewrite every live row into the new layout in "
                         "one atomic commit, e.g. "
                         "'{\"col\": \"conv_id\", \"n_parts\": 8, "
-                        "\"fn\": \"md5full\"}' (commitlog tables "
-                        "only) — no --input needed")
+                        "\"fn\": \"md5full\"}' — no --input needed")
     p.add_argument("--expect", action="append", default=None,
                    metavar="NAME=EXPR",
                    help="expectations gate (repeatable): apply the "
@@ -285,7 +276,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "zero-copy fork (hard-linked data files, fresh "
                         "commit log at the snapshot; no Spark session); "
                         "combine with --clone-version or --clone-asof "
-                        "for a time-travel clone (commitlog tables only)")
+                        "for a time-travel clone")
     p.add_argument("--clone-version", type=int, default=None, metavar="V",
                    help="clone the snapshot at commit version V instead "
                         "of the head")
@@ -341,7 +332,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--branch", type=str, default=None, metavar="DIR",
                    help="fork --output at its head into a WAP branch "
                         "at DIR and exit (zero-copy; write/audit there, "
-                        "then --publish it back; commitlog tables only)")
+                        "then --publish it back)")
     p.add_argument("--publish", type=str, default=None, metavar="DIR",
                    help="atomically fast-forward --output with the net "
                         "changes of WAP branch DIR and exit; fails with "
@@ -354,7 +345,7 @@ def build_parser() -> argparse.ArgumentParser:
                    help="print the commit history (version, timestamp, "
                         "operations, partitions) for --output and exit — "
                         "DESCRIBE HISTORY from the transaction log, no "
-                        "Spark session (commitlog tables only)")
+                        "Spark session")
     p.add_argument("--vacuum-dry-run", action="store_true",
                    help="like --vacuum but deletes nothing: report how "
                         "many files a real pass would reclaim (VACUUM "
@@ -373,25 +364,23 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.status:
         from curator_spark.status import format_run_status
-        print(format_run_status(args.output, args.ledger))  # None = detect
+        print(format_run_status(args.output))
         return 0
     if args.history:
         from curator_spark.checkpoint import table_history
-        for h in table_history(args.output, args.ledger):  # None = detect
+        for h in table_history(args.output):
             print(json.dumps(h))
         return 0
     if args.restore is not None:
         from curator_spark.checkpoint import restore_table
-        print(json.dumps(restore_table(args.output, version=args.restore,
-                                       backend=args.ledger)))  # None=detect
+        print(json.dumps(restore_table(args.output, version=args.restore)))
         return 0
     if args.restore_asof is not None:
         from datetime import datetime
 
         from curator_spark.checkpoint import restore_table
         ts = datetime.fromisoformat(args.restore_asof)
-        print(json.dumps(restore_table(args.output, as_of=ts,
-                                       backend=args.ledger)))
+        print(json.dumps(restore_table(args.output, as_of=ts)))
         return 0
     if args.clone is not None:
         from curator_spark.clone import clone_table
@@ -428,7 +417,9 @@ def main(argv: list[str] | None = None) -> int:
         spark = get_spark("consume-delta")
 
         def sink(df, since, until):
-            (df.write.mode("append")
+            # window-keyed path: a replayed window (crash before the
+            # cursor commit) overwrites the same directory — idempotent
+            (df.write.mode("overwrite")
              .parquet(os.path.join(args.consume_out,
                                    f"window-{since + 1}-{until}")))
 
@@ -502,18 +493,16 @@ def main(argv: list[str] | None = None) -> int:
         if args.rename_column:
             old, new = args.rename_column.split("=", 1)
             out["version"] = alter.rename_column(
-                args.output, old.strip(), new.strip(),
-                backend=args.ledger)
+                args.output, old.strip(), new.strip())
             out["renamed"] = [old.strip(), new.strip()]
         if args.drop_column:
-            out["version"] = alter.drop_column(
-                args.output, args.drop_column, backend=args.ledger)
+            out["version"] = alter.drop_column(args.output,
+                                               args.drop_column)
             out["dropped"] = args.drop_column
         if args.add_column:
             col, typ = args.add_column.split(":", 1)
             out["version"] = alter.add_column(
-                args.output, col.strip(), typ.strip(),
-                backend=args.ledger)
+                args.output, col.strip(), typ.strip())
             out["added"] = [col.strip(), typ.strip()]
         print(json.dumps(out))
         return 0
@@ -533,7 +522,6 @@ def main(argv: list[str] | None = None) -> int:
             "--add-constraint/--drop-constraint/--consume/--rebucket/"
             "--rename-column/--drop-column/--add-column/--build-bloom/"
             "--export-shards/--verify-shards")
-    ledger_backend = args.ledger or "markers"
 
     if args.local_cores:
         from curator_spark.session import get_spark
@@ -729,35 +717,20 @@ def main(argv: list[str] | None = None) -> int:
             only_parts=only_parts,
             broadcast_conv_aggs=args.broadcast,
             strict=args.strict,
-            ledger_backend=ledger_backend,
         )
-    # maintenance passes gate on the backend that actually GOVERNS the
-    # table (detect_backend), not the --ledger flag: the append path
-    # auto-detects and a user running `--append --compact 4` without
-    # --ledger must not have compaction silently skipped
-    from curator_spark.checkpoint import detect_backend
-    governing = detect_backend(args.output)
     if args.compact is not None:
-        if governing != "commitlog":
-            build_parser().error(
-                "--compact requires a commitlog-governed table")
         from curator_spark.checkpoint import optimize_table
         sort_by = args.zorder_by.split(",") if args.zorder_by else None
         opt = optimize_table(spark, args.output,
                              target_files=args.compact,
                              sort_by=sort_by,
-                             zorder=bool(sort_by) and len(sort_by) >= 2,
-                             backend=governing)
+                             zorder=bool(sort_by) and len(sort_by) >= 2)
         summary["parts_compacted"] = len(opt["parts_compacted"])
     elif args.zorder_by:
         build_parser().error("--zorder-by requires --compact")
     if args.vacuum or args.vacuum_dry_run:
-        if governing != "commitlog":
-            build_parser().error(
-                "--vacuum requires a commitlog-governed table")
         key = "files_vacuumable" if args.vacuum_dry_run else "files_vacuumed"
-        summary[key] = vacuum(args.output, governing,
-                              min_age_s=args.vacuum_min_age_sec,
+        summary[key] = vacuum(args.output, min_age_s=args.vacuum_min_age_sec,
                               dry_run=args.vacuum_dry_run)
     print(json.dumps(summary))
     return 0

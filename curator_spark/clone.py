@@ -35,7 +35,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from .checkpoint import detect_backend, make_ledger
+from .checkpoint import make_ledger
 
 
 def clone_table(src_dir: str, dst_dir: str, version: int | None = None,
@@ -44,23 +44,19 @@ def clone_table(src_dir: str, dst_dir: str, version: int | None = None,
     the head, at VERSION AS OF `version`, or at TIMESTAMP AS OF
     `asof`. Returns {cloned_version, n_parts, n_files, n_rows,
     linked, copied}. Refuses to clone onto an existing table and
-    refuses the markers backend (no snapshot isolation to clone
-    from)."""
-    if detect_backend(src_dir) != "commitlog":
-        raise ValueError(
-            "shallow clone requires the commitlog ledger: the markers "
-            "backend has no versioned snapshot to clone from")
+    refuses a source without commits."""
     if version is not None and asof is not None:
         raise ValueError("pass version= or asof=, not both")
-    src = make_ledger(src_dir, "commitlog")
+    src = make_ledger(src_dir)
+    if src.latest_version() is None:
+        raise ValueError(f"{src_dir} has no commit log to clone from")
     if asof is not None:
         version = src.version_at(asof)
     committed, success, meta, txns = src.snapshot(version=version)
     cloned_version = version if version is not None \
         else src.latest_version()
 
-    if os.path.isdir(os.path.join(dst_dir, "_commitlog")) or \
-            os.path.isdir(os.path.join(dst_dir, "_ledger")):
+    if make_ledger(dst_dir).latest_version() is not None:
         raise ValueError(f"destination {dst_dir} is already a table — "
                          "clone refuses to overwrite")
     os.makedirs(os.path.join(dst_dir, "data"), exist_ok=True)
@@ -110,7 +106,7 @@ def clone_table(src_dir: str, dst_dir: str, version: int | None = None,
         actions.append({"type": "txn", "app_id": str(app_id),
                         "txn_version": int(txn_version)})
 
-    dst = make_ledger(dst_dir, "commitlog")
+    dst = make_ledger(dst_dir)
     dst._append(actions)
     return {"cloned_version": cloned_version, "n_parts": n_parts,
             "n_files": n_files, "n_rows": n_rows,

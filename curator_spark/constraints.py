@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .checkpoint import detect_backend, make_ledger, read_committed
+from .checkpoint import make_ledger, read_committed
 
 __all__ = ["ConstraintViolation", "add_constraint", "check_df",
            "check_files", "drop_constraint", "table_constraints"]
@@ -121,15 +121,13 @@ def check_files(spark: SparkSession | None, paths: list,
                 for n, c in sorted(bad.items())))
 
 
-def table_constraints(out_dir: str, backend: str | None = None) -> dict:
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    if not getattr(ledger, "log_defined_visibility", False):
-        return {}
+def table_constraints(out_dir: str) -> dict:
+    ledger = make_ledger(out_dir)
     return dict(ledger.table_meta().get("constraints") or {})
 
 
 def add_constraint(spark: SparkSession, out_dir: str, name: str,
-                   expr: str, backend: str | None = None) -> int:
+                   expr: str) -> int:
     """ALTER TABLE ADD CONSTRAINT name CHECK (expr): verifies the
     existing table satisfies `expr` (raises ConstraintViolation
     otherwise — the invariant must be total), ratchets the
@@ -137,37 +135,32 @@ def add_constraint(spark: SparkSession, out_dir: str, name: str,
     into table_meta. Returns the commit version."""
     from .checkpoint import table_protocol, upgrade_protocol
 
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("constraints require the commitlog ledger")
+    ledger = make_ledger(out_dir)
     cons = dict(ledger.table_meta().get("constraints") or {})
     if name in cons:
         raise ValueError(f"constraint {name!r} already exists "
                          f"({cons[name]}); drop it first")
     # resolvability check against the declared schema (fail fast on a
     # typo'd column before scanning anything)
-    read_committed(spark, out_dir, backend).limit(0) \
+    read_committed(spark, out_dir).limit(0) \
         .filter(_failed(expr)).collect()
-    check_df(read_committed(spark, out_dir, backend), {name: expr},
+    check_df(read_committed(spark, out_dir), {name: expr},
              where=" by existing rows")
-    proto = table_protocol(out_dir, backend)
+    proto = table_protocol(out_dir)
     if "check-constraints" not in set(
             proto.get("writer_features") or []):
         # writers that would not enforce must refuse the table
-        upgrade_protocol(out_dir, writer_features=["check-constraints"],
-                         backend=backend)
+        upgrade_protocol(out_dir, writer_features=["check-constraints"])
     cons[name] = str(expr)
     return ledger.set_table_meta({"constraints": cons}) or \
         ledger.latest_version()
 
 
-def drop_constraint(out_dir: str, name: str,
-                    backend: str | None = None) -> int:
+def drop_constraint(out_dir: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT: one table_meta commit (the
     `check-constraints` feature stays ratcheted — feature removal is
     not a thing, exactly as in Delta)."""
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
+    ledger = make_ledger(out_dir)
     cons = dict(ledger.table_meta().get("constraints") or {})
     if name not in cons:
         raise ValueError(f"no constraint named {name!r}; have "

@@ -69,11 +69,9 @@ class _FilePartition(InputPartition):
 
 
 def _declared_schema(table_dir: str) -> StructType:
-    from .checkpoint import detect_backend, make_ledger
+    from .checkpoint import make_ledger
     from . import schema as _schema
-    ledger = make_ledger(table_dir, detect_backend(table_dir))
-    meta = ledger.table_meta() if getattr(
-        ledger, "log_defined_visibility", False) else {}
+    meta = make_ledger(table_dir).table_meta()
     st = StructType.fromJson(meta["schema"]) if meta.get("schema") \
         else _schema.OUTPUT_SCHEMA
     # partition column LAST, matching Spark's partitioned-parquet read
@@ -126,18 +124,15 @@ _PUSHABLE = {EqualTo: "=", GreaterThan: ">", GreaterThanOrEqual: ">=",
 
 class _SnapshotReader(DataSourceReader):
     def __init__(self, schema: StructType, table_dir: str) -> None:
-        from .checkpoint import detect_backend, make_ledger
+        from .checkpoint import make_ledger
         self._schema = schema
         self._dir = table_dir
         self._where: list[tuple] = []
         # pin the snapshot VERSION at plan time (driver): the scan
-        # stays consistent even if writers commit mid-job (markers
-        # tables keep no history — they read the live state)
-        ledger = make_ledger(table_dir, detect_backend(table_dir))
-        self._version = ledger.latest_version() if getattr(
-            ledger, "log_defined_visibility", False) else None
-        meta = ledger.table_meta() if getattr(
-            ledger, "log_defined_visibility", False) else {}
+        # stays consistent even if writers commit mid-job
+        ledger = make_ledger(table_dir)
+        self._version = ledger.latest_version()
+        meta = ledger.table_meta()
         self._cm = dict(meta.get("column_mapping") or {})
 
     def pushFilters(self, filters):
@@ -160,7 +155,7 @@ class _SnapshotReader(DataSourceReader):
         import os
         from .checkpoint import _snapshot_plan
         paths, _meta, dv = _snapshot_plan(
-            self._dir, None, self._version, self._where or None)
+            self._dir, self._version, self._where or None)
         out = []
         for p in paths:
             d = os.path.basename(os.path.dirname(p))
@@ -196,11 +191,9 @@ class _ChangeStreamReader(DataSourceStreamReader):
         sv = options.get("startingversion")
         self._max_versions = int(options.get("maxversionspertrigger")
                                  or 0) or None
-        from .checkpoint import detect_backend, make_ledger
-        _led = make_ledger(table_dir, detect_backend(table_dir))
-        _meta = _led.table_meta() if getattr(
-            _led, "log_defined_visibility", False) else {}
-        self._cm = dict(_meta.get("column_mapping") or {})
+        from .checkpoint import make_ledger
+        _led = make_ledger(table_dir)
+        self._cm = dict(_led.table_meta().get("column_mapping") or {})
         if sv is None:
             self._start = 0
         elif str(sv).lower() == "latest":
@@ -209,13 +202,8 @@ class _ChangeStreamReader(DataSourceStreamReader):
             self._start = int(sv)
 
     def _ledger(self):
-        from .checkpoint import detect_backend, make_ledger
-        ledger = make_ledger(self._dir, detect_backend(self._dir))
-        if not getattr(ledger, "log_defined_visibility", False):
-            raise ValueError(
-                "the curator_table stream source requires a "
-                "commitlog-governed table")
-        return ledger
+        from .checkpoint import make_ledger
+        return make_ledger(self._dir)
 
     def initialOffset(self) -> dict:
         return {"version": int(self._start)}
@@ -287,20 +275,13 @@ class _LedgerWriter(DataSourceArrowWriter):
 
     def __init__(self, schema: StructType, table_dir: str, options,
                  overwrite: bool = False) -> None:
-        from .checkpoint import BUCKET_FNS, detect_backend, make_ledger
+        from .checkpoint import BUCKET_FNS, make_ledger
         self._schema = schema
         self._dir = table_dir
         self._overwrite = overwrite
-        ledger = make_ledger(table_dir, detect_backend(table_dir))
+        ledger = make_ledger(table_dir)
         existing = bool(ledger.committed())
-        if existing and not getattr(ledger, "log_defined_visibility",
-                                    False):
-            raise ValueError(
-                "curator_table writes require the commitlog ledger: "
-                "the markers backend cannot atomically extend live "
-                "partitions (see incremental.py)")
-        meta = ledger.table_meta() if getattr(
-            ledger, "log_defined_visibility", False) else {}
+        meta = ledger.table_meta()
         # column mapping (ALTER history): tasks stage files under the
         # immutable PHYSICAL names. New columns this write introduces
         # get physical names minted ONCE here on the driver (tasks must
@@ -411,7 +392,7 @@ class _LedgerWriter(DataSourceArrowWriter):
 
     def _ledger(self):
         from .checkpoint import make_ledger, record_table_schema
-        ledger = make_ledger(self._dir, "commitlog")
+        ledger = make_ledger(self._dir)
         if self._new_bucket:
             ledger.set_table_meta({"bucket": dict(self._bucket)})
             self._new_bucket = False

@@ -33,13 +33,12 @@ DEFAULT_KEY = ("conv_id", "turn_idx")
 
 def table_diff(spark: SparkSession, out_dir: str, since_version: int,
                until_version: int | None = None,
-               key_cols: tuple[str, ...] = DEFAULT_KEY,
-               backend: str | None = None) -> DataFrame:
+               key_cols: tuple[str, ...] = DEFAULT_KEY) -> DataFrame:
     """One row per changed key: key columns, `change` in
     {add, remove, update}, `changed_cols` (update only), and the
     full `before` / `after` row-image structs."""
     delta = row_changes(spark, out_dir, since_version,
-                        until_version, backend=backend)
+                        until_version)
     keys = list(key_cols)
     vals = [c for c in delta.columns if c not in keys + [CHANGE_COL]]
 
@@ -97,8 +96,7 @@ def diff_summary(diff: DataFrame) -> dict:
 
 def drift_report(spark: SparkSession, out_dir: str, since_version: int,
                  until_version: int | None = None,
-                 dims: tuple[str, ...] = ("lang",),
-                 backend: str | None = None) -> DataFrame:
+                 dims: tuple[str, ...] = ("lang",)) -> DataFrame:
     """Distribution drift between two snapshots: where `table_diff`
     reports WHICH rows changed, this reports how the corpus SHAPE
     moved — per dimension cell (e.g. lang, source): row count before
@@ -114,8 +112,7 @@ def drift_report(spark: SparkSession, out_dir: str, since_version: int,
     from .checkpoint import read_committed
 
     def counts(version, name):
-        df = read_committed(spark, out_dir, version=version,
-                            backend=backend)
+        df = read_committed(spark, out_dir, version=version)
         return (df.groupBy(*dims)
                 .agg(F.count(F.lit(1)).alias(name)))
 

@@ -40,9 +40,9 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .checkpoint import (
-    _apply_dv, _file_may_match, _normalize_where, detect_backend,
-    file_column_stats, make_ledger, physical_name, physical_struct,
-    stats_columns, to_logical, to_physical)
+    _apply_dv, _file_may_match, _normalize_where, file_column_stats,
+    make_ledger, physical_name, physical_struct, stats_columns,
+    to_logical, to_physical)
 
 __all__ = ["ConcurrentDMLError", "delete_where",
            "insert_overwrite_where", "update_where"]
@@ -101,7 +101,6 @@ def _stats_candidates(committed: dict, where,
 
 def _rewrite_where(spark: SparkSession, out_dir: str, where,
                    transform, verify, op_name: str,
-                   backend: str | None = None,
                    extra_actions: list | None = None) -> dict:
     """Common engine: prune → probe → rewrite touched files →
     one atomic commit → stale-swap verification.
@@ -116,12 +115,7 @@ def _rewrite_where(spark: SparkSession, out_dir: str, where,
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            f"{op_name} requires a log-defined-visibility ledger, "
-            f"not '{backend}'")
+    ledger = make_ledger(out_dir)
     committed, _s, meta, _t = ledger.snapshot()
     if not meta.get("schema"):
         raise ValueError(f"{op_name} requires the table schema in "
@@ -268,8 +262,7 @@ def _rewrite_where(spark: SparkSession, out_dir: str, where,
 
 
 def insert_overwrite_where(spark: SparkSession, out_dir: str,
-                           df: DataFrame, where,
-                           backend: str | None = None) -> dict:
+                           df: DataFrame, where) -> dict:
     """INSERT OVERWRITE ... WHERE (Delta's replaceWhere): atomically
     replace EXACTLY the rows matching `where` with `df`'s rows — the
     standard backfill idiom at corpus scale (reprocess one day / one
@@ -297,11 +290,7 @@ def insert_overwrite_where(spark: SparkSession, out_dir: str,
 
     from .checkpoint import BUCKET_FNS
 
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("insert_overwrite_where requires the "
-                         "commitlog ledger")
+    ledger = make_ledger(out_dir)
     _c, _s, meta, _t = ledger.snapshot()
     if not meta.get("schema"):
         raise ValueError("replaceWhere requires the table schema in "
@@ -397,7 +386,7 @@ def insert_overwrite_where(spark: SparkSession, out_dir: str,
         return None
 
     s = _rewrite_where(spark, out_dir, where, transform, verify,
-                       "overwrite", backend, extra_actions=adds)
+                       "overwrite", extra_actions=adds)
     s["rows_deleted"] = s.pop("rows_matched")
     s["rows_inserted"] = rows_inserted
     s["files_added"] = sum(len(a["files"]) for a in adds)
@@ -409,7 +398,7 @@ def insert_overwrite_where(spark: SparkSession, out_dir: str,
 
 
 def update_where(spark: SparkSession, out_dir: str, set_exprs: dict,
-                 where, backend: str | None = None) -> dict:
+                 where) -> dict:
     """UPDATE table SET col = expr, ... WHERE pred. `set_exprs` maps
     existing column names to Spark SQL expression strings (or Columns)
     evaluated over the row; values are cast back to the column's
@@ -420,9 +409,7 @@ def update_where(spark: SparkSession, out_dir: str, set_exprs: dict,
     parts_touched}; version is None when nothing matched."""
     from pyspark.sql.types import StructType
 
-    ledger = make_ledger(out_dir, backend or detect_backend(out_dir))
-    meta_schema = ledger.table_meta().get("schema") if getattr(
-        ledger, "log_defined_visibility", False) else None
+    meta_schema = make_ledger(out_dir).table_meta().get("schema")
     declared = {f.name: f.dataType for f in
                 StructType.fromJson(meta_schema).fields} \
         if meta_schema else {}
@@ -446,13 +433,12 @@ def update_where(spark: SparkSession, out_dir: str, set_exprs: dict,
         return None
 
     s = _rewrite_where(spark, out_dir, where, transform, verify,
-                       "update", backend)
+                       "update")
     s["rows_updated"] = s.pop("rows_matched")
     return s
 
 
-def delete_where(spark: SparkSession, out_dir: str, where,
-                 backend: str | None = None) -> dict:
+def delete_where(spark: SparkSession, out_dir: str, where) -> dict:
     """DELETE FROM table WHERE pred. NULL-predicate rows survive (SQL
     semantics). The surviving row count is verified against the
     probe's match count per file set.
@@ -469,6 +455,6 @@ def delete_where(spark: SparkSession, out_dir: str, where,
         return None
 
     s = _rewrite_where(spark, out_dir, where, transform, verify,
-                       "deletew", backend)
+                       "deletew")
     s["rows_deleted"] = s.pop("rows_matched")
     return s

@@ -56,7 +56,7 @@ import json
 import os
 import shutil
 
-from .checkpoint import detect_backend, make_ledger
+from .checkpoint import get_atomic_store, make_ledger
 
 #: Delta stats are emitted only for these JSON-native stat types; a
 #: timestamp min/max is stored as epoch-micros in the commitlog but
@@ -342,12 +342,7 @@ def export_delta_log(out_dir: str, dest: str | None = None,
     if the schema evolved). Returns {delta_version, table_root, adds,
     removes, files_live, n_rows, linked}.
     """
-    if detect_backend(out_dir) != "commitlog":
-        raise ValueError(
-            "Delta export requires the commitlog ledger: the markers "
-            "backend has neither a versioned snapshot nor a declared "
-            "schema to translate")
-    sl = make_ledger(out_dir, "commitlog")
+    sl = make_ledger(out_dir)
     committed, _success, meta, _txns = sl.snapshot(version=version)
     if not (meta or {}).get("schema"):
         raise ValueError("table has no declared schema in its log — "
@@ -469,17 +464,14 @@ def export_delta_log(out_dir: str, dest: str | None = None,
     next_version = 0 if prev_version is None else prev_version + 1
     os.makedirs(log_dir, exist_ok=True)
     final = os.path.join(log_dir, f"{next_version:020d}.json")
-    if os.path.exists(final):
+    # create-exclusive publish through the commit log's atomic store: a
+    # concurrent exporter that took this version first keeps it intact
+    payload = "".join(json.dumps(action, sort_keys=True) + "\n"
+                      for action in actions).encode()
+    if not get_atomic_store().put_if_absent(final, payload):
         raise FileExistsError(
             f"{final} already exists — a concurrent export raced this "
             "one; re-run to diff against the new log head")
-    tmp = final + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        for action in actions:
-            f.write(json.dumps(action, sort_keys=True) + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, final)  # atomic publish, same rule as the commitlog
     checkpointed = False
     if next_version > 0 and next_version % CHECKPOINT_INTERVAL == 0:
         _write_delta_checkpoint(
@@ -769,8 +761,7 @@ def vacuum_delta(table_root: str, min_age_s: float = 3600.0,
     # in-place export? the commitlog governs this directory's files
     parent = os.path.dirname(os.path.abspath(table_root))
     if os.path.basename(os.path.abspath(table_root)) == "data" and \
-            (os.path.isdir(os.path.join(parent, "_commitlog"))
-             or os.path.isdir(os.path.join(parent, "_ledger"))):
+            os.path.isdir(os.path.join(parent, "_commitlog")):
         raise ValueError(
             "this Delta table is an IN-PLACE export of a commitlog "
             "table — its data dir is governed by the commitlog; run "

@@ -38,7 +38,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .checkpoint import detect_backend, make_ledger, read_changes, table_changes
+from .checkpoint import make_ledger, read_changes, table_changes
 
 
 def _cursor_dir(out_dir: str, consumer_id: str) -> str:
@@ -101,8 +101,7 @@ def _gc_cursors(d: str, keep_tail: int = CURSOR_KEEP_TAIL) -> None:
 
 
 def consume_changes(spark: SparkSession, out_dir: str, consumer_id: str,
-                    sink: Callable[[DataFrame, int, int], None],
-                    backend: str | None = None) -> dict:
+                    sink: Callable[[DataFrame, int, int], None]) -> dict:
     """One poll: read the rows inserted in (cursor, head], hand them to
     `sink(batch_df, since_version, until_version)`, then advance the
     durable cursor to head. Returns {consumed_rows, since, until,
@@ -118,11 +117,7 @@ def consume_changes(spark: SparkSession, out_dir: str, consumer_id: str,
     A cursor that has fallen behind vacuum's retention window raises
     FileNotFoundError (from read_changes) rather than silently feeding
     a partial batch — re-bootstrap the consumer deliberately."""
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("change-feed consumption requires the "
-                         "commitlog ledger")
+    ledger = make_ledger(out_dir)
     since = consumer_position(out_dir, consumer_id)
     head = ledger.latest_version() or 0
     if head <= since:
@@ -130,10 +125,10 @@ def consume_changes(spark: SparkSession, out_dir: str, consumer_id: str,
                 "since": since, "until": since, "advanced": False}
     # rows_inserted from the log alone decides whether the batch is
     # worth a Spark job at all (pure metadata; zero data I/O)
-    ch = table_changes(out_dir, since, head, backend)
+    ch = table_changes(out_dir, since, head)
     n = int(ch["rows_inserted"])
     if n > 0:
-        sink(read_changes(spark, out_dir, since, head, backend),
+        sink(read_changes(spark, out_dir, since, head),
              since, head)
     _commit_cursor(out_dir, consumer_id, head, n)
     # rows_deleted surfaces deletions/rollbacks in the window — an

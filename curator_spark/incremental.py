@@ -11,15 +11,12 @@ ledger of completed work, keyed by content fingerprint rather than row
 index, so re-delivered or overlapping batches are skipped exactly like
 completed requests.
 
-Why this requires the commitlog ledger: an append adds files to
-partitions that already have committed data. Under log-defined
-visibility that is precisely Delta's add-file commit — one put per new
+Commit shape: an append adds files to partitions that already have
+committed data — precisely Delta's add-file commit: one put per new
 file plus one atomic `add_files` log entry merging the partition
 manifest; a crash between the two leaves only invisible orphans
 (read_committed ignores them, vacuum reclaims them) and the re-run
-appends the batch cleanly. The markers backend publishes by whole-dir
-swap and cannot express "extend a live partition" without a window
-where readers see unmanifested files, so append refuses it.
+appends the batch cleanly.
 
 Safety: a multi-run partition records every contributing run in its
 marker (`runs`); checkpoint.revalidate_committed REFUSES to auto-
@@ -46,8 +43,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schema
 from .checkpoint import (
-    WRITE_SALTS, _append_metrics, _gc_stale_scratch, detect_backend,
-    file_column_stats, make_ledger, read_committed, run_fingerprint)
+    WRITE_SALTS, _append_metrics, _gc_stale_scratch, file_column_stats,
+    make_ledger, read_committed, run_fingerprint)
 from .pipeline import run_pipeline_df
 
 # unit separator: cannot occur in role/text tokens, so the fingerprint
@@ -122,8 +119,7 @@ def upsert_conversations(spark: SparkSession, input_path: str,
                                           **(params or {})})
     new = spark.read.schema(schema.TRANSCRIPTS_SCHEMA).parquet(input_path)
     from .checkpoint import delete_matching
-    backend = detect_backend(out_dir)
-    existing = read_committed(spark, out_dir, backend)
+    existing = read_committed(spark, out_dir)
     batch_fps = conv_fingerprints(new)
     table_fps = conv_fingerprints(
         existing.select("conv_id", "turn_idx", "role", "text"))
@@ -131,8 +127,7 @@ def upsert_conversations(spark: SparkSession, input_path: str,
                .join(table_fps.alias("t"), "conv_id")
                .filter(F.col("b.conv_fp") != F.col("t.conv_fp"))
                .select("conv_id"))
-    d = delete_matching(spark, out_dir, revised, key="conv_id",
-                        backend=backend)
+    d = delete_matching(spark, out_dir, revised, key="conv_id")
     summary = append_batch_df(spark, new, out_dir, run_id=run_id,
                               input_desc=input_path, params=params,
                               broadcast_conv_aggs=broadcast_conv_aggs,
@@ -162,15 +157,7 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
     marker is committed only after every partition's add-file commit
     and the metrics/lineage writes have landed."""
     t0 = time.monotonic() if t0 is None else t0
-    backend = detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            f"append requires a log-defined-visibility ledger (got "
-            f"'{backend}'): extending live partitions is an add-file "
-            "commit, which the whole-dir-swap markers protocol cannot "
-            "express atomically — create the table with "
-            "ledger_backend='commitlog'")
+    ledger = make_ledger(out_dir)
     if txn is not None:
         seen = ledger.last_txn(txn[0])
         if seen is not None and seen >= int(txn[1]):
@@ -184,7 +171,7 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
     winners = fps.groupBy("conv_fp").agg(F.min("conv_id").alias("conv_id"))
     n_winners = winners.count()
 
-    existing = read_committed(spark, out_dir, backend)
+    existing = read_committed(spark, out_dir)
     existing_fps = (conv_fingerprints(
         existing.select("conv_id", "turn_idx", "role", "text"))
         .select("conv_fp").distinct())
@@ -219,8 +206,7 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
     try:
         from .checkpoint import (
             record_table_schema, stats_columns, to_logical, to_physical)
-        tmeta = ledger.table_meta() if getattr(
-            ledger, "log_defined_visibility", False) else {}
+        tmeta = ledger.table_meta()
         if tmeta.get("column_mapping"):
             # mapped table (ALTER history): mint physical names for any
             # new logical columns first, then land physical files

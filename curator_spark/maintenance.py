@@ -22,28 +22,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .checkpoint import detect_backend, make_ledger, optimize_table, \
-    vacuum
+from .checkpoint import make_ledger, optimize_table, vacuum
 
 
 def maintenance_report(out_dir: str, target_files: int = 4,
-                       min_age_s: float = 3600.0,
-                       backend: str | None = None) -> dict:
+                       min_age_s: float = 3600.0) -> dict:
     """Metadata-only health report: which partitions exceed
     `target_files` live files, how many orphan files an aged vacuum
     would reclaim, and how long the log tail past the last checkpoint
     is. Safe to run anytime — opens zero data files."""
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError("maintenance requires the commitlog ledger")
+    ledger = make_ledger(out_dir)
     committed = ledger.committed()
     per_part = {int(p): len((m or {}).get("files") or {})
                 for p, m in committed.items()
                 if m and m.get("status") == "COMMITTED"}
     need = sorted(p for p, n in per_part.items() if n > target_files)
-    reclaimable = vacuum(out_dir, backend=backend,
-                         min_age_s=min_age_s, dry_run=True)
+    reclaimable = vacuum(out_dir, min_age_s=min_age_s, dry_run=True)
     head = ledger.latest_version() or 0
     ckpts = ledger._checkpoints()
     return {
@@ -60,20 +54,16 @@ def maintenance_report(out_dir: str, target_files: int = 4,
 
 def run_maintenance(spark: SparkSession, out_dir: str,
                     target_files: int = 4,
-                    min_age_s: float = 3600.0,
-                    backend: str | None = None) -> dict:
+                    min_age_s: float = 3600.0) -> dict:
     """Execute the report's remedies: compact every over-filed
     partition (each its own atomic commit; concurrent appends conflict
     per-partition, never table-wide), then vacuum aged orphans —
     including the ones the compaction just superseded once they age
     past `min_age_s`. Returns the before-report plus what was done."""
-    before = maintenance_report(out_dir, target_files, min_age_s,
-                                backend)
-    opt = optimize_table(spark, out_dir, target_files=target_files,
-                         backend=backend)
-    removed = vacuum(out_dir, backend=backend, min_age_s=min_age_s)
-    after = maintenance_report(out_dir, target_files, min_age_s,
-                               backend)
+    before = maintenance_report(out_dir, target_files, min_age_s)
+    opt = optimize_table(spark, out_dir, target_files=target_files)
+    removed = vacuum(out_dir, min_age_s=min_age_s)
+    after = maintenance_report(out_dir, target_files, min_age_s)
     return {"before": before,
             "parts_compacted": opt["parts_compacted"],
             "files_before": opt["files_before"],

@@ -54,9 +54,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .checkpoint import (
-    BUCKET_FNS, _apply_dv, _file_may_match, detect_backend,
-    file_column_stats, make_ledger, physical_name, stats_columns,
-    to_logical, to_physical)
+    BUCKET_FNS, _apply_dv, _file_may_match, file_column_stats,
+    make_ledger, physical_name, stats_columns, to_logical, to_physical)
 
 __all__ = ["ConcurrentMergeError", "merge_dataframes", "merge_into"]
 
@@ -161,8 +160,7 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
                matched_delete_condition: str | None = None,
                not_matched_condition: str | None = None,
                txn: tuple[str, int] | None = None,
-               evolve_schema: bool = False,
-               backend: str | None = None) -> dict:
+               evolve_schema: bool = False) -> dict:
     """MERGE `source` into the committed commitlog table at `out_dir`
     on key equality, atomically (one log version carrying every file
     swap and every new file — see module docstring for the plan shape
@@ -203,13 +201,7 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
 
     _validate_clauses(when_matched, when_not_matched,
                       matched_delete_condition)
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if not getattr(ledger, "log_defined_visibility", False):
-        raise ValueError(
-            f"MERGE requires a log-defined-visibility ledger, not "
-            f"'{backend}': swaps + inserts must land in one atomic "
-            "log version")
+    ledger = make_ledger(out_dir)
     committed, _success, meta, _txns = ledger.snapshot()
     bucket = meta.get("bucket") or {}
     if not meta.get("schema"):
@@ -499,7 +491,7 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
             # one anti join against the key column only (column-pruned
             # scan of the whole table — the unavoidable full-key pass)
             from .checkpoint import read_committed
-            tkeys = read_committed(spark, out_dir, backend) \
+            tkeys = read_committed(spark, out_dir) \
                 .select(key).filter(F.col(key).isNotNull())
             ins = src.alias("s")
             if not_matched_condition:

@@ -8,7 +8,7 @@ src/bespokelabs/curator/status_tracker/online_status_tracker.py:129-218
 whose live view is the Spark UI; what the tracker ADDS there is the
 curation-ledger view — per-partition commit state, counter totals,
 token volume, derived cost — which here reads STRAIGHT off the durable
-artifacts (_ledger or _commitlog + _metrics), driver-side via pyarrow,
+artifacts (_commitlog + _metrics), driver-side via pyarrow,
 no Spark session required. That makes the same report available while a
 run is in flight (partial ledger), after a crash (what resumes?), and
 long after completion (lineage), from any process that can see the
@@ -27,7 +27,7 @@ from __future__ import annotations
 import os
 from datetime import datetime, timezone
 
-from .checkpoint import detect_backend, make_ledger
+from .checkpoint import make_ledger
 
 COUNTER_COLS = ("n_in", "n_kept", "n_scrubbed", "n_errors", "n_tokens")
 
@@ -56,23 +56,15 @@ def _read_metrics_pandas(out_dir: str):
     return m.groupby(["run_id", "part"], as_index=False).last()
 
 
-def run_status(out_dir: str, backend: str | None = None) -> dict:
+def run_status(out_dir: str) -> dict:
     """Machine-readable status snapshot of a (possibly in-flight) run
-    directory: ledger commit state + counter totals. backend=None
-    auto-detects the governing ledger. Totals are scoped to the rows
-    whose (run_id, part) the CURRENT ledger markers reference — a
-    partition recomputed under a different run fingerprint contributes
-    once, through the marker that owns it, never per historic run."""
-    backend = backend or detect_backend(out_dir)
-    ledger = make_ledger(out_dir, backend)
-    if getattr(ledger, "log_defined_visibility", False):
-        committed, success, _meta, txns = ledger.snapshot()  # ONE replay
-        version = ledger.latest_version()
-        protocol = _meta.get("_protocol")
-        constraints = dict(_meta.get("constraints") or {})
-    else:
-        committed, success = ledger.committed(), ledger.run_success()
-        txns, version, protocol, constraints = {}, None, None, {}
+    directory: ledger commit state + counter totals. Totals are scoped
+    to the rows whose (run_id, part) the CURRENT ledger markers
+    reference — a partition recomputed under a different run
+    fingerprint contributes once, through the marker that owns it,
+    never per historic run."""
+    ledger = make_ledger(out_dir)
+    committed, success, meta, txns = ledger.snapshot()  # ONE replay
     # downstream feed consumers (feed.py): how far each has read
     consumers: dict[str, int] = {}
     cdir = os.path.join(out_dir, "_consumers")
@@ -105,34 +97,32 @@ def run_status(out_dir: str, backend: str | None = None) -> dict:
     keep_rate = (totals["n_kept"] / totals["n_in"]) if totals["n_in"] else None
     return {
         "out_dir": out_dir,
-        "backend": backend,
         "parts_committed": len(committed),
         "run_success": success,
         "complete": success is not None,
         "totals": totals,
         "keep_rate": keep_rate,
         "per_part": per_part,
-        "version": version,          # latest commit (commitlog only)
-        "protocol": protocol,        # reader/writer requirement, if raised
-        "constraints": constraints,  # CHECK invariants in force
+        "version": ledger.latest_version(),  # latest commit
+        "protocol": meta.get("_protocol"),  # reader/writer requirement
+        "constraints": dict(meta.get("constraints") or {}),  # CHECKs
         "txns": txns,                # idempotent-writer marks
         "consumers": consumers,      # feed cursors: id → last version read
         "as_of": datetime.now(timezone.utc).isoformat(timespec="seconds"),
     }
 
 
-def format_run_status(out_dir: str, backend: str | None = None,
+def format_run_status(out_dir: str,
                       usd_per_1k_tokens: float = 0.002,
                       max_parts: int = 24) -> str:
     """Human-readable render of run_status — the tracker table
     (reference: online_status_tracker.py:129-218, sections for request
     counts / token usage / cost / rate limits, rendered as one table)."""
-    s = run_status(out_dir, backend)
+    s = run_status(out_dir)
     t = s["totals"]
     cost = t["n_tokens"] / 1000.0 * usd_per_1k_tokens
     lines = [
-        f"Run status — {s['out_dir']}  [{s['backend']} ledger, "
-        f"as of {s['as_of']}]",
+        f"Run status — {s['out_dir']}  [as of {s['as_of']}]",
         f"  state: {'COMPLETE' if s['complete'] else 'IN PROGRESS / resumable'}"
         + (f" (run {s['run_success']['run_id']}, "
            f"{s['run_success']['n_parts']} parts)" if s["complete"] else

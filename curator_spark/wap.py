@@ -52,8 +52,7 @@ import shutil
 from datetime import datetime, timezone
 from typing import Callable
 
-from .checkpoint import (_check_writer_protocol, detect_backend,
-                         make_ledger)
+from .checkpoint import _check_writer_protocol, make_ledger
 from .clone import clone_table
 
 
@@ -68,14 +67,12 @@ def create_branch(src_dir: str, branch_dir: str) -> dict:
     — source path + fork version — in the branch's table metadata, so
     publish knows its fast-forward target. Returns the clone summary
     plus {base_version}."""
-    if detect_backend(src_dir) != "commitlog":
-        raise ValueError("WAP branching requires the commitlog ledger")
-    src = make_ledger(src_dir, "commitlog")
+    src = make_ledger(src_dir)
     base = src.latest_version()
     if base is None:
         raise ValueError(f"{src_dir} has no commits to branch from")
     info = clone_table(src_dir, branch_dir, version=base)
-    bl = make_ledger(branch_dir, "commitlog")
+    bl = make_ledger(branch_dir)
     bl.set_table_meta({"_wap": {
         "source": os.path.abspath(src_dir), "base_version": int(base)}})
     info["base_version"] = int(base)
@@ -97,7 +94,7 @@ def publish_branch(src_dir: str, branch_dir: str,
     parts_removed, files_linked}; `published_version` is None when the
     branch holds no net change. Raises PublishConflict if the source
     head moved past the fork point."""
-    bl = make_ledger(branch_dir, "commitlog")
+    bl = make_ledger(branch_dir)
     committed_b, _success_b, meta_b, txns_b = bl.snapshot()
     prov = (meta_b or {}).get("_wap") or {}
     if not prov or "base_version" not in prov:
@@ -107,7 +104,7 @@ def publish_branch(src_dir: str, branch_dir: str,
     if os.path.abspath(src_dir) != prov["source"]:
         raise ValueError(
             f"branch was forked from {prov['source']}, not {src_dir}")
-    sl = make_ledger(src_dir, "commitlog")
+    sl = make_ledger(src_dir)
 
     if audit is not None:
         if spark is None:
@@ -222,7 +219,7 @@ def drop_branch(branch_dir: str) -> None:
     bl_dir = os.path.join(branch_dir, "_commitlog")
     if not os.path.isdir(bl_dir):
         raise ValueError(f"{branch_dir} is not a commitlog table")
-    meta = make_ledger(branch_dir, "commitlog").snapshot()[2] or {}
+    meta = make_ledger(branch_dir).snapshot()[2] or {}
     if not meta.get("_wap"):
         raise ValueError(f"{branch_dir} is not a WAP branch — refusing "
                          "to delete a primary table")

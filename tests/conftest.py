@@ -34,3 +34,49 @@ def transcripts_path(tmp_path_factory, transcripts_pdf):
     p = tmp_path_factory.mktemp("fixture") / "transcripts.parquet"
     fixtures.to_spark_parquet(transcripts_pdf, str(p))
     return str(p)
+
+
+def copy_table(src: str, dst) -> str:
+    """A private, writable copy of the table at `src`, so a fixture can
+    build a table once per module with Spark and still hand every test
+    a table of its own. Files get fresh mtimes, as if just written."""
+    import shutil
+    shutil.copytree(src, str(dst), copy_function=shutil.copy)
+    return str(dst)
+
+
+def write_legacy_markers_dir(out_dir: str, committed: dict,
+                             success: dict | None) -> None:
+    """Lay down the retired per-partition marker ledger over the data
+    files already in `out_dir/data`: one _ledger/part-K.json marker per
+    entry of `committed` ({part: marker}) plus _SUCCESS_RUN."""
+    import json
+    ledger = os.path.join(out_dir, "_ledger")
+    os.makedirs(ledger, exist_ok=True)
+    for part, marker in committed.items():
+        with open(os.path.join(ledger, f"part-{int(part)}.json"), "w") as f:
+            json.dump(marker, f)
+    if success is not None:
+        with open(os.path.join(out_dir, "_SUCCESS_RUN"), "w") as f:
+            json.dump(success, f)
+
+
+@pytest.fixture
+def legacy_markers_table(tmp_path):
+    """A tiny hand-written legacy marker-layout table (no commit log):
+    one partition, one file, committed and run-complete."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    out = str(tmp_path / "legacy")
+    d = os.path.join(out, "data", "part=0")
+    os.makedirs(d)
+    fp = os.path.join(d, "part-00000.parquet")
+    pq.write_table(pa.table({"conv_id": ["c0", "c1"], "turn_idx": [0, 0]}),
+                   fp)
+    files = {"part-00000.parquet": {
+        "n_rows": 2, "n_bytes": os.path.getsize(fp)}}
+    write_legacy_markers_dir(
+        out, {0: {"run_id": "r", "part": 0, "status": "COMMITTED",
+                  "n_rows": 2, "files": files}},
+        {"run_id": "r", "n_parts": 1})
+    return out

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import copy_table
 from curator_spark.checkpoint import make_ledger, read_committed
 from curator_spark.datasource import CuratorTableDataSource
 from curator_spark.streaming.apply_changes import (
@@ -26,14 +27,21 @@ def _base(spark, n=400):
         (F.col("id") % 97).cast("double").alias("ppl"))
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
     spark.dataSource.register(CuratorTableDataSource)
-    out = str(tmp_path / "t")
+    out = str(tmp_path_factory.mktemp("apply_changes") / "t")
     (_base(spark).write.format("curator_table")
      .option("bucketBy", "conv_id").option("buckets", "4")
      .mode("append").save(out))
     return out
+
+
+@pytest.fixture()
+def table(spark, built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    spark.dataSource.register(CuratorTableDataSource)
+    return copy_table(built_table, tmp_path / "t")
 
 
 def _cdc(spark, rows):
@@ -128,7 +136,7 @@ def test_stream_applies_epochs_in_order(spark, table, stream_env):
 
     # restart on the SAME checkpoint: offsets fully consumed → no new
     # epochs, no new table versions
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v = led.latest_version()
     q2, s2 = run_apply_changes_stream(
         spark, stream_env["sdir"], table,
@@ -179,7 +187,7 @@ def test_auto_compaction_bounds_file_counts(spark, table, tmp_path):
         compact_every=3, compact_target=2)
     assert len(summaries) == 8
     assert any("optimize" in s for s in summaries)
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     worst = max(len((m or {}).get("files") or {})
                 for m in led.committed().values())
     assert worst <= 2 + 3   # target + at most compact_every new epochs
@@ -197,7 +205,7 @@ def test_replayed_epoch_is_skipped_before_any_work(spark, table):
     batch = _cdc(spark, [("conv-9", 0, "user", 777.0, 1, False)])
     s1 = apply_cdc_batch(spark, batch, table, txn=("app-x", 42))
     assert s1["rows_updated"] == 1 and not s1["txn_skipped"]
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v = led.latest_version()
     s2 = apply_cdc_batch(spark, batch, table, txn=("app-x", 42))
     assert s2["txn_skipped"] and led.latest_version() == v

@@ -17,6 +17,7 @@ import random
 
 import pytest
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.cdf import (
     CHANGE_COL, _changed_file_sets, apply_row_changes, consume_into_view,
@@ -35,7 +36,7 @@ def _multiset(df):
 
 def _assert_window_identity(spark, out, since, until=None):
     """live(since) ∖ deletes ⊎ inserts == live(until), multiset-exact."""
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     until = until if until is not None else led.latest_version()
     before = read_committed(spark, out, version=since) if since else None
     if before is None:
@@ -52,18 +53,26 @@ def _assert_window_identity(spark, out, since, until=None):
     return delta
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("cdf")
     p1 = str(tmp_path / "b1.parquet")
     fixtures.write_transcripts_parquet(p1, 700, seed=91, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
-    v1 = make_ledger(out, "commitlog").latest_version()
+    run_checkpointed(spark, p1, out)
+    v1 = make_ledger(out).latest_version()
     p2 = str(tmp_path / "b2.parquet")
     fixtures.to_spark_parquet(
         fixtures.generate_transcripts(300, seed=92, n_parts=4), p2)
     append_new_conversations(spark, p2, out)
     return {"out": out, "v1": v1, "p1": p1}
+
+
+@pytest.fixture()
+def table(built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    return dict(built_table,
+                out=copy_table(built_table["out"], tmp_path / "out"))
 
 
 def test_pure_append_window_is_insert_only(spark, table):
@@ -73,14 +82,14 @@ def test_pure_append_window_is_insert_only(spark, table):
     assert kinds == {"insert"}
     # and the planner read nothing from the before side
     removed, added, _, _dvb, _dva = _changed_file_sets(
-        make_ledger(out, "commitlog"), v1,
-        make_ledger(out, "commitlog").latest_version())
+        make_ledger(out), v1,
+        make_ledger(out).latest_version())
     assert removed == {} and added
 
 
 def test_delete_emits_exact_row_images(spark, table):
     out = table["out"]
-    head0 = make_ledger(out, "commitlog").latest_version()
+    head0 = make_ledger(out).latest_version()
     live = read_committed(spark, out)
     victims = [r.conv_id for r in
                live.select("conv_id").distinct().limit(3).collect()]
@@ -97,7 +106,7 @@ def test_delete_emits_exact_row_images(spark, table):
 
 def test_compaction_only_window_plans_zero_files(spark, table):
     out = table["out"]
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     head0 = led.latest_version()
     part = max(led.committed(), key=lambda p: len(led.committed()[p]["files"]))
     assert compact_partition(spark, out, part)["compacted"]
@@ -116,7 +125,7 @@ def test_restore_window_nets_out_and_rollback_emits_deletes(spark, table):
     delta = _assert_window_identity(spark, out, v1)
     assert delta.count() == 0
     # but a cursor parked AFTER the append sees the rollback as deletes
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     mid = led.latest_version() - 1  # the pre-restore head
     delta2 = _assert_window_identity(spark, out, mid)
     kinds = {r[0] for r in delta2.select(CHANGE_COL).distinct().collect()}
@@ -125,7 +134,7 @@ def test_restore_window_nets_out_and_rollback_emits_deletes(spark, table):
 
 def test_vacuum_bounds_the_row_feed(spark, table):
     out = table["out"]
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     head0 = led.latest_version()
     victims = [r.conv_id for r in read_committed(spark, out)
                .select("conv_id").distinct().limit(2).collect()]
@@ -144,8 +153,8 @@ def test_random_interleaving_and_cursor_splits(spark, tmp_path):
     p1 = str(tmp_path / "b1.parquet")
     fixtures.write_transcripts_parquet(p1, 500, seed=93, n_parts=3)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
-    led = make_ledger(out, "commitlog")
+    run_checkpointed(spark, p1, out)
+    led = make_ledger(out)
     marks = [0, led.latest_version()]
     for step in range(6):
         op = rng.choice(["append", "delete", "compact", "restore"])
@@ -225,7 +234,7 @@ def test_consume_into_view_matches_recompute_every_poll(spark, table,
     assert _multiset(read_view(spark, view)) == recompute()
     # compaction-only window: cursor advances with zero planned files,
     # snapshot carried forward
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     part = max(led.committed(), key=lambda p: len(led.committed()[p]["files"]))
     compact_partition(spark, out, part)
     r3 = poll()
@@ -233,10 +242,9 @@ def test_consume_into_view_matches_recompute_every_poll(spark, table,
     assert _multiset(read_view(spark, view)) == recompute()
 
 
-def test_row_feed_requires_commitlog(spark, tmp_path, table):
-    p = str(tmp_path / "m")
-    run_checkpointed(spark, table["p1"], p, ledger_backend="markers")
-    with pytest.raises(ValueError, match="commitlog"):
-        row_changes(spark, p, 0)
-    with pytest.raises(ValueError, match="commitlog"):
-        consume_row_changes(spark, p, "c", lambda d, s, u: None)
+def test_row_feed_requires_commitlog(spark, legacy_markers_table):
+    with pytest.raises(ValueError, match="adopt_markers"):
+        row_changes(spark, legacy_markers_table, 0)
+    with pytest.raises(ValueError, match="adopt_markers"):
+        consume_row_changes(spark, legacy_markers_table, "c",
+                            lambda d, s, u: None)

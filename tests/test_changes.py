@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     compact_partition, make_ledger, read_changes, read_committed,
@@ -14,19 +15,27 @@ from curator_spark.checkpoint import (
 from curator_spark.incremental import append_new_conversations
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("changes")
     p1 = str(tmp_path / "b1.parquet")
     b1 = fixtures.write_transcripts_parquet(p1, 900, seed=71, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
-    v1 = make_ledger(out, "commitlog").latest_version()
+    run_checkpointed(spark, p1, out)
+    v1 = make_ledger(out).latest_version()
     p2 = str(tmp_path / "b2.parquet")
     b2 = fixtures.generate_transcripts(400, seed=72, n_parts=4)
     fixtures.to_spark_parquet(b2, p2)
     app = append_new_conversations(spark, p2, out)
     return {"out": out, "b1": b1, "b2": b2, "v1": v1,
             "appended": app["rows_appended"]}
+
+
+@pytest.fixture()
+def table(built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    return dict(built_table,
+                out=copy_table(built_table["out"], tmp_path / "out"))
 
 
 def test_changes_since_base_are_exactly_the_appended_rows(spark, table):
@@ -46,7 +55,7 @@ def test_changes_since_base_are_exactly_the_appended_rows(spark, table):
 def test_compaction_does_not_duplicate_the_feed(spark, table):
     out = table["out"]
     before = read_changes(spark, out, table["v1"]).count()
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     part = max(led.committed(),
                key=lambda p: len(led.committed()[p]["files"]))
     assert compact_partition(spark, out, part)["compacted"]
@@ -61,15 +70,12 @@ def test_compaction_does_not_duplicate_the_feed(spark, table):
         read_changes(spark, out, 0).count()
 
 
-def test_changes_requires_commitlog_and_valid_versions(spark, tmp_path, table):
+def test_changes_requires_commitlog_and_valid_versions(table,
+                                                      legacy_markers_table):
     with pytest.raises(ValueError, match="does not exist"):
         table_changes(table["out"], 0, until_version=10_000)
-    p = str(tmp_path / "in.parquet")
-    fixtures.write_transcripts_parquet(p, 200, seed=73, n_parts=2)
-    out = str(tmp_path / "m")
-    run_checkpointed(spark, p, out, ledger_backend="markers")
-    with pytest.raises(ValueError, match="commitlog"):
-        table_changes(out, 0)
+    with pytest.raises(ValueError, match="adopt_markers"):
+        table_changes(legacy_markers_table, 0)
 
 
 def test_changes_since_beyond_log_raises(table):
@@ -86,7 +92,7 @@ def test_pre_window_delete_still_reports_rows_deleted(spark, table):
     never learn rows were deleted."""
     from curator_spark.checkpoint import delete_conversations
     out = table["out"]
-    head = make_ledger(out, "commitlog").latest_version()
+    head = make_ledger(out).latest_version()
     ids = sorted(r.conv_id for r in read_committed(spark, out)
                  .select("conv_id").distinct().limit(2).collect())
     s = delete_conversations(spark, out, ids)
@@ -101,7 +107,7 @@ def test_partition_remove_reports_full_shrink(spark, table):
     rows_deleted reports the partition's full live row count, not just
     its (empty) in-window insert total."""
     out = table["out"]
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     head = led.latest_version()
     part, marker = next(iter(sorted(led.committed().items())))
     n_part = sum(int(m.get("n_rows", 0))

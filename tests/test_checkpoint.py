@@ -5,9 +5,9 @@ short-circuit (mirrors reference cache-hit semantics,
 tests/unittests/test_caching.py:12-26 and resume test
 tests/integrations/test_all.py:180-192).
 
-The core suite is parametrized over BOTH ledger backends: `markers`
-(POSIX-rename marker files) and `commitlog` (put-if-absent versioned
-transaction log — the object-store-safe protocol).
+The core kill/resume/corruption/concurrency suite runs the commit log
+over every atomic store (os.link, conditional put, the S3 adapter), so
+the protocol is shown to depend only on the put-if-absent contract.
 """
 
 from __future__ import annotations
@@ -17,10 +17,18 @@ import os
 import pytest
 
 from curator_spark import fixtures
-from curator_spark.checkpoint import (CommitLogLedger, committed_parts,
-                                      make_ledger, run_checkpointed)
+from curator_spark.checkpoint import (ATOMIC_STORES, CommitLogLedger,
+                                      committed_parts, make_ledger,
+                                      read_committed, run_checkpointed)
 
-BACKENDS = ["markers", "commitlog"]
+
+@pytest.fixture(params=sorted(ATOMIC_STORES),
+                # the default store's case is the plain commit-log one
+                ids=lambda s: "commitlog" if s == "oslink" else s)
+def store(request, monkeypatch):
+    """Every ledger the run builds publishes through this store."""
+    monkeypatch.setenv("CURATOR_SPARK_ATOMIC_STORE", request.param)
+    return request.param
 
 
 @pytest.fixture(scope="module")
@@ -30,55 +38,47 @@ def small_input(tmp_path_factory):
     return str(p)
 
 
-def _read_sorted(spark, out_dir, backend="markers"):
-    # commitlog defines visibility through the log: read the snapshot,
-    # not the raw directory (which may hold invisible orphans)
-    if backend == "commitlog":
-        from curator_spark.checkpoint import read_committed
-        df = read_committed(spark, out_dir, backend)
-    else:
-        df = spark.read.parquet(os.path.join(out_dir, "data"))
+def _read_sorted(spark, out_dir):
+    # the log defines visibility: read the snapshot, not the raw
+    # directory (which may hold invisible orphans)
     return (
-        df.orderBy("conv_id", "turn_idx")
+        read_committed(spark, out_dir).orderBy("conv_id", "turn_idx")
         .drop("part")  # partition column ordering differs; value-compared via sort
         .toPandas()
     )
 
 
-def _run_success(out_dir, backend):
-    return make_ledger(out_dir, backend).run_success() is not None
+def _run_success(out_dir):
+    return make_ledger(out_dir).run_success() is not None
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_kill_and_resume_identical(spark, small_input, tmp_path, backend):
+def test_kill_and_resume_identical(spark, small_input, tmp_path, store):
     crashed = str(tmp_path / "crashed")
     clean = str(tmp_path / "clean")
 
     # simulated crash: only partitions 0,1 commit
-    r1 = run_checkpointed(spark, small_input, crashed, only_parts=[0, 1],
-                          ledger_backend=backend)
+    r1 = run_checkpointed(spark, small_input, crashed, only_parts=[0, 1])
     assert r1["parts_committed"] == 2
-    assert committed_parts(crashed, backend) == {0, 1}
-    assert not _run_success(crashed, backend)
+    assert committed_parts(crashed) == {0, 1}
+    assert not _run_success(crashed)
 
     # resume: skips committed, finishes the rest
-    r2 = run_checkpointed(spark, small_input, crashed, ledger_backend=backend)
+    r2 = run_checkpointed(spark, small_input, crashed)
     assert r2["parts_skipped"] == 2 and r2["parts_committed"] == 2
-    assert _run_success(crashed, backend)
+    assert _run_success(crashed)
 
     # clean single run for comparison
-    run_checkpointed(spark, small_input, clean, ledger_backend=backend)
-    a, b = (_read_sorted(spark, crashed, backend),
-           _read_sorted(spark, clean, backend))
+    run_checkpointed(spark, small_input, clean)
+    a, b = (_read_sorted(spark, crashed),
+           _read_sorted(spark, clean))
     assert a.equals(b), "resumed output != clean-run output"
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_memoization_short_circuit(spark, small_input, tmp_path, backend):
+def test_memoization_short_circuit(spark, small_input, tmp_path, store):
     out = str(tmp_path / "memo")
-    r1 = run_checkpointed(spark, small_input, out, ledger_backend=backend)
+    r1 = run_checkpointed(spark, small_input, out)
     assert not r1["memoized"]
-    r2 = run_checkpointed(spark, small_input, out, ledger_backend=backend)
+    r2 = run_checkpointed(spark, small_input, out)
     assert r2["memoized"] and r2["parts_committed"] == 0
 
 
@@ -92,8 +92,7 @@ def test_param_change_invalidates_memo(spark, small_input, tmp_path):
     assert not r2["memoized"]
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_corrupted_partition_recomputed(spark, small_input, tmp_path, backend):
+def test_corrupted_partition_recomputed(spark, small_input, tmp_path, store):
     """Resume must not trust a commit marker whose partition data no
     longer reconciles (reference cache-integrity verifier,
     base_request_processor.py:120-167): the marker is dropped and the
@@ -102,28 +101,26 @@ def test_corrupted_partition_recomputed(spark, small_input, tmp_path, backend):
 
     crashed = str(tmp_path / "corrupt")
     clean = str(tmp_path / "clean_for_corrupt")
-    run_checkpointed(spark, small_input, crashed, only_parts=[0, 1, 2],
-                     ledger_backend=backend)
-    assert committed_parts(crashed, backend) == {0, 1, 2}
+    run_checkpointed(spark, small_input, crashed, only_parts=[0, 1, 2])
+    assert committed_parts(crashed) == {0, 1, 2}
 
     # corrupt committed part 1: remove one of its data files
     files = glob.glob(os.path.join(crashed, "data", "part=1", "*.parquet"))
     assert files
     os.remove(files[0])
 
-    r = run_checkpointed(spark, small_input, crashed, ledger_backend=backend)
+    r = run_checkpointed(spark, small_input, crashed)
     assert r["parts_invalidated"] == 1
     assert r["parts_committed"] == 2  # part 3 (pending) + part 1 (recomputed)
     assert r["parts_skipped"] == 2
 
-    run_checkpointed(spark, small_input, clean, ledger_backend=backend)
-    a, b = (_read_sorted(spark, crashed, backend),
-           _read_sorted(spark, clean, backend))
+    run_checkpointed(spark, small_input, clean)
+    a, b = (_read_sorted(spark, crashed),
+           _read_sorted(spark, clean))
     assert a.equals(b), "recomputed output != clean-run output"
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_memoized_run_still_revalidated(spark, small_input, tmp_path, backend):
+def test_memoized_run_still_revalidated(spark, small_input, tmp_path, store):
     """Integrity checking does NOT stop once a run is memoized: data
     corrupted AFTER full completion is detected on the next invocation —
     the run-success marker is dropped, the partition recomputes, and the
@@ -133,40 +130,37 @@ def test_memoized_run_still_revalidated(spark, small_input, tmp_path, backend):
 
     out = str(tmp_path / "memo_corrupt")
     clean = str(tmp_path / "memo_corrupt_clean")
-    r1 = run_checkpointed(spark, small_input, out, ledger_backend=backend)
-    assert not r1["memoized"] and _run_success(out, backend)
+    r1 = run_checkpointed(spark, small_input, out)
+    assert not r1["memoized"] and _run_success(out)
 
     files = glob.glob(os.path.join(out, "data", "part=2", "*.parquet"))
     os.remove(files[0])
 
-    r2 = run_checkpointed(spark, small_input, out, ledger_backend=backend)
+    r2 = run_checkpointed(spark, small_input, out)
     assert not r2["memoized"]
     assert r2["parts_invalidated"] == 1 and r2["parts_committed"] == 1
-    assert _run_success(out, backend)  # re-marked after the recompute
+    assert _run_success(out)  # re-marked after the recompute
 
-    r3 = run_checkpointed(spark, small_input, out, ledger_backend=backend)
+    r3 = run_checkpointed(spark, small_input, out)
     assert r3["memoized"]
 
-    run_checkpointed(spark, small_input, clean, ledger_backend=backend)
-    a, b = (_read_sorted(spark, out, backend),
-           _read_sorted(spark, clean, backend))
+    run_checkpointed(spark, small_input, clean)
+    a, b = (_read_sorted(spark, out),
+           _read_sorted(spark, clean))
     assert a.equals(b), "post-memo recompute != clean-run output"
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
 def test_sharded_completion_writes_success_marker(spark, small_input,
-                                                  tmp_path, backend):
+                                                  tmp_path, store):
     """A run completed entirely via only_parts shards still gets the
     whole-run marker, so run-level memoization engages for the
     production sharding path."""
     out = str(tmp_path / "sharded")
-    run_checkpointed(spark, small_input, out, only_parts=[0, 1],
-                     ledger_backend=backend)
-    assert not _run_success(out, backend)
-    run_checkpointed(spark, small_input, out, only_parts=[2, 3],
-                     ledger_backend=backend)
-    assert _run_success(out, backend)
-    r3 = run_checkpointed(spark, small_input, out, ledger_backend=backend)
+    run_checkpointed(spark, small_input, out, only_parts=[0, 1])
+    assert not _run_success(out)
+    run_checkpointed(spark, small_input, out, only_parts=[2, 3])
+    assert _run_success(out)
+    r3 = run_checkpointed(spark, small_input, out)
     assert r3["memoized"]
 
 
@@ -187,7 +181,7 @@ def test_strict_mode_fails_all_on_error_rows(spark, small_input, tmp_path):
     with pytest.raises(RuntimeError, match="strict mode"):
         run_checkpointed(spark, small_input, out, strict=True)
     assert committed_parts(out) == set()
-    assert not _run_success(out, "markers")
+    assert not _run_success(out)
     # nothing published, no metrics appended (rerun must not double-count);
     # the staged output is deliberately kept for inspection
     assert not os.path.exists(os.path.join(out, "data"))
@@ -200,9 +194,8 @@ def test_strict_mode_fails_all_on_error_rows(spark, small_input, tmp_path):
     assert len(m) == 4  # exactly one metrics row per (run, part)
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
 def test_concurrent_shards_do_not_clobber(spark, small_input, tmp_path,
-                                          backend):
+                                          store):
     """Two only_parts shards of one run executing CONCURRENTLY (the
     documented production sharding) must not corrupt each other: each
     stages under its own scratch root and publishes disjoint partition
@@ -214,16 +207,16 @@ def test_concurrent_shards_do_not_clobber(spark, small_input, tmp_path,
     clean = str(tmp_path / "conc_clean")
     with ThreadPoolExecutor(2) as ex:
         f1 = ex.submit(run_checkpointed, spark, small_input, crashed,
-                       None, [0, 1], None, True, False, backend)
+                       None, [0, 1], None, True, False)
         f2 = ex.submit(run_checkpointed, spark, small_input, crashed,
-                       None, [2, 3], None, True, False, backend)
+                       None, [2, 3], None, True, False)
         r1, r2 = f1.result(timeout=300), f2.result(timeout=300)
     assert r1["parts_committed"] == 2 and r2["parts_committed"] == 2
-    assert committed_parts(crashed, backend) == {0, 1, 2, 3}
-    assert _run_success(crashed, backend)
-    run_checkpointed(spark, small_input, clean, ledger_backend=backend)
-    a, b = (_read_sorted(spark, crashed, backend),
-           _read_sorted(spark, clean, backend))
+    assert committed_parts(crashed) == {0, 1, 2, 3}
+    assert _run_success(crashed)
+    run_checkpointed(spark, small_input, clean)
+    a, b = (_read_sorted(spark, crashed),
+           _read_sorted(spark, clean))
     assert a.equals(b), "concurrent-shard output != clean-run output"
 
 
@@ -254,10 +247,10 @@ def test_commitlog_orphans_invisible_until_vacuum(spark, small_input,
     reader never sees them, and vacuum() reclaims exactly them."""
     import glob
 
-    from curator_spark.checkpoint import read_committed, vacuum
+    from curator_spark.checkpoint import vacuum
 
     out = str(tmp_path / "vac")
-    run_checkpointed(spark, small_input, out, ledger_backend="commitlog")
+    run_checkpointed(spark, small_input, out)
     before = read_committed(spark, out).orderBy("conv_id", "turn_idx").toPandas()
 
     # delete ONE of part 0's files; its siblings become orphans after
@@ -267,7 +260,7 @@ def test_commitlog_orphans_invisible_until_vacuum(spark, small_input,
     os.remove(part0[0])
     survivors = len(part0) - 1
 
-    r = run_checkpointed(spark, small_input, out, ledger_backend="commitlog")
+    r = run_checkpointed(spark, small_input, out)
     assert r["parts_invalidated"] == 1
 
     after = read_committed(spark, out).orderBy("conv_id", "turn_idx").toPandas()
@@ -283,7 +276,7 @@ def test_commitlog_orphans_invisible_until_vacuum(spark, small_input,
     assert len(glob.glob(os.path.join(out, "data", "part=0", "*.parquet"))) \
         == n_files_before_vac - survivors
     # post-vacuum snapshot still identical, and still validates
-    r2 = run_checkpointed(spark, small_input, out, ledger_backend="commitlog")
+    r2 = run_checkpointed(spark, small_input, out)
     assert r2["memoized"]
     post = read_committed(spark, out).orderBy("conv_id", "turn_idx").toPandas()
     assert post.equals(before)
@@ -294,7 +287,7 @@ def test_metrics_and_lineage_written(spark, small_input, tmp_path):
     run_checkpointed(spark, small_input, out)
     m = spark.read.parquet(os.path.join(out, "_metrics")).toPandas()
     assert set(m["part"]) == {0, 1, 2, 3}
-    data = spark.read.parquet(os.path.join(out, "data"))
+    data = read_committed(spark, out)
     n_in = data.count()
     assert m["n_in"].sum() == n_in
     assert m["n_kept"].sum() == data.filter("keep").count()
@@ -323,7 +316,7 @@ def test_recomputed_part_metrics_supersede(spark, small_input, tmp_path):
 
     m = read_metrics(spark, out).toPandas()
     assert len(m) == 4
-    data = spark.read.parquet(os.path.join(out, "data"))
+    data = read_committed(spark, out)
     assert m["n_in"].sum() == data.count()
     assert m["n_kept"].sum() == data.filter("keep").count()
 
@@ -397,7 +390,7 @@ def test_partitioned_input_lists_parts_without_scan(spark, small_input,
     r = run_checkpointed(spark, part_in, out)
     assert r["parts_committed"] == 5
     assert committed_parts(out) == {0, 1, 2, 3, 9}
-    led = make_ledger(out, "markers")
+    led = make_ledger(out)
     assert led.committed()[9]["n_rows"] == 0
     assert led.run_success() is not None
     r2 = run_checkpointed(spark, part_in, out)
@@ -424,30 +417,28 @@ def test_run_status_surface(spark, small_input, tmp_path):
     run_checkpointed(spark, small_input, out)
     s = run_status(out)
     assert s["complete"] and s["parts_committed"] == 4
-    data = spark.read.parquet(os.path.join(out, "data"))
+    data = read_committed(spark, out)
     assert s["totals"]["n_in"] == data.count()
     assert s["totals"]["n_kept"] == data.filter("keep").count()
     txt = format_run_status(out)
     assert "COMPLETE" in txt and "keep rate" in txt and "COMMITTED" in txt
 
 
-def test_vacuum_safety_rails(tmp_path):
-    """vacuum must never classify live data as orphans: it raises on a
-    markers-governed dir and no-ops on an empty/absent commit log."""
+def test_vacuum_safety_rails(legacy_markers_table, tmp_path):
+    """vacuum must never classify live data as orphans: it refuses a
+    legacy marker-layout dir (pointing at adopt_markers) and no-ops on
+    an empty/absent commit log."""
     from curator_spark.checkpoint import vacuum
 
+    with pytest.raises(ValueError, match="adopt_markers"):
+        vacuum(legacy_markers_table, min_age_s=0)
     out = str(tmp_path / "rails")
     d = os.path.join(out, "data", "part=0")
     os.makedirs(d)
     with open(os.path.join(d, "f.parquet"), "wb") as f:
         f.write(b"x")
-    os.makedirs(os.path.join(out, "_ledger"))
-    # auto-detect → markers → not applicable
-    with pytest.raises(ValueError, match="not applicable"):
-        vacuum(out)
-    # explicit commitlog with no log: nothing was committed → no-op,
-    # the file survives
-    assert vacuum(out, "commitlog", min_age_s=0) == 0
+    # no log: nothing was committed → no-op, the file survives
+    assert vacuum(out, min_age_s=0) == 0
     assert os.path.exists(os.path.join(d, "f.parquet"))
 
 
@@ -466,7 +457,7 @@ def test_status_totals_scoped_to_ledger_across_run_ids(spark, small_input,
     assert r["parts_invalidated"] == 1  # part 1 recomputed under run B
 
     s = run_status(out)
-    data = spark.read.parquet(os.path.join(out, "data"))
+    data = read_committed(spark, out)
     assert s["totals"]["n_in"] == data.count()
     assert s["totals"]["n_kept"] == data.filter("keep").count()
 
@@ -492,13 +483,21 @@ def test_cancel_run_aborts_and_resumes(spark, tmp_path):
         except Exception as e:  # noqa: BLE001 — cancellation surfaces here
             result["err"] = e
 
+    run_id = run_fingerprint(big, None)
+    tracker = spark.sparkContext.statusTracker()
     t = threading.Thread(target=work)
     t.start()
-    _time.sleep(3)  # let the scoring jobs get airborne
-    cancel_run(spark, run_fingerprint(big, None))
-    t.join(300)
-    if result.get("done"):
-        pytest.skip("run outpaced the cancel on this host")
+    # cancel once one of the run's jobs is in flight, and again for each
+    # later one until the run gives up: a fixed delay before a single
+    # cancel let a fast host finish the run first
+    deadline = _time.monotonic() + 300
+    while t.is_alive() and _time.monotonic() < deadline:
+        if set(tracker.getJobIdsForGroup(f"curator-run-{run_id}")) \
+                & set(tracker.getActiveJobsIds()):
+            cancel_run(spark, run_id)
+        _time.sleep(0.02)
+    t.join(60)
+    assert not result.get("done"), "the run finished despite the cancel"
     assert "err" in result and "cancel" in str(result["err"]).lower()
 
     # crash-equivalence: rerun completes the remaining parts and the
@@ -556,25 +555,28 @@ def test_commitlog_replay_matches_model_under_random_histories():
 
 
 def test_mixed_ledger_backends_refused(spark, small_input, tmp_path):
-    """One out_dir, one commit protocol: committing under a second
-    backend would fork the source of truth, so run_checkpointed refuses
-    — and detect_backend ignores empty commit-log debris."""
-    from curator_spark.checkpoint import detect_backend
+    """One out_dir, one ledger: a legacy marker ledger without a commit
+    log is refused (the error names adopt_markers); once a commit log
+    exists it governs, and marker files left by an interrupted adoption
+    are ignored. Only "commitlog" names a ledger backend."""
+    from conftest import write_legacy_markers_dir
 
     out = str(tmp_path / "mixed")
-    run_checkpointed(spark, small_input, out, only_parts=[0],
-                     ledger_backend="commitlog")
-    with pytest.raises(ValueError, match="commitlog"):
-        run_checkpointed(spark, small_input, out)  # markers on same dir
-    assert detect_backend(out) == "commitlog"
+    write_legacy_markers_dir(out, {}, {"run_id": "r", "n_parts": 0})
+    with pytest.raises(ValueError, match="adopt_markers"):
+        run_checkpointed(spark, small_input, out)
+    with pytest.raises(ValueError, match="adopt_markers"):
+        committed_parts(out)
 
     out2 = str(tmp_path / "mixed2")
     run_checkpointed(spark, small_input, out2, only_parts=[0])
-    with pytest.raises(ValueError, match="markers"):
-        run_checkpointed(spark, small_input, out2,
-                         ledger_backend="commitlog")
-    os.makedirs(os.path.join(out2, "_commitlog"))  # empty debris
-    assert detect_backend(out2) == "markers"
+    write_legacy_markers_dir(out2, {}, {"run_id": "r", "n_parts": 0})
+    assert committed_parts(out2) == {0}
+    assert not _run_success(out2)
+    with pytest.raises(ValueError, match="commitlog"):
+        run_checkpointed(spark, small_input, out2, ledger_backend="markers")
+    with pytest.raises(ValueError, match="commitlog"):
+        make_ledger(out2, "markers")
 
 
 def test_read_with_lineage_attributes_rows_to_runs(spark, tmp_path):
@@ -589,8 +591,8 @@ def test_read_with_lineage_attributes_rows_to_runs(spark, tmp_path):
     p1 = str(tmp_path / "l1.parquet")
     fixtures.write_transcripts_parquet(p1, 300, seed=61, n_parts=4)
     out = str(tmp_path / "ltable")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
-    v1 = make_ledger(out, "commitlog").latest_version()
+    run_checkpointed(spark, p1, out)
+    v1 = make_ledger(out).latest_version()
     p2 = str(tmp_path / "l2.parquet")
     fixtures.write_transcripts_parquet(p2, 200, seed=62, n_parts=4)
     append_new_conversations(spark, p2, out)

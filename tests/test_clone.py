@@ -12,6 +12,7 @@ import os
 
 import pytest
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     compact_partition, delete_conversations, make_ledger, read_committed,
@@ -20,19 +21,27 @@ from curator_spark.clone import clone_table
 from curator_spark.incremental import append_new_conversations
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("clone")
     p1 = str(tmp_path / "b1.parquet")
     fixtures.write_transcripts_parquet(p1, 800, seed=71, n_parts=4)
     out = str(tmp_path / "src")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
-    ledger = make_ledger(out, "commitlog")
+    run_checkpointed(spark, p1, out)
+    ledger = make_ledger(out)
     v_base = ledger.latest_version()
     p2 = str(tmp_path / "b2.parquet")
     fixtures.write_transcripts_parquet(p2, 400, seed=72, n_parts=4)
     append_new_conversations(spark, p2, out)
-    return {"out": out, "v_base": v_base,
-            "clone": str(tmp_path / "fork")}
+    return {"out": out, "v_base": v_base}
+
+
+@pytest.fixture()
+def table(built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    return dict(built_table,
+                out=copy_table(built_table["out"], tmp_path / "src"),
+                clone=str(tmp_path / "fork"))
 
 
 def _rows(spark, d, **kw):
@@ -103,20 +112,18 @@ def test_vacuum_on_source_never_breaks_the_clone(spark, table):
 
 def test_clone_carries_txn_marks_and_refuses_overwrite(spark, table):
     out, dst = table["out"], table["clone"]
-    make_ledger(out, "commitlog").set_txn("stream-app", 7)
+    make_ledger(out).set_txn("stream-app", 7)
     clone_table(out, dst)
-    assert make_ledger(dst, "commitlog").last_txn("stream-app") == 7
+    assert make_ledger(dst).last_txn("stream-app") == 7
     with pytest.raises(ValueError, match="already a table"):
         clone_table(out, dst)
 
 
-def test_clone_refuses_markers_backend(spark, tmp_path):
-    p = str(tmp_path / "t.parquet")
-    fixtures.write_transcripts_parquet(p, 200, seed=74, n_parts=2)
-    out = str(tmp_path / "m")
-    run_checkpointed(spark, p, out)  # default markers backend
-    with pytest.raises(ValueError, match="commitlog"):
-        clone_table(out, str(tmp_path / "f"))
+def test_clone_refuses_markers_backend(legacy_markers_table, tmp_path):
+    with pytest.raises(ValueError, match="adopt_markers"):
+        clone_table(legacy_markers_table, str(tmp_path / "f"))
+    with pytest.raises(ValueError, match="no commit log"):
+        clone_table(str(tmp_path / "empty"), str(tmp_path / "g"))
 
 
 def test_cli_clone_verb(spark, table, capsys):

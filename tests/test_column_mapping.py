@@ -22,6 +22,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import copy_table
 from curator_spark.alter import add_column, drop_column, rename_column
 from curator_spark.checkpoint import (
     compact_partition, make_ledger, read_changes, read_committed,
@@ -41,14 +42,21 @@ def _toy(spark, n=N0, lo=0):
         (F.col("id") % 97).cast("double").alias("ppl"))
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
     spark.dataSource.register(CuratorTableDataSource)
-    out = str(tmp_path / "t")
+    out = str(tmp_path_factory.mktemp("column_mapping") / "t")
     (_toy(spark).coalesce(2).write.format("curator_table")
      .option("bucketBy", "conv_id").option("buckets", "4")
      .mode("append").save(out))
     return out
+
+
+@pytest.fixture()
+def table(spark, built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    spark.dataSource.register(CuratorTableDataSource)
+    return copy_table(built_table, tmp_path / "t")
 
 
 def _append(spark, out, lo, n=N0, rename=None):
@@ -60,7 +68,7 @@ def _append(spark, out, lo, n=N0, rename=None):
 
 
 def test_rename_is_metadata_only(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     files_before = sorted(snapshot_files(table))
     rename_column(table, "ppl", "perplexity")
@@ -98,7 +106,7 @@ def test_rename_mixes_old_and_new_era_files(spark, table):
 
 
 def test_time_travel_and_restore_show_schema_as_of(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     rename_column(table, "ppl", "perplexity")
     old = read_committed(spark, table, version=v0)
@@ -217,7 +225,7 @@ def test_constraints_enforced_through_mapping(spark, table):
 
 
 def test_datasource_scan_and_feed_after_rename(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     rename_column(table, "ppl", "perplexity")
     _append(spark, table, lo=N0, rename=("ppl", "perplexity"))
@@ -301,7 +309,7 @@ def test_stale_writer_commit_survives_concurrent_rename(spark, table):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     # the writer staged this BEFORE the rename: physical name `ppl`
     pdir = os.path.join(table, "data", "part=0")
     os.makedirs(pdir, exist_ok=True)

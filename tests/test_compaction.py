@@ -1,6 +1,6 @@
 """Small-file compaction (checkpoint.compact_partition): row-identity,
 manifest swap, vacuum of displaced files, revalidation, stale-swap
-conflict rule, markers-backend refusal."""
+conflict rule, legacy marker-table refusal."""
 
 from __future__ import annotations
 
@@ -25,7 +25,7 @@ def table(spark, tmp_path_factory):
     p1 = str(base / "b1.parquet")
     fixtures.to_spark_parquet(b1, p1)
     out = str(base / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p1, out)
     b2 = fixtures.generate_transcripts(900, seed=32, n_parts=4)
     p2 = str(base / "b2.parquet")
     fixtures.to_spark_parquet(b2, p2)
@@ -34,7 +34,7 @@ def table(spark, tmp_path_factory):
 
 
 def _files_of(out, part):
-    m = make_ledger(out, "commitlog").committed()[part]
+    m = make_ledger(out).committed()[part]
     return dict(m["files"])
 
 
@@ -68,7 +68,7 @@ def test_compact_preserves_rows_and_swaps_manifest(spark, table):
 
     # integrity: the compacted manifest revalidates clean
     done, invalidated = revalidate_committed(
-        table, make_ledger(table, "commitlog"))
+        table, make_ledger(table))
     assert part in done and part not in invalidated
 
     # identical data still served after vacuum
@@ -86,22 +86,17 @@ def test_stale_compaction_is_ignored_at_replay(spark, table):
     """A compact action whose source files are no longer referenced
     (concurrent recompute) must not alter the manifest."""
     part = 1
-    ledger = make_ledger(table, "commitlog")
+    ledger = make_ledger(table)
     before = ledger.committed()[part]["files"]
     ledger.compact_part(part, ["no-such-file.parquet"],
                         {"ghost.parquet": {"n_rows": 7, "n_bytes": 1}})
-    after = make_ledger(table, "commitlog").committed()[part]["files"]
+    after = make_ledger(table).committed()[part]["files"]
     assert after == before
 
 
-def test_markers_backend_refused(spark, tmp_path):
-    b = fixtures.generate_transcripts(300, seed=33, n_parts=2)
-    p = str(tmp_path / "b.parquet")
-    fixtures.to_spark_parquet(b, p)
-    out = str(tmp_path / "out")
-    run_checkpointed(spark, p, out)  # markers backend
-    with pytest.raises(ValueError, match="log-defined"):
-        compact_partition(spark, out, 0)
+def test_markers_backend_refused(spark, legacy_markers_table):
+    with pytest.raises(ValueError, match="adopt_markers"):
+        compact_partition(spark, legacy_markers_table, 0)
 
 
 def test_sorted_compaction_sharpens_file_skipping(spark, table):
@@ -121,7 +116,7 @@ def test_sorted_compaction_sharpens_file_skipping(spark, table):
         .orderBy("conv_id", "turn_idx").toPandas()
     assert before.equals(after)
     # disjoint per-file conv_id ranges in the recorded stats
-    m = make_ledger(table, "commitlog").committed()[part]
+    m = make_ledger(table).committed()[part]
     bounds = sorted((st["conv_id"]["min"], st["conv_id"]["max"])
                     for st in m["stats"].values())
     for (_, hi), (lo, _) in zip(bounds, bounds[1:]):
@@ -165,7 +160,7 @@ def test_zorder_compaction_prunes_on_every_dimension(spark, table):
     assert probed(("turn_idx", ">=", ti_hi)) < n_files
     # and the per-file stats tile BOTH dimensions: some file's range is
     # a proper subset of the global range in each column
-    m = make_ledger(table, "commitlog").committed()[part]
+    m = make_ledger(table).committed()[part]
     for col in ("turn_idx",):
         gmin = min(st[col]["min"] for st in m["stats"].values())
         gmax = max(st[col]["max"] for st in m["stats"].values())
@@ -193,13 +188,13 @@ def test_optimize_table_selects_by_size_and_compacts(spark, tmp_path):
     p1 = str(tmp_path / "b1.parquet")
     fixtures.to_spark_parquet(b1, p1)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p1, out)
     b2 = fixtures.generate_transcripts(500, seed=34, n_parts=4)
     p2 = str(tmp_path / "b2.parquet")
     fixtures.to_spark_parquet(b2, p2)
     append_new_conversations(spark, p2, out)
 
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     all_parts = sorted(led.committed())
     multi = sorted(p for p, m in led.committed().items()
                    if len(m["files"]) > 1)
@@ -219,20 +214,20 @@ def test_optimize_table_selects_by_size_and_compacts(spark, tmp_path):
     assert r["files_after"] == len(multi)       # one file per partition
     assert r["files_before"] > r["files_after"]
     assert r["n_rows"] > 0 and table_row_count(out) == n0
-    for p, m in make_ledger(out, "commitlog").committed().items():
+    for p, m in make_ledger(out).committed().items():
         assert len(m["files"]) == 1
     assert read_committed(spark, out).count() == n0
 
     # second pass: everything already at target → pure-metadata no-op
-    v = make_ledger(out, "commitlog").latest_version()
+    v = make_ledger(out).latest_version()
     r2 = optimize_table(spark, out, target_files=1)
     assert r2["parts_compacted"] == []
-    assert make_ledger(out, "commitlog").latest_version() == v
+    assert make_ledger(out).latest_version() == v
 
     # CLI wiring: --compact 1 --zorder-by runs the clustered rewrite
     from curator_spark import cli
     rc = cli.main(["--input", p1, "--output", out, "--local-cores", "4",
-                   "--ledger", "commitlog", "--compact", "1",
+                   "--compact", "1",
                    "--zorder-by", "ts,turn_idx"])
     assert rc == 0
     assert read_committed(spark, out).count() == n0

@@ -50,7 +50,7 @@ def test_processes_race_appends_without_lost_updates(spark, tmp_path,
     p0 = str(tmp_path / "base.parquet")
     fixtures.write_transcripts_parquet(p0, 400, seed=91, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p0, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p0, out)
     n_base = table_row_count(out)
 
     batches = []
@@ -80,7 +80,7 @@ def test_processes_race_appends_without_lost_updates(spark, tmp_path,
 
     # the racing commits serialized into a gap-free, strictly-increasing
     # version sequence (os.link losers retried at the next number)
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     versions = [h["version"] for h in led.history()]
     assert versions == list(range(1, len(versions) + 1))
     # at least one add_files commit per writer
@@ -189,6 +189,6 @@ def test_processes_race_merges_without_lost_updates(spark, tmp_path):
             assert got[f"conv-{i:06d}"] == base + i, (i, base)
     # untouched rows unchanged
     assert got["conv-000450"] == 450 % 97
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     versions = [h["version"] for h in led.history()]
     assert versions == list(range(1, len(versions) + 1))

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import copy_table
 from curator_spark.checkpoint import (
     make_ledger, read_committed, table_protocol, table_row_count)
 from curator_spark.constraints import (
@@ -29,14 +30,21 @@ def _toy(spark, n=N0, lo=0, ppl=None):
          else (F.col("id") % 97).cast("double")).alias("ppl"))
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
     spark.dataSource.register(CuratorTableDataSource)
-    out = str(tmp_path / "t")
+    out = str(tmp_path_factory.mktemp("constraints") / "t")
     (_toy(spark).write.format("curator_table")
      .option("bucketBy", "conv_id").option("buckets", "4")
      .mode("append").save(out))
     return out
+
+
+@pytest.fixture()
+def table(spark, built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    spark.dataSource.register(CuratorTableDataSource)
+    return copy_table(built_table, tmp_path / "t")
 
 
 def test_add_constraint_ratchets_feature_and_registers(spark, table):
@@ -50,11 +58,11 @@ def test_add_constraint_ratchets_feature_and_registers(spark, table):
 
 def test_add_constraint_refused_when_existing_rows_violate(spark,
                                                            table):
-    v = make_ledger(table, "commitlog").latest_version()
+    v = make_ledger(table).latest_version()
     with pytest.raises(ConstraintViolation, match="existing rows"):
         add_constraint(spark, table, "ppl_high", "ppl > 50")
     assert table_constraints(table) == {}
-    assert make_ledger(table, "commitlog").latest_version() == v
+    assert make_ledger(table).latest_version() == v
 
 
 def test_add_constraint_unresolvable_column_fails_fast(spark, table):
@@ -85,7 +93,7 @@ def test_write_valid_batch_still_succeeds(spark, table):
 
 def test_merge_enforces_constraints(spark, table):
     add_constraint(spark, table, "ppl_cap", "ppl < 10000")
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v = led.latest_version()
     bad = _toy(spark, 3, ppl=99_999.0)        # matched updates violate
     with pytest.raises(ConstraintViolation, match="ppl_cap"):
@@ -100,7 +108,7 @@ def test_merge_enforces_constraints(spark, table):
 
 def test_update_where_enforces_constraints(spark, table):
     add_constraint(spark, table, "ppl_nonneg", "ppl >= 0")
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v = led.latest_version()
     with pytest.raises(ConstraintViolation, match="ppl_nonneg"):
         update_where(spark, table, {"ppl": "-5.0"}, where="ppl > 90")
@@ -159,7 +167,7 @@ def test_replace_where_enforces_constraints(spark, table):
     (the placed files are vacuum-able orphans)."""
     from curator_spark.dml import insert_overwrite_where
     add_constraint(spark, table, "ppl_nonneg", "ppl >= 0")
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     bad = _toy(spark, n=5, ppl=-5.0)   # violates ppl_nonneg
     with pytest.raises(ConstraintViolation):

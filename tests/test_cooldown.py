@@ -81,7 +81,7 @@ def test_throttled_half_applied_epoch_converges_to_clean_table(
     p1 = str(tmp_path / "base.parquet")
     fixtures.to_spark_parquet(base, p1)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p1, out)
 
     delivery = fixtures.generate_transcripts(400, seed=32, n_parts=4)
     p2 = str(tmp_path / "delivery.parquet")

@@ -17,6 +17,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     compact_partition, delete_conversations, make_ledger, read_committed,
@@ -33,14 +34,21 @@ def _ms(df):
                   for r in df.select(*cols).collect())
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
-    spark.dataSource.register(CuratorTableDataSource)
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("datasource")
     p1 = str(tmp_path / "b1.parquet")
     fixtures.write_transcripts_parquet(p1, 600, seed=81, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p1, out)
     return out
+
+
+@pytest.fixture()
+def table(spark, built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    spark.dataSource.register(CuratorTableDataSource)
+    return copy_table(built_table, tmp_path / "out")
 
 
 def test_batch_read_is_the_snapshot(spark, table):
@@ -96,7 +104,7 @@ def test_stream_skips_rewrites_like_delta_skipchangecommits(spark, table,
     ids = [r.conv_id for r in read_committed(spark, table)
            .select("conv_id").distinct().limit(3).collect()]
     delete_conversations(spark, table, ids)
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     part = max(led.committed(), key=lambda p: len(led.committed()[p]["files"]))
     compact_partition(spark, table, part)
     drain()
@@ -125,7 +133,7 @@ def test_batch_write_creates_table_and_prunes_probes(spark, tmp_path):
         _ms(read_committed(spark, out))
     # the write recorded the bucket spec: an equality probe on the
     # bucketed column prunes to ONE partition's files, from the log
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     assert led.table_meta().get("bucket") == {
         "col": "conv_id", "n_parts": 8, "fn": "md5full"}
     n_all = len(snapshot_files(out))
@@ -142,7 +150,7 @@ def test_batch_overwrite_is_one_atomic_commit(spark, tmp_path):
     (_toy(spark, 400).write.format("curator_table")
      .option("bucketBy", "conv_id").option("buckets", "4")
      .mode("append").save(out))
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     v_before = led.latest_version()
     (_toy(spark, 50).write.format("curator_table")
      .mode("overwrite").save(out))
@@ -161,7 +169,7 @@ def test_batch_write_routes_by_part_column(spark, tmp_path):
         "part", (F.length("conv_id") * 0 + F.col("turn_idx") % 3)
         .cast("int"))
     df.write.format("curator_table").mode("append").save(out)
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     assert sorted(led.committed()) == [0, 1, 2]
     back = spark.read.format("curator_table").load(out)
     # part materializes from the directory, identical to the routing col
@@ -177,15 +185,12 @@ def test_batch_write_needs_routing(spark, tmp_path):
             .mode("append").save(out)
 
 
-def test_write_refuses_markers_table(spark, tmp_path):
+def test_write_refuses_markers_table(spark, legacy_markers_table):
     spark.dataSource.register(CuratorTableDataSource)
-    p1 = str(tmp_path / "b.parquet")
-    fixtures.write_transcripts_parquet(p1, 200, seed=5, n_parts=2)
-    out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="markers")
-    with pytest.raises(Exception, match="commitlog"):
+    with pytest.raises(Exception, match="adopt_markers"):
         (_toy(spark, 10).withColumn("part", F.lit(0).cast("int"))
-         .write.format("curator_table").mode("append").save(out))
+         .write.format("curator_table").mode("append")
+         .save(legacy_markers_table))
 
 
 def test_stream_write_is_exactly_once(spark, tmp_path):
@@ -208,7 +213,7 @@ def test_stream_write_is_exactly_once(spark, tmp_path):
                .drop("part")) == _ms(df)
     drain()  # restart with no new data: nothing re-delivered
     assert spark.read.format("curator_table").load(out).count() == 500
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     assert led.last_txn("sink-a") is not None
 
     # replayed epoch (sink committed, Spark's offset didn't advance):
@@ -290,7 +295,7 @@ def test_stream_starting_version_skips_history(spark, table, tmp_path):
     """startingVersion: attach a NEW consumer without re-bootstrapping
     the table ('latest' = only commits after stream start; an explicit
     version = resume from there) — Delta's startingVersion option."""
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     p2 = str(tmp_path / "b2.parquet")
     fixtures.write_transcripts_parquet(p2, 200, seed=83, n_parts=4)

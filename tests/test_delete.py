@@ -9,26 +9,35 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     delete_conversations, make_ledger, read_committed, run_checkpointed,
     table_history, table_row_count, vacuum)
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("delete")
     p = str(tmp_path / "in.parquet")
     pdf = fixtures.write_transcripts_parquet(p, 1200, seed=51, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p, out, ledger_backend="commitlog",
+    run_checkpointed(spark, p, out,
                      bucket={"col": "conv_id", "n_parts": 4,
                              "fn": "md5full"})
-    return {"out": out, "pdf": pdf}
+    return {"out": out, "pdf": pdf, "inp": p}
+
+
+@pytest.fixture()
+def table(built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    return dict(built_table,
+                out=copy_table(built_table["out"], tmp_path / "out"))
 
 
 def test_delete_removes_targets_and_nothing_else(spark, table):
     out, pdf = table["out"], table["pdf"]
-    ledger = make_ledger(out, "commitlog")
+    ledger = make_ledger(out)
     v_before = ledger.latest_version()
     ids = sorted(pdf["conv_id"].unique())[:3]
     n_target = int(pdf["conv_id"].isin(ids).sum())
@@ -69,7 +78,7 @@ def test_delete_removes_targets_and_nothing_else(spark, table):
 def test_delete_missing_id_is_noop(spark, table):
     out = table["out"]
     n = table_row_count(out)
-    v = make_ledger(out, "commitlog").latest_version()
+    v = make_ledger(out).latest_version()
     s = delete_conversations(spark, out, ["conv-9999-00000000"])
     assert s["rows_deleted"] == 0 and s["parts_touched"] == []
     assert table_row_count(out) == n
@@ -79,13 +88,9 @@ def test_delete_missing_id_is_noop(spark, table):
     assert "delete" not in ops
 
 
-def test_delete_refuses_markers_backend(spark, tmp_path):
-    p = str(tmp_path / "in.parquet")
-    fixtures.write_transcripts_parquet(p, 300, seed=52, n_parts=2)
-    out = str(tmp_path / "out")
-    run_checkpointed(spark, p, out, ledger_backend="markers")
-    with pytest.raises(ValueError, match="delete requires"):
-        delete_conversations(spark, out, ["conv-0052-00000000"])
+def test_delete_refuses_markers_backend(spark, legacy_markers_table):
+    with pytest.raises(ValueError, match="adopt_markers"):
+        delete_conversations(spark, legacy_markers_table, ["c0"])
 
 
 def test_delete_by_nullable_key_keeps_null_rows(spark, table):
@@ -145,7 +150,7 @@ def test_delete_conflicting_with_concurrent_compaction_raises(
     assert table_row_count(out) == n_before - n_target
 
 
-def test_rerun_after_delete_does_not_resurrect(spark, table, tmp_path):
+def test_rerun_after_delete_does_not_resurrect(spark, table):
     """Deletion is administrative table state, not run state: re-running
     the same checkpointed job afterwards memoizes (manifests still
     validate — the delete updated them consistently) and must NOT
@@ -155,8 +160,7 @@ def test_rerun_after_delete_does_not_resurrect(spark, table, tmp_path):
     delete_conversations(spark, out, ids)
     n_after = read_committed(spark, out).count()
     # same input path + params → same run fingerprint
-    r = run_checkpointed(spark, str(tmp_path / "in.parquet"), out,
-                         ledger_backend="commitlog",
+    r = run_checkpointed(spark, table["inp"], out,
                          bucket={"col": "conv_id", "n_parts": 4,
                                  "fn": "md5full"})
     assert r["memoized"] and r["parts_invalidated"] == 0
@@ -190,7 +194,7 @@ def test_delete_matching_dataframe_keys(spark, table):
     survivors = before[~before["conv_id"].isin(ids)].reset_index(drop=True)
     assert survivors.equals(after.reset_index(drop=True))
     # empty key set: pure no-op, no commit
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     v = led.latest_version()
     s0 = delete_matching(spark, out, keys.filter("conv_id IS NULL"))
     assert s0["n_keys"] == 0 and s0["rows_deleted"] == 0

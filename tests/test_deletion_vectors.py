@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark import cdf
 from curator_spark.checkpoint import (
@@ -27,13 +28,20 @@ def _ms(df):
                   for r in df.select(*cols).collect())
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("dv")
     p1 = str(tmp_path / "b1.parquet")
     fixtures.write_transcripts_parquet(p1, 900, seed=31, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p1, out)
     return out
+
+
+@pytest.fixture()
+def table(built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    return copy_table(built_table, tmp_path / "out")
 
 
 def _victims(spark, out, n=3):
@@ -42,7 +50,7 @@ def _victims(spark, out, n=3):
 
 
 def test_dv_delete_masks_rows_without_rewriting(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     files_before = {p: set((m or {}).get("files") or {})
                     for p, m in led.committed().items()}
     live = read_committed(spark, table)
@@ -71,7 +79,7 @@ def test_dv_result_matches_rewrite_delete(spark, table, tmp_path):
     p2 = str(tmp_path / "twin.parquet")
     fixtures.write_transcripts_parquet(p2, 900, seed=31, n_parts=4)
     twin = str(tmp_path / "twin_out")
-    run_checkpointed(spark, p2, twin, ledger_backend="commitlog")
+    run_checkpointed(spark, p2, twin)
     vs = _victims(spark, table)
     s_dv = delete_rows_dv(spark, table, vs)
     s_rw = delete_conversations(spark, twin, vs)
@@ -101,7 +109,7 @@ def test_compaction_materializes_masks(spark, table):
     vs = _victims(spark, table)
     delete_rows_dv(spark, table, vs)
     want = _ms(read_committed(spark, table))
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     for p, m in sorted(led.committed().items()):
         if (m or {}).get("dv"):
             assert compact_partition(spark, table, p)["compacted"]
@@ -123,7 +131,7 @@ def test_rewrite_delete_on_masked_files_keeps_masks_applied(spark, table):
 
 
 def test_dv_time_travel_and_restore(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     n0 = read_committed(spark, table).count()
     s = delete_rows_dv(spark, table, _victims(spark, table))
@@ -139,7 +147,7 @@ def test_dv_time_travel_and_restore(spark, table):
 
 
 def test_dv_change_feed_and_row_feed(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     head0 = led.latest_version()
     live = read_committed(spark, table)
     vs = _victims(spark, table)
@@ -202,7 +210,7 @@ def test_dv_stale_mark_raises_conflict(spark, table):
     ignored by replay — the caller must hear about it (a silently
     no-opped right-to-be-forgotten is the one unacceptable outcome)."""
     import curator_spark.checkpoint as cp
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     vs = _victims(spark, table, 1)
     real_add_dv = cp.CommitLogLedger.add_dv
 

@@ -24,7 +24,7 @@ def dtable(spark, tmp_path):
     inp = str(tmp_path / "t.parquet")
     fixtures.write_transcripts_parquet(inp, 500, seed=71, n_parts=4)
     out = str(tmp_path / "tbl")
-    run_checkpointed(spark, inp, out, ledger_backend="commitlog")
+    run_checkpointed(spark, inp, out)
     export_delta_log(out)
     spark.dataSource.register(DeltaFeedDataSource)
     return {"out": out,

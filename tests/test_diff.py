@@ -14,13 +14,15 @@ from curator_spark.incremental import (append_new_conversations,
                                        upsert_conversations)
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def table(spark, tmp_path_factory):
+    # every test here only reads the table: build it once per module
+    tmp_path = tmp_path_factory.mktemp("diff")
     p1 = str(tmp_path / "b1.parquet")
     base = fixtures.write_transcripts_parquet(p1, 700, seed=71, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
-    led = make_ledger(out, "commitlog")
+    run_checkpointed(spark, p1, out)
+    led = make_ledger(out)
     v1 = led.latest_version()
 
     # version window applies all three change kinds:
@@ -73,7 +75,7 @@ def test_diff_classifies_all_three_kinds(spark, table):
 
 
 def test_diff_of_identical_versions_is_empty(spark, table):
-    led = make_ledger(table["out"], "commitlog")
+    led = make_ledger(table["out"])
     head = led.latest_version()
     assert table_diff(spark, table["out"], head, head).count() == 0
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import copy_table
 from curator_spark.checkpoint import (
     CommitLogLedger, compact_partition, make_ledger, read_committed,
     table_row_count, vacuum)
@@ -26,10 +27,10 @@ def _toy(spark, n=N0):
         (F.col("id") % 97).cast("double").alias("ppl"))
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
     spark.dataSource.register(CuratorTableDataSource)
-    out = str(tmp_path / "t")
+    out = str(tmp_path_factory.mktemp("dml") / "t")
     # two appends → two files per bucket, each covering a disjoint
     # key range (so stats pruning has something to skip)
     for lo in (0, N0 // 2):
@@ -42,8 +43,15 @@ def table(spark, tmp_path):
     return out
 
 
+@pytest.fixture()
+def table(spark, built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    spark.dataSource.register(CuratorTableDataSource)
+    return copy_table(built_table, tmp_path / "t")
+
+
 def test_update_where_sets_only_matching_rows(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     s = update_where(spark, table,
                      {"ppl": "ppl + 1000", "role": "'flagged'"},
@@ -110,7 +118,7 @@ def test_delete_where_removes_matches_keeps_nulls(spark, table):
 
 
 def test_delete_where_noop_commits_nothing(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v = led.latest_version()
     s = delete_where(spark, table, where="ppl < -1")
     assert s["rows_deleted"] == 0 and s["version"] is None
@@ -162,7 +170,7 @@ def test_dml_conflict_with_concurrent_compaction(spark, table,
 
 def test_insert_overwrite_where_replaces_region_atomically(spark, table):
     from curator_spark.dml import insert_overwrite_where
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     before = read_committed(spark, table)
     region = before.filter("ppl > 90").count()
@@ -186,7 +194,7 @@ def test_insert_overwrite_where_replaces_region_atomically(spark, table):
 
 def test_insert_overwrite_where_refuses_out_of_region_rows(spark, table):
     from curator_spark.dml import insert_overwrite_where
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     bad = _toy(spark).limit(5)                     # ppl values <= 90 too
     with pytest.raises(ValueError, match="NOT matching the predicate"):

@@ -113,7 +113,7 @@ def test_cli_export_and_verify_verbs(spark, tmp_path, capsys):
     p = str(tmp_path / "t.parquet")
     fixtures.write_transcripts_parquet(p, 800, seed=13, n_parts=4)
     out = str(tmp_path / "table")
-    run_checkpointed(spark, p, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p, out)
 
     shards = str(tmp_path / "shards")
     assert main(["--output", out, "--export-shards", shards,
@@ -225,8 +225,8 @@ def test_cli_export_as_of_version(spark, tmp_path, capsys):
     p = str(tmp_path / "t.parquet")
     base = fixtures.write_transcripts_parquet(p, 500, seed=18, n_parts=2)
     out = str(tmp_path / "table")
-    run_checkpointed(spark, p, out, ledger_backend="commitlog")
-    v1 = make_ledger(out, "commitlog").latest_version()
+    run_checkpointed(spark, p, out)
+    v1 = make_ledger(out).latest_version()
     p2 = str(tmp_path / "t2.parquet")
     fixtures.to_spark_parquet(
         fixtures.generate_transcripts(200, seed=19, n_parts=2), p2)

@@ -16,6 +16,7 @@ import os
 import duckdb
 import pytest
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     compact_partition, delete_conversations, delete_rows_dv,
@@ -24,13 +25,21 @@ from curator_spark.export_delta import delta_live_files, export_delta_log
 from curator_spark.incremental import append_new_conversations
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("export_delta")
     inp = str(tmp_path / "t.parquet")
     fixtures.write_transcripts_parquet(inp, 600, seed=91, n_parts=4)
     out = str(tmp_path / "tbl")
-    run_checkpointed(spark, inp, out, ledger_backend="commitlog")
-    return {"out": out, "tmp": tmp_path}
+    run_checkpointed(spark, inp, out)
+    return out
+
+
+@pytest.fixture()
+def table(built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    return {"out": copy_table(built_table, tmp_path / "tbl"),
+            "tmp": tmp_path}
 
 
 def _duckdb_read_live(table_root: str):
@@ -129,7 +138,7 @@ def test_reexport_appends_incremental_diff(spark, table):
     assert r1["adds"] > 0 and r1["removes"] > 0
     # the replayed live set IS the current snapshot's manifest
     live = {a["path"] for a in delta_live_files(r1["table_root"])}
-    sl = make_ledger(out, "commitlog")
+    sl = make_ledger(out)
     want = {f"part={int(p)}/{fn}"
             for p, m in sl.snapshot()[0].items()
             if m and m.get("status") == "COMMITTED"
@@ -191,7 +200,7 @@ def test_standalone_export_links_files(spark, table, tmp_path):
 
 def test_time_travel_export(spark, table):
     out = table["out"]
-    sl = make_ledger(out, "commitlog")
+    sl = make_ledger(out)
     v_head = sl.latest_version()
     batch = str(table["tmp"] / "b3.parquet")
     fixtures.write_transcripts_parquet(batch, 200, seed=93, n_parts=4)
@@ -547,18 +556,16 @@ def test_checkpointed_run_over_delta_input(spark, tmp_path):
     fixtures.write_transcripts_parquet(inp, 400, seed=61, n_parts=4)
     # upstream: a curated table published as Delta (raw columns kept)
     up = str(tmp_path / "upstream")
-    run_checkpointed(spark, inp, up, ledger_backend="commitlog")
+    run_checkpointed(spark, inp, up)
     from curator_spark.export_delta import export_delta_log
     export_delta_log(up)
     delta_dir = os.path.join(os.path.abspath(up), "data")
 
     out_d = str(tmp_path / "from_delta")
-    s = run_checkpointed(spark, delta_dir, out_d,
-                         ledger_backend="commitlog")
+    s = run_checkpointed(spark, delta_dir, out_d)
     assert s["parts_committed"] > 0
     # re-run memoizes (fingerprint + ledger intact over a Delta input)
-    s2 = run_checkpointed(spark, delta_dir, out_d,
-                          ledger_backend="commitlog")
+    s2 = run_checkpointed(spark, delta_dir, out_d)
     assert s2["memoized"] is True
     got = read_committed(spark, out_d)
     # the upstream table's rows all flowed through the filter again
@@ -650,3 +657,99 @@ def test_cli_vacuum_and_consume_delta(spark, table, tmp_path, capsys):
     from curator_spark.export_delta import read_delta
     got = spark.read.parquet(f"{cdir}/window-*").count()
     assert got == read_delta(spark, dest).count() == s["rows_fed"]
+
+
+def test_delta_input_missing_transcript_columns_refused(spark, tmp_path):
+    """Curating FROM a Delta table whose schema lacks transcript
+    columns fails fast, naming them — the rows are never scored
+    without them."""
+    import pandas as pd
+
+    from curator_spark.fixtures import to_spark_parquet
+
+    root = str(tmp_path / "narrow")
+    os.makedirs(os.path.join(root, "_delta_log"))
+    to_spark_parquet(pd.DataFrame({"conv_id": ["c0", "c1"],
+                                   "turn_idx": [0, 0],
+                                   "text": ["hi", "yo"]}),
+                     os.path.join(root, "f.parquet"))
+    schema = {"type": "struct", "fields": [
+        {"name": n, "type": t, "nullable": True, "metadata": {}}
+        for n, t in (("conv_id", "string"), ("turn_idx", "long"),
+                     ("text", "string"))]}
+    actions = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {"id": "narrow", "format":
+                      {"provider": "parquet", "options": {}},
+                      "schemaString": json.dumps(schema),
+                      "partitionColumns": [], "configuration": {},
+                      "createdTime": 0}},
+        {"add": {"path": "f.parquet", "partitionValues": {},
+                 "size": os.path.getsize(os.path.join(root, "f.parquet")),
+                 "modificationTime": 0, "dataChange": True}}]
+    with open(os.path.join(root, "_delta_log", f"{0:020d}.json"), "w") as f:
+        f.write("\n".join(json.dumps(a) for a in actions))
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match=r"\['role', 'tool', 'ts'\]"):
+        run_checkpointed(spark, root, out)
+    assert make_ledger(out).latest_version() is None  # nothing committed
+
+
+def test_delta_version_publish_is_create_exclusive(spark, table,
+                                                   monkeypatch):
+    """Two exporters plan the same next Delta version: the one that
+    publishes second must raise and leave the winner's commit file
+    byte-for-byte intact (a plain exists-check + rename would silently
+    replace it)."""
+    out = table["out"]
+    r0 = export_delta_log(out)
+    victim = read_committed(spark, out).select("conv_id") \
+        .orderBy("conv_id").first()["conv_id"]
+    delete_conversations(spark, out, [victim])
+    target = os.path.join(r0["table_root"], "_delta_log",
+                          f"{1:020d}.json")
+    winner = b'{"commitInfo": {"writer": "concurrent exporter"}}\n'
+    real_fsync = os.fsync
+
+    def racing_fsync(fd):
+        # the concurrent exporter publishes v1 while this one writes it
+        if not os.path.exists(target):
+            with open(target, "wb") as f:
+                f.write(winner)
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", racing_fsync)
+    with pytest.raises(FileExistsError, match="concurrent export"):
+        export_delta_log(out)
+    monkeypatch.setattr(os, "fsync", real_fsync)
+    with open(target, "rb") as f:
+        assert f.read() == winner
+
+
+def test_cli_consume_delta_replayed_window_not_duplicated(spark, table,
+                                                          tmp_path,
+                                                          monkeypatch):
+    """A crash between the --consume-delta sink and the cursor commit
+    replays the same window; the sink overwrites its window dir, so
+    every row lands exactly once."""
+    from curator_spark import feed
+    from curator_spark.cli import main
+    from curator_spark.export_delta import read_delta
+
+    dest = str(tmp_path / "standalone")
+    export_delta_log(table["out"], dest=dest)
+    cdir = str(tmp_path / "consumed")
+    argv = ["--output", table["out"], "--input", dest,
+            "--consume-delta", "trainer", "--consume-out", cdir]
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before the cursor commit")
+
+    monkeypatch.setattr(feed, "_commit_cursor", crash)
+    with pytest.raises(RuntimeError, match="cursor commit"):
+        main(argv)
+    monkeypatch.undo()
+    assert main(argv) == 0  # the replay
+    got = spark.read.parquet(f"{cdir}/window-*")
+    assert got.count() == read_delta(spark, dest).count()
+    assert got.count() == got.dropDuplicates().count()

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     compact_partition, make_ledger, read_committed, restore_table,
@@ -16,13 +17,22 @@ from curator_spark.feed import consume_changes, consumer_position
 from curator_spark.incremental import append_new_conversations
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("feed")
     p1 = str(tmp_path / "b1.parquet")
     pdf1 = fixtures.write_transcripts_parquet(p1, 700, seed=71, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
-    return {"out": out, "pdf1": pdf1, "tmp": tmp_path}
+    run_checkpointed(spark, p1, out)
+    return {"out": out, "pdf1": pdf1}
+
+
+@pytest.fixture()
+def table(built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    return dict(built_table,
+                out=copy_table(built_table["out"], tmp_path / "out"),
+                tmp=tmp_path)
 
 
 def _append(spark, table, seed, n):
@@ -86,7 +96,7 @@ def test_independent_consumers_and_maintenance_versions(spark, table):
 
     # compaction + restore produce versions but NO feed rows: the poll
     # advances the cursor without running a Spark job
-    part = next(iter(make_ledger(out, "commitlog").committed()))
+    part = next(iter(make_ledger(out).committed()))
     compact_partition(spark, out, part, target_files=1)
     r = consume_changes(spark, out, "A",
                         lambda df, s, u: pytest.fail("no-row window"))
@@ -94,7 +104,7 @@ def test_independent_consumers_and_maintenance_versions(spark, table):
 
     # an append then a rollback of that append: B (behind since before
     # the append) must NOT be fed the discarded rows
-    v_pre = make_ledger(out, "commitlog").latest_version()
+    v_pre = make_ledger(out).latest_version()
     _append(spark, table, 75, 200)
     restore_table(out, version=v_pre)
     rb = consume_changes(spark, out, "B",
@@ -105,7 +115,7 @@ def test_independent_consumers_and_maintenance_versions(spark, table):
     # window includes the rolled-back insert whose files vacuum removed
     consume_changes(spark, out, "C", lambda df, s, u: None)
     _append(spark, table, 76, 150)
-    v_mid = make_ledger(out, "commitlog").latest_version()
+    v_mid = make_ledger(out).latest_version()
     restore_table(out, version=v_pre)
     assert vacuum(out, min_age_s=0) > 0
     # C's cursor is fine (the discarded insert left the feed with the
@@ -138,13 +148,10 @@ def test_cursor_files_are_garbage_collected(tmp_path):
     assert consumer_position(out, "trainer") == 40
 
 
-def test_feed_refuses_markers_backend(spark, tmp_path):
-    p = str(tmp_path / "in.parquet")
-    fixtures.write_transcripts_parquet(p, 200, seed=77, n_parts=2)
-    out = str(tmp_path / "mout")
-    run_checkpointed(spark, p, out, ledger_backend="markers")
-    with pytest.raises(ValueError, match="commitlog"):
-        consume_changes(spark, out, "x", lambda df, s, u: None)
+def test_feed_refuses_markers_backend(spark, legacy_markers_table):
+    with pytest.raises(ValueError, match="adopt_markers"):
+        consume_changes(spark, legacy_markers_table, "x",
+                        lambda df, s, u: None)
 
 
 def test_cli_consume_and_status_surfacing(spark, table, tmp_path):
@@ -187,7 +194,7 @@ def test_cli_vacuum_dry_run_reports_without_deleting(spark, table, tmp_path,
     out = table["out"]
     from curator_spark.checkpoint import make_ledger
     v_pre = table_row_count(out)
-    v_log = make_ledger(out, "commitlog").latest_version()
+    v_log = make_ledger(out).latest_version()
     _append(spark, table, 78, 150)
     # roll back the append → its files become vacuum-able orphans
     restore_table(out, version=v_log)

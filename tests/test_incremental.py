@@ -1,6 +1,6 @@
 """Incremental corpus maintenance (curator_spark/incremental.py):
 cross-run content dedup on append, in-batch keep-first, idempotent
-re-delivery, ledger-backend governance, and the multi-run recompute
+re-delivery, legacy marker-table refusal, and the multi-run recompute
 safety rail."""
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ def corpus(spark, tmp_path_factory):
     p1 = str(base / "batch1.parquet")
     fixtures.to_spark_parquet(b1, p1)
     out = str(base / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p1, out)
 
     fresh = fixtures.generate_transcripts(1000, seed=12, n_parts=8)
     dup_ids = sorted(b1["conv_id"].unique())[:5]
@@ -70,8 +70,7 @@ def test_reappend_is_noop_and_base_run_stays_memoized(spark, corpus):
     assert s["convs_new"] == 0 and s["rows_appended"] == 0
     before = read_committed(spark, corpus["out"]).count()
     # resuming the ORIGINAL run must not clobber appended partitions
-    r = run_checkpointed(spark, corpus["p1"], corpus["out"],
-                         ledger_backend="commitlog")
+    r = run_checkpointed(spark, corpus["p1"], corpus["out"])
     assert r["parts_committed"] == 0 and r["parts_invalidated"] == 0
     assert read_committed(spark, corpus["out"]).count() == before
 
@@ -95,21 +94,18 @@ def test_run_status_counts_appended_rows(spark, corpus):
     assert s["parts_committed"] == 8
 
 
-def test_append_refuses_markers_backend(spark, tmp_path):
-    b = fixtures.generate_transcripts(300, seed=5, n_parts=4)
-    p = str(tmp_path / "b.parquet")
-    fixtures.to_spark_parquet(b, p)
-    out = str(tmp_path / "out")
-    run_checkpointed(spark, p, out)  # default markers ledger
-    with pytest.raises(ValueError, match="commitlog"):
-        append_new_conversations(spark, p, out)
+def test_append_refuses_markers_backend(spark, legacy_markers_table,
+                                        transcripts_path):
+    with pytest.raises(ValueError, match="adopt_markers"):
+        append_new_conversations(spark, transcripts_path,
+                                 legacy_markers_table)
 
 
 def test_multirun_partition_refuses_silent_recompute(spark, corpus):
     """Corrupting a referenced file of a MULTI-run partition must raise
     (recomputing it from one input would drop the other run's rows),
     not silently invalidate."""
-    ledger = make_ledger(corpus["out"], "commitlog")
+    ledger = make_ledger(corpus["out"])
     multi = {p: m for p, m in ledger.committed().items()
              if len((m or {}).get("runs", [])) > 1}
     assert multi, "fixture should have produced multi-run partitions"
@@ -141,10 +137,10 @@ def test_upsert_replaces_revised_keeps_same_adds_new(spark, tmp_path):
     p1 = str(tmp_path / "b1.parquet")
     b1 = fixtures.write_transcripts_parquet(p1, 800, seed=61, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog",
+    run_checkpointed(spark, p1, out,
                      bucket={"col": "conv_id", "n_parts": 4,
                              "fn": "md5full"})
-    v0 = make_ledger(out, "commitlog").latest_version()
+    v0 = make_ledger(out).latest_version()
 
     ids = sorted(b1["conv_id"].unique())
     same_id, rev_id = ids[0], ids[1]
@@ -191,7 +187,7 @@ def test_upsert_never_materializes_revised_keys_on_driver(
     p1 = str(tmp_path / "b1.parquet")
     b1 = fixtures.write_transcripts_parquet(p1, 2000, seed=64, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog",
+    run_checkpointed(spark, p1, out,
                      bucket={"col": "conv_id", "n_parts": 4,
                              "fn": "md5full"})
     # revise EVERY conversation (the replace-half-the-corpus shape)

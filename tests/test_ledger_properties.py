@@ -230,7 +230,7 @@ def _manifest_rows_consistent(parts):
 @given(st.lists(OP, min_size=1, max_size=40), st.data())
 def test_random_programs_preserve_protocol_invariants(store_name, ops, data):
     root = f"/tmp/ledger_props/{uuid.uuid4().hex}"
-    led = make_ledger(root, "commitlog")
+    led = make_ledger(root)
     led.store = ATOMIC_STORES[store_name]()
     led.CKPT_INTERVAL = 8  # cross checkpoint boundaries often
 
@@ -271,7 +271,7 @@ def test_random_programs_preserve_protocol_invariants(store_name, ops, data):
     if head:
         for c in led._checkpoints():
             os.remove(os.path.join(led.dir, f"ckpt-{c:012d}.json"))
-        fresh = make_ledger(root, "commitlog")
+        fresh = make_ledger(root)
         for v, want in timeline.items():
             assert fresh.snapshot(version=v) == want, \
                 f"full replay diverged at v{v}"
@@ -305,7 +305,7 @@ def test_dv_after_compaction_canonicalizes_feed():
     to the live post-dv manifest, exactly like the delete fallback."""
     from curator_spark.checkpoint import table_changes
     root = f"/tmp/ledger_props/{uuid.uuid4().hex}"
-    led = make_ledger(root, "commitlog")
+    led = make_ledger(root)
     _apply(led, ("add", 0, 1))    # one file, 10 rows
     _apply(led, ("compact", 0))   # rows renamed across file boundaries
     _apply(led, ("dv", 0, 0))     # mask row 0 of the compacted file

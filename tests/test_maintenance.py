@@ -16,7 +16,7 @@ def test_report_then_maintain_then_clean(spark, tmp_path):
     p = str(tmp_path / "b0.parquet")
     fixtures.write_transcripts_parquet(p, 400, seed=41, n_parts=4)
     out = str(tmp_path / "table")
-    run_checkpointed(spark, p, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p, out)
     for i in range(3):  # accrete small files
         b = str(tmp_path / f"b{i + 1}.parquet")
         fixtures.write_transcripts_parquet(b, 150, seed=42 + i,
@@ -44,10 +44,6 @@ def test_report_then_maintain_then_clean(spark, tmp_path):
     assert r2["parts_compacted"] == [] and r2["vacuumed_files"] == 0
 
 
-def test_report_refuses_markers_backend(spark, tmp_path):
-    p = str(tmp_path / "m.parquet")
-    fixtures.write_transcripts_parquet(p, 200, seed=45, n_parts=2)
-    out = str(tmp_path / "mtable")
-    run_checkpointed(spark, p, out)  # markers backend
-    with pytest.raises(ValueError, match="commitlog"):
-        maintenance_report(out)
+def test_report_refuses_markers_backend(legacy_markers_table):
+    with pytest.raises(ValueError, match="adopt_markers"):
+        maintenance_report(legacy_markers_table)

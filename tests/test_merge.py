@@ -15,6 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import copy_table
 from curator_spark.checkpoint import (
     CommitLogLedger, compact_partition, make_ledger, read_committed,
     table_history, table_row_count)
@@ -108,18 +109,25 @@ def _toy(spark, n=N0, ppl_base=0.0):
         (F.col("id") % 97 + ppl_base).cast("double").alias("ppl"))
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
     spark.dataSource.register(CuratorTableDataSource)
-    out = str(tmp_path / "t")
+    out = str(tmp_path_factory.mktemp("merge") / "t")
     (_toy(spark).write.format("curator_table")
      .option("bucketBy", "conv_id").option("buckets", "8")
      .mode("append").save(out))
     return out
 
 
+@pytest.fixture()
+def table(spark, built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    spark.dataSource.register(CuratorTableDataSource)
+    return copy_table(built_table, tmp_path / "t")
+
+
 def test_merge_into_update_insert(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     upd = _toy(spark, 20, ppl_base=1000.0)          # conv-0..conv-19
     ins = (_toy(spark, 5).withColumn(
@@ -177,15 +185,15 @@ def test_merge_into_delete_clause(spark, table):
 def test_merge_into_duplicate_source_keys_refused(spark, table):
     dup = _toy(spark, 4).unionByName(_toy(spark, 2))
     n = table_row_count(table)
-    v = make_ledger(table, "commitlog").latest_version()
+    v = make_ledger(table).latest_version()
     with pytest.raises(ValueError, match="duplicate keys"):
         merge_into(spark, table, dup)
     assert table_row_count(table) == n
-    assert make_ledger(table, "commitlog").latest_version() == v
+    assert make_ledger(table).latest_version() == v
 
 
 def test_merge_into_empty_source_commits_nothing(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v = led.latest_version()
     s = merge_into(spark, table, _toy(spark, 0))
     assert s["version"] is None and s["n_source_rows"] == 0
@@ -196,7 +204,7 @@ def test_merge_into_no_match_no_swap(spark, table):
     """A source that matches nothing and inserts nothing new must not
     rewrite any file (stats false positives are filtered by the
     matched-count probe)."""
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v = led.latest_version()
     src = (_toy(spark, 3).withColumn(
         "conv_id", F.concat(F.lit("zz-"), F.col("conv_id"))))
@@ -210,14 +218,9 @@ def test_merge_into_source_missing_columns(spark, table):
         merge_into(spark, table, _toy(spark, 5).drop("ppl"))
 
 
-def test_merge_into_refuses_markers_backend(spark, tmp_path,
-                                            transcripts_path):
-    from curator_spark.checkpoint import run_checkpointed
-    out = str(tmp_path / "m")
-    run_checkpointed(spark, transcripts_path, out,
-                     ledger_backend="markers")
-    with pytest.raises(ValueError, match="log-defined-visibility"):
-        merge_into(spark, out, _toy(spark, 3))
+def test_merge_into_refuses_markers_backend(spark, legacy_markers_table):
+    with pytest.raises(ValueError, match="adopt_markers"):
+        merge_into(spark, legacy_markers_table, _toy(spark, 3))
 
 
 def test_merge_df_three_clause(spark):
@@ -248,7 +251,7 @@ def test_merge_df_delete_condition_requires_update(spark):
 
 
 def test_merge_into_three_clause_single_version(spark, table):
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     upd = (_toy(spark, 20, ppl_base=1000.0)
            .withColumn("is_del", F.col("conv_id").isin(
@@ -276,7 +279,7 @@ def test_merge_into_three_clause_single_version(spark, table):
 def test_merge_into_txn_same_version_idempotent(spark, table):
     """txn=(app, v) rides the SAME commit as the merge; a replay of the
     same work unit is a no-op BEFORE any Spark work."""
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     src = _toy(spark, 10, ppl_base=1000.0)
     s1 = merge_into(spark, table, src, txn=("cdc", 0))
     assert s1["rows_updated"] == 10 and not s1["txn_skipped"]
@@ -297,7 +300,7 @@ def test_merge_evolve_schema_widens_in_same_commit(spark, table):
     nullable table column, recorded as a table_meta action in the SAME
     atomic version as the merge — untouched rows read NULL, only
     matched/inserted rows carry values."""
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     v0 = led.latest_version()
     src = (_toy(spark, 10, ppl_base=1000.0)
            .withColumn("quality", F.lit("gold"))
@@ -325,7 +328,7 @@ def test_merge_default_never_lands_extra_columns(spark, table):
     after = read_committed(spark, table)
     assert "seq" not in after.columns
     fields = {f["name"] for f in
-              make_ledger(table, "commitlog").table_meta()
+              make_ledger(table).table_meta()
               ["schema"]["fields"]}
     assert "seq" not in fields
 
@@ -337,7 +340,7 @@ def test_merge_crash_before_commit_leaves_table_unchanged(spark, table,
     placed-but-unreferenced outputs are orphans vacuum reclaims."""
     from curator_spark.checkpoint import vacuum
     before = _ms(read_committed(spark, table))
-    v = make_ledger(table, "commitlog").latest_version()
+    v = make_ledger(table).latest_version()
 
     def boom(self, actions):
         raise RuntimeError("simulated crash at commit")
@@ -345,7 +348,7 @@ def test_merge_crash_before_commit_leaves_table_unchanged(spark, table,
     monkeypatch.setattr(CommitLogLedger, "merge_commit", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         merge_into(spark, table, _toy(spark, 20, ppl_base=1000.0))
-    led = make_ledger(table, "commitlog")
+    led = make_ledger(table)
     assert led.latest_version() == v               # nothing committed
     assert _ms(read_committed(spark, table)) == before
     assert vacuum(table, min_age_s=0) > 0          # orphans reclaimed

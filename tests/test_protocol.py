@@ -20,7 +20,7 @@ from curator_spark.checkpoint import (
 def _table(tmp_path, n_commits=3):
     import os
     out = str(tmp_path / "t")
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     for i in range(n_commits):
         d = os.path.join(out, "data", f"part={i}")
         os.makedirs(d, exist_ok=True)
@@ -135,8 +135,8 @@ def test_status_surfaces_the_protocol(tmp_path):
         in format_run_status(out)
 
 
-def test_markers_backend_has_no_protocol(tmp_path):
-    out = str(tmp_path / "m")
-    make_ledger(out, "markers")
-    with pytest.raises(ValueError, match="commitlog"):
-        table_protocol(out, backend="markers")
+def test_markers_backend_has_no_protocol(legacy_markers_table):
+    with pytest.raises(ValueError, match="adopt_markers"):
+        table_protocol(legacy_markers_table)
+    with pytest.raises(ValueError, match="adopt_markers"):
+        upgrade_protocol(legacy_markers_table, min_reader=2)

@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     BUCKET_FNS, ConcurrentRebucketError, delete_conversations,
@@ -21,14 +22,22 @@ OLD = {"col": "conv_id", "n_parts": 4, "fn": "md5full"}
 NEW = {"col": "conv_id", "n_parts": 8, "fn": "md5full"}
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("rebucket")
     p = str(tmp_path / "in.parquet")
     pdf = fixtures.write_transcripts_parquet(p, 1200, seed=61, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p, out, ledger_backend="commitlog",
+    run_checkpointed(spark, p, out,
                      bucket=dict(OLD))
     return {"out": out, "pdf": pdf}
+
+
+@pytest.fixture()
+def table(built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    return dict(built_table,
+                out=copy_table(built_table["out"], tmp_path / "out"))
 
 
 def _sorted_rows(spark, out, **kw):
@@ -49,7 +58,7 @@ def test_rebucket_preserves_rows_and_relayouts(spark, table):
     after = _sorted_rows(spark, out)
     assert before.equals(after)
 
-    ledger = make_ledger(out, "commitlog")
+    ledger = make_ledger(out)
     assert ledger.table_meta()["bucket"] == NEW
     committed = ledger.committed()
     # every committed partition number is the new transform of the
@@ -95,14 +104,14 @@ def test_rebucket_materializes_deletion_vectors(spark, table):
     after = _sorted_rows(spark, out)
     assert live_before.equals(after)
     # masks are materialized, not carried: no dv survives the rewrite
-    for marker in make_ledger(out, "commitlog").committed().values():
+    for marker in make_ledger(out).committed().values():
         assert not marker.get("dv")
 
 
 def test_stale_rebucket_raises_and_leaves_table_intact(spark, table,
                                                        tmp_path):
     out, pdf = table["out"], table["pdf"]
-    ledger = make_ledger(out, "commitlog")
+    ledger = make_ledger(out)
     before = _sorted_rows(spark, out)
 
     # inject a concurrent commit between rebucket's snapshot read and
@@ -130,7 +139,7 @@ def test_stale_rebucket_raises_and_leaves_table_intact(spark, table,
 
     # the table reflects ONLY the concurrent delete; the rebucket's
     # outputs are unreferenced orphans vacuum can count
-    ledger = make_ledger(out, "commitlog")
+    ledger = make_ledger(out)
     assert ledger.table_meta()["bucket"] == OLD
     loser = sorted(pdf["conv_id"].unique())[-1]
     after = _sorted_rows(spark, out)
@@ -144,7 +153,7 @@ def test_stale_rebucket_raises_and_leaves_table_intact(spark, table,
 
 def test_time_travel_and_restore_cross_the_spec_change(spark, table):
     out = table["out"]
-    ledger = make_ledger(out, "commitlog")
+    ledger = make_ledger(out)
     v_old = ledger.latest_version()
     before = _sorted_rows(spark, out)
     r = rebucket_table(spark, out, dict(NEW))
@@ -160,7 +169,7 @@ def test_time_travel_and_restore_cross_the_spec_change(spark, table):
 
     # RESTORE rolls back data AND the spec facet together
     restore_table(out, version=v_old)
-    assert make_ledger(out, "commitlog").table_meta()["bucket"] == OLD
+    assert make_ledger(out).table_meta()["bucket"] == OLD
     assert before.equals(_sorted_rows(spark, out))
     # ...and the rebucketed era stays time-travel-readable
     assert before.equals(_sorted_rows(spark, out, version=r["version"]))
@@ -168,7 +177,7 @@ def test_time_travel_and_restore_cross_the_spec_change(spark, table):
 
 def test_feed_canonicalizes_across_rebucket(spark, table, tmp_path):
     out, pdf = table["out"], table["pdf"]
-    ledger = make_ledger(out, "commitlog")
+    ledger = make_ledger(out)
     cursor = ledger.latest_version()
 
     # in-window activity: append new conversations, then rebucket, then
@@ -197,7 +206,7 @@ def test_feed_canonicalizes_across_rebucket(spark, table, tmp_path):
 
 def test_feed_ignores_rebucket_with_no_inwindow_activity(spark, table):
     out = table["out"]
-    cursor = make_ledger(out, "commitlog").latest_version()
+    cursor = make_ledger(out).latest_version()
     rebucket_table(spark, out, dict(NEW))
     ch = table_changes(out, cursor)
     # row-preserving reorganization with nothing in-window: pre-window
@@ -211,7 +220,7 @@ def test_run_checkpointed_refuses_spec_change_on_live_table(
     p = str(tmp_path / "in8.parquet")
     fixtures.write_transcripts_parquet(p, 300, seed=63, n_parts=8)
     with pytest.raises(ValueError, match="rebucket_table"):
-        run_checkpointed(spark, p, out, ledger_backend="commitlog",
+        run_checkpointed(spark, p, out,
                          bucket={"col": "conv_id", "n_parts": 8,
                                  "fn": "md5full"})
 
@@ -225,7 +234,7 @@ def test_rebucket_ratchets_protocol_and_empty_table_spec_change(
     assert "rebucket" in proto["writer_features"]
 
     # an idempotent re-run is a no-op (no new version, no rewrite)
-    ledger = make_ledger(out, "commitlog")
+    ledger = make_ledger(out)
     v = ledger.latest_version()
     r = rebucket_table(spark, out, dict(NEW))
     assert not r["rebucketed"] and r["version"] == v

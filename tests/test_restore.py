@@ -15,6 +15,7 @@ from datetime import datetime, timezone
 
 import pytest
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     delete_conversations, make_ledger, read_committed, restore_table,
@@ -23,17 +24,18 @@ from curator_spark.checkpoint import (
 from curator_spark.incremental import append_new_conversations
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
     """Two eras: base run (seed 61), then an appended disjoint batch
     (seed 62)."""
+    tmp_path = tmp_path_factory.mktemp("restore")
     p1 = str(tmp_path / "b1.parquet")
     pdf1 = fixtures.write_transcripts_parquet(p1, 900, seed=61, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog",
+    run_checkpointed(spark, p1, out,
                      bucket={"col": "conv_id", "n_parts": 4,
                              "fn": "md5full"})
-    ledger = make_ledger(out, "commitlog")
+    ledger = make_ledger(out)
     v_base = ledger.latest_version()
     p2 = str(tmp_path / "b2.parquet")
     pdf2 = fixtures.write_transcripts_parquet(p2, 500, seed=62, n_parts=4)
@@ -42,6 +44,13 @@ def table(spark, tmp_path):
     return {"out": out, "in1": p1, "pdf1": pdf1, "pdf2": pdf2,
             "v_base": v_base, "v_append": ledger.latest_version(),
             "rows_appended": app["rows_appended"]}
+
+
+@pytest.fixture()
+def table(built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    return dict(built_table,
+                out=copy_table(built_table["out"], tmp_path / "out"))
 
 
 def test_restore_reproduces_era_and_preserves_history(spark, table):
@@ -131,7 +140,6 @@ def test_restore_to_v0_then_rerun_recomputes(spark, table):
     # rollback-and-recompute: run-success and table meta rolled back
     # with the data, so the same job recomputes from scratch
     r = run_checkpointed(spark, table["in1"], out,
-                         ledger_backend="commitlog",
                          bucket={"col": "conv_id", "n_parts": 4,
                                  "fn": "md5full"})
     assert not r.get("memoized")
@@ -140,7 +148,7 @@ def test_restore_to_v0_then_rerun_recomputes(spark, table):
     assert table_row_count(out, version=table["v_append"]) == n_append_era
 
 
-def test_restore_refuses_markers_and_bad_args(spark, table, tmp_path):
+def test_restore_refuses_markers_and_bad_args(table, legacy_markers_table):
     out = table["out"]
     with pytest.raises(ValueError, match="exactly one"):
         restore_table(out)
@@ -149,12 +157,8 @@ def test_restore_refuses_markers_and_bad_args(spark, table, tmp_path):
                       as_of=datetime.now(timezone.utc))
     with pytest.raises(ValueError, match="does not exist"):
         restore_table(out, version=10_000)
-    p = str(tmp_path / "in.parquet")
-    fixtures.write_transcripts_parquet(p, 200, seed=63, n_parts=2)
-    mout = str(tmp_path / "mout")
-    run_checkpointed(spark, p, mout, ledger_backend="markers")
-    with pytest.raises(ValueError, match="restore requires"):
-        restore_table(mout, version=1)
+    with pytest.raises(ValueError, match="adopt_markers"):
+        restore_table(legacy_markers_table, version=1)
 
 
 def test_cli_restore_verb(table, capsys):
@@ -194,7 +198,7 @@ def test_cli_restore_asof_rolls_back_without_spark(tmp_path):
     from curator_spark.cli import main
 
     out = str(tmp_path / "t")
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     led.commit_part({"part": 0, "run_id": "r0", "status": "COMMITTED",
                      "n_rows": 5, "files": {"a.parquet": {"n_rows": 5}}})
     _time.sleep(1.1)  # commit timestamps are second-resolution ISO

@@ -26,12 +26,12 @@ def table(spark, tmp_path_factory):
     p = str(base / "in.parquet")
     fixtures.write_transcripts_parquet(p, 900, seed=41, n_parts=2)
     out = str(base / "out")
-    run_checkpointed(spark, p, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p, out)
     return out
 
 
 def test_schema_recorded_and_used_for_planning(spark, table):
-    meta = make_ledger(table, "commitlog").table_meta()
+    meta = make_ledger(table).table_meta()
     names = [f["name"] for f in meta["schema"]["fields"]]
     assert "conv_id" in names and "keep" in names and "part" in names
     # the read plans with the declared schema (same fields back)
@@ -40,7 +40,7 @@ def test_schema_recorded_and_used_for_planning(spark, table):
 
 
 def test_additive_widening_old_files_read_null(spark, table):
-    ledger = make_ledger(table, "commitlog")
+    ledger = make_ledger(table)
     base_rows = read_committed(spark, table).count()
 
     # a widened writer appends 20 rows carrying a NEW column
@@ -99,12 +99,18 @@ def test_type_change_and_nonnullable_refused():
     assert _merge_schema_json(merged, old) == merged
 
 
-def test_markers_backend_records_nothing(spark, tmp_path):
-    p = str(tmp_path / "in.parquet")
-    fixtures.write_transcripts_parquet(p, 300, seed=42, n_parts=2)
-    out = str(tmp_path / "out")
-    run_checkpointed(spark, p, out, ledger_backend="markers")
-    # no log, no meta — record is a no-op and reads fall back to
-    # inference, exactly the pre-evolution behavior
-    df = read_committed(spark, out)
-    assert df.count() > 0 and "keep" in df.columns
+def test_markers_backend_records_nothing(spark, legacy_markers_table,
+                                         tmp_path):
+    """A legacy marker table is refused before anything is recorded;
+    adopting it records the footer schema (plus the `part` column) in
+    the one adoption commit."""
+    from curator_spark.checkpoint import adopt_markers
+    out = legacy_markers_table
+    with pytest.raises(ValueError, match="adopt_markers"):
+        run_checkpointed(spark, str(tmp_path / "in.parquet"), out)
+    assert not os.path.exists(os.path.join(out, "_commitlog"))
+    adopt_markers(out)
+    fields = make_ledger(out).table_meta()["schema"]["fields"]
+    assert [(f["name"], f["type"]) for f in fields] == [
+        ("conv_id", "string"), ("turn_idx", "long"), ("part", "integer")]
+    assert read_committed(spark, out).count() == 2

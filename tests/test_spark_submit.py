@@ -69,6 +69,7 @@ def test_spark_submit_py_files_runs_checkpointed_job(tmp_path):
     summary = json.loads(r.stdout.strip().splitlines()[-1])
     assert summary["parts_committed"] == 2 and not summary["memoized"]
     # the full durable layout landed
-    for d in ("data", "_ledger", "_metrics", "_meta"):
+    for d in ("data", "_commitlog", "_metrics", "_meta"):
         assert os.path.isdir(os.path.join(out, d)), d
-    assert os.path.exists(os.path.join(out, "_SUCCESS_RUN"))
+    from curator_spark.checkpoint import make_ledger
+    assert make_ledger(out, "commitlog").run_success() is not None

@@ -22,7 +22,7 @@ def stream_env(spark, tmp_path_factory):
     p1 = str(base / "batch1.parquet")
     fixtures.to_spark_parquet(b1, p1)
     out = str(base / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p1, out)
 
     # stream dir: one file of fresh convs + one file re-delivering
     # batch1 content under new conv ids (pure duplicates)

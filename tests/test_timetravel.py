@@ -35,8 +35,8 @@ def table(spark, tmp_path_factory):
     p1 = str(base / "b1.parquet")
     fixtures.to_spark_parquet(b1, p1)
     out = str(base / "out")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
-    ledger = make_ledger(out, "commitlog")
+    run_checkpointed(spark, p1, out)
+    ledger = make_ledger(out)
     v_base = ledger.latest_version()
 
     b2 = fixtures.generate_transcripts(800, seed=22, n_parts=4)
@@ -112,19 +112,15 @@ def test_timestamp_as_of(spark, table):
         read_committed(spark, out, version=1, as_of=base_ts)
 
 
-def test_time_travel_requires_commitlog(spark, tmp_path):
-    p = str(tmp_path / "in.parquet")
-    fixtures.write_transcripts_parquet(p, 300, seed=5, n_parts=2)
-    out = str(tmp_path / "out")
-    run_checkpointed(spark, p, out, ledger_backend="markers")
-    with pytest.raises(ValueError, match="time travel"):
-        snapshot_files(out, version=1)
-    with pytest.raises(ValueError, match="history"):
-        table_history(out)
+def test_time_travel_requires_commitlog(spark, legacy_markers_table):
+    with pytest.raises(ValueError, match="adopt_markers"):
+        snapshot_files(legacy_markers_table, version=1)
+    with pytest.raises(ValueError, match="adopt_markers"):
+        read_committed(spark, legacy_markers_table, version=1)
 
 
 def test_manifest_stats_recorded(table):
-    ledger = make_ledger(table["out"], "commitlog")
+    ledger = make_ledger(table["out"])
     marker = ledger.committed()[table["part"]]
     stats = marker.get("stats") or {}
     # every live file of the compacted partition has conv_id bounds
@@ -182,7 +178,7 @@ def test_bucket_transform_pruning(spark, tmp_path):
     p = str(tmp_path / "in.parquet")
     pdf = fixtures.write_transcripts_parquet(p, 1200, seed=31, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p, out, ledger_backend="commitlog",
+    run_checkpointed(spark, p, out,
                      bucket={"col": "conv_id", "n_parts": 4,
                              "fn": "md5full"})
     cid = sorted(pdf["conv_id"].unique())[3]
@@ -197,14 +193,12 @@ def test_bucket_transform_pruning(spark, tmp_path):
     assert only2 and all("part=2" in f for f in only2)
     with pytest.raises(ValueError, match="bucket spec"):
         run_checkpointed(spark, p, str(tmp_path / "bad"),
-                         ledger_backend="commitlog",
                          bucket={"col": "conv_id", "fn": "nope"})
     # a spec whose hash function does NOT describe the data is refused
     # at registration (it would silently lose rows on every probe) —
     # this input was bucketed with md5full, not md5hex8
     with pytest.raises(ValueError, match="does not describe"):
         run_checkpointed(spark, p, str(tmp_path / "bad2"),
-                         ledger_backend="commitlog",
                          bucket={"col": "conv_id", "n_parts": 4,
                                  "fn": "md5hex8"})
 

@@ -15,7 +15,7 @@ from curator_spark.incremental import append_batch_df
 
 
 def test_txn_protocol_monotone_and_checkpoint_survivable(tmp_path):
-    led = make_ledger(str(tmp_path / "t"), "commitlog")
+    led = make_ledger(str(tmp_path / "t"))
     assert led.last_txn("tok-indexer") is None
     led.set_txn("tok-indexer", 3)
     led.set_txn("embedder", 1)
@@ -40,9 +40,9 @@ def test_append_txn_skips_replayed_unit_and_restore_rolls_back(
     p = str(tmp_path / "in.parquet")
     fixtures.write_transcripts_parquet(p, 400, seed=81, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p, out, ledger_backend="commitlog")
+    run_checkpointed(spark, p, out)
     n0 = read_committed(spark, out).count()
-    led = make_ledger(out, "commitlog")
+    led = make_ledger(out)
     v_pre = led.latest_version()
 
     p2 = str(tmp_path / "b2.parquet")

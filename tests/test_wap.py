@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     delete_conversations, make_ledger, read_committed, run_checkpointed,
@@ -20,13 +21,21 @@ from curator_spark.wap import (PublishConflict, create_branch,
                                drop_branch, publish_branch)
 
 
-@pytest.fixture()
-def table(spark, tmp_path):
+@pytest.fixture(scope="module")
+def built_table(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("wap")
     p1 = str(tmp_path / "b1.parquet")
     fixtures.write_transcripts_parquet(p1, 600, seed=81, n_parts=4)
     out = str(tmp_path / "src")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
-    return {"out": out, "branch": str(tmp_path / "wap_branch"),
+    run_checkpointed(spark, p1, out)
+    return out
+
+
+@pytest.fixture()
+def table(built_table, tmp_path):
+    """A private copy of the module's table for each test."""
+    return {"out": copy_table(built_table, tmp_path / "src"),
+            "branch": str(tmp_path / "wap_branch"),
             "batch": str(tmp_path / "b2.parquet")}
 
 
@@ -91,11 +100,11 @@ def test_publish_conflict_when_source_advances(spark, table):
     p3 = table["batch"].replace("b2", "b3")
     fixtures.write_transcripts_parquet(p3, 200, seed=84, n_parts=4)
     append_new_conversations(spark, p3, out)
-    head_after = make_ledger(out, "commitlog").latest_version()
+    head_after = make_ledger(out).latest_version()
     with pytest.raises(PublishConflict):
         publish_branch(out, br)
     # the failed publish left the source log untouched
-    assert make_ledger(out, "commitlog").latest_version() == head_after
+    assert make_ledger(out).latest_version() == head_after
 
 
 def test_failed_audit_aborts_publish(spark, table):
@@ -104,7 +113,7 @@ def test_failed_audit_aborts_publish(spark, table):
     fixtures.write_transcripts_parquet(table["batch"], 200, seed=85,
                                        n_parts=4)
     append_new_conversations(spark, table["batch"], br)
-    head = make_ledger(out, "commitlog").latest_version()
+    head = make_ledger(out).latest_version()
     before = _ids(spark, out)
 
     def audit(df):
@@ -112,17 +121,17 @@ def test_failed_audit_aborts_publish(spark, table):
 
     with pytest.raises(AssertionError, match="quality gate"):
         publish_branch(out, br, audit=audit, spark=spark)
-    assert make_ledger(out, "commitlog").latest_version() == head
+    assert make_ledger(out).latest_version() == head
     assert _ids(spark, out) == before
 
 
 def test_noop_branch_publishes_nothing(spark, table):
     out, br = table["out"], table["branch"]
     create_branch(out, br)
-    head = make_ledger(out, "commitlog").latest_version()
+    head = make_ledger(out).latest_version()
     r = publish_branch(out, br)
     assert r["published_version"] is None
-    assert make_ledger(out, "commitlog").latest_version() == head
+    assert make_ledger(out).latest_version() == head
 
 
 def test_drop_branch_refuses_primary_and_spares_source(spark, table):
@@ -159,8 +168,8 @@ def test_racing_publishes_exactly_one_wins(spark, tmp_path):
     p1 = str(tmp_path / "b.parquet")
     fixtures.write_transcripts_parquet(p1, 400, seed=95, n_parts=4)
     out = str(tmp_path / "src")
-    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
-    base = make_ledger(out, "commitlog").latest_version()
+    run_checkpointed(spark, p1, out)
+    base = make_ledger(out).latest_version()
 
     branches = []
     for i, seed in enumerate((96, 97)):
@@ -186,7 +195,7 @@ def test_racing_publishes_exactly_one_wins(spark, tmp_path):
     assert len(published) == 1 and len(conflicted) == 1, outs
     assert f"PUBLISHED {base + 1}" in published[0]
     # the table is exactly the winning branch — no interleaving
-    head = make_ledger(out, "commitlog").latest_version()
+    head = make_ledger(out).latest_version()
     assert head == base + 1
     winner = branches[outs.index(published[0])]
     assert _ids(spark, out) == _ids(spark, winner)
@@ -206,7 +215,7 @@ def test_cli_publish_with_expectations_gate(spark, table, tmp_path):
     fixtures.write_transcripts_parquet(table["batch"], 150, seed=86,
                                        n_parts=4)
     append_new_conversations(spark, table["batch"], br)
-    head = make_ledger(out, "commitlog").latest_version()
+    head = make_ledger(out).latest_version()
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_CPUS="4")
 
@@ -222,7 +231,7 @@ def test_cli_publish_with_expectations_gate(spark, table, tmp_path):
     r = run("impossible=turn_idx < 0")
     assert r.returncode == 3, (r.stdout, r.stderr)
     assert "audit_failed" in r.stdout
-    assert make_ledger(out, "commitlog").latest_version() == head
+    assert make_ledger(out).latest_version() == head
 
     r = run("valid_turns=turn_idx >= 0", "nonempty=length(text) >= 0")
     assert r.returncode == 0, (r.stdout, r.stderr)

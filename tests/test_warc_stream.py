@@ -69,24 +69,22 @@ def test_warc_stream_end_to_end(spark, landing, tmp_path):
 
 def test_create_table_bootstrap_semantics(spark, tmp_path):
     """create_table: fresh dir → empty commitlog v1; idempotent on an
-    existing table; refuses a markers-governed dir."""
+    existing table; refuses a legacy marker-layout dir."""
     import pytest as _pytest
 
-    from curator_spark import fixtures
-    from curator_spark.checkpoint import (create_table, detect_backend,
-                                          run_checkpointed, table_row_count)
+    from conftest import write_legacy_markers_dir
+    from curator_spark.checkpoint import (create_table, make_ledger,
+                                          table_row_count)
     fresh = str(tmp_path / "fresh")
     assert create_table(fresh) == 1
-    assert detect_backend(fresh) == "commitlog"
+    assert make_ledger(fresh).latest_version() == 1
     assert table_row_count(fresh) == 0
     v = create_table(fresh)  # idempotent
     assert v == 1
 
-    p = str(tmp_path / "t.parquet")
-    fixtures.write_transcripts_parquet(p, 200, seed=81, n_parts=2)
     markers = str(tmp_path / "markers")
-    run_checkpointed(spark, p, markers)  # markers backend
-    with _pytest.raises(ValueError, match="markers"):
+    write_legacy_markers_dir(markers, {}, {"run_id": "r", "n_parts": 0})
+    with _pytest.raises(ValueError, match="adopt_markers"):
         create_table(markers)
 
 
