@@ -2797,6 +2797,10 @@ def vacuum(out_dir: str,
       Pass 0 only when no writer can be concurrent (tests, quiesced
       maintenance windows).
 
+    Files the live snapshot of an in-place Delta export
+    (`data/_delta_log`) lists count as referenced: a Delta reader of
+    that export still scans them. Re-export to release them.
+
     Also reclaims `_compact-*` staging directories older than the
     window — the debris of a compact_partition that crashed before
     moving its rewrites into the partition dir.
@@ -2817,6 +2821,14 @@ def vacuum(out_dir: str,
     removed = 0
     if not os.path.isdir(data_dir):
         return 0
+    if os.path.isdir(os.path.join(data_dir, "_delta_log")):
+        # an in-place Delta export still serves the files its log
+        # lists, even after a rewrite dropped them from the manifests
+        from .export_delta import delta_live_files
+        for a in delta_live_files(data_dir):
+            d, _, fn = a["path"].rpartition("/")
+            if d.startswith("part=") and d[5:].isdigit():
+                referenced.add((int(d[5:]), fn))
     now = time.time()
     for d in os.listdir(data_dir):
         if not d.startswith("part="):

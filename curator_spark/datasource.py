@@ -20,6 +20,16 @@ files (one input partition per committed file — cluster-parallel by
 construction, and at 100 TB each micro-batch plans O(window) metadata,
 never a table scan).
 
+This module is also the ONE SCAN CORE of both Python data sources
+(`delta_source.delta_feed` plans from a Delta log and reuses it): one
+input partition type `(path, part_values, dv)`, one executor reader
+that streams a file in Arrow batches (`ParquetFile.iter_batches`)
+applying the deletion-vector mask, the logical→physical column map,
+the partition values and evolution nulls, one filter pushdown
+(`_PlannedReader`) and one version-offset policy with the
+`maxVersionsPerTrigger` rate limiter (`_VersionStreamReader`). Each
+source only plans: which files a snapshot or a version window holds.
+
 The batch reader implements FILTER PUSHDOWN (`pushFilters`): the
 pushable conjuncts of a `.where(...)` become manifest-stats file
 skipping + bucket-transform partition pruning via the same
@@ -42,13 +52,12 @@ crashed after commit, before Spark's own offset advanced) is detected
 from the log and skipped, its re-staged files deleted as orphans.
 
 Readers yield and writers accept Arrow record batches (not Python
-tuples), so rows never pass through per-row Python; files written
-before an additive schema evolution surface the later columns as
-nulls, exactly like the snapshot reader.
+tuples), so rows never pass through per-row Python.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
@@ -61,10 +70,11 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 @dataclass
 class _FilePartition(InputPartition):
-    part: int
+    """One immutable data file to scan: its absolute path, the
+    partition values its location carries (not the file) as
+    ((col, raw), ...), and its deletion-vector row positions."""
     path: str
-    # deletion-vector positions of this file (row indexes masked out
-    # at read — the file itself is immutable)
+    part_values: tuple = ()
     dv: tuple = ()
 
 
@@ -81,38 +91,75 @@ def _declared_schema(table_dir: str) -> StructType:
     return StructType(fields)
 
 
-def _read_file_as_arrow(partition: _FilePartition, schema: StructType,
-                        cm: dict | None = None):
-    """Executor-side: one committed parquet file → arrow batches cast
-    to the table schema (partition column materialized from the
-    assignment; evolution-missing columns filled with nulls). `cm` is
-    the table's logical→physical column map when column mapping is
-    active: the schema Spark sees is logical, the file holds the
-    immutable physical names."""
+def _coerce_partition_value(raw, dtype):
+    """A partition value → its declared type: Delta's partitionValues
+    are strings, the commit log's `part` is an int. None/'' is the
+    NULL encoding."""
+    if raw in (None, ""):
+        return None
+    t = dtype.typeName()
+    if t in ("integer", "long", "short", "byte"):
+        return int(raw)
+    if t in ("double", "float"):
+        return float(raw)
+    if t == "boolean":
+        return str(raw).lower() == "true"
+    if t == "string":
+        return raw
+    raise NotImplementedError(
+        f"partition column type {t} not supported by the data sources")
+
+
+#: rows per Arrow batch handed to Spark (Spark's own default for
+#: spark.sql.execution.arrow.maxRecordsPerBatch): a file is streamed,
+#: never loaded whole
+_BATCH_ROWS = 10_000
+
+
+def _read_file(partition: _FilePartition, schema: StructType,
+               phys: dict):
+    """Executor-side: one data file → Arrow batches cast to `schema`.
+    Deletion-vector positions are masked out with a running row offset
+    across batches; `phys` maps logical to physical column names (the
+    commit log's column mapping and Delta's name-mode physicalName map
+    alike); partition columns come from `part_values`; a column that a
+    later schema evolution added reads as nulls."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
     target = to_arrow_schema(schema)
-    cm = cm or {}
-    table = pq.read_table(partition.path)
-    if partition.dv:
-        # apply the deletion vector: mask the marked row positions out
-        mask = [True] * table.num_rows
-        for r in partition.dv:
-            mask[int(r)] = False
-        table = table.filter(pa.array(mask))
-    n = table.num_rows
-    arrays = []
-    for field in target:
-        phys = cm.get(field.name, field.name)
-        if field.name == "part" and "part" not in table.column_names:
-            arrays.append(pa.array([partition.part] * n,
-                                   type=pa.int32()).cast(field.type))
-        elif phys in table.column_names:
-            arrays.append(table.column(phys).cast(field.type))
-        else:  # pre-evolution file: later-added column reads as null
-            arrays.append(pa.nulls(n, type=field.type))
-    yield from pa.Table.from_arrays(arrays, schema=target).to_batches()
+    raw = dict(partition.part_values)
+    consts = {f.name: _coerce_partition_value(raw[f.name], f.dataType)
+              for f in schema.fields if f.name in raw}
+    pf = pq.ParquetFile(partition.path)
+    present = set(pf.schema_arrow.names)
+    cols = [phys.get(f.name, f.name) for f in schema.fields
+            if f.name not in consts and phys.get(f.name, f.name) in present]
+    dv = np.unique(np.asarray(partition.dv, dtype=np.int64))
+    row0 = 0
+    for batch in pf.iter_batches(batch_size=_BATCH_ROWS, columns=cols):
+        n = batch.num_rows
+        hit = dv[(dv >= row0) & (dv < row0 + n)] - row0
+        row0 += n
+        if hit.size:
+            keep = np.ones(n, dtype=bool)
+            keep[hit] = False
+            batch = batch.filter(pa.array(keep))
+        m = batch.num_rows
+        arrays = []
+        for sf, field in zip(schema.fields, target):
+            p = phys.get(sf.name, sf.name)
+            if sf.name in consts:
+                val = consts[sf.name]
+                arrays.append(
+                    pa.nulls(m, type=field.type) if val is None
+                    else pa.repeat(pa.scalar(val).cast(field.type), m))
+            elif p in present:
+                arrays.append(batch.column(p).cast(field.type))
+            else:  # pre-evolution file: later-added column reads null
+                arrays.append(pa.nulls(m, type=field.type))
+        yield pa.RecordBatch.from_arrays(arrays, schema=target)
 
 
 # Spark Filter classes whose semantics map 1:1 onto the library's
@@ -122,24 +169,21 @@ _PUSHABLE = {EqualTo: "=", GreaterThan: ">", GreaterThanOrEqual: ">=",
              LessThan: "<", LessThanOrEqual: "<="}
 
 
-class _SnapshotReader(DataSourceReader):
-    def __init__(self, schema: StructType, table_dir: str) -> None:
-        from .checkpoint import make_ledger
+class _PlannedReader(DataSourceReader):
+    """Batch read of a file set planned on the driver from a log.
+    Subclasses plan `partitions()` (honouring `self._where`); filter
+    pushdown and the executor read are shared."""
+
+    def __init__(self, schema: StructType, phys: dict) -> None:
         self._schema = schema
-        self._dir = table_dir
+        self._phys = phys
         self._where: list[tuple] = []
-        # pin the snapshot VERSION at plan time (driver): the scan
-        # stays consistent even if writers commit mid-job
-        ledger = make_ledger(table_dir)
-        self._version = ledger.latest_version()
-        meta = ledger.table_meta()
-        self._cm = dict(meta.get("column_mapping") or {})
 
     def pushFilters(self, filters):
-        """Record the pushable conjuncts for manifest-stats file
-        skipping + bucket/partition pruning in partitions(). EVERY
-        filter is returned for Spark-side re-evaluation — pushdown
-        here only shrinks the scheduled file set (min/max skipping is
+        """Record the pushable conjuncts for log-stats file skipping
+        and partition pruning in partitions(). EVERY filter is
+        returned for Spark-side re-evaluation — pushdown here only
+        shrinks the scheduled file set (min/max skipping is
         conservative by construction), it never claims exactness."""
         for f in filters:
             op = _PUSHABLE.get(type(f))
@@ -151,102 +195,130 @@ class _SnapshotReader(DataSourceReader):
             self._where.append((f.attribute[0], op, v))
         return filters
 
+    def read(self, partition: _FilePartition):
+        return _read_file(partition, self._schema, self._phys)
+
+
+class _VersionStreamReader(DataSourceStreamReader):
+    """Micro-batch source whose offsets are log versions: {'version':
+    N} = 'versions <= N are consumed'. Planning is driver-side log
+    metadata; immutable files + deterministic planning make every
+    batch replayable, which is what Spark's offset checkpoint needs
+    for exactly-once. Subclasses give the initial offset, `_head()`
+    (the log's newest version) and `_window(lo, hi)` (the input
+    partitions of versions (lo, hi])."""
+
+    def __init__(self, schema: StructType, phys: dict, start: int,
+                 options) -> None:
+        self._schema = schema
+        self._phys = phys
+        self._start = int(start)
+        # maxVersionsPerTrigger: admission control — each micro-batch
+        # advances the offset by at most this many log versions, so a
+        # backlogged stream catches up in bounded bites instead of one
+        # giant batch (the log-version analogue of Delta's
+        # maxFilesPerTrigger)
+        self._max_versions = int(options.get("maxversionspertrigger")
+                                 or 0) or None
+        self._hwm = None  # the rate limiter's high-water mark
+
+    def _sync(self, *versions: int) -> None:
+        self._hwm = max(v for v in (self._hwm, *versions) if v is not None)
+
+    def initialOffset(self) -> dict:
+        return {"version": self._start}
+
+    def latestOffset(self) -> dict:
+        head = self._head()
+        if not self._max_versions:
+            return {"version": head}
+        # rate-limited catch-up: cap the ADVANCE, not the head. The
+        # high-water mark is re-synced from Spark's OWN checkpointed
+        # offsets (partitions()/commit()), so a restart resumes from
+        # the committed offset, never below it
+        cur = self._start if self._hwm is None else self._hwm
+        self._hwm = min(head, cur + self._max_versions)
+        return {"version": self._hwm}
+
+    def partitions(self, start: dict, end: dict):
+        lo, hi = int(start["version"]), int(end["version"])
+        # a restarted query first replans its last committed batch:
+        # that is where the rate limiter learns Spark's offset before
+        # its first latestOffset
+        self._sync(lo, hi)
+        return self._window(lo, hi) if hi > lo else []
+
+    def read(self, partition: _FilePartition):
+        return _read_file(partition, self._schema, self._phys)
+
+    def commit(self, end: dict) -> None:
+        # Spark's checkpoint owns progress; the log is immutable
+        self._sync(int(end["version"]))
+
+
+def _table_phys(ledger) -> dict:
+    return dict(ledger.table_meta().get("column_mapping") or {})
+
+
+class _SnapshotReader(_PlannedReader):
+    """Batch read = the pinned snapshot's manifests, pruned by the
+    pushed filters through the library reader's `_snapshot_plan`."""
+
+    def __init__(self, schema: StructType, table_dir: str) -> None:
+        from .checkpoint import make_ledger
+        # pin the snapshot VERSION at plan time (driver): the scan
+        # stays consistent even if writers commit mid-job
+        ledger = make_ledger(table_dir)
+        super().__init__(schema, _table_phys(ledger))
+        self._dir = table_dir
+        self._version = ledger.latest_version()
+
     def partitions(self):
-        import os
         from .checkpoint import _snapshot_plan
         paths, _meta, dv = _snapshot_plan(
             self._dir, self._version, self._where or None)
-        out = []
-        for p in paths:
-            d = os.path.basename(os.path.dirname(p))
-            out.append(_FilePartition(int(d.split("=", 1)[1]), p,
-                                      dv=tuple(dv.get(p) or ())))
-        return out
-
-    def read(self, partition: _FilePartition):
-        return _read_file_as_arrow(partition, self._schema, self._cm)
+        return [_FilePartition(
+            p, (("part", int(os.path.basename(os.path.dirname(p))
+                             .split("=", 1)[1])),),
+            dv=tuple(dv.get(p) or ())) for p in paths]
 
 
-class _ChangeStreamReader(DataSourceStreamReader):
-    """Micro-batch source: offset = {'version': N}. partitions(start,
-    end) plans the window's inserted files from the log (pure
-    metadata); immutable files + deterministic planning make every
-    batch replayable, which is what Spark's offset checkpoint needs
-    for exactly-once."""
+class _ChangeStreamReader(_VersionStreamReader):
+    """Each micro-batch = the files `table_changes` reports INSERTED in
+    the window (rewrites and restores are never fed)."""
 
     def __init__(self, schema: StructType, table_dir: str,
                  options=None) -> None:
-        self._schema = schema
-        self._dir = table_dir
+        from .checkpoint import make_ledger
         options = options or {}
-        # Delta-parity stream options:
-        # * startingVersion: first offset — attach a NEW consumer
-        #   without re-bootstrapping the whole table ('latest' = head
-        #   at stream start, i.e. only future commits);
-        # * maxVersionsPerTrigger: admission control — each micro-batch
-        #   advances the offset by at most this many log versions, so a
-        #   backlogged stream catches up in bounded bites instead of
-        #   one giant batch (the log-version analogue of Delta's
-        #   maxFilesPerTrigger).
+        ledger = make_ledger(table_dir)
+        # startingVersion: attach a NEW consumer without
+        # re-bootstrapping the whole table ('latest' = head at stream
+        # start, i.e. only future commits)
         sv = options.get("startingversion")
-        self._max_versions = int(options.get("maxversionspertrigger")
-                                 or 0) or None
-        from .checkpoint import make_ledger
-        _led = make_ledger(table_dir)
-        self._cm = dict(_led.table_meta().get("column_mapping") or {})
         if sv is None:
-            self._start = 0
+            start = 0
         elif str(sv).lower() == "latest":
-            self._start = int(_led.latest_version() or 0)
+            start = int(ledger.latest_version() or 0)
         else:
-            self._start = int(sv)
+            start = int(sv)
+        super().__init__(schema, _table_phys(ledger), start, options)
+        self._dir = table_dir
 
-    def _ledger(self):
+    def _head(self) -> int:
         from .checkpoint import make_ledger
-        return make_ledger(self._dir)
+        return int(make_ledger(self._dir).latest_version() or 0)
 
-    def initialOffset(self) -> dict:
-        return {"version": int(self._start)}
-
-    def latestOffset(self) -> dict:
-        head = int(self._ledger().latest_version() or 0)
-        if self._max_versions:
-            # rate-limited catch-up: cap the ADVANCE, not the head, so
-            # a backlogged stream drains in bounded, replayable bites.
-            # The high-water mark is re-synced from Spark's OWN
-            # checkpointed offsets (partitions()/commit() below), so a
-            # restart resumes from the committed offset, never below it
-            cur = getattr(self, "_hwm", int(self._start))
-            nxt = min(head, cur + int(self._max_versions))
-            self._hwm = nxt
-            return {"version": nxt}
-        return {"version": head}
-
-    def partitions(self, start: dict, end: dict):
-        import os
+    def _window(self, lo: int, hi: int) -> list:
         from .checkpoint import table_changes
-        lo, hi = int(start["version"]), int(end["version"])
-        # Spark hands us its checkpointed offset: sync the rate
-        # limiter's high-water mark so a restarted stream never plans
-        # below (or idles behind) what was already committed
-        self._hwm = max(getattr(self, "_hwm", 0), lo, hi)
-        if hi <= lo:
-            return []
         ch = table_changes(self._dir, lo, hi)
         data = os.path.join(self._dir, "data")
         return [
-            _FilePartition(int(p), os.path.join(data, f"part={int(p)}", fn),
+            _FilePartition(os.path.join(data, f"part={int(p)}", fn),
+                           (("part", int(p)),),
                            dv=tuple(fs[fn].get("dv") or ()))
             for p, fs in sorted(ch["inserts"].items())
             for fn in sorted(fs)]
-
-    def read(self, partition: _FilePartition):
-        return _read_file_as_arrow(partition, self._schema, self._cm)
-
-    def commit(self, end: dict) -> None:
-        # Spark's checkpoint owns progress; the log is immutable. Keep
-        # the rate limiter's mark in step with the committed offset.
-        self._hwm = max(getattr(self, "_hwm", 0), int(end["version"]))
 
 
 @dataclass
@@ -325,7 +397,6 @@ class _LedgerWriter(DataSourceArrowWriter):
 
     # -- executor side -------------------------------------------------
     def write(self, iterator):
-        import os
         import uuid
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -415,8 +486,6 @@ class _LedgerWriter(DataSourceArrowWriter):
         cons = dict(ledger.table_meta().get("constraints") or {})
         if not cons:
             return
-        import os
-
         from pyspark.sql import SparkSession
 
         from .constraints import ConstraintViolation, check_files
@@ -484,7 +553,6 @@ class _LedgerStreamWriter(_LedgerWriter, DataSourceStreamArrowWriter):
 
 
 def _unlink_staged(table_dir: str, messages) -> None:
-    import os
     for m in messages or []:
         for p, fn_, *_rest in (m.entries if m else []):
             try:

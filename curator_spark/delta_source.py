@@ -15,17 +15,18 @@ Batch read = the live add-set of the log's head snapshot (or
 `versionAsOf`), planned purely from the log. Streaming read = Delta's
 streaming-source semantics with log versions as offsets: each
 micro-batch plans the `add` files of versions (start, end] — cost ∝
-change — and immutable files + deterministic planning make every
-batch replayable, which is what Spark's offset checkpoint needs for
-exactly-once. Options mirror Delta's: `startingVersion` (int or
-'latest'), `maxVersionsPerTrigger` (bounded catch-up),
-`onChanges` = error|skip|include for rewrite versions
-(failOnDataLoss / ignoreChanges stances).
+change. Options mirror Delta's: `startingVersion` (int or 'latest'),
+`maxVersionsPerTrigger` (bounded catch-up), `onChanges` =
+error|skip|include for rewrite versions (failOnDataLoss /
+ignoreChanges stances).
 
-This is the STREAMING face of `export_delta.read_delta` /
-`delta_inserts` (one planning core, shared refusal rules: reader
-protocol > 2, live deletion vectors, non-name column mapping) — use
-the function API for driver-side polling with a custom durable
+This module is only the Delta PLAN PROVIDER: log replay, the
+readability refusals (reader protocol > 2, live deletion vectors,
+non-name column mapping) and the window planner all come from
+`export_delta` (`read_delta` / `delta_inserts` run the same code), and
+the scan itself — file reader, filter pushdown, version-offset policy
+— is the one core in `datasource.py` that `curator_table` runs too.
+Use the function API for driver-side polling with a custom durable
 cursor, this source when the consumer is a Structured Streaming
 pipeline that wants Spark's own checkpoint to own progress.
 """
@@ -34,229 +35,94 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
 
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceStreamReader,
-                                    EqualTo, GreaterThan,
-                                    GreaterThanOrEqual, InputPartition,
-                                    LessThan, LessThanOrEqual)
+                                    DataSourceStreamReader)
 from pyspark.sql.types import StructType
 
+from .datasource import _FilePartition, _PlannedReader, _VersionStreamReader
 from .export_delta import (_check_readable, _delta_add_admits,
-                           _replay_delta_log)
-
-# Spark Filter classes with 1:1 (col, op, literal) skipping semantics;
-# everything else stays Spark-side (returning filters unpushed is
-# always sound — pushdown only shrinks the scheduled file set)
-_PUSHABLE = {EqualTo: "=", GreaterThan: ">", GreaterThanOrEqual: ">=",
-             LessThan: "<", LessThanOrEqual: "<="}
+                           _delta_window_adds, _replay_delta_log)
 
 
-@dataclass
-class _DeltaAddPartition(InputPartition):
-    path: str                 # absolute parquet path
-    part_values: tuple = ()   # ((col, raw-string-or-None), ...)
+class _DeltaPlan:
+    """One replay of `root`'s log (at `version`, or the head), refused
+    unless readable → the logical schema, the logical→physical name
+    map (name-mode column mapping), the live adds and the input
+    partitions for any of the log's adds."""
 
+    def __init__(self, root: str, version: int | None = None) -> None:
+        state = _replay_delta_log(os.path.join(root, "_delta_log"),
+                                  upto=version)
+        if state["version"] is None:
+            raise ValueError(f"{root} has no _delta_log")
+        _check_readable(state)
+        fields = json.loads(state["schema_str"])["fields"]
+        self.root = root
+        self.version = state["version"]
+        self.part_cols = state["partition_columns"] or []
+        self.live = list(state["live"].values())
+        self.phys = {f["name"]: (f.get("metadata") or {}).get(
+            "delta.columnMapping.physicalName", f["name"])
+            for f in fields}
+        self.schema = StructType.fromJson(
+            {"type": "struct",
+             "fields": [dict(f, metadata={}) for f in fields]})
 
-def _logical_schema(state: dict) -> tuple[StructType, dict]:
-    """Delta schemaString → (logical StructType, logical→physical
-    name map under name-mode column mapping)."""
-    schema = json.loads(state["schema_str"])
-    phys = {f["name"]: (f.get("metadata") or {}).get(
-        "delta.columnMapping.physicalName", f["name"])
-        for f in schema["fields"]}
-    st = StructType.fromJson(
-        {"type": "struct",
-         "fields": [dict(f, metadata={}) for f in schema["fields"]]})
-    return st, phys
-
-
-def _coerce_partition_value(raw, dtype):
-    """Delta partitionValues are strings; materialize to the declared
-    type. None/'' is the NULL encoding."""
-    if raw in (None, ""):
-        return None
-    t = dtype.typeName()
-    if t in ("integer", "long", "short", "byte"):
-        return int(raw)
-    if t in ("double", "float"):
-        return float(raw)
-    if t == "boolean":
-        return str(raw).lower() == "true"
-    if t == "string":
-        return raw
-    raise NotImplementedError(
-        f"partition column type {t} not supported by delta_feed")
-
-
-def _read_add_as_arrow(partition: _DeltaAddPartition,
-                       schema: StructType, phys: dict):
-    """Executor-side: one Delta add file → arrow batches cast to the
-    logical schema, partition columns materialized from the add's
-    partitionValues (they are not in the file)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-    target = to_arrow_schema(schema)
-    pv = dict(partition.part_values)
-    table = pq.read_table(partition.path)
-    n = table.num_rows
-    arrays = []
-    for sf, field in zip(schema.fields, target):
-        p = phys.get(sf.name, sf.name)
-        if sf.name in pv:
-            val = _coerce_partition_value(pv[sf.name], sf.dataType)
-            arrays.append(pa.array([val] * n).cast(field.type)
-                          if val is not None
-                          else pa.nulls(n, type=field.type))
-        elif p in table.column_names:
-            arrays.append(table.column(p).cast(field.type))
-        else:  # pre-evolution file: later-added column reads null
-            arrays.append(pa.nulls(n, type=field.type))
-    yield from pa.Table.from_arrays(arrays, schema=target).to_batches()
-
-
-def _plan_adds(table_root: str, adds, part_cols) -> list:
-    return [
-        _DeltaAddPartition(
-            os.path.join(table_root, a["path"]),
+    def files(self, adds) -> list[_FilePartition]:
+        return [_FilePartition(
+            os.path.join(self.root, a["path"]),
             tuple((c, (a.get("partitionValues") or {}).get(c))
-                  for c in part_cols))
-        for a in adds]
+                  for c in self.part_cols)) for a in adds]
 
 
-class _DeltaSnapshotReader(DataSourceReader):
+class _DeltaSnapshotReader(_PlannedReader):
     def __init__(self, schema: StructType, table_root: str,
                  options=None) -> None:
-        self._schema = schema
-        self._root = table_root
         v = (options or {}).get("versionasof")
-        self._version = int(v) if v is not None else None
-        state = _replay_delta_log(
-            os.path.join(table_root, "_delta_log"), upto=self._version)
-        _check_readable(state)
-        self._state = {k: state[k] for k in
-                       ("schema_str", "partition_columns")}
-        self._adds = list(state["live"].values())
-        _st, self._phys = _logical_schema(state)
-        self._where: list[tuple] = []
-
-    def pushFilters(self, filters):
-        """Record pushable conjuncts for add-stats/partitionValues
-        file skipping in partitions(); every filter is returned for
-        Spark-side re-evaluation (skipping is conservative, never a
-        claim of exactness)."""
-        for f in filters:
-            op = _PUSHABLE.get(type(f))
-            if op is None or len(f.attribute) != 1:
-                continue
-            v = f.value
-            if isinstance(v, (list, tuple, dict, bytes)):
-                continue
-            self._where.append((f.attribute[0], op, v))
-        return filters
+        self._plan = _DeltaPlan(table_root,
+                                int(v) if v is not None else None)
+        super().__init__(schema, self._plan.phys)
 
     def partitions(self):
-        part_cols = self._state["partition_columns"] or []
-        adds = self._adds
-        if self._where:
-            adds = [a for a in adds
-                    if _delta_add_admits(a, self._where, part_cols)]
-        return _plan_adds(self._root, adds, part_cols)
-
-    def read(self, partition: _DeltaAddPartition):
-        return _read_add_as_arrow(partition, self._schema, self._phys)
+        plan = self._plan
+        return plan.files(
+            a for a in plan.live if not self._where
+            or _delta_add_admits(a, self._where, plan.part_cols))
 
 
-class _DeltaFeedStreamReader(DataSourceStreamReader):
-    """Micro-batch source over a Delta log: offset = {'version': N}
-    = 'versions <= N are consumed'. Starts at -1 (bootstrap includes
-    version 0) unless startingVersion says otherwise."""
+class _DeltaFeedStreamReader(_VersionStreamReader):
+    """Offsets start at -1 (bootstrap includes version 0) unless
+    startingVersion says otherwise."""
 
     def __init__(self, schema: StructType, table_root: str,
                  options=None) -> None:
-        self._schema = schema
-        self._root = table_root
         options = options or {}
         self._on_changes = str(options.get("onchanges", "error")).lower()
         if self._on_changes not in ("error", "skip", "include"):
             raise ValueError(f"bad onChanges {self._on_changes!r}")
-        self._max_versions = int(options.get("maxversionspertrigger")
-                                 or 0) or None
-        state = _replay_delta_log(os.path.join(table_root, "_delta_log"))
-        _check_readable(state)
-        self._part_cols = state["partition_columns"] or []
-        _st, self._phys = _logical_schema(state)
+        self._plan = _DeltaPlan(table_root)
+        # windows are planned from version JSON: the snapshot's add
+        # set must not ride along with every pickled read task
+        self._plan.live = []
         sv = options.get("startingversion")
         if sv is None:
-            self._start = -1
+            start = -1
         elif str(sv).lower() == "latest":
-            self._start = int(state["version"]
-                              if state["version"] is not None else -1)
+            start = self._plan.version
         else:
-            self._start = int(sv) - 1  # consume FROM startingVersion
+            start = int(sv) - 1  # consume FROM startingVersion
+        super().__init__(schema, self._plan.phys, start, options)
+        self._log_dir = os.path.join(table_root, "_delta_log")
 
     def _head(self) -> int:
-        log_dir = os.path.join(self._root, "_delta_log")
-        vs = [int(fn[:-5]) for fn in os.listdir(log_dir)
+        vs = [int(fn[:-5]) for fn in os.listdir(self._log_dir)
               if fn.endswith(".json") and fn[:-5].isdigit()]
         return max(vs, default=-1)
 
-    def initialOffset(self) -> dict:
-        return {"version": int(self._start)}
-
-    def latestOffset(self) -> dict:
-        head = self._head()
-        if self._max_versions:
-            cur = getattr(self, "_hwm", int(self._start))
-            nxt = min(head, cur + int(self._max_versions))
-            self._hwm = nxt
-            return {"version": nxt}
-        return {"version": head}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = int(start["version"]), int(end["version"])
-        self._hwm = max(getattr(self, "_hwm", -1), lo, hi)
-        if hi <= lo:
-            return []
-        log_dir = os.path.join(self._root, "_delta_log")
-        adds: list[dict] = []
-        for v in range(lo + 1, hi + 1):
-            fp = os.path.join(log_dir, f"{v:020d}.json")
-            if not os.path.exists(fp):
-                raise NotImplementedError(
-                    f"version {v} JSON expired from the log — the "
-                    "stream checkpoint is past retention; restart "
-                    "with a fresh checkpoint + startingVersion")
-            v_adds, v_removes = [], 0
-            with open(fp) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action:
-                        if action["add"].get("deletionVector"):
-                            raise NotImplementedError(
-                                "deletion vectors in the source")
-                        v_adds.append(action["add"])
-                    elif "remove" in action:
-                        v_removes += 1
-            if v_removes:
-                if self._on_changes == "error":
-                    raise ValueError(
-                        f"version {v} rewrites files (remove+add) — "
-                        "not an append; set onChanges=skip|include")
-                if self._on_changes == "skip":
-                    continue
-            adds.extend(v_adds)
-        return _plan_adds(self._root, adds, self._part_cols)
-
-    def read(self, partition: _DeltaAddPartition):
-        return _read_add_as_arrow(partition, self._schema, self._phys)
-
-    def commit(self, end: dict) -> None:
-        self._hwm = max(getattr(self, "_hwm", -1), int(end["version"]))
+    def _window(self, lo: int, hi: int) -> list:
+        return self._plan.files(_delta_window_adds(
+            self._log_dir, lo, hi, self._on_changes))
 
 
 class DeltaFeedDataSource(DataSource):
@@ -275,11 +141,7 @@ class DeltaFeedDataSource(DataSource):
         return p
 
     def schema(self) -> StructType:
-        state = _replay_delta_log(
-            os.path.join(self._path(), "_delta_log"))
-        if state["version"] is None:
-            raise ValueError(f"{self._path()} has no _delta_log")
-        return _logical_schema(state)[0]
+        return _DeltaPlan(self._path()).schema
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return _DeltaSnapshotReader(schema, self._path(), self.options)

@@ -164,13 +164,37 @@ def _read_checkpoint_parquet(path: str) -> list[dict]:
     return out
 
 
+def _checkpoint_files(names) -> dict[int, list[str]]:
+    """Log dir listing → {version: the parquet files of a complete
+    classic checkpoint at that version}: `<v>.checkpoint.parquet`, or
+    all n parts of a multi-part `<v>.checkpoint.<i>.<n>.parquet` (a
+    part set with any part missing is not a checkpoint yet — a writer
+    may still be producing it)."""
+    out: dict[int, list[str]] = {}
+    multi: dict[tuple[int, int], dict[int, str]] = {}
+    for fn in names:
+        bits = fn.split(".")
+        if not (bits[0].isdigit() and bits[1:2] == ["checkpoint"]
+                and bits[-1] == "parquet"):
+            continue
+        if len(bits) == 3:
+            out[int(bits[0])] = [fn]
+        elif len(bits) == 5 and bits[2].isdigit() and bits[3].isdigit():
+            multi.setdefault((int(bits[0]), int(bits[3])),
+                             {})[int(bits[2])] = fn
+    for (v, n), parts in sorted(multi.items()):
+        if v not in out and sorted(parts) == list(range(1, n + 1)):
+            out[v] = [parts[i] for i in range(1, n + 1)]
+    return out
+
+
 def _replay_delta_log(log_dir: str, upto: int | None = None) -> dict:
     """Replay a Delta `_delta_log` (any writer's) up to `upto` →
     {version, live: {path: add}, table_id, schema_str,
     partition_columns, configuration, protocol}. The same state
     machine every Delta reader runs before planning a scan: bootstrap
-    from the newest usable parquet checkpoint at or below `upto`
-    (`_last_checkpoint` names the head one), then fold the JSON
+    from the newest complete parquet checkpoint (single-file or
+    multi-part) at or below `upto`, then fold the JSON
     commits after it. A log whose JSON tail starts after the requested
     point with no usable checkpoint raises rather than silently
     reading a partial table."""
@@ -182,16 +206,15 @@ def _replay_delta_log(log_dir: str, upto: int | None = None) -> dict:
     names = os.listdir(log_dir)
     versions = sorted(fn for fn in names
                       if fn.endswith(".json") and fn[:-5].isdigit())
-    ckpts = sorted(int(fn.split(".")[0]) for fn in names
-                   if fn.endswith(".checkpoint.parquet")
-                   and fn.split(".")[0].isdigit())
+    ckpts = _checkpoint_files(names)
     start_after = None
-    usable = [c for c in ckpts if upto is None or c <= upto]
+    usable = sorted(c for c in ckpts if upto is None or c <= upto)
     if usable:
         c = usable[-1]
-        for action in _read_checkpoint_parquet(
-                os.path.join(log_dir, f"{c:020d}.checkpoint.parquet")):
-            _apply_action(state, action)
+        for fn in ckpts[c]:
+            for action in _read_checkpoint_parquet(
+                    os.path.join(log_dir, fn)):
+                _apply_action(state, action)
         state["version"] = c
         start_after = c
     if versions:
@@ -661,6 +684,43 @@ def _scan_adds(spark, table_root: str, state: dict, adds: list[dict]):
     return out
 
 
+def _delta_window_adds(log_dir: str, lo: int, hi: int,
+                       on_changes: str) -> list[dict]:
+    """The add actions that versions (lo, hi] of a Delta log feed —
+    the one window planner behind `delta_inserts` and the `delta_feed`
+    stream. A version carrying `remove` actions is a rewrite:
+    `on_changes` "error" refuses it, "skip" feeds none of its adds,
+    "include" feeds them all. Refused too: a version whose JSON has
+    expired (the consumer is past retention) and a fed add carrying a
+    deletion vector (its masked rows would come back)."""
+    adds: list[dict] = []
+    for v in range(lo + 1, hi + 1):
+        fp = os.path.join(log_dir, f"{v:020d}.json")
+        if not os.path.exists(fp):
+            raise NotImplementedError(
+                f"version {v} JSON expired from the log — the consumer "
+                "(feed cursor or stream checkpoint) is past retention; "
+                "re-bootstrap it (a fresh stream checkpoint + "
+                "startingVersion)")
+        with open(fp) as f:
+            actions = [json.loads(line) for line in f if line.strip()]
+        if any("remove" in a for a in actions):
+            if on_changes == "error":
+                raise ValueError(
+                    f"version {v} rewrites files (remove+add) — not an "
+                    "append; choose on_changes (onChanges) 'skip' or "
+                    "'include'")
+            if on_changes == "skip":
+                continue
+        v_adds = [a["add"] for a in actions if "add" in a]
+        if any(a.get("deletionVector") for a in v_adds):
+            raise NotImplementedError(
+                f"version {v} adds files with deletion vectors; the "
+                "insert feed cannot mask them")
+        adds.extend(v_adds)
+    return adds
+
+
 def delta_inserts(spark, table_root: str, since: int,
                   until: int | None = None,
                   on_changes: str = "error"):
@@ -686,31 +746,7 @@ def delta_inserts(spark, table_root: str, since: int,
         raise ValueError(f"{table_root} has no _delta_log")
     _check_readable(state)
     head = state["version"]
-    adds: list[dict] = []
-    for v in range(since + 1, head + 1):
-        fp = os.path.join(log_dir, f"{v:020d}.json")
-        if not os.path.exists(fp):
-            raise NotImplementedError(
-                f"version {v} JSON expired from the log — the feed "
-                "cursor is past retention; re-bootstrap the consumer")
-        v_adds, v_removes = [], 0
-        with open(fp) as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    v_adds.append(action["add"])
-                elif "remove" in action:
-                    v_removes += 1
-        if v_removes:
-            if on_changes == "error":
-                raise ValueError(
-                    f"version {v} rewrites files (remove+add) — not an "
-                    "append; pass on_changes='skip' or 'include'")
-            if on_changes == "skip":
-                continue
-        adds.extend(v_adds)
+    adds = _delta_window_adds(log_dir, since, head, on_changes)
     return _scan_adds(spark, table_root, state, adds), head
 
 

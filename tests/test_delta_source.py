@@ -183,3 +183,48 @@ def test_foreign_log_with_nonint_partition(spark, tmp_path):
     df = spark.read.format("delta_feed").load(root)
     rows = sorted((r["id"], r["region"]) for r in df.collect())
     assert rows == [(0, "eu"), (1, "eu"), (10, "us"), (11, "us")]
+
+
+def test_foreign_multi_row_group_file_matches_read_delta(spark, tmp_path):
+    """A foreign file of several row groups is streamed in batches by
+    the shared reader and reads the same rows as read_delta."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from curator_spark.datasource import _BATCH_ROWS
+
+    root = str(tmp_path / "foreign_rg")
+    os.makedirs(os.path.join(root, "_delta_log"))
+    n = 2 * _BATCH_ROWS + 5000
+    rel = "region=eu/rg.parquet"
+    os.makedirs(os.path.join(root, "region=eu"))
+    pq.write_table(pa.table({"id": pa.array(range(n), type=pa.int64())}),
+                   os.path.join(root, rel), row_group_size=6000)
+    assert pq.ParquetFile(os.path.join(root, rel)) \
+        .metadata.num_row_groups > 1
+    schema = {"type": "struct", "fields": [
+        {"name": "id", "type": "long", "nullable": True, "metadata": {}},
+        {"name": "region", "type": "string", "nullable": True,
+         "metadata": {}}]}
+    actions = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {"id": "fk-rg", "format":
+                      {"provider": "parquet", "options": {}},
+                      "schemaString": json.dumps(schema),
+                      "partitionColumns": ["region"],
+                      "configuration": {}, "createdTime": 0}},
+        {"add": {"path": rel, "partitionValues": {"region": "eu"},
+                 "size": os.path.getsize(os.path.join(root, rel)),
+                 "modificationTime": 0, "dataChange": True}}]
+    with open(os.path.join(root, "_delta_log", f"{0:020d}.json"),
+              "w") as f:
+        f.write("\n".join(json.dumps(a) for a in actions))
+
+    spark.dataSource.register(DeltaFeedDataSource)
+    got = spark.read.format("delta_feed").load(root)
+    want = read_delta(spark, root)
+    assert [(f.name, f.dataType) for f in got.schema] == \
+        [(f.name, f.dataType) for f in want.schema]
+    rows = sorted((r["id"], r["region"]) for r in got.collect())
+    assert rows == sorted((r["id"], r["region"]) for r in want.collect())
+    assert rows == [(i, "eu") for i in range(n)]

@@ -403,6 +403,41 @@ def test_delta_checkpoint_bootstrap_and_truncated_tail(spark, tmp_path):
         read_delta(spark, root)
 
 
+def test_multi_part_checkpoint_bootstrap(spark, tmp_path):
+    """A foreign classic multi-part checkpoint
+    (`<v>.checkpoint.<i>.<n>.parquet`) bootstraps the replay once all n
+    parts exist, folding like a single-file one: after the JSON prefix
+    expires, the read equals the full replay. With a part missing it
+    is not a checkpoint, and the truncated tail refuses."""
+    import pyarrow.parquet as pq
+
+    from curator_spark.export_delta import (
+        _replay_delta_log, _write_delta_checkpoint, read_delta)
+
+    root = str(tmp_path / "fk")
+    _foreign_log(root, 10)
+    log_dir = os.path.join(root, "_delta_log")
+    want = sorted(tuple(r) for r in read_delta(spark, root).collect())
+    _write_delta_checkpoint(log_dir, 7, _replay_delta_log(log_dir, upto=7))
+    single = os.path.join(log_dir, f"{7:020d}.checkpoint.parquet")
+    tbl = pq.read_table(single)
+    half = tbl.num_rows // 2
+    parts = [os.path.join(log_dir,
+                          f"{7:020d}.checkpoint.{i:010d}.{2:010d}.parquet")
+             for i in (1, 2)]
+    pq.write_table(tbl.slice(0, half), parts[0])
+    pq.write_table(tbl.slice(half), parts[1])
+    os.remove(single)
+    os.remove(os.path.join(log_dir, "_last_checkpoint"))
+    for v in range(8):  # retention-expire the JSON prefix
+        os.remove(os.path.join(log_dir, f"{v:020d}.json"))
+    assert sorted(tuple(r) for r in read_delta(spark, root).collect()) \
+        == want
+    os.remove(parts[1])
+    with pytest.raises(NotImplementedError, match="contiguous"):
+        read_delta(spark, root)
+
+
 def test_export_writes_checkpoint_at_interval(spark, table, monkeypatch):
     from curator_spark import export_delta as ed
 
@@ -753,3 +788,72 @@ def test_cli_consume_delta_replayed_window_not_duplicated(spark, table,
     got = spark.read.parquet(f"{cdir}/window-*")
     assert got.count() == read_delta(spark, dest).count()
     assert got.count() == got.dropDuplicates().count()
+
+
+def test_delta_inserts_refuses_dv_add_in_window(spark, tmp_path):
+    """A rewrite version adds a file with a deletion vector, and a later
+    version removes it again, so the live snapshot carries no DV. The
+    insert feed with on_changes="include" would feed that add without
+    its mask, so the shared window planner refuses it — for
+    delta_inserts and the delta_feed stream alike."""
+    import pandas as pd
+
+    from curator_spark.delta_source import _DeltaFeedStreamReader
+    from curator_spark.export_delta import delta_inserts
+    from curator_spark.fixtures import to_spark_parquet
+
+    root = str(tmp_path / "fk_dv")
+    _foreign_log(root, 1)  # v0 adds f-000.parquet
+    f0 = {"path": "f-000.parquet", "partitionValues": {"part": "0"},
+          "size": os.path.getsize(os.path.join(root, "f-000.parquet")),
+          "modificationTime": 0, "dataChange": True}
+    to_spark_parquet(pd.DataFrame({"id": [5]}),
+                     os.path.join(root, "f-new.parquet"))
+    versions = [
+        [{"remove": {"path": f0["path"], "dataChange": True}},
+         {"add": dict(f0, deletionVector={
+             "storageType": "i", "pathOrInlineDv": "wi5b=0000100",
+             "sizeInBytes": 34, "cardinality": 1})}],
+        [{"remove": {"path": f0["path"], "dataChange": True}},
+         {"add": dict(f0, path="f-new.parquet")}]]
+    for v, actions in enumerate(versions, start=1):
+        with open(os.path.join(root, "_delta_log", f"{v:020d}.json"),
+                  "w") as f:
+            f.write("\n".join(json.dumps(a) for a in actions))
+    with pytest.raises(NotImplementedError, match="deletion vector"):
+        delta_inserts(spark, root, 0, on_changes="include")
+    reader = _DeltaFeedStreamReader(None, root, {"onchanges": "include"})
+    with pytest.raises(NotImplementedError, match="deletion vector"):
+        reader.partitions({"version": 0}, {"version": 2})
+    # skipping the rewrites feeds nothing, so nothing needs a mask
+    df, head = delta_inserts(spark, root, 0, on_changes="skip")
+    assert head == 2 and df.count() == 0
+
+
+def test_vacuum_keeps_files_an_inplace_export_references(spark, table):
+    """export in place, then compact, then vacuum: the commit log no
+    longer references the pre-compaction files, but the Delta log
+    still does — vacuum keeps them, and read_delta still returns the
+    pre-compaction rows."""
+    from curator_spark.checkpoint import vacuum
+    from curator_spark.export_delta import read_delta
+
+    out = table["out"]
+    root = export_delta_log(out)["table_root"]
+
+    def rows(df):
+        return sorted((r["conv_id"], r["turn_idx"], r["part"])
+                      for r in df.select("conv_id", "turn_idx",
+                                         "part").collect())
+
+    want = rows(read_delta(spark, root))
+    assert compact_partition(spark, out, 0, sort_by=["conv_id"])[
+        "compacted"]
+    vacuum(out, min_age_s=0)
+    for a in delta_live_files(root):
+        assert os.path.exists(a["abs_path"]), a["path"]
+    assert rows(read_delta(spark, root)) == want
+    # a re-export releases them: the next vacuum reclaims the old files
+    export_delta_log(out)
+    assert vacuum(out, min_age_s=0) > 0
+    assert rows(read_delta(spark, root)) == want
