@@ -50,7 +50,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpoint import make_ledger
+from .checkpoint import _file_paths, _scan_committed, make_ledger
 from .feed import _commit_cursor, consumer_position
 
 CHANGE_COL = "_change_type"
@@ -60,7 +60,7 @@ def _changed_file_sets(ledger, since: int, until: int
                        ) -> tuple[dict, dict, list[int], dict, dict]:
     """Pure-metadata planning: ({part: {file: meta}} removed,
     {part: {file: meta}} added, [parts skipped as compaction-only],
-    before-side dv {path-key: rows}, after-side dv). Files referenced
+    before-side dv {part: {file: rows}}, after-side dv). Files referenced
     by both snapshots WITH THE SAME deletion vector are dropped from
     both sides — immutable files + identical masks mean identical live
     content, so their rows cancel in the multiset diff without any
@@ -92,8 +92,8 @@ def _changed_file_sets(ledger, since: int, until: int
     removed: dict[int, dict] = {}
     added: dict[int, dict] = {}
     skipped: list[int] = []
-    dv_before: dict[tuple[int, str], list] = {}
-    dv_after: dict[tuple[int, str], list] = {}
+    dv_before: dict[int, dict[str, list]] = {}
+    dv_after: dict[int, dict[str, list]] = {}
     for p in sorted(set(before) | set(after)):
         bf = dict(((before.get(p) or {}).get("files")) or {})
         af = dict(((after.get(p) or {}).get("files")) or {})
@@ -110,23 +110,13 @@ def _changed_file_sets(ledger, since: int, until: int
             continue
         rm = {f: m for f, m in bf.items() if f not in same}
         ad = {f: m for f, m in af.items() if f not in same}
-        for f in rm:
-            if bdv.get(f):
-                dv_before[(p, f)] = [int(r) for r in bdv[f]]
-        for f in ad:
-            if adv.get(f):
-                dv_after[(p, f)] = [int(r) for r in adv[f]]
+        dv_before[p] = {f: bdv[f] for f in rm if bdv.get(f)}
+        dv_after[p] = {f: adv[f] for f in ad if adv.get(f)}
         if rm:
             removed[p] = rm
         if ad:
             added[p] = ad
     return removed, added, skipped, dv_before, dv_after
-
-
-def _side_paths(out_dir: str, sides: dict[int, dict]) -> list[str]:
-    data_dir = os.path.join(out_dir, "data")
-    return [os.path.join(data_dir, f"part={int(p)}", fn)
-            for p, fs in sorted(sides.items()) for fn in sorted(fs)]
 
 
 def row_changes(spark: SparkSession, out_dir: str, since_version: int,
@@ -142,7 +132,6 @@ def row_changes(spark: SparkSession, out_dir: str, since_version: int,
     columns as null on both sides and still cancel)."""
     from pyspark.sql.types import StructType
 
-    from . import schema as _schema
     ledger = make_ledger(out_dir)
     until = until_version if until_version is not None \
         else (ledger.latest_version() or 0)
@@ -152,53 +141,36 @@ def row_changes(spark: SparkSession, out_dir: str, since_version: int,
     ledger._versions(upto=since_version)
     removed, added, _, dv_b, dv_a = _changed_file_sets(
         ledger, int(since_version), int(until))
-    before_paths = _side_paths(out_dir, removed)
-    after_paths = _side_paths(out_dir, added)
-
-    def _dv_paths(dv_side: dict) -> dict:
-        return {os.path.join(out_dir, "data", f"part={int(p)}", fn): rows
-                for (p, fn), rows in dv_side.items()}
-    missing = [p for p in before_paths + after_paths
-               if not os.path.exists(p)]
+    missing = [p for p in _file_paths(out_dir, removed)
+               + _file_paths(out_dir, added) if not os.path.exists(p)]
     if missing:
         raise FileNotFoundError(
             f"row-level changes since v{since_version} reference "
             f"{len(missing)} file(s) already reclaimed by vacuum "
             f"(e.g. {missing[0]}); consume within the retention window")
+    # both sides scan with the schema and column mapping AS OF `until`,
+    # so they stay shape-identical; each reads minus ITS OWN snapshot's
+    # deletion vectors, so a file whose mask grew contributes exactly
+    # the newly-masked rows as deletes through the multiset diff
     meta = ledger.table_meta(version=until)
-    declared = StructType.fromJson(meta["schema"]) \
-        if meta.get("schema") else None
-    data_dir = os.path.join(out_dir, "data")
-
-    def _read(paths: list[str], schema, dv=None) -> DataFrame:
-        from .checkpoint import _apply_dv, physical_struct, to_logical
-        if not paths:
-            return spark.createDataFrame([], schema or _schema.OUTPUT_SCHEMA)
-        # scan physical (what files hold), surface logical — both sides
-        # use the mapping AS OF `until`, so they stay shape-identical
-        reader = spark.read.schema(physical_struct(meta)) \
-            if schema is not None else spark.read
-        return to_logical(
-            _apply_dv(spark,
-                      reader.option("basePath", data_dir).parquet(*paths),
-                      dv or {}),
-            meta)
-
-    if declared is None and (before_paths or after_paths):
-        # no declared schema (hand-built table): infer ONE schema from
-        # whichever side has files so exceptAll sees identical shapes
-        declared = _read(after_paths or before_paths, None).schema
-    # each side reads minus ITS OWN snapshot's deletion vectors, so a
-    # file whose mask grew contributes exactly the newly-masked rows
-    # as deletes through the multiset diff
-    after_df = _read(after_paths, declared, _dv_paths(dv_a))
-    before_df = _read(before_paths, declared, _dv_paths(dv_b))
+    after_df = _scan_committed(spark, out_dir, meta, added, dv_a)
+    before_df = _scan_committed(spark, out_dir, meta, removed, dv_b)
+    if meta.get("schema"):
+        declared = StructType.fromJson(meta["schema"])
+    else:
+        # no declared schema (hand-built table): an empty side takes
+        # the shape inferred from the other, so exceptAll lines up
+        declared = (after_df if added else before_df).schema
+        if not added:
+            after_df = spark.createDataFrame([], declared)
+        elif not removed:
+            before_df = spark.createDataFrame([], declared)
     # exceptAll is POSITIONAL and the parquet scan appends partition
     # columns last regardless of the declared order — canonicalize both
     # sides to the declared column order (a silent misalignment between
     # same-typed columns would mis-diff, far worse than the analyzer
     # error a type clash raises)
-    cols = [f.name for f in (declared or after_df.schema).fields]
+    cols = [f.name for f in declared.fields]
     after_df = after_df.select(*cols)
     before_df = before_df.select(*cols)
     return (after_df.exceptAll(before_df)

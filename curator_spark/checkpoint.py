@@ -61,7 +61,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import rules, schema
-from .pipeline import run_pipeline_df, run_pipeline_staged
+from .pipeline import run_pipeline_staged
 
 WRITE_SALTS = 8  # max output files per `part` from one run
 
@@ -1676,11 +1676,60 @@ def _list_input_parts(input_path: str) -> list[int] | None:
     return sorted(parts) or None
 
 
+def _scored_scratch(out_dir: str, run_id: str, salt: str
+                    ) -> tuple[str, str]:
+    """Create one invocation's scratch root `_scored-<run>-<shard>` (the
+    shard hashes `salt` with a per-call nonce; OWNER records this
+    process so `_gc_stale_scratch` leaves the root alone while it
+    lives), after sweeping the roots of dead invocations. Returns
+    (root, shard)."""
+    import uuid
+    _gc_stale_scratch(out_dir)
+    shard = hashlib.md5(f"{salt}|{uuid.uuid4().hex}".encode()) \
+        .hexdigest()[:8]
+    root = os.path.join(out_dir, f"_scored-{run_id}-{shard}")
+    os.makedirs(root, exist_ok=True)
+    with open(os.path.join(root, "OWNER"), "w") as f:
+        f.write(str(os.getpid()))
+    return root, shard
+
+
+def _stage_scored(spark: SparkSession, ledger, result: DataFrame,
+                  stage_out: str, n_out: int) -> tuple[dict, list]:
+    """Write scored rows to `stage_out` partitioned by `part` and count
+    them per part. Returns (table_meta, counter rows {part, n_in,
+    n_kept, n_scrubbed, n_errors, n_tokens}).
+
+    The salted repartition on (part, turn_idx mod WRITE_SALTS) into
+    `n_out` tasks lands each part in at most WRITE_SALTS files: without
+    it every upstream task can hold rows of every part, producing
+    n_tasks × n_parts tiny files, and no single task serializes a huge
+    part. On a mapped table (ALTER history) the schema is recorded
+    FIRST, so new logical columns get physical names minted, and the
+    files are written with physical names."""
+    tmeta = ledger.table_meta()
+    if tmeta.get("column_mapping"):
+        record_table_schema(ledger, result.schema)
+        tmeta = ledger.table_meta()
+    (to_physical(result.repartition(n_out, F.col("part"),
+                                    F.pmod(F.col("turn_idx"),
+                                           F.lit(WRITE_SALTS))), tmeta)
+     .write.mode("overwrite").partitionBy("part").parquet(stage_out))
+    mrows = to_logical(spark.read.parquet(stage_out), tmeta) \
+        .groupBy("part").agg(
+            F.count(F.lit(1)).alias("n_in"),
+            F.sum(F.col("keep").cast("long")).alias("n_kept"),
+            F.sum((F.col("scrubbed_text") != F.col("text")).cast("long"))
+            .alias("n_scrubbed"),
+            F.sum((~F.col("role_valid")).cast("long")).alias("n_errors"),
+            F.sum("n_tokens").alias("n_tokens")).collect()
+    return tmeta, mrows
+
+
 def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
                      params: dict | None = None,
                      only_parts: list[int] | None = None,
                      broadcast_conv_aggs: bool | None = None,
-                     staged: bool = True,
                      strict: bool = False,
                      ledger_backend: str = "commitlog",
                      bucket: dict | None = None) -> dict:
@@ -1775,7 +1824,7 @@ def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
     try:
         return _run_checkpointed_grouped(
             spark, input_path, out_dir, params, only_parts,
-            broadcast_conv_aggs, staged, strict, ledger, run_id, t0)
+            broadcast_conv_aggs, strict, ledger, run_id, t0)
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description",
                      "spark.job.interruptOnCancel"):
@@ -1783,8 +1832,8 @@ def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
 
 
 def _run_checkpointed_grouped(spark, input_path, out_dir, params,
-                              only_parts, broadcast_conv_aggs, staged,
-                              strict, ledger, run_id, t0) -> dict:
+                              only_parts, broadcast_conv_aggs, strict,
+                              ledger, run_id, t0) -> dict:
 
     # Resume trusts no marker blindly: each committed partition's footer
     # manifest must reconcile with its ledger entry, else its marker is
@@ -1854,74 +1903,24 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
         # the `part` bucket column reaches the parquet scan (PushedFilters)
         # so committed partitions are never read, let alone recomputed.
         pending = transcripts.filter(F.col("part").isin([int(p) for p in todo]))
-        # Invocation-scoped scratch root: run id + todo set + a per-call
-        # nonce, so concurrent shards of one run — even two launched
-        # with the SAME only_parts from the same process — never share
-        # staging paths.
-        import uuid
-        _gc_stale_scratch(out_dir)  # sweep debris of dead invocations
-        shard = hashlib.md5(
-            f"{','.join(map(str, todo))}|{uuid.uuid4().hex}".encode()
-        ).hexdigest()[:8]
-        scratch_root = os.path.join(out_dir, f"_scored-{run_id}-{shard}")
-        os.makedirs(scratch_root, exist_ok=True)
-        with open(os.path.join(scratch_root, "OWNER"), "w") as f:
-            f.write(str(os.getpid()))
+        # Invocation-scoped scratch root keyed by the todo set plus a
+        # per-call nonce, so concurrent shards of one run — even two
+        # launched with the SAME only_parts from the same process —
+        # never share staging paths.
+        scratch_root, shard = _scored_scratch(
+            out_dir, run_id, ",".join(map(str, todo)))
         stage_out = os.path.join(scratch_root, "out")
         keep_scratch = False
         try:
-            if staged:
-                # production shape: durably materialize the scored stage
-                # once (the expensive Python pass), feed the aggregation and
-                # the final join from column-pruned re-scans — ~2× the
-                # throughput of the in-memory persist shape at 32 cores.
-                result = run_pipeline_staged(
-                    spark, pending, os.path.join(scratch_root, "scored"),
-                    broadcast_conv_aggs=broadcast_conv_aggs)
-            else:
-                result = run_pipeline_df(pending,
-                                         broadcast_conv_aggs=broadcast_conv_aggs)
-
-            # Stage THIS shard's output under its own scratch root (no two
-            # concurrent jobs ever share a Hadoop committer staging dir),
-            # then move its files into data/ under shard-unique names and
-            # commit each partition's manifest (publish below).
-            #
-            # Salted repartition before the partitioned write: without it,
-            # every upstream task can hold rows of every part, producing
-            # n_tasks × n_parts tiny files (10^7 at cluster scale). Hashing
-            # on (part, salt) lands each part in ≤ WRITE_SALTS partitions —
-            # bounded file count AND no single-task serialization of a huge
-            # part.
-            n_out = max(len(todo) * WRITE_SALTS, 8)
-            tmeta = ledger.table_meta()
-            if tmeta.get("column_mapping"):
-                # mapped table (ALTER history): record the schema FIRST
-                # so any new logical columns get physical names minted,
-                # then land physically-named files — idempotent with the
-                # publish-time record below
-                record_table_schema(ledger, result.schema)
-                tmeta = ledger.table_meta()
-            (to_physical(
-                result.repartition(n_out, F.col("part"),
-                                   F.pmod(F.col("turn_idx"),
-                                          F.lit(WRITE_SALTS))),
-                tmeta)
-             .write.mode("overwrite").partitionBy("part")
-             .parquet(stage_out))
-
-            # Per-part metrics from the staged output (column-pruned scan).
-            mrows = (
-                to_logical(spark.read.parquet(stage_out),
-                           tmeta).groupBy("part").agg(
-                    F.count(F.lit(1)).alias("n_in"),
-                    F.sum(F.col("keep").cast("long")).alias("n_kept"),
-                    F.sum((F.col("scrubbed_text") != F.col("text")).cast("long"))
-                    .alias("n_scrubbed"),
-                    F.sum((~F.col("role_valid")).cast("long")).alias("n_errors"),
-                    F.sum("n_tokens").alias("n_tokens"),
-                ).collect()
-            )
+            # durably materialize the scored stage once (the expensive
+            # Python pass), feed the aggregation and the final join from
+            # column-pruned re-scans — ~2× the throughput of the
+            # in-memory persist shape at 32 cores.
+            result = run_pipeline_staged(
+                spark, pending, os.path.join(scratch_root, "scored"),
+                broadcast_conv_aggs=broadcast_conv_aggs)
+            tmeta, mrows = _stage_scored(spark, ledger, result, stage_out,
+                                         max(len(todo) * WRITE_SALTS, 8))
 
             # Fail-all policy: raise BEFORE metrics append and marker
             # commit, so a strict failure leaves no trace to double-count
@@ -1942,54 +1941,26 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
             # (a partition without a commit recomputes on rerun; scratch
             # is preserved once publish begins so new rows are never the
             # casualty of a failed move). Each staged file lands under
-            # its final partition dir with a shard-unique name — one put
-            # per NEW file, never a rename/copy of existing data (the
+            # its final partition dir with a unique name — one put per
+            # NEW file, never a rename/copy of existing data (the
             # object-store-safe shape) — and the commit's manifest
             # defines the partition. A crash between file placement and
             # commit leaves only invisible orphans (read_committed
             # ignores them; vacuum reclaims them).
-            import pyarrow.parquet as pq
-            data_dir = os.path.join(out_dir, "data")
-            os.makedirs(data_dir, exist_ok=True)
             keep_scratch = True  # publish started: scratch holds new data
             record_table_schema(ledger, result.schema)
-            shard_files: dict[int, dict] = {}
-            shard_stats: dict[int, dict] = {}
-            for p in todo:
-                src = os.path.join(stage_out, f"part={int(p)}")
-                if not os.path.isdir(src):
-                    continue  # partition had zero rows this run
-                dst = os.path.join(data_dir, f"part={int(p)}")
-                os.makedirs(dst, exist_ok=True)
-                man: dict = {}
-                stats: dict = {}
-                for fn in sorted(os.listdir(src)):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    newname = f"{shard}-{fn}"
-                    fsrc = os.path.join(src, fn)
-                    man[newname] = {
-                        "n_rows": pq.ParquetFile(fsrc).metadata.num_rows,
-                        "n_bytes": os.path.getsize(fsrc)}
-                    stats[newname] = file_column_stats(
-                        fsrc, stats_columns(tmeta))
-                    os.replace(fsrc, os.path.join(dst, newname))
-                shard_files[int(p)] = man
-                shard_stats[int(p)] = stats
+            landed = _land_staged(out_dir, stage_out, tmeta, "run")
 
             wall_ms = int((time.monotonic() - t0) * 1000)
             _append_metrics(out_dir, run_id, shard, mrows, wall_ms)
 
-            n_rows = {int(r.part): int(r.n_in) for r in mrows}
             # A todo partition that produced ZERO output rows still gets
             # a commit (n_rows=0, empty manifest) — without one it would
             # re-enter todo on every rerun and the whole-run marker
             # could never be written
-            for p in [int(r.part) for r in mrows] \
-                    + [int(p) for p in todo if int(p) not in n_rows]:
-                ledger.commit_part(_part_marker(
-                    run_id, p, n_rows.get(p, 0), shard_files.get(p, {}),
-                    shard_stats.get(p)))
+            for p in todo:
+                man, stats, n = landed.get(int(p), ({}, {}, 0))
+                ledger.commit_part(_part_marker(run_id, p, n, man, stats))
             keep_scratch = False  # fully published + committed
         finally:
             # scratch is removed on full success and on pre-publish
@@ -2045,14 +2016,14 @@ def snapshot_files(out_dir: str,
     the table, and the decision is made from the log alone — zero data
     I/O, zero Spark jobs. Files without recorded stats are always kept
     (skipping is sound, never speculative)."""
-    return _snapshot_plan(out_dir, version, where)[0]
+    return _file_paths(out_dir, _snapshot_plan(out_dir, version, where)[0])
 
 
 def _snapshot_plan(out_dir: str,
                    version: int | None = None,
-                   where=None) -> tuple[list[str], dict, dict]:
-    """(surviving file paths, table_meta, deletion vectors keyed by
-    path) in one log replay — the shared planning core of
+                   where=None) -> tuple[dict, dict, dict]:
+    """({part: [surviving file]}, table_meta, {part: {file: deletion
+    vector}}) in one log replay — the shared planning core of
     snapshot_files and read_committed. A scan of any surviving file
     that carries a dv MUST mask those row positions out (the protocol
     gate makes builds that can't refuse the table wholesale)."""
@@ -2090,23 +2061,26 @@ def _snapshot_plan(out_dir: str,
               and bucket.get("fn") in BUCKET_FNS and bucket.get("n_parts")):
             _restrict([BUCKET_FNS[bucket["fn"]](v, bucket["n_parts"])])
 
-    data_dir = os.path.join(out_dir, "data")
-    paths = []
-    dv_by_path: dict[str, list[int]] = {}
+    files: dict[int, list[str]] = {}
+    dv: dict[int, dict] = {}
     for part, marker in sorted(committed.items()):
         if keep_parts is not None and int(part) not in keep_parts:
             continue
-        files = (marker or {}).get("files") or {}
         stats = (marker or {}).get("stats") or {}
-        dv = (marker or {}).get("dv") or {}
-        for fn in sorted(files):
-            if all(_file_may_match(stats.get(fn), c, op, v)
-                   for c, op, v in conj):
-                p = os.path.join(data_dir, f"part={int(part)}", fn)
-                paths.append(p)
-                if dv.get(fn):
-                    dv_by_path[p] = [int(r) for r in dv[fn]]
-    return paths, meta, dv_by_path
+        keep = [fn for fn in sorted((marker or {}).get("files") or {})
+                if all(_file_may_match(stats.get(fn), c, op, v)
+                       for c, op, v in conj)]
+        if keep:
+            files[int(part)] = keep
+            dv[int(part)] = (marker or {}).get("dv") or {}
+    return files, meta, dv
+
+
+def _file_paths(out_dir: str, files: dict) -> list[str]:
+    """The data paths of {part: [file]}, in (part, file) order."""
+    data_dir = os.path.join(out_dir, "data")
+    return [os.path.join(data_dir, f"part={int(p)}", fn)
+            for p, fns in sorted(files.items()) for fn in sorted(fns)]
 
 
 def _dv_suffix(path: str) -> str:
@@ -2152,6 +2126,160 @@ def _apply_dv(spark: SparkSession, df: DataFrame,
             .drop("_dv_suffix", "_dv_row"))
 
 
+# -- the copy-on-write core --------------------------------------------------
+# Every commit-log writer takes the same steps (Delta's copy-on-write
+# with optimistic concurrency): read committed files through the one
+# scan, stage a Spark write, land the staged files under unique names,
+# commit one log version, then check the commit's swaps applied.
+
+def _scan_committed(spark: SparkSession, out_dir: str, meta: dict,
+                    files: dict, dv: dict | None = None,
+                    path_col: str | None = None) -> DataFrame:
+    """The one read of committed data files: `files` {part: [file]}
+    minus the deletion vectors `dv` {part: {file: rows}}, under
+    LOGICAL names, `part` attached from the directory. Plans with the
+    declared physical schema when table_meta records one (zero
+    inference I/O; files from before an additive evolution read nulls
+    for the later columns), else infers from the footers. `path_col`
+    adds each row's `part=K/file` — taken from the scan itself, since
+    `_metadata` does not resolve through the logical aliasing."""
+    from pyspark.sql.types import StructType
+    data_dir = os.path.join(out_dir, "data")
+    paths, dv_by_path = [], {}
+    for part, fns in sorted(files.items()):
+        pdv = (dv or {}).get(part) or {}
+        for fn in sorted(fns):
+            path = os.path.join(data_dir, f"part={int(part)}", fn)
+            paths.append(path)
+            if pdv.get(fn):
+                dv_by_path[path] = [int(r) for r in pdv[fn]]
+    if not paths:
+        return spark.createDataFrame(
+            [], StructType.fromJson(meta["schema"]) if meta.get("schema")
+            else schema.OUTPUT_SCHEMA)
+    reader = spark.read.option("basePath", data_dir)
+    if meta.get("schema"):
+        reader = reader.schema(physical_struct(meta))
+    df = _apply_dv(spark, reader.parquet(*paths), dv_by_path)
+    if path_col:
+        fp = F.split(F.col("_metadata.file_path"), "/")
+        df = df.withColumn(path_col, F.concat_ws(
+            "/", F.element_at(fp, -2), F.element_at(fp, -1)))
+    return to_logical(df, meta)
+
+
+def _land_staged(out_dir: str, staging: str, meta: dict, verb: str,
+                 part: int | None = None) -> dict[int, tuple]:
+    """Move the parquet files a Spark write left in `staging` into
+    data/part=K — `staging` is flat (every file belongs to `part`) or
+    Spark's partitionBy layout (`part=K/` subdirs). Each file's footer
+    gives its manifest entry (rows, bytes) and its column stats (keyed
+    by the physical names files hold); zero-row files are skipped.
+    Files are named `<verb>-<tag>-<part>-<i>.parquet` under a tag
+    unique to this call, so concurrent writers never collide. Removes
+    `staging`; returns {part: (manifest, stats, n_rows)} for each part
+    that received a file.
+
+    The one ordering this gives is "files placed before the commit": a
+    placed file is an invisible orphan until a log version names it,
+    and `vacuum` reclaims it if none ever does."""
+    import shutil
+    import uuid
+
+    import pyarrow.parquet as pq
+    tag = uuid.uuid4().hex[:12]
+    cols = stats_columns(meta)
+    srcs = {int(part): staging} if part is not None else {
+        int(d.split("=", 1)[1]): os.path.join(staging, d)
+        for d in os.listdir(staging) if d.startswith("part=")}
+    landed: dict[int, tuple] = {}
+    for p, src in sorted(srcs.items()):
+        dst = os.path.join(out_dir, "data", f"part={p}")
+        man: dict = {}
+        stats: dict = {}
+        for fn in sorted(os.listdir(src)):
+            if not fn.endswith(".parquet"):
+                continue
+            fsrc = os.path.join(src, fn)
+            rows = pq.ParquetFile(fsrc).metadata.num_rows
+            if not rows:
+                continue
+            name = f"{verb}-{tag}-{p}-{len(man):05d}.parquet"
+            man[name] = {"n_rows": int(rows),
+                         "n_bytes": os.path.getsize(fsrc)}
+            stats[name] = file_column_stats(fsrc, cols)
+            os.makedirs(dst, exist_ok=True)
+            os.replace(fsrc, os.path.join(dst, name))
+        if man:
+            landed[p] = (man, stats,
+                         sum(m["n_rows"] for m in man.values()))
+    shutil.rmtree(staging, ignore_errors=True)
+    return landed
+
+
+def _rewrite_files(spark: SparkSession, out_dir: str, meta: dict,
+                   part: int, marker: dict, files: list, transform,
+                   n_out: int, verb: str) -> tuple[dict, dict, int, int]:
+    """The per-part rewrite step: scan `files` of committed partition
+    `part` (minus their deletion vectors — a rewrite materializes the
+    masks), apply `transform` to the logical rows, write at most
+    `n_out` files and land them. Commits nothing. Returns (manifest,
+    stats, before, after) — the live rows read and the rows landed, for
+    the caller's own row-count check."""
+    import uuid
+    dv = marker.get("dv") or {}
+    before = sum(int(marker["files"][f].get("n_rows", 0))
+                 - len(dv.get(f) or []) for f in files)
+    out = transform(_scan_committed(spark, out_dir, meta, {part: files},
+                                    {part: dv}))
+    staging = os.path.join(out_dir, f"_compact-{uuid.uuid4().hex[:12]}")
+    (to_physical(out.drop("part"), meta).coalesce(max(1, n_out))
+     .write.parquet(staging))
+    man, stats, after = _land_staged(out_dir, staging, meta, verb,
+                                     part).get(int(part), ({}, {}, 0))
+    return man, stats, before, after
+
+
+def _check_swaps(ledger, ver: int, swaps: dict, error: type,
+                 verb: str) -> None:
+    """The stale-swap check after a commit at `ver`: replay honours a
+    swap only while every file it removes is still live at ver-1 and
+    silently ignores it otherwise (a concurrent compaction or recompute
+    replaced the file first). `swaps` is {part: removed files}; the log
+    is replayed once. Raises `error` rather than let the caller report
+    a mutation that never applied."""
+    prev = ledger.committed(version=ver - 1)
+    stale = {int(p): sorted(set(fs) - set(
+        (prev.get(int(p)) or {}).get("files") or {}))
+        for p, fs in swaps.items()}
+    stale = {p: fs for p, fs in sorted(stale.items()) if fs}
+    if stale:
+        raise error(
+            f"{verb} v{ver} conflicted with a concurrent rewrite: files "
+            f"{stale} (by part) were replaced between snapshot and "
+            "commit, so replay ignored the swap — retry against the new "
+            "snapshot")
+
+
+def _check_constraints(spark: SparkSession, out_dir: str, meta: dict,
+                       actions: list, verb: str) -> None:
+    """CHECK enforcement for a write verb: every file the commit
+    `actions` would add is validated BEFORE the commit publishes (a
+    violation aborts; the placed files are orphans for vacuum).
+    Constraint expressions speak logical names; files hold physical
+    ones, so they are checked through the column mapping."""
+    cons = dict(meta.get("constraints") or {})
+    if not cons:
+        return
+    from .constraints import check_files
+    check_files(spark, [os.path.join(out_dir, "data", f"part={a['part']}",
+                                     fn)
+                        for a in actions
+                        for fn in (a.get("add_files") or a.get("files")
+                                   or {})],
+                cons, where=f" by {verb}", mapping=column_mapping(meta))
+
+
 def read_committed(spark: SparkSession, out_dir: str,
                    version: int | None = None,
                    where=None, as_of=None) -> DataFrame:
@@ -2178,43 +2306,26 @@ def read_committed(spark: SparkSession, out_dir: str,
     appended commitlog table), the scan PLANS with that declared schema
     instead of footer-sampling inference — zero schema-discovery I/O,
     and files written before an additive schema evolution read nulls
-    for the later-added columns."""
-    from pyspark.sql.types import StructType
-
-    from . import schema as _schema
+    for the later-added columns. Time travel uses the column mapping AS
+    OF the read version, so pre-rename snapshots show pre-rename
+    names."""
     if as_of is not None:
         # TIMESTAMP AS OF: resolve to the latest version committed at
         # or before the datetime, then read that version
         if version is not None:
             raise ValueError("pass version OR as_of, not both")
         version = make_ledger(out_dir).version_at(as_of)
-    paths, meta, dv = _snapshot_plan(out_dir, version, where)
-    declared = StructType.fromJson(meta["schema"]) \
-        if meta.get("schema") else None
-    data_dir = os.path.join(out_dir, "data")
+    files, meta, dv = _snapshot_plan(out_dir, version, where)
     if version is not None:
-        missing = [p for p in paths if not os.path.exists(p)]
+        missing = [p for p in _file_paths(out_dir, files)
+                   if not os.path.exists(p)]
         if missing:
             raise FileNotFoundError(
                 f"snapshot v{version} references {len(missing)} file(s) "
                 f"already reclaimed by vacuum (e.g. {missing[0]}); "
                 "historical reads are bounded by the vacuum retention "
                 "window, exactly as in Delta")
-    if not paths:
-        df = spark.createDataFrame([], declared or _schema.OUTPUT_SCHEMA)
-    elif declared is not None:
-        # scan with the PHYSICAL schema (what files actually hold —
-        # identical to `declared` until an ALTER renames something),
-        # alias back to logical names after the dv mask; time travel
-        # uses the mapping AS OF the read version, so pre-rename
-        # snapshots show pre-rename names
-        df = (spark.read.schema(physical_struct(meta))
-              .option("basePath", data_dir).parquet(*paths))
-        df = to_logical(_apply_dv(spark, df, dv), meta)
-        dv = {}
-    else:
-        df = spark.read.option("basePath", data_dir).parquet(*paths)
-    df = _apply_dv(spark, df, dv)
+    df = _scan_committed(spark, out_dir, meta, files, dv)
     for col, op, val in _normalize_where(where):
         c = F.col(col)
         df = df.filter({"=": c == val, "<": c < val, "<=": c <= val,
@@ -2647,43 +2758,24 @@ def read_changes(spark: SparkSession, out_dir: str, since_version: int,
     data, never re-reads the corpus). Reads the ORIGINAL inserted files
     directly, so later compactions/sorted rewrites don't duplicate or
     hide rows; like time travel, the feed is bounded by vacuum's
-    retention window and raises (naming the files) past it."""
-    from pyspark.sql.types import StructType
-
-    from . import schema as _schema
-    ch = table_changes(out_dir, since_version, until_version)
-    ledger = make_ledger(out_dir)
-    meta = ledger.table_meta()
-    declared = StructType.fromJson(meta["schema"]) \
-        if meta.get("schema") else None
-    data_dir = os.path.join(out_dir, "data")
-    paths, dv = [], {}
-    for p, fs in sorted(ch["inserts"].items()):
-        for fn in sorted(fs):
-            path = os.path.join(data_dir, f"part={int(p)}", fn)
-            paths.append(path)
-            if fs[fn].get("dv"):
-                # an in-window deletion vector masks rows out of the
-                # very file the feed reads — deliver live rows only
-                dv[path] = [int(r) for r in fs[fn]["dv"]]
-    missing = [p for p in paths if not os.path.exists(p)]
+    retention window and raises (naming the files) past it. An
+    in-window deletion vector masks rows out of the very file the feed
+    reads, so only live rows are delivered; they surface under the
+    CURRENT logical names (physical names are immutable, so files from
+    any era alias cleanly)."""
+    ins = table_changes(out_dir, since_version, until_version)["inserts"]
+    missing = [p for p in _file_paths(out_dir, ins)
+               if not os.path.exists(p)]
     if missing:
         raise FileNotFoundError(
             f"change feed since v{since_version} references "
             f"{len(missing)} file(s) already reclaimed by vacuum "
             f"(e.g. {missing[0]}); consume changes within the retention "
             "window")
-    if not paths:
-        return spark.createDataFrame([], declared or _schema.OUTPUT_SCHEMA)
-    reader = spark.read.schema(physical_struct(meta)) \
-        if declared is not None else spark.read
-    # feed rows surface under the CURRENT logical names (head mapping):
-    # physical names are immutable, so files from any era alias cleanly
-    return to_logical(
-        _apply_dv(spark,
-                  reader.option("basePath", data_dir).parquet(*paths),
-                  dv),
-        meta)
+    return _scan_committed(
+        spark, out_dir, make_ledger(out_dir).table_meta(), ins,
+        {p: {fn: m["dv"] for fn, m in fs.items() if m.get("dv")}
+         for p, fs in ins.items()})
 
 
 def table_history(out_dir: str) -> list[dict]:
@@ -2914,11 +3006,12 @@ def compact_partition(spark: SparkSession, out_dir: str, part: int,
     by per-file open overhead — compaction is the standard maintenance
     pass.
 
-    Protocol: read EXACTLY the files the
-    current manifest references, rewrite them into shard-unique
-    compacted files placed alongside (one put per file, no in-place
-    mutation), verify the rewritten row count equals the manifest's,
-    then publish ONE `compact` log version that swaps the file sets.
+    Protocol: read EXACTLY the files the current manifest references
+    (with the declared schema, so columns an additive evolution added
+    survive), rewrite them into uniquely named compacted files placed
+    alongside (one put per file, no in-place mutation), verify the
+    rewritten row count equals the manifest's, then publish ONE
+    `compact` log version that swaps the file sets.
     Readers see the old files or the new files, never a mix; a crash
     at any point leaves only unreferenced orphans for `vacuum`; a
     concurrent recompute makes the swap a stale no-op at replay (see
@@ -2944,21 +3037,11 @@ def compact_partition(spark: SparkSession, out_dir: str, part: int,
     z-ordered columns. Layout-only, row-identical (see _zorder_key).
 
     Returns {part, compacted, files_before, files_after, n_rows}."""
-    import shutil
-    import uuid
-
-    import pyarrow.parquet as pq
-
     ledger = make_ledger(out_dir)
     committed_, _s_, meta_, _t_ = ledger.snapshot()
     marker = committed_.get(int(part))
     if not marker or not marker.get("files"):
         raise ValueError(f"partition {part} has no committed files")
-    # the rewrite is physical-in/physical-out (footer-inferred read,
-    # as-is write), so column mapping only touches the caller-facing
-    # names: sort keys arrive logical, files hold physical
-    if sort_by:
-        sort_by = [physical_name(meta_, c) for c in sort_by]
     old_files = dict(marker["files"])
     old_dv = {k: list(v) for k, v in (marker.get("dv") or {}).items()}
     live = sum(int(v.get("n_rows", 0)) for v in old_files.values()) \
@@ -2973,46 +3056,26 @@ def compact_partition(spark: SparkSession, out_dir: str, part: int,
                 "files_before": len(old_files),
                 "files_after": len(old_files),
                 "n_rows": live}
-    pdir = os.path.join(out_dir, "data", f"part={int(part)}")
-    paths = [os.path.join(pdir, fn) for fn in sorted(old_files)]
-    tag = uuid.uuid4().hex[:12]
-    staging = os.path.join(out_dir, f"_compact-{tag}")
-    src = _apply_dv(spark, spark.read.parquet(*paths),
-                    {os.path.join(pdir, fn): rows
-                     for fn, rows in old_dv.items()})
-    if zorder:
-        if not sort_by or len(sort_by) < 2:
-            raise ValueError(
-                "zorder needs 2+ sort_by columns (with one, a plain "
-                "range sort already gives disjoint file ranges)")
-        src = (src.withColumn("_zkey", _zorder_key(src, list(sort_by)))
-               .repartitionByRange(int(target_files), F.col("_zkey"))
-               .sortWithinPartitions("_zkey")
-               .drop("_zkey"))
-    elif sort_by:
-        src = (src.repartitionByRange(int(target_files),
-                                      *[F.col(c) for c in sort_by])
-               .sortWithinPartitions(*sort_by))
-    else:
-        src = src.coalesce(int(target_files))
-    src.write.parquet(staging)
-    man: dict = {}
-    stats: dict = {}
-    n_rows = 0
-    i = 0
-    for fn in sorted(os.listdir(staging)):
-        if not fn.endswith(".parquet"):
-            continue
-        newname = f"compact-{tag}-{i:05d}.parquet"
-        fsrc = os.path.join(staging, fn)
-        rows = pq.ParquetFile(fsrc).metadata.num_rows
-        man[newname] = {"n_rows": int(rows),
-                        "n_bytes": os.path.getsize(fsrc)}
-        stats[newname] = file_column_stats(fsrc, stats_columns(meta_))
-        n_rows += int(rows)
-        os.replace(fsrc, os.path.join(pdir, newname))
-        i += 1
-    shutil.rmtree(staging, ignore_errors=True)
+    if zorder and (not sort_by or len(sort_by) < 2):
+        raise ValueError(
+            "zorder needs 2+ sort_by columns (with one, a plain range "
+            "sort already gives disjoint file ranges)")
+
+    def _layout(src):
+        if zorder:
+            return (src.withColumn("_zkey", _zorder_key(src, sort_by))
+                    .repartitionByRange(int(target_files), F.col("_zkey"))
+                    .sortWithinPartitions("_zkey")
+                    .drop("_zkey"))
+        if sort_by:
+            return (src.repartitionByRange(int(target_files),
+                                           *[F.col(c) for c in sort_by])
+                    .sortWithinPartitions(*sort_by))
+        return src
+
+    man, stats, _before, n_rows = _rewrite_files(
+        spark, out_dir, meta_, int(part), marker, sorted(old_files),
+        _layout, int(target_files), "compact")
     if n_rows != live:
         # abandon BEFORE the commit: the rewrites are unreferenced
         # orphans (vacuum reclaims them); the table is untouched
@@ -3123,12 +3186,9 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
 
     Returns {rebucketed, version, n_rows, parts_before, parts_after,
     files_written, bucket}."""
-    import shutil
     import uuid
 
-    import pyarrow.parquet as pq
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StructType
 
     if bucket.get("fn") not in BUCKET_FNS or not bucket.get("col") \
             or not bucket.get("n_parts"):
@@ -3161,10 +3221,8 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
         upgrade_protocol(out_dir, reader_features=["rebucket"],
                          writer_features=["rebucket"])
 
-    tag = uuid.uuid4().hex[:12]
-    live_files = [(int(p), f, (m or {}).get("dv", {}).get(f))
-                  for p, m in committed.items()
-                  for f in sorted((m or {}).get("files") or {})]
+    live_files = {int(p): sorted((m or {}).get("files") or {})
+                  for p, m in committed.items() if (m or {}).get("files")}
     if not live_files:
         # empty table: the spec change is metadata-only but still one
         # atomic, replayable, time-travelable version
@@ -3177,23 +3235,13 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
                 "parts_before": len(committed), "parts_after": 0,
                 "files_written": 0, "bucket": dict(bucket)}
 
-    live = sum(int(((committed.get(p) or {}).get("files") or {})
-                   .get(f, {}).get("n_rows", 0))
-               for p, f, _dv in live_files) \
-        - sum(len(dv or []) for _p, _f, dv in live_files)
-    declared = None
-    if meta.get("schema"):
-        declared = physical_struct(meta)  # files hold physical names
-        declared = StructType([f for f in declared.fields
-                               if f.name != "part"])  # and no part col
-    pkey = physical_name(meta, bucket["col"])
-    reader = spark.read.schema(declared) if declared is not None \
-        else spark.read
-    paths = [os.path.join(out_dir, "data", f"part={p}", f)
-             for p, f, _dv in live_files]
-    dv_map = {os.path.join(out_dir, "data", f"part={p}", f): dv
-              for p, f, dv in live_files if dv}
-    src = _apply_dv(spark, reader.parquet(*paths), dv_map)
+    live = sum(int(f.get("n_rows", 0)) for m in committed.values()
+               for f in ((m or {}).get("files") or {}).values()) \
+        - sum(len(v or []) for m in committed.values()
+              for v in ((m or {}).get("dv") or {}).values())
+    src = _scan_committed(spark, out_dir, meta, live_files,
+                          {int(p): (m or {}).get("dv")
+                           for p, m in committed.items()})
 
     fn_name, n_parts = bucket["fn"], int(bucket["n_parts"])
 
@@ -3202,12 +3250,13 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
         return sser.map(lambda v: f(v, n_parts)).astype("int32")
 
     _bucket_of = pandas_udf(_bucket_series, "int")
+    tag = uuid.uuid4().hex[:12]
     staging = os.path.join(out_dir, f"_compact-{tag}")  # vacuum-known
-    (src.withColumn("part", _bucket_of(F.col(pkey).cast("string")))
+    (to_physical(src.withColumn(
+        "part", _bucket_of(F.col(bucket["col"]).cast("string"))), meta)
      .repartition(n_parts, F.col("part"))
      .write.partitionBy("part").parquet(staging))
 
-    new_markers: dict[int, dict] = {}
     # recomputing a rebucketed partition from any single input part
     # would resurrect the old layout — carry every contributing run id
     # so revalidate_committed's multi-run guard refuses the recompute
@@ -3215,39 +3264,13 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
                    for rid in ((m or {}).get("runs")
                                or ([m["run_id"]] if (m or {}).get("run_id")
                                    else []))} | {f"rebucket-{tag}"})
-    n_rows = 0
-    files_written = 0
-    for d in sorted(os.listdir(staging)):
-        if not d.startswith("part="):
-            continue
-        newp = int(d.split("=", 1)[1])
-        pdir = os.path.join(out_dir, "data", f"part={newp}")
-        os.makedirs(pdir, exist_ok=True)
-        man: dict = {}
-        stats: dict = {}
-        prows = 0
-        for i, f in enumerate(sorted(os.listdir(
-                os.path.join(staging, d)))):
-            if not f.endswith(".parquet"):
-                continue
-            fsrc = os.path.join(staging, d, f)
-            rows = pq.ParquetFile(fsrc).metadata.num_rows
-            if rows == 0:
-                continue
-            newname = f"rebucket-{tag}-{files_written:05d}.parquet"
-            man[newname] = {"n_rows": int(rows),
-                            "n_bytes": os.path.getsize(fsrc)}
-            stats[newname] = file_column_stats(fsrc, stats_columns(meta))
-            prows += int(rows)
-            os.replace(fsrc, os.path.join(pdir, newname))
-            files_written += 1
-        if man:
-            new_markers[newp] = {
-                "run_id": f"rebucket-{tag}", "part": newp,
-                "status": "COMMITTED", "n_rows": prows,
-                "files": man, "stats": stats, "runs": runs}
-            n_rows += prows
-    shutil.rmtree(staging, ignore_errors=True)
+    new_markers = {
+        p: {"run_id": f"rebucket-{tag}", "part": p, "status": "COMMITTED",
+            "n_rows": n, "files": man, "stats": stats, "runs": runs}
+        for p, (man, stats, n) in _land_staged(out_dir, staging, meta,
+                                               "rebucket").items()}
+    n_rows = sum(m["n_rows"] for m in new_markers.values())
+    files_written = sum(len(m["files"]) for m in new_markers.values())
     if n_rows != live:
         # abandon BEFORE the commit: the rewrites are unreferenced
         # orphans (vacuum reclaims them); the table is untouched
@@ -3310,24 +3333,11 @@ def delete_conversations(spark: SparkSession, out_dir: str,
 
     Returns {rows_deleted, files_rewritten, files_untouched,
     parts_touched}."""
-    import shutil
-    import uuid
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import StructType
-
     ledger = make_ledger(out_dir)
     conv_ids = sorted(set(conv_ids))
     committed, _success, meta, _txns = ledger.snapshot()
     bucket = meta.get("bucket") or {}
-    declared = None
-    if meta.get("schema"):
-        declared = physical_struct(meta)  # files hold physical names
-        declared = StructType([f for f in declared.fields
-                               if f.name != "part"])  # files hold no part
-    # the rewrite runs physical-in/physical-out; only the caller's key
-    # column arrives logical
-    pkey = physical_name(meta, key)
+    pkey = physical_name(meta, key)  # footer stats hold physical names
 
     keep_parts = None
     if bucket.get("col") == key and bucket.get("fn") in BUCKET_FNS \
@@ -3341,8 +3351,7 @@ def delete_conversations(spark: SparkSession, out_dir: str,
     # NULL key and the filter would silently drop (= delete)
     # untargeted rows on any nullable key column
     targets = [str(c) for c in conv_ids]
-    keep_fn = lambda df: df.filter(  # noqa: E731
-        (~F.col(pkey).isin(targets)) | F.col(pkey).isNull())
+    cands = {}
     for part, marker in sorted(committed.items()):
         files = (marker or {}).get("files") or {}
         if keep_parts is not None and int(part) not in keep_parts:
@@ -3353,13 +3362,40 @@ def delete_conversations(spark: SparkSession, out_dir: str,
                 if any(_file_may_match(stats.get(fn_), pkey, "=", c)
                        for c in conv_ids)]
         summary["files_untouched"] += len(files) - len(cand)
-        if not cand:
-            continue
-        _swap_filtered_rewrite(spark, out_dir, ledger, declared,
-                               int(part), cand, files, keep_fn, summary,
-                               dv=(marker or {}).get("dv"),
-                               stats_cols=stats_columns(meta))
+        if cand:
+            cands[int(part)] = (cand, marker)
+    _delete_parts(spark, out_dir, ledger, meta, cands,
+                  lambda df: df.filter((~F.col(key).isin(targets))
+                                       | F.col(key).isNull()),
+                  summary)
     return summary
+
+
+def _delete_parts(spark, out_dir, ledger, meta, cands: dict, keep_fn,
+                  summary: dict) -> None:
+    """The key deletes' commit loop over {part: (candidate files,
+    marker)}: rewrite each part's candidates keeping `keep_fn(df)`,
+    commit one `delete` version per part and check its swap applied. A
+    rewrite that removes nothing (a stats false positive) leaves the
+    originals alone and commits no version. Mutates `summary`."""
+    for part, (cand, marker) in sorted(cands.items()):
+        man, stats, before, after = _rewrite_files(
+            spark, out_dir, meta, part, marker, cand, keep_fn, len(cand),
+            "delete")
+        if after > before:
+            raise RuntimeError(
+                f"delete rewrite of part {part} produced {after} rows "
+                f"from {before} — aborted before commit, table unchanged")
+        if after == before:
+            for f in man:  # nothing to delete: the rewrites are orphans
+                os.remove(os.path.join(out_dir, "data", f"part={part}", f))
+            continue
+        ver = ledger.delete_rewrite(part, cand, man, stats=stats)
+        _check_swaps(ledger, ver, {part: cand}, ConcurrentDeleteError,
+                     "delete")
+        summary["rows_deleted"] += before - after
+        summary["files_rewritten"] += len(cand)
+        summary["parts_touched"].append(part)
 
 
 def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
@@ -3449,102 +3485,14 @@ def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
     if not marks:
         return summary
     ver = ledger.add_dv(marks)
-    prev = ledger.committed(version=ver - 1)
-    stale = [fn_ for part, fn_, _pos in marks
-             if fn_ not in ((prev.get(part) or {}).get("files") or {})]
-    if stale:
-        raise ConcurrentDeleteError(
-            f"dv delete conflicted with a concurrent rewrite: files "
-            f"{stale} were replaced between snapshot and commit "
-            f"(v{ver}); their marks were ignored by replay — retry "
-            "against the new snapshot")
+    swaps: dict[int, list[str]] = {}
+    for part, fn_, _pos in marks:
+        swaps.setdefault(part, []).append(fn_)
+    _check_swaps(ledger, ver, swaps, ConcurrentDeleteError, "dv delete")
     summary["rows_deleted"] = sum(len(pos) for _, _, pos in marks)
     summary["files_marked"] = len(marks)
     summary["parts_touched"] = sorted({p for p, _, _ in marks})
     return summary
-
-
-def _swap_filtered_rewrite(spark, out_dir, ledger, declared, part,
-                           cand, files, keep_fn, summary,
-                           dv: dict | None = None,
-                           stats_cols: tuple = STATS_COLUMNS) -> None:
-    """The DELETE rewrite core shared by the id-list and DataFrame key
-    paths: read the candidate files, keep `keep_fn(df)`, stage the
-    survivors, swap atomically via one `delete` log version, and verify
-    the swap APPLIED (raising ConcurrentDeleteError on a stale swap —
-    see delete_conversations). A rewrite that removes nothing (stats
-    false positive) leaves the originals untouched and commits no
-    version. Candidates carrying deletion vectors are read MINUS their
-    masks (the rewrite materializes prior dv deletes; resurrecting
-    them would undo committed right-to-be-forgotten requests) and the
-    row accounting compares live counts. Mutates `summary` in place."""
-    import shutil
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    pdir = os.path.join(out_dir, "data", f"part={int(part)}")
-    paths = [os.path.join(pdir, f) for f in cand]
-    reader = spark.read.schema(declared) if declared is not None \
-        else spark.read
-    dv = {f: rows for f, rows in (dv or {}).items() if f in cand}
-    before = sum(int(files[f].get("n_rows", 0)) for f in cand) \
-        - sum(len(v) for v in dv.values())
-    kept = keep_fn(_apply_dv(
-        spark, reader.parquet(*paths),
-        {os.path.join(pdir, f): rows for f, rows in dv.items()}))
-    tag = uuid.uuid4().hex[:12]
-    staging = os.path.join(out_dir, f"_compact-{tag}")  # vacuum-known
-    kept.coalesce(max(1, len(cand))).write.parquet(staging)
-    man: dict = {}
-    new_stats: dict = {}
-    after = 0
-    i = 0
-    for f in sorted(os.listdir(staging)):
-        if not f.endswith(".parquet"):
-            continue
-        src = os.path.join(staging, f)
-        rows = pq.ParquetFile(src).metadata.num_rows
-        if rows == 0:
-            continue  # fully-deleted file: remove, add nothing
-        newname = f"delete-{tag}-{i:05d}.parquet"
-        man[newname] = {"n_rows": int(rows),
-                        "n_bytes": os.path.getsize(src)}
-        new_stats[newname] = file_column_stats(src, stats_cols)
-        after += int(rows)
-        os.replace(src, os.path.join(pdir, newname))
-        i += 1
-    shutil.rmtree(staging, ignore_errors=True)
-    if after > before:
-        raise RuntimeError(
-            f"delete rewrite of part {part} produced {after} rows "
-            f"from {before} — aborted before commit, table unchanged")
-    if after == before:
-        # stats false positive: no target actually present — leave
-        # the original files alone; the rewrites are orphans
-        for f in man:
-            os.remove(os.path.join(pdir, f))
-        return
-    ver = ledger.delete_rewrite(int(part), cand, man, stats=new_stats)
-    # verify the swap APPLIED: replay honors it only when every
-    # removed file was still referenced at version-1 — re-check that
-    # exact condition rather than trusting our (possibly stale)
-    # snapshot. A concurrent compact/recompute that replaced a
-    # candidate in between makes the swap a silent no-op in replay;
-    # the caller must not be told rows were deleted when they
-    # weren't.
-    prev_files = set(((ledger.committed(version=ver - 1)
-                       .get(int(part)) or {}).get("files") or {}))
-    if not set(cand) <= prev_files:
-        raise ConcurrentDeleteError(
-            f"delete of part {part} conflicted with a concurrent "
-            f"rewrite: files {sorted(set(cand) - prev_files)} were "
-            f"replaced between snapshot and commit (v{ver}); the "
-            "swap was ignored by replay — retry the delete against "
-            "the new snapshot")
-    summary["rows_deleted"] += before - after
-    summary["files_rewritten"] += len(cand)
-    summary["parts_touched"].append(int(part))
 
 
 def delete_matching(spark: SparkSession, out_dir: str, keys: DataFrame,
@@ -3575,17 +3523,11 @@ def delete_matching(spark: SparkSession, out_dir: str, keys: DataFrame,
     import uuid
 
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StructType
 
     ledger = make_ledger(out_dir)
     committed, _success, meta, _txns = ledger.snapshot()
     bucket = meta.get("bucket") or {}
-    declared = None
-    if meta.get("schema"):
-        declared = physical_struct(meta)  # files hold physical names
-        declared = StructType([f for f in declared.fields
-                               if f.name != "part"])  # files hold no part
-    pkey = physical_name(meta, key)
+    pkey = physical_name(meta, key)  # footer stats hold physical names
 
     summary = {"rows_deleted": 0, "files_rewritten": 0,
                "files_untouched": 0, "parts_touched": [], "n_keys": 0}
@@ -3623,8 +3565,7 @@ def delete_matching(spark: SparkSession, out_dir: str, keys: DataFrame,
                         F.max(key).alias("kmax")).collect()[0]
             ranges = {int(p): (r["kmin"], r["kmax"]) for p in committed}
 
-        pkdf = kdf.withColumnRenamed(key, pkey)  # probe physical scans
-        keep_fn = lambda df: df.join(pkdf, [pkey], "left_anti")  # noqa: E731
+        cands = {}
         for part, marker in sorted(committed.items()):
             files = (marker or {}).get("files") or {}
             if int(part) not in ranges:
@@ -3638,12 +3579,10 @@ def delete_matching(spark: SparkSession, out_dir: str, keys: DataFrame,
                     if _file_may_match(stats.get(fn_), pkey, "<=", kmax)
                     and _file_may_match(stats.get(fn_), pkey, ">=", kmin)]
             summary["files_untouched"] += len(files) - len(cand)
-            if not cand:
-                continue
-            _swap_filtered_rewrite(spark, out_dir, ledger, declared,
-                                   int(part), cand, files, keep_fn,
-                                   summary, dv=(marker or {}).get("dv"),
-                                   stats_cols=stats_columns(meta))
+            if cand:
+                cands[int(part)] = (cand, marker)
+        _delete_parts(spark, out_dir, ledger, meta, cands,
+                      lambda df: df.join(kdf, [key], "left_anti"), summary)
         return summary
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

@@ -275,12 +275,13 @@ class _SnapshotReader(_PlannedReader):
 
     def partitions(self):
         from .checkpoint import _snapshot_plan
-        paths, _meta, dv = _snapshot_plan(
+        files, _meta, dv = _snapshot_plan(
             self._dir, self._version, self._where or None)
+        data_dir = os.path.join(self._dir, "data")
         return [_FilePartition(
-            p, (("part", int(os.path.basename(os.path.dirname(p))
-                             .split("=", 1)[1])),),
-            dv=tuple(dv.get(p) or ())) for p in paths]
+            os.path.join(data_dir, f"part={p}", fn), (("part", p),),
+            dv=tuple(int(r) for r in dv[p].get(fn) or ()))
+            for p, fns in sorted(files.items()) for fn in fns]
 
 
 class _ChangeStreamReader(_VersionStreamReader):

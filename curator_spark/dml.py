@@ -8,10 +8,10 @@ MERGE (merge.py):
 * prune (metadata-only): when the predicate is a (col, op, value)
   triple — or an ANDed list of them, read_committed's `where=`
   convention — files whose manifest [min, max] cannot match are
-  skipped without opening them; bucket pruning applies when the
-  predicate pins the bucketed column by equality. An arbitrary SQL
-  string predicate skips this pass (nothing to prune on) but still
-  gets pass 2.
+  skipped without opening them. There is no bucket pruning: a
+  partition is skipped only when none of its files can match. An
+  arbitrary SQL string predicate skips this pass (nothing to prune
+  on) but still gets pass 2.
 * findTouchedFiles (one probe job): candidate rows are filtered by
   the predicate and counted per `_metadata.file_path` — only files
   actually HOLDING a matching row are rewritten.
@@ -22,6 +22,10 @@ MERGE (merge.py):
   version; the post-commit stale-swap verification raises
   ConcurrentDMLError rather than silently dropping a mutation that
   lost to a concurrent OPTIMIZE (Delta's conflict rule).
+
+The scan, the per-part rewrite, the file landing, the CHECK gate and
+the stale-swap check are checkpoint.py's copy-on-write core, shared
+with compaction, the key deletes and MERGE.
 
 NULL predicate semantics are SQL's: a NULL predicate row is NOT
 matched — kept by DELETE, untouched by UPDATE.
@@ -34,15 +38,14 @@ replace) — UPDATE/DELETE WHERE is that idiom as declarative verbs.
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .checkpoint import (
-    _apply_dv, _file_may_match, _normalize_where, file_column_stats,
-    make_ledger, physical_name, physical_struct, stats_columns,
-    to_logical, to_physical)
+    _check_constraints, _check_swaps, _file_may_match, _land_staged,
+    _normalize_where, _rewrite_files, _scan_committed, make_ledger,
+    physical_name, to_physical)
 
 __all__ = ["ConcurrentDMLError", "delete_where",
            "insert_overwrite_where", "update_where"]
@@ -112,17 +115,11 @@ def _rewrite_where(spark: SparkSession, out_dir: str, where,
     leg add_files) committed in the SAME atomic version as the
     rewrites — and committed even when the predicate touches no file
     (an overwrite of an empty region is a plain insert)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import StructType
-
     ledger = make_ledger(out_dir)
     committed, _s, meta, _t = ledger.snapshot()
     if not meta.get("schema"):
         raise ValueError(f"{op_name} requires the table schema in "
                          "table_meta")
-    declared = StructType([f for f in physical_struct(meta).fields
-                           if f.name != "part"])  # files: physical names
-    reader = spark.read.schema(declared)
     pred = _pred_column(where)
     hit = F.coalesce(pred, F.lit(False))   # SQL WHERE: NULL = no match
 
@@ -134,29 +131,15 @@ def _rewrite_where(spark: SparkSession, out_dir: str, where,
     if not cand_by_part and not extra_actions:
         return summary
 
-    data_dir = os.path.join(out_dir, "data")
     touched: dict[int, dict[str, int]] = {}
     if cand_by_part:
-        all_paths, dv_all = [], {}
-        for part, (cand, marker) in cand_by_part.items():
-            pdir = os.path.join(data_dir, f"part={part}")
-            all_paths += [os.path.join(pdir, f) for f in cand]
-            for fn, rows_ in (marker.get("dv") or {}).items():
-                if fn in cand:
-                    dv_all[os.path.join(pdir, fn)] = rows_
-        # findTouchedFiles: one probe job, bounded collect (≤ n files).
-        # The predicate is LOGICAL; the scan is physical — materialize
-        # the file path BEFORE the logical aliasing (the `_metadata`
-        # pseudo-column resolves only against the scan, not through a
-        # projection)
-        t_all = _apply_dv(spark, reader.parquet(*all_paths), dv_all)
-        t_all = to_logical(
-            t_all.withColumn("__fp", F.col("_metadata.file_path")), meta)
-        fparts = F.split(F.col("__fp"), "/")
-        for r in (t_all.filter(hit)
-                  .groupBy(F.concat_ws(
-                      "/", F.element_at(fparts, -2),
-                      F.element_at(fparts, -1)).alias("__path"))
+        # findTouchedFiles: one probe job, bounded collect (≤ n files)
+        probe = _scan_committed(
+            spark, out_dir, meta,
+            {p: c for p, (c, _m) in cand_by_part.items()},
+            {p: m.get("dv") for p, (_c, m) in cand_by_part.items()},
+            path_col="__path")
+        for r in (probe.filter(hit).groupBy("__path")
                   .agg(F.count(F.lit(1)).alias("m")).collect()):
             pstr, fn = r["__path"].split("/", 1)
             touched.setdefault(int(pstr.split("=", 1)[1]),
@@ -167,44 +150,13 @@ def _rewrite_where(spark: SparkSession, out_dir: str, where,
     if not touched and not extra_actions:
         return summary
 
-    tag = uuid.uuid4().hex[:12]
-    actions, verify_swaps = [], []
-
     def _one(part: int) -> dict:
-        cand, marker = cand_by_part[part]
+        _cand, marker = cand_by_part[part]
         tfiles = sorted(touched[part])
         matched = sum(touched[part].values())
-        files = marker.get("files") or {}
-        pdir = os.path.join(data_dir, f"part={part}")
-        dv = {f: r for f, r in (marker.get("dv") or {}).items()
-              if f in tfiles}
-        before = sum(int(files[f].get("n_rows", 0)) for f in tfiles) \
-            - sum(len(v) for v in dv.values())
-        t = _apply_dv(
-            spark, reader.parquet(*[os.path.join(pdir, f)
-                                    for f in tfiles]),
-            {os.path.join(pdir, f): r for f, r in dv.items()})
-        # transform speaks logical names; files are written physical
-        out = to_physical(transform(to_logical(t, meta), hit), meta)
-        staging = os.path.join(out_dir, f"_compact-{tag}-p{part}")
-        out.coalesce(max(1, len(tfiles))).write.parquet(staging)
-        man, new_stats, after, i = {}, {}, 0, 0
-        for f in sorted(os.listdir(staging)):
-            if not f.endswith(".parquet"):
-                continue
-            fsrc = os.path.join(staging, f)
-            rows = pq.ParquetFile(fsrc).metadata.num_rows
-            if rows == 0:
-                continue
-            newname = f"{op_name}-{tag}-{part}-{i:05d}.parquet"
-            man[newname] = {"n_rows": int(rows),
-                            "n_bytes": os.path.getsize(fsrc)}
-            new_stats[newname] = file_column_stats(
-                fsrc, stats_columns(meta))
-            after += int(rows)
-            os.replace(fsrc, os.path.join(pdir, newname))
-            i += 1
-        shutil.rmtree(staging, ignore_errors=True)
+        man, new_stats, before, after = _rewrite_files(
+            spark, out_dir, meta, part, marker, tfiles,
+            lambda t: transform(t, hit), len(tfiles), op_name)
         err = verify(before, matched, after)
         if err:
             raise RuntimeError(
@@ -220,44 +172,23 @@ def _rewrite_where(spark: SparkSession, out_dir: str, where,
             results = list(pool.map(_one, sorted(touched)))
     from datetime import datetime, timezone
     now = datetime.now(timezone.utc).isoformat()
+    actions = []
     for r in results:
         actions.append({"type": "delete", "part": r["part"],
                         "remove_files": r["tfiles"],
                         "add_files": r["man"], "stats": r["stats"],
                         "updated_at": now})
-        verify_swaps.append((r["part"], r["tfiles"]))
         summary["rows_matched"] += r["matched"]
         summary["files_rewritten"] += len(r["tfiles"])
         summary["parts_touched"].append(r["part"])
     actions += extra_actions  # e.g. replaceWhere's insert leg — one
     # atomic version carries the delete rewrites AND the new files
-    cons = dict(meta.get("constraints") or {})
-    if cons:
-        # CHECK enforcement: staged outputs validate before the
-        # commit publishes (UPDATE could write a violating value).
-        # Constraint expressions speak logical names; mapped tables
-        # validate through the logical aliasing of the physical files.
-        from .constraints import check_df, check_files
-        paths_ = [os.path.join(data_dir, f"part={a['part']}", fn)
-                  for a in actions
-                  for fn in (a.get("add_files") or a.get("files") or {})]
-        if meta.get("column_mapping") and paths_:
-            check_df(to_logical(spark.read.parquet(*paths_), meta),
-                     cons, where=f" by {op_name.upper()}")
-        else:
-            check_files(spark, paths_, cons,
-                        where=f" by {op_name.upper()}")
+    _check_constraints(spark, out_dir, meta, actions, op_name.upper())
     ver = ledger.merge_commit(actions)
     summary["version"] = int(ver)
     summary["parts_touched"].sort()
-    for part, tfiles in verify_swaps:
-        prev = set(((ledger.committed(version=ver - 1)
-                     .get(int(part)) or {}).get("files") or {}))
-        if not set(tfiles) <= prev:
-            raise ConcurrentDMLError(
-                f"{op_name} v{ver} conflicted on part {part}: files "
-                f"{sorted(set(tfiles) - prev)} were replaced by a "
-                "concurrent rewrite and the swap was ignored — retry")
+    _check_swaps(ledger, ver, {r["part"]: r["tfiles"] for r in results},
+                 ConcurrentDMLError, op_name)
     return summary
 
 
@@ -283,9 +214,6 @@ def insert_overwrite_where(spark: SparkSession, out_dir: str,
 
     Returns {version, rows_deleted, rows_inserted, files_rewritten,
     files_added, files_untouched, parts_touched}."""
-    import uuid as _uuid
-
-    import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
     from .checkpoint import BUCKET_FNS
@@ -338,43 +266,17 @@ def insert_overwrite_where(spark: SparkSession, out_dir: str,
                              "df a `part` column or record a bucket "
                              "spec on the table")
 
-    tag = _uuid.uuid4().hex[:12]
-    data_dir = os.path.join(out_dir, "data")
+    tag = uuid.uuid4().hex[:12]
     staging = os.path.join(out_dir, f"_compact-{tag}-ow")
     (to_physical(staged, meta).repartition("part")
      .write.partitionBy("part").parquet(staging))
     from datetime import datetime, timezone
-    adds, rows_inserted = [], 0
-    for d in sorted(os.listdir(staging)):
-        if not d.startswith("part="):
-            continue
-        part = int(d.split("=", 1)[1])
-        pdir = os.path.join(data_dir, f"part={part}")
-        os.makedirs(pdir, exist_ok=True)
-        man, new_stats, n_rows, i = {}, {}, 0, 0
-        for f in sorted(os.listdir(os.path.join(staging, d))):
-            if not f.endswith(".parquet"):
-                continue
-            fsrc = os.path.join(staging, d, f)
-            rows = pq.ParquetFile(fsrc).metadata.num_rows
-            if rows == 0:
-                continue
-            newname = f"ow-{tag}-{part}-{i:05d}.parquet"
-            man[newname] = {"n_rows": int(rows),
-                            "n_bytes": os.path.getsize(fsrc)}
-            new_stats[newname] = file_column_stats(
-                fsrc, stats_columns(meta))
-            n_rows += int(rows)
-            os.replace(fsrc, os.path.join(pdir, newname))
-            i += 1
-        if man:
-            adds.append({"type": "add_files", "part": part,
-                         "files": man, "n_rows": n_rows,
-                         "run_id": f"ow-{tag}", "stats": new_stats,
-                         "updated_at": datetime.now(
-                             timezone.utc).isoformat()})
-            rows_inserted += n_rows
-    shutil.rmtree(staging, ignore_errors=True)
+    now = datetime.now(timezone.utc).isoformat()
+    adds = [{"type": "add_files", "part": part, "files": man,
+             "n_rows": n_rows, "run_id": f"ow-{tag}", "stats": new_stats,
+             "updated_at": now}
+            for part, (man, new_stats, n_rows) in sorted(_land_staged(
+                out_dir, staging, meta, "ow").items())]
 
     def transform(d_, hit):
         return d_.filter(~hit)
@@ -388,7 +290,7 @@ def insert_overwrite_where(spark: SparkSession, out_dir: str,
     s = _rewrite_where(spark, out_dir, where, transform, verify,
                        "overwrite", extra_actions=adds)
     s["rows_deleted"] = s.pop("rows_matched")
-    s["rows_inserted"] = rows_inserted
+    s["rows_inserted"] = sum(a["n_rows"] for a in adds)
     s["files_added"] = sum(len(a["files"]) for a in adds)
     for a in adds:
         if a["part"] not in s["parts_touched"]:

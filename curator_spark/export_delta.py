@@ -652,6 +652,8 @@ def _scan_adds(spark, table_root: str, state: dict, adds: list[dict]):
                     for f in data_fields]})
     ptypes = {f["name"]: field_type(f) for f in schema["fields"]
               if f["name"] in part_cols}
+    pnullable = {f["name"]: f.get("nullable", True)
+                 for f in schema["fields"] if f["name"] in part_cols}
 
     groups: dict[tuple, list[str]] = {}
     for a in adds:
@@ -673,8 +675,13 @@ def _scan_adds(spark, table_root: str, state: dict, adds: list[dict]):
                         for f in data_fields])
         for c, raw in zip(part_cols, key):
             # Delta renders partition NULL as missing/empty in the map
-            val = F.lit(None) if raw in (None, "") else F.lit(raw)
-            df = df.withColumn(c, val.cast(ptypes[c]))
+            val = (F.lit(None) if raw in (None, "")
+                   else F.lit(raw)).cast(ptypes[c])
+            if pnullable[c]:
+                # a CASE without ELSE is nullable, as the log declares
+                # the column; a bare literal would read non-nullable
+                val = F.when(val.isNotNull(), val)
+            df = df.withColumn(c, val)
         # restore the DECLARED column order (partition columns sit
         # wherever schemaString puts them, not appended at the end)
         parts.append(df.select([f["name"] for f in schema["fields"]]))

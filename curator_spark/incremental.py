@@ -32,19 +32,18 @@ fingerprints against committed fingerprints (both fingerprint-only,
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import time
-import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schema
 from .checkpoint import (
-    WRITE_SALTS, _append_metrics, _gc_stale_scratch, file_column_stats,
-    make_ledger, read_committed, run_fingerprint)
+    WRITE_SALTS, _append_metrics, _land_staged, _scored_scratch,
+    _stage_scored, make_ledger, read_committed, record_table_schema,
+    run_fingerprint)
 from .pipeline import run_pipeline_df
 
 # unit separator: cannot occur in role/text tokens, so the fingerprint
@@ -195,73 +194,21 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
                              broadcast_conv_aggs=broadcast_conv_aggs)
 
     import shutil
-    _gc_stale_scratch(out_dir)
-    shard = hashlib.md5(f"{run_id}|{uuid.uuid4().hex}".encode()) \
-        .hexdigest()[:8]
-    scratch_root = os.path.join(out_dir, f"_scored-{run_id}-{shard}")
-    os.makedirs(scratch_root, exist_ok=True)
-    with open(os.path.join(scratch_root, "OWNER"), "w") as f:
-        f.write(str(os.getpid()))
+    scratch_root, shard = _scored_scratch(out_dir, run_id, run_id)
     stage_out = os.path.join(scratch_root, "out")
     try:
-        from .checkpoint import (
-            record_table_schema, stats_columns, to_logical, to_physical)
-        tmeta = ledger.table_meta()
-        if tmeta.get("column_mapping"):
-            # mapped table (ALTER history): mint physical names for any
-            # new logical columns first, then land physical files
-            record_table_schema(ledger, result.schema)
-            tmeta = ledger.table_meta()
-        (to_physical(
-            result.repartition(max(8, WRITE_SALTS * 8), F.col("part"),
-                               F.pmod(F.col("turn_idx"),
-                                      F.lit(WRITE_SALTS))),
-            tmeta)
-         .write.mode("overwrite").partitionBy("part").parquet(stage_out))
+        tmeta, mrows = _stage_scored(spark, ledger, result, stage_out,
+                                     max(8, WRITE_SALTS * 8))
 
-        mrows = (to_logical(spark.read.parquet(stage_out),
-                            tmeta).groupBy("part").agg(
-            F.count(F.lit(1)).alias("n_in"),
-            F.sum(F.col("keep").cast("long")).alias("n_kept"),
-            F.sum((F.col("scrubbed_text") != F.col("text")).cast("long"))
-            .alias("n_scrubbed"),
-            F.sum((~F.col("role_valid")).cast("long")).alias("n_errors"),
-            F.sum("n_tokens").alias("n_tokens"),
-        ).collect())
-
-        # Per-partition add-file commits: place this shard's files under
-        # their final dirs with shard-unique names (one put per NEW
-        # file), then publish ONE atomic log entry per partition. The
-        # marker lands immediately after its partition's files, so a
-        # crash orphans at most the partition being published — and
-        # orphans are invisible to read_committed until vacuum.
-        import pyarrow.parquet as pq
-        from .checkpoint import record_table_schema
+        # Per-partition add-file commits: place this batch's files under
+        # their final dirs with unique names (one put per NEW file),
+        # then publish ONE atomic log entry per partition. A crash
+        # before a partition's entry leaves its placed files as
+        # orphans, invisible to read_committed until vacuum.
         record_table_schema(ledger, result.schema)
-        data_dir = os.path.join(out_dir, "data")
-        rows_appended = 0
-        n_by_part = {int(r.part): int(r.n_in) for r in mrows}
-        for p, n_rows in sorted(n_by_part.items()):
-            src = os.path.join(stage_out, f"part={p}")
-            if not os.path.isdir(src):
-                continue
-            dst = os.path.join(data_dir, f"part={p}")
-            os.makedirs(dst, exist_ok=True)
-            man: dict = {}
-            stats: dict = {}
-            for fn in sorted(os.listdir(src)):
-                if not fn.endswith(".parquet"):
-                    continue
-                newname = f"{shard}-{fn}"
-                fsrc = os.path.join(src, fn)
-                man[newname] = {
-                    "n_rows": pq.ParquetFile(fsrc).metadata.num_rows,
-                    "n_bytes": os.path.getsize(fsrc)}
-                stats[newname] = file_column_stats(
-                    fsrc, stats_columns(tmeta))
-                os.replace(fsrc, os.path.join(dst, newname))
+        landed = _land_staged(out_dir, stage_out, tmeta, "append")
+        for p, (man, stats, n_rows) in sorted(landed.items()):
             ledger.append_part(p, man, n_rows, run_id, stats=stats)
-            rows_appended += n_rows
 
         wall_ms = int((time.monotonic() - t0) * 1000)
         _append_metrics(out_dir, run_id, shard, mrows, wall_ms)
@@ -274,7 +221,7 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
                 "params": params or {},
                 "created_at": datetime.now(timezone.utc).isoformat(),
                 "convs_new": n_novel,
-                "parts_touched": sorted(n_by_part),
+                "parts_touched": sorted(landed),
             }, f, indent=2)
 
         if txn is not None:
@@ -283,7 +230,7 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
             # what already landed — then this mark makes the NEXT
             # replay free
             ledger.set_txn(txn[0], int(txn[1]))
-        summary["rows_appended"] = rows_appended
+        summary["rows_appended"] = sum(n for _m, _s, n in landed.values())
         summary["wall_ms"] = wall_ms
         return summary
     finally:

@@ -54,8 +54,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .checkpoint import (
-    BUCKET_FNS, _apply_dv, _file_may_match, file_column_stats,
-    make_ledger, physical_name, stats_columns, to_logical, to_physical)
+    BUCKET_FNS, _check_constraints, _check_swaps, _file_may_match,
+    _land_staged, _rewrite_files, _scan_committed, make_ledger,
+    physical_name, to_physical)
 
 __all__ = ["ConcurrentMergeError", "merge_dataframes", "merge_into"]
 
@@ -195,7 +196,6 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
     n_source_rows, txn_skipped}. A merge that changes nothing commits
     no version (version is None).
     """
-    import pyarrow.parquet as pq
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StructType
 
@@ -220,7 +220,7 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
         raise ValueError(f"source lacks target columns {missing}")
 
     schema_action = None
-    eff_meta = meta  # meta whose mapping covers this merge's columns
+    eff_meta = meta  # meta whose schema + mapping cover this merge
     if evolve_schema:
         from pyspark.sql.types import StructField
         add = [StructField(f.name, f.dataType, True)
@@ -242,7 +242,7 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
                     cm[f_.name] = _mint_physical(f_.name, taken)
                     taken.add(cm[f_.name])
                 patch["column_mapping"] = cm
-                eff_meta = {**meta, "column_mapping": cm}
+            eff_meta = {**meta, **patch}
             schema_action = {"type": "table_meta", "meta": patch}
             declared = StructType(declared.fields + add)
             cols = cols + [f.name for f in add]
@@ -260,7 +260,6 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
             return summary
     tag = uuid.uuid4().hex[:12]
     scratch = os.path.join(out_dir, f"_compact-{tag}-src")
-    data_dir = os.path.join(out_dir, "data")
     try:
         # Stage the source once: lineage cut + exactly-one evaluation.
         # Target columns are cast to the declared schema; extra
@@ -312,17 +311,9 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
             ranges = {int(p): (r["kmin"], r["kmax"]) for p in committed}
 
         actions: list[dict] = []
-        verify_swaps: list[tuple[int, list[str]]] = []
-        # scan with PHYSICAL names (what files hold; identity until an
-        # ALTER), alias to logical right after each read — the whole
-        # merge dataflow below speaks logical names
-        from pyspark.sql.types import StructField
-        _cm_eff = eff_meta.get("column_mapping") or {}
-        pdeclared = StructType([
-            StructField(_cm_eff.get(f.name, f.name), f.dataType,
-                        f.nullable, f.metadata)
-            for f in declared.fields])
-        reader = spark.read.schema(pdeclared)
+        swaps: dict[int, list[str]] = {}
+        # the whole merge dataflow speaks logical names; only the
+        # manifest stats are keyed physically
         pkey = physical_name(eff_meta, key)
         cond = F.expr(matched_condition) if matched_condition \
             else F.lit(True)
@@ -364,20 +355,13 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
             # is bounded by the candidate-file count.
             touched: dict[int, dict[str, tuple[int, int]]] = {}
             if cand_by_part:
-                all_paths, dv_all = [], {}
-                for part, (cand, marker) in cand_by_part.items():
-                    pdir = os.path.join(data_dir, f"part={part}")
-                    all_paths += [os.path.join(pdir, f) for f in cand]
-                    for fn, rows_ in (marker.get("dv") or {}).items():
-                        if fn in cand:
-                            dv_all[os.path.join(pdir, fn)] = rows_
-                t_all = _apply_dv(spark, reader.parquet(*all_paths),
-                                  dv_all)
-                fparts = F.split(F.col("_metadata.file_path"), "/")
-                t_all = to_logical(t_all.withColumn(
-                    "__path", F.concat_ws(
-                        "/", F.element_at(fparts, -2),
-                        F.element_at(fparts, -1))), eff_meta)
+                # the target's `part` is dropped (as in the rewrite):
+                # a clause condition naming `part` means the source's
+                t_all = _scan_committed(
+                    spark, out_dir, eff_meta,
+                    {p: c for p, (c, _m) in cand_by_part.items()},
+                    {p: m.get("dv") for p, (_c, m) in cand_by_part.items()},
+                    path_col="__path").drop("part")
                 for r in (t_all.alias("t")
                           .join(src.alias("s"),
                                 F.col(f"t.{key}") == F.col(f"s.{key}"),
@@ -403,57 +387,29 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
             # Spark jobs from a driver thread pool — staged files are
             # invisible until the single commit below, so concurrency
             # never weakens atomicity.
+            def _merged(t):
+                j = t.drop("part").alias("t").join(
+                    src.alias("s"),
+                    F.col(f"t.{key}") == F.col(f"s.{key}"), "left")
+                if when_matched == "update":
+                    return j.filter(~del_hit).select(*[
+                        F.when(upd_hit, F.col(f"s.{c}"))
+                        .otherwise(F.col(f"t.{c}")).alias(c)
+                        for c in cols])
+                # delete: upd_hit marks the rows to remove
+                return j.filter(~upd_hit) \
+                    .select(*[F.col(f"t.{c}").alias(c) for c in cols])
+
             def _rewrite_part(part: int) -> dict:
                 _cand, marker = cand_by_part[part]
                 tfiles = sorted(touched[part])
                 n_del = sum(d for d, _ in touched[part].values())
                 n_upd = sum(u for _, u in touched[part].values())
-                files = marker.get("files") or {}
-                pdir = os.path.join(data_dir, f"part={part}")
-                paths = [os.path.join(pdir, f) for f in tfiles]
-                dv = {f: rows_ for f, rows_ in
-                      (marker.get("dv") or {}).items() if f in tfiles}
-                before = sum(int(files[f].get("n_rows", 0))
-                             for f in tfiles) \
-                    - sum(len(v) for v in dv.values())
-                t = to_logical(_apply_dv(
-                    spark, reader.parquet(*paths),
-                    {os.path.join(pdir, f): r for f, r in dv.items()}),
-                    eff_meta)
-                j = t.alias("t").join(
-                    src.alias("s"),
-                    F.col(f"t.{key}") == F.col(f"s.{key}"), "left")
-                if when_matched == "update":
-                    out = j.filter(~del_hit).select(*[
-                        F.when(upd_hit, F.col(f"s.{c}"))
-                        .otherwise(F.col(f"t.{c}")).alias(c)
-                        for c in cols])
-                    expect = before - n_del
-                else:  # delete: upd_hit marks the rows to remove
-                    out = j.filter(~upd_hit) \
-                        .select(*[F.col(f"t.{c}").alias(c) for c in cols])
-                    expect = before - n_upd
-                staging = os.path.join(out_dir,
-                                       f"_compact-{tag}-p{part}")
-                (to_physical(out, eff_meta)
-                 .coalesce(max(1, len(tfiles))).write.parquet(staging))
-                man, new_stats, after, i = {}, {}, 0, 0
-                for f in sorted(os.listdir(staging)):
-                    if not f.endswith(".parquet"):
-                        continue
-                    fsrc = os.path.join(staging, f)
-                    rows = pq.ParquetFile(fsrc).metadata.num_rows
-                    if rows == 0:
-                        continue
-                    newname = f"merge-{tag}-{part}-{i:05d}.parquet"
-                    man[newname] = {"n_rows": int(rows),
-                                    "n_bytes": os.path.getsize(fsrc)}
-                    new_stats[newname] = file_column_stats(
-                        fsrc, stats_columns(eff_meta))
-                    after += int(rows)
-                    os.replace(fsrc, os.path.join(pdir, newname))
-                    i += 1
-                shutil.rmtree(staging, ignore_errors=True)
+                man, new_stats, before, after = _rewrite_files(
+                    spark, out_dir, eff_meta, part, marker, tfiles,
+                    _merged, len(tfiles), "merge")
+                expect = before - (n_del if when_matched == "update"
+                                   else n_upd)
                 if after != expect:
                     raise RuntimeError(
                         f"merge rewrite of part {part} produced {after} "
@@ -483,7 +439,7 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
                                     "add_files": r["man"],
                                     "stats": r["stats"],
                                     "updated_at": now})
-                    verify_swaps.append((r["part"], r["tfiles"]))
+                    swaps[r["part"]] = r["tfiles"]
                     summary["files_rewritten"] += len(r["tfiles"])
                     summary["parts_touched"].append(r["part"])
 
@@ -508,65 +464,24 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
              .repartition("part").write.partitionBy("part")
              .parquet(staging))
             from datetime import datetime, timezone
-            for d in sorted(os.listdir(staging)):
-                if not d.startswith("part="):
-                    continue
-                part = int(d.split("=", 1)[1])
-                pdir = os.path.join(data_dir, f"part={part}")
-                os.makedirs(pdir, exist_ok=True)
-                man, new_stats, n_rows, i = {}, {}, 0, 0
-                for f in sorted(os.listdir(os.path.join(staging, d))):
-                    if not f.endswith(".parquet"):
-                        continue
-                    fsrc = os.path.join(staging, d, f)
-                    rows = pq.ParquetFile(fsrc).metadata.num_rows
-                    if rows == 0:
-                        continue
-                    newname = f"merge-{tag}-ins-{part}-{i:05d}.parquet"
-                    man[newname] = {"n_rows": int(rows),
-                                    "n_bytes": os.path.getsize(fsrc)}
-                    new_stats[newname] = file_column_stats(
-                        fsrc, stats_columns(eff_meta))
-                    n_rows += int(rows)
-                    os.replace(fsrc, os.path.join(pdir, newname))
-                    i += 1
-                if not man:
-                    continue
+            now = datetime.now(timezone.utc).isoformat()
+            for part, (man, new_stats, n_rows) in sorted(_land_staged(
+                    out_dir, staging, eff_meta, "merge").items()):
                 actions.append({"type": "add_files", "part": part,
                                 "files": man, "n_rows": n_rows,
                                 "run_id": f"merge-{tag}",
-                                "stats": new_stats,
-                                "updated_at": datetime.now(
-                                    timezone.utc).isoformat()})
+                                "stats": new_stats, "updated_at": now})
                 summary["rows_inserted"] += n_rows
                 summary["files_added"] += len(man)
                 if part not in summary["parts_touched"]:
                     summary["parts_touched"].append(part)
-            shutil.rmtree(staging, ignore_errors=True)
 
         if not actions:
             return summary
-        cons = dict(meta.get("constraints") or {})
-        if cons:
-            # CHECK enforcement: validate every staged/placed output
-            # file BEFORE the commit publishes (violation → abort, the
-            # placed files are vacuum-able orphans). Rewritten
-            # survivors re-validate for free — the table is fully
-            # valid by induction (add_constraint scanned existing
-            # rows), so only genuinely new values can fail.
-            from .constraints import check_df, check_files
-            new_paths = [
-                os.path.join(data_dir, f"part={a['part']}", fn)
-                for a in actions if a["type"] in ("delete", "add_files")
-                for fn in (a.get("add_files") or a.get("files") or {})]
-            if eff_meta.get("column_mapping") and new_paths:
-                # constraint expressions speak logical names; placed
-                # files hold physical — validate through the aliasing
-                check_df(to_logical(spark.read.parquet(*new_paths),
-                                    eff_meta),
-                         cons, where=" by MERGE")
-            else:
-                check_files(spark, new_paths, cons, where=" by MERGE")
+        # CHECK enforcement. Rewritten survivors re-validate for free —
+        # the table is fully valid by induction (add_constraint scanned
+        # existing rows), so only genuinely new values can fail.
+        _check_constraints(spark, out_dir, eff_meta, actions, "MERGE")
         if schema_action is not None:
             # the widened schema and the data that needs it land in
             # ONE version (Delta commits metaData + adds together); a
@@ -582,18 +497,9 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
         summary["version"] = int(ver)
         summary["parts_touched"].sort()
         # Optimistic-concurrency check (Delta raises on MERGE-vs-
-        # OPTIMIZE): every swap must have applied — each removed file
-        # still referenced at ver-1 — else replay silently ignored it.
-        for part, cand in verify_swaps:
-            prev_files = set(((ledger.committed(version=ver - 1)
-                               .get(int(part)) or {}).get("files") or {}))
-            if not set(cand) <= prev_files:
-                raise ConcurrentMergeError(
-                    f"MERGE v{ver} conflicted on part {part}: files "
-                    f"{sorted(set(cand) - prev_files)} were replaced by "
-                    "a concurrent rewrite and the swap was ignored — "
-                    "retry the merge (inserts that landed re-match as "
-                    "same-value updates)")
+        # OPTIMIZE); a retry converges — inserts that landed re-match
+        # as same-value updates
+        _check_swaps(ledger, ver, swaps, ConcurrentMergeError, "MERGE")
         return summary
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

@@ -212,8 +212,7 @@ def run_pipeline_staged(spark, transcripts: DataFrame, scored_path: str,
 
 
 def run_pipeline_df(transcripts: DataFrame,
-                    broadcast_conv_aggs: bool | None = None,
-                    persist_scored: bool = True) -> DataFrame:
+                    broadcast_conv_aggs: bool | None = None) -> DataFrame:
     """Full quality-filter plan: transcripts → OUTPUT_SCHEMA columns.
 
     broadcast_conv_aggs: True forces a broadcast join of the per-conv
@@ -221,17 +220,15 @@ def run_pipeline_df(transcripts: DataFrame,
     False forces shuffle join (right at 10^10-conv scale); None (default)
     leaves the choice to Catalyst/AQE statistics.
 
-    persist_scored: the scored stage feeds BOTH the conversation
-    aggregation and the final join — without materialization the
-    expensive Python scoring stage would execute twice. Locally we
-    persist(MEMORY_AND_DISK); the checkpointing runner instead writes
-    the scored stage to the output table per partition (its resume
-    unit) and re-reads it, which is the 100 TB-scale shape.
+    The scored stage feeds BOTH the conversation aggregation and the
+    final join, so it is persisted (MEMORY_AND_DISK) — without that the
+    expensive Python scoring stage would execute twice. The
+    checkpointing runner instead writes the scored stage to scratch
+    parquet and re-reads it (run_pipeline_staged), which is the
+    100 TB-scale shape.
     """
-    scored = score_turns(transcripts)
-    if persist_scored:
-        from pyspark import StorageLevel
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
+    from pyspark import StorageLevel
+    scored = score_turns(transcripts).persist(StorageLevel.MEMORY_AND_DISK)
     conv = conversation_aggregates(scored)
     if broadcast_conv_aggs is True:
         conv = F.broadcast(conv)

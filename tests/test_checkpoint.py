@@ -207,9 +207,9 @@ def test_concurrent_shards_do_not_clobber(spark, small_input, tmp_path,
     clean = str(tmp_path / "conc_clean")
     with ThreadPoolExecutor(2) as ex:
         f1 = ex.submit(run_checkpointed, spark, small_input, crashed,
-                       None, [0, 1], None, True, False)
+                       only_parts=[0, 1])
         f2 = ex.submit(run_checkpointed, spark, small_input, crashed,
-                       None, [2, 3], None, True, False)
+                       only_parts=[2, 3])
         r1, r2 = f1.result(timeout=300), f2.result(timeout=300)
     assert r1["parts_committed"] == 2 and r2["parts_committed"] == 2
     assert committed_parts(crashed) == {0, 1, 2, 3}

@@ -187,7 +187,8 @@ def test_foreign_log_with_nonint_partition(spark, tmp_path):
 
 def test_foreign_multi_row_group_file_matches_read_delta(spark, tmp_path):
     """A foreign file of several row groups is streamed in batches by
-    the shared reader and reads the same rows as read_delta."""
+    the shared reader and reads the same rows, under the same schema,
+    as read_delta."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -223,8 +224,10 @@ def test_foreign_multi_row_group_file_matches_read_delta(spark, tmp_path):
     spark.dataSource.register(DeltaFeedDataSource)
     got = spark.read.format("delta_feed").load(root)
     want = read_delta(spark, root)
-    assert [(f.name, f.dataType) for f in got.schema] == \
-        [(f.name, f.dataType) for f in want.schema]
+    # names, types AND nullability: the string partition column is
+    # nullable in the log, so both readers must say so
+    assert got.schema == want.schema
+    assert want.schema["region"].nullable
     rows = sorted((r["id"], r["region"]) for r in got.collect())
     assert rows == sorted((r["id"], r["region"]) for r in want.collect())
     assert rows == [(i, "eu") for i in range(n)]

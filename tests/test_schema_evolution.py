@@ -14,10 +14,11 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
-    _merge_schema_json, file_column_stats, make_ledger, read_committed,
-    record_table_schema, run_checkpointed)
+    _merge_schema_json, compact_partition, file_column_stats, make_ledger,
+    read_committed, record_table_schema, run_checkpointed)
 
 
 @pytest.fixture(scope="module")
@@ -28,6 +29,32 @@ def table(spark, tmp_path_factory):
     out = str(base / "out")
     run_checkpointed(spark, p, out)
     return out
+
+
+def _gold_rows(spark, table: str, part: int):
+    """20 rows of `part` carrying a NEW column quality_tag = 'gold'.
+    when() keeps the new column nullable — a bare lit() is non-nullable
+    and record_table_schema rightly refuses it."""
+    return (read_committed(spark, table).filter(f"part = {part}").limit(20)
+            .withColumn("quality_tag",
+                        F.when(F.col("conv_id").isNotNull(), "gold"))
+            .drop("part"))
+
+
+def _append_file(ledger, table: str, part: int, df, name: str) -> None:
+    """A widened writer's append: `df` lands in `part` as one file
+    named `name`, after a merged-meta commit records its schema."""
+    staging = os.path.join(table, f"_stage-{uuid.uuid4().hex[:8]}")
+    df.coalesce(1).write.parquet(staging)
+    [src] = [os.path.join(staging, f) for f in os.listdir(staging)
+             if f.endswith(".parquet")]
+    man = {name: {"n_rows": pq.ParquetFile(src).metadata.num_rows,
+                  "n_bytes": os.path.getsize(src)}}
+    stats = {name: file_column_stats(src)}
+    os.replace(src, os.path.join(table, "data", f"part={part}", name))
+    record_table_schema(ledger, df.schema)
+    ledger.append_part(part, man, man[name]["n_rows"], f"wide-{name}",
+                       stats=stats)
 
 
 def test_schema_recorded_and_used_for_planning(spark, table):
@@ -42,31 +69,9 @@ def test_schema_recorded_and_used_for_planning(spark, table):
 def test_additive_widening_old_files_read_null(spark, table):
     ledger = make_ledger(table)
     base_rows = read_committed(spark, table).count()
-
-    # a widened writer appends 20 rows carrying a NEW column
-    # when() keeps the new column nullable — a bare lit() is
-    # non-nullable and record_table_schema rightly refuses it
-    wide = (read_committed(spark, table).filter("part = 0").limit(20)
-            .withColumn("quality_tag",
-                        F.when(F.col("conv_id").isNotNull(), "gold"))
-            .drop("part"))
+    wide = _gold_rows(spark, table, 0)
     n_new = wide.count()
-    tag = uuid.uuid4().hex[:8]
-    staging = os.path.join(table, f"_stage-{tag}")
-    wide.coalesce(1).write.parquet(staging)
-    pdir = os.path.join(table, "data", "part=0")
-    man, stats = {}, {}
-    for fn in sorted(os.listdir(staging)):
-        if not fn.endswith(".parquet"):
-            continue
-        newname = f"{tag}-{fn}"
-        src = os.path.join(staging, fn)
-        man[newname] = {"n_rows": pq.ParquetFile(src).metadata.num_rows,
-                        "n_bytes": os.path.getsize(src)}
-        stats[newname] = file_column_stats(src)
-        os.replace(src, os.path.join(pdir, newname))
-    record_table_schema(ledger, wide.schema)   # merged-meta commit
-    ledger.append_part(0, man, n_new, f"wide-{tag}", stats=stats)
+    _append_file(ledger, table, 0, wide, f"{uuid.uuid4().hex[:8]}.parquet")
 
     df = read_committed(spark, table)
     assert "quality_tag" in df.columns
@@ -78,6 +83,23 @@ def test_additive_widening_old_files_read_null(spark, table):
     # not retroactive data: those snapshots simply predate the rows
     assert df.filter("quality_tag IS NOT NULL").select("conv_id").count() \
         == n_new
+
+
+def test_compaction_keeps_evolved_columns(spark, table, tmp_path):
+    """Compaction plans with the declared schema, like every other
+    rewrite: a column added by additive evolution survives it. The
+    widened file is named to sort last, so a footer-inferred read would
+    take the schema from an older file and drop the column."""
+    out = copy_table(table, tmp_path / "t")
+    ledger = make_ledger(out)
+    _append_file(ledger, out, 1, _gold_rows(spark, out, 1),
+                 "zzzz-widened.parquet")
+    rows = read_committed(spark, out).count()
+    r = compact_partition(spark, out, 1, target_files=1)
+    assert r["compacted"] and r["files_after"] == 1
+    df = read_committed(spark, out)
+    assert df.count() == rows
+    assert df.filter("part = 1 AND quality_tag = 'gold'").count() == 20
 
 
 def test_type_change_and_nonnullable_refused():
