@@ -35,7 +35,7 @@ from .pipeline import run_pipeline_df
 
 class QualityFilter:
     def __init__(self, cache_dir: str | None = None,
-                 broadcast_conv_aggs: bool | None = None,
+                 broadcast_conv_aggs: bool = False,
                  params: dict | None = None,
                  strict: bool = False,
                  ledger_backend: str = "commitlog") -> None:

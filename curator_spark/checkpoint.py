@@ -54,6 +54,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import operator
 import os
 import time
 from datetime import datetime, timezone
@@ -415,8 +416,11 @@ class CommitLogLedger:
             vs = [fn for fn in vs if int(fn[1:-5]) <= int(upto)]
         return vs
 
-    def _append(self, actions: list[dict]) -> int:
-        """Publish one commit containing `actions`; returns its version."""
+    def _append(self, actions: list[dict], precondition=None) -> int:
+        """Publish one commit containing `actions`; returns its version.
+        `precondition(n)`, when given, runs before each attempt to
+        publish version n and raises to abandon the commit: a check
+        against exactly the state v(n-1) the commit would apply to."""
         os.makedirs(self.dir, exist_ok=True)
         # writer gate: a table whose protocol demands a writer version /
         # feature this build lacks must not be appended to (the replay
@@ -433,10 +437,15 @@ class CommitLogLedger:
         # atomic put-if-absent, full content; losing the race means a
         # concurrent writer owns this number — retry at the next one
         # (optimistic concurrency, no lost updates). A lost race also
-        # re-checks the writer gate: the commit we lost to may have been
-        # a protocol upgrade (Delta's recheck-on-conflict rule)
-        while not self.store.put_if_absent(
-                os.path.join(self.dir, f"v{n:012d}.json"), payload):
+        # re-checks the writer gate (the commit we lost to may have been
+        # a protocol upgrade — Delta's recheck-on-conflict rule) and the
+        # precondition
+        while True:
+            if precondition is not None:
+                precondition(n)
+            if self.store.put_if_absent(
+                    os.path.join(self.dir, f"v{n:012d}.json"), payload):
+                break
             n += 1
             _check_writer_protocol(self._replay()[2].get("_protocol"))
         if n % self.CKPT_INTERVAL == 0:
@@ -844,7 +853,7 @@ class CommitLogLedger:
                               "updated_at":
                               datetime.now(timezone.utc).isoformat()}])
 
-    def merge_commit(self, actions: list[dict]) -> int:
+    def merge_commit(self, actions: list[dict], precondition=None) -> int:
         """Publish a MERGE's full action set — per-partition file swaps
         (``delete`` actions carrying the matched legs' rewrites) plus
         ``add_files`` actions carrying the not-matched inserts — as ONE
@@ -852,8 +861,9 @@ class CommitLogLedger:
         without the inserts (Delta writes MERGE the same way: one
         commit, many remove/add actions). Each action replays under its
         own existing rule, including the stale-swap conflict rule the
-        caller (merge.py) verifies post-commit. Returns the version."""
-        return self._append(list(actions))
+        caller verifies post-commit, or before it with `precondition`
+        (see _append). Returns the version."""
+        return self._append(list(actions), precondition)
 
     def add_dv(self, marks: list[tuple[int, str, list[int]]]) -> int:
         """Publish deletion vectors: for each (part, file, positions),
@@ -1026,16 +1036,19 @@ def _stats_value(v):
     return None
 
 
-def file_column_stats(path: str, columns=STATS_COLUMNS) -> dict:
+def file_column_stats(source, columns=STATS_COLUMNS) -> dict:
     """Per-file {col: {"min": .., "max": .., "nulls": n}} aggregated
-    over the parquet footer's row-group statistics — no data I/O (the
-    footer is already read for n_rows at commit time). A column whose
+    over the parquet footer's row-group statistics — no data I/O.
+    `source` is a file path or its already-read footer (pyarrow
+    FileMetaData, as `_land_staged` holds for n_rows — passing it
+    saves a second open, a GET on an object store). A column whose
     stats any row group omits (or that only holds nulls) is dropped for
     the whole file: min/max must be a sound bound over EVERY row or the
     reader would skip files that match. Parquet guarantees recorded
     min <= all values <= max, so pruning on these is exact."""
     import pyarrow.parquet as pq
-    md = pq.ParquetFile(path).metadata
+    md = source if isinstance(source, pq.FileMetaData) \
+        else pq.ParquetFile(source).metadata
     POISON = "__unbounded__"
     out: dict = {}
     for rg in range(md.num_row_groups):
@@ -1076,7 +1089,7 @@ def file_column_stats(path: str, columns=STATS_COLUMNS) -> dict:
     return {k: v for k, v in out.items() if isinstance(v, dict)}
 
 
-_WHERE_OPS = ("=", "<", "<=", ">", ">=")
+_WHERE_OPS = ("=", "<", "<=", ">", ">=", "in")
 
 # Named bucket transforms (Iceberg's bucket[N] partition transform).
 # Partition pruning from a predicate is only sound when the reader
@@ -1223,16 +1236,41 @@ def _normalize_where(where):
     for col, op, val in where:
         if op not in _WHERE_OPS:
             raise ValueError(f"unsupported op {op!r}; one of {_WHERE_OPS}")
+        if op == "in":
+            val = [] if isinstance(val, (str, bytes)) \
+                or not hasattr(val, "__iter__") else list(val)
+            if not val:
+                raise ValueError(f"op 'in' takes a non-empty list of "
+                                 f"values (column {col!r})")
         out.append((str(col), op, val))
     return out
+
+
+_COMPARE = {"=": operator.eq, "<": operator.lt, "<=": operator.le,
+            ">": operator.gt, ">=": operator.ge}
+
+
+def _where_column(where):
+    """The conjunction `where` (see _normalize_where) as one Spark
+    boolean Column, `in` as `isin` — the residual filter every
+    predicate read and DML applies on top of file skipping. None when
+    `where` is empty."""
+    cond = None
+    for col, op, val in _normalize_where(where):
+        c = F.col(col).isin(val) if op == "in" \
+            else _COMPARE[op](F.col(col), F.lit(val))
+        cond = c if cond is None else (cond & c)
+    return cond
 
 
 def _file_may_match(stats: dict | None, col: str, op: str, val) -> bool:
     """False only when the file's [min, max] PROVES no row satisfies
     `col op val` — missing/foreign-kind stats keep the file (skipping
     must never drop a matching row). Null-only columns never satisfy a
-    comparison, so {"min": None} prunes."""
+    comparison, so {"min": None} prunes. `in` (a list) is "any `=`"."""
     from datetime import datetime as _dt
+    if op == "in":
+        return any(_file_may_match(stats, col, "=", v) for v in val)
     s = (stats or {}).get(col)
     if not isinstance(s, dict):
         return True
@@ -1281,6 +1319,105 @@ def _file_may_match(stats: dict | None, col: str, op: str, val) -> bool:
     if op == ">":
         return mx > val
     return mx >= val  # >=
+
+
+def _table_bucket(meta: dict, col: str | None = None) -> dict | None:
+    """The table's recorded bucket spec when it names a known transform
+    (and, given `col`, buckets on that column), else None."""
+    b = meta.get("bucket") or {}
+    if b.get("fn") in BUCKET_FNS and b.get("n_parts") and b.get("col") \
+            and col in (None, b["col"]):
+        return b
+    return None
+
+
+def _bucket_column(bucket: dict):
+    """The bucket transform of `bucket` (a spec with a known fn) over
+    its column as a Spark int Column: an Arrow-batched pandas UDF over
+    the same BUCKET_FNS entry the planner prunes with, so a writer's
+    routing and the reader's pruning cannot disagree. Values hash by
+    their string form."""
+    from pyspark.sql.functions import pandas_udf
+    fn, n = BUCKET_FNS[bucket["fn"]], int(bucket["n_parts"])
+
+    def _bucket(s):
+        return s.map(lambda v: fn(v, n)).astype("int32")
+
+    return pandas_udf(_bucket, "int")(F.col(bucket["col"]).cast("string"))
+
+
+def _key_ranges(keys: DataFrame, key: str, bucket: dict | None,
+                committed: dict) -> dict:
+    """{part: (kmin, kmax)} over the non-null `key` values of `keys`,
+    in ONE Spark job: per bucket when `bucket` (the table's spec on
+    `key`, `_table_bucket(meta, key)`) is given — parts no key hashes
+    to are absent — else the global range for every committed part.
+    Only O(n_parts) values reach the driver, whatever the key volume."""
+    agg = (F.min(key).alias("kmin"), F.max(key).alias("kmax"))
+    if bucket:
+        return {int(r["part"]): (r["kmin"], r["kmax"]) for r in
+                keys.groupBy(_bucket_column(bucket).alias("part"))
+                .agg(*agg).collect()}
+    r = keys.agg(*agg).collect()[0]
+    return {int(p): (r["kmin"], r["kmax"]) for p in committed}
+
+
+def _plan_files(committed: dict, meta: dict, where=None,
+                key_ranges: tuple[str, dict] | None = None
+                ) -> tuple[dict, int]:
+    """The one file-pruning planner (Delta/Iceberg scan planning, from
+    the log alone — zero data I/O): ({part: [candidate file]},
+    files_untouched) over the snapshot `committed` {part: marker}.
+
+    `where` is a conjunction of LOGICAL (col, op, value) triples;
+    `key_ranges` is (key, {part: (kmin, kmax)}) — per-part key bounds,
+    as `_key_ranges` computes them. A part is pruned by a predicate on
+    `part`, by the table's bucket transform (an `=` or `in` on the
+    bucketed column pins the parts its values hash to), or by being
+    absent from `key_ranges`; a file of a surviving part is pruned when
+    its stats or Bloom filter prove no row satisfies `where` or falls
+    in the part's key range (`_file_may_match`). Missing stats always
+    keep a file: pruning is sound, never speculative."""
+    conj = _normalize_where(where)
+    bucket = _table_bucket(meta)
+    keep_parts: set[int] | None = None
+    for c, op, v in conj:
+        # `part` and the bucket column are never renameable, so the
+        # logical names here are the physical ones
+        if c == "part":
+            ok = {int(p) for p in committed if _file_may_match(
+                {"part": {"min": int(p), "max": int(p), "nulls": 0}},
+                "part", op, v)}
+        elif bucket and c == bucket["col"] and op in ("=", "in"):
+            ok = {BUCKET_FNS[bucket["fn"]](x, bucket["n_parts"])
+                  for x in (v if op == "in" else [v])}
+        else:
+            continue
+        keep_parts = ok if keep_parts is None else keep_parts & ok
+    # footer stats are keyed by the immutable PHYSICAL names files hold
+    conj = [(physical_name(meta, c), op, v) for c, op, v in conj]
+    by_part: dict[int, list] = {}
+    if key_ranges is not None:
+        pkey = physical_name(meta, key_ranges[0])
+        by_part = {int(p): [(pkey, ">=", lo), (pkey, "<=", hi)]
+                   for p, (lo, hi) in key_ranges[1].items()}
+        keep_parts = set(by_part) if keep_parts is None \
+            else keep_parts & set(by_part)
+
+    files: dict[int, list[str]] = {}
+    untouched = 0
+    for part, marker in sorted(committed.items()):
+        names = sorted((marker or {}).get("files") or {})
+        stats = (marker or {}).get("stats") or {}
+        part_conj = conj + by_part.get(int(part), [])
+        keep = [] if keep_parts is not None and int(part) not in keep_parts \
+            else [fn for fn in names
+                  if all(_file_may_match(stats.get(fn), c, op, v)
+                         for c, op, v in part_conj)]
+        untouched += len(names) - len(keep)
+        if keep:
+            files[int(part)] = keep
+    return files, untouched
 
 
 def _merge_schema_json(old: dict, new: dict) -> dict:
@@ -1729,7 +1866,7 @@ def _stage_scored(spark: SparkSession, ledger, result: DataFrame,
 def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
                      params: dict | None = None,
                      only_parts: list[int] | None = None,
-                     broadcast_conv_aggs: bool | None = None,
+                     broadcast_conv_aggs: bool = False,
                      strict: bool = False,
                      ledger_backend: str = "commitlog",
                      bucket: dict | None = None) -> dict:
@@ -2029,51 +2166,9 @@ def _snapshot_plan(out_dir: str,
     gate makes builds that can't refuse the table wholesale)."""
     committed, _success, meta, _txns = \
         make_ledger(out_dir).snapshot(version=version)
-    bucket = meta.get("bucket") or {}
-    conj = _normalize_where(where)
-    # predicates arrive in LOGICAL column names; footer stats are keyed
-    # by the immutable PHYSICAL names files actually hold — translate
-    # once (identity when column mapping is inactive; `part` and the
-    # bucket column are never renameable, so their branches below see
-    # unchanged names)
-    conj = [(physical_name(meta, c), op, v) for c, op, v in conj]
-
-    # Partition-level pruning, decided from the log alone:
-    # * an explicit predicate on the `part` bucket column;
-    # * bucket-transform pruning (Iceberg's bucket[N]): when the log's
-    #   table_meta records the bucket spec, an EQUALITY predicate on
-    #   the bucketed column pins the one partition its value hashes to.
-    keep_parts: set[int] | None = None
-
-    def _restrict(parts_ok):
-        nonlocal keep_parts
-        keep_parts = set(parts_ok) if keep_parts is None \
-            else keep_parts & set(parts_ok)
-
-    for c, op, v in conj:
-        if c == "part":
-            _restrict(p for p in committed
-                      if _file_may_match({"part": {"min": int(p),
-                                                   "max": int(p),
-                                                   "nulls": 0}},
-                                         "part", op, v))
-        elif (op == "=" and bucket.get("col") == c
-              and bucket.get("fn") in BUCKET_FNS and bucket.get("n_parts")):
-            _restrict([BUCKET_FNS[bucket["fn"]](v, bucket["n_parts"])])
-
-    files: dict[int, list[str]] = {}
-    dv: dict[int, dict] = {}
-    for part, marker in sorted(committed.items()):
-        if keep_parts is not None and int(part) not in keep_parts:
-            continue
-        stats = (marker or {}).get("stats") or {}
-        keep = [fn for fn in sorted((marker or {}).get("files") or {})
-                if all(_file_may_match(stats.get(fn), c, op, v)
-                       for c, op, v in conj)]
-        if keep:
-            files[int(part)] = keep
-            dv[int(part)] = (marker or {}).get("dv") or {}
-    return files, meta, dv
+    files, _untouched = _plan_files(committed, meta, where)
+    return files, meta, {p: (committed[p] or {}).get("dv") or {}
+                         for p in files}
 
 
 def _file_paths(out_dir: str, files: dict) -> list[str]:
@@ -2172,9 +2267,10 @@ def _land_staged(out_dir: str, staging: str, meta: dict, verb: str,
                  part: int | None = None) -> dict[int, tuple]:
     """Move the parquet files a Spark write left in `staging` into
     data/part=K — `staging` is flat (every file belongs to `part`) or
-    Spark's partitionBy layout (`part=K/` subdirs). Each file's footer
-    gives its manifest entry (rows, bytes) and its column stats (keyed
-    by the physical names files hold); zero-row files are skipped.
+    Spark's partitionBy layout (`part=K/` subdirs). Each file's footer,
+    opened once, gives its manifest entry (rows, bytes) and its column
+    stats (keyed by the physical names files hold); zero-row files are
+    skipped.
     Files are named `<verb>-<tag>-<part>-<i>.parquet` under a tag
     unique to this call, so concurrent writers never collide. Removes
     `staging`; returns {part: (manifest, stats, n_rows)} for each part
@@ -2201,13 +2297,13 @@ def _land_staged(out_dir: str, staging: str, meta: dict, verb: str,
             if not fn.endswith(".parquet"):
                 continue
             fsrc = os.path.join(src, fn)
-            rows = pq.ParquetFile(fsrc).metadata.num_rows
-            if not rows:
+            md = pq.ParquetFile(fsrc).metadata
+            if not md.num_rows:
                 continue
             name = f"{verb}-{tag}-{p}-{len(man):05d}.parquet"
-            man[name] = {"n_rows": int(rows),
+            man[name] = {"n_rows": int(md.num_rows),
                          "n_bytes": os.path.getsize(fsrc)}
-            stats[name] = file_column_stats(fsrc, cols)
+            stats[name] = file_column_stats(md, cols)
             os.makedirs(dst, exist_ok=True)
             os.replace(fsrc, os.path.join(dst, name))
         if man:
@@ -2242,12 +2338,13 @@ def _rewrite_files(spark: SparkSession, out_dir: str, meta: dict,
 
 def _check_swaps(ledger, ver: int, swaps: dict, error: type,
                  verb: str) -> None:
-    """The stale-swap check after a commit at `ver`: replay honours a
-    swap only while every file it removes is still live at ver-1 and
-    silently ignores it otherwise (a concurrent compaction or recompute
-    replaced the file first). `swaps` is {part: removed files}; the log
-    is replayed once. Raises `error` rather than let the caller report
-    a mutation that never applied."""
+    """The stale-swap check for a commit at `ver` — after it publishes,
+    or before as its precondition: replay honours a swap only while
+    every file it removes is still live at ver-1 and silently ignores
+    it otherwise (a concurrent compaction or recompute replaced the
+    file first). `swaps` is {part: removed files}; the log is replayed
+    once. Raises `error` rather than let the caller report a mutation
+    that never applied."""
     prev = ledger.committed(version=ver - 1)
     stale = {int(p): sorted(set(fs) - set(
         (prev.get(int(p)) or {}).get("files") or {}))
@@ -2257,7 +2354,7 @@ def _check_swaps(ledger, ver: int, swaps: dict, error: type,
         raise error(
             f"{verb} v{ver} conflicted with a concurrent rewrite: files "
             f"{stale} (by part) were replaced between snapshot and "
-            "commit, so replay ignored the swap — retry against the new "
+            "commit, so the swap does not apply — retry against the new "
             "snapshot")
 
 
@@ -2297,10 +2394,11 @@ def read_committed(spark: SparkSession, out_dir: str,
     returning a partial table.
 
     where: a (col, op, literal) triple or list of them (ANDed, ops
-    = < <= > >=) — applied BOTH as manifest-stats file skipping (files
-    whose min/max cannot match are never handed to Spark) and as a
-    residual DataFrame filter, so the result is exactly the predicate's
-    rows while the scan plans only the surviving files.
+    = < <= > >=, and `in` with a non-empty list) — applied BOTH as
+    manifest-stats file skipping (files whose min/max cannot match are
+    never handed to Spark) and as a residual DataFrame filter, so the
+    result is exactly the predicate's rows while the scan plans only
+    the surviving files.
 
     When the log's table_meta records a schema (every checkpointed /
     appended commitlog table), the scan PLANS with that declared schema
@@ -2326,11 +2424,8 @@ def read_committed(spark: SparkSession, out_dir: str,
                 "historical reads are bounded by the vacuum retention "
                 "window, exactly as in Delta")
     df = _scan_committed(spark, out_dir, meta, files, dv)
-    for col, op, val in _normalize_where(where):
-        c = F.col(col)
-        df = df.filter({"=": c == val, "<": c < val, "<=": c <= val,
-                        ">": c > val, ">=": c >= val}[op])
-    return df
+    cond = _where_column(where)
+    return df if cond is None else df.filter(cond)
 
 
 def table_column_minmax(out_dir: str, col: str,
@@ -3159,8 +3254,8 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
     * read EXACTLY the committed manifests' files MINUS their deletion
       vectors (the rewrite MATERIALIZES pending masks, like compaction's
       PURGE), recompute `part` with the new spec's named transform
-      (Arrow-batched pandas UDF over the same BUCKET_FNS registry the
-      planner prunes with — writer and reader cannot disagree), and
+      (`_bucket_column`, the transform the planner prunes with —
+      writer and reader cannot disagree), and
       stage per-partition files alongside the live ones;
     * verify the rewritten row count equals the live count, then
       publish ONE `rebucket` log version embedding the expected
@@ -3187,8 +3282,6 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
     Returns {rebucketed, version, n_rows, parts_before, parts_after,
     files_written, bucket}."""
     import uuid
-
-    from pyspark.sql.functions import pandas_udf
 
     if bucket.get("fn") not in BUCKET_FNS or not bucket.get("col") \
             or not bucket.get("n_parts"):
@@ -3243,18 +3336,10 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
                           {int(p): (m or {}).get("dv")
                            for p, m in committed.items()})
 
-    fn_name, n_parts = bucket["fn"], int(bucket["n_parts"])
-
-    def _bucket_series(sser):
-        f = BUCKET_FNS[fn_name]
-        return sser.map(lambda v: f(v, n_parts)).astype("int32")
-
-    _bucket_of = pandas_udf(_bucket_series, "int")
     tag = uuid.uuid4().hex[:12]
     staging = os.path.join(out_dir, f"_compact-{tag}")  # vacuum-known
-    (to_physical(src.withColumn(
-        "part", _bucket_of(F.col(bucket["col"]).cast("string"))), meta)
-     .repartition(n_parts, F.col("part"))
+    (to_physical(src.withColumn("part", _bucket_column(bucket)), meta)
+     .repartition(int(bucket["n_parts"]), F.col("part"))
      .write.partitionBy("part").parquet(staging))
 
     # recomputing a rebucketed partition from any single input part
@@ -3315,10 +3400,11 @@ def delete_conversations(spark: SparkSession, out_dir: str,
     right-to-be-forgotten operation a training-data platform must run
     at 100 TB without rewriting the table): every file that cannot
     contain a target — by the log's bucket-transform spec AND the
-    manifest min/max stats — is untouched; only candidate files are
-    read, filtered, and swapped for their rewrites in one `delete` log
-    version per partition (same stale-swap conflict rule as
-    compaction). The displaced originals stay on disk for time travel
+    manifest min/max stats and Bloom filters (`_plan_files`) — is
+    untouched; only candidate files are read, filtered, and swapped for
+    their rewrites, every partition's swaps in ONE `delete` log version
+    (all or nothing; same stale-swap conflict rule as compaction). The
+    displaced originals stay on disk for time travel
     until `vacuum` reclaims them — which is also the point at which the
     deletion is PHYSICAL, exactly as in Delta.
 
@@ -3336,52 +3422,47 @@ def delete_conversations(spark: SparkSession, out_dir: str,
     ledger = make_ledger(out_dir)
     conv_ids = sorted(set(conv_ids))
     committed, _success, meta, _txns = ledger.snapshot()
-    bucket = meta.get("bucket") or {}
-    pkey = physical_name(meta, key)  # footer stats hold physical names
-
-    keep_parts = None
-    if bucket.get("col") == key and bucket.get("fn") in BUCKET_FNS \
-            and bucket.get("n_parts"):
-        fn = BUCKET_FNS[bucket["fn"]]
-        keep_parts = {fn(c, bucket["n_parts"]) for c in conv_ids}
-
     summary = {"rows_deleted": 0, "files_rewritten": 0,
                "files_untouched": 0, "parts_touched": []}
+    files, summary["files_untouched"] = _plan_keys(committed, meta, key,
+                                                   conv_ids)
     # NULL-key rows must SURVIVE: `~isin` evaluates to NULL for a
     # NULL key and the filter would silently drop (= delete)
     # untargeted rows on any nullable key column
     targets = [str(c) for c in conv_ids]
-    cands = {}
-    for part, marker in sorted(committed.items()):
-        files = (marker or {}).get("files") or {}
-        if keep_parts is not None and int(part) not in keep_parts:
-            summary["files_untouched"] += len(files)
-            continue
-        stats = (marker or {}).get("stats") or {}
-        cand = [fn_ for fn_ in sorted(files)
-                if any(_file_may_match(stats.get(fn_), pkey, "=", c)
-                       for c in conv_ids)]
-        summary["files_untouched"] += len(files) - len(cand)
-        if cand:
-            cands[int(part)] = (cand, marker)
-    _delete_parts(spark, out_dir, ledger, meta, cands,
+    _delete_parts(spark, out_dir, ledger, meta, committed, files,
                   lambda df: df.filter((~F.col(key).isin(targets))
                                        | F.col(key).isNull()),
                   summary)
     return summary
 
 
-def _delete_parts(spark, out_dir, ledger, meta, cands: dict, keep_fn,
-                  summary: dict) -> None:
-    """The key deletes' commit loop over {part: (candidate files,
-    marker)}: rewrite each part's candidates keeping `keep_fn(df)`,
-    commit one `delete` version per part and check its swap applied. A
-    rewrite that removes nothing (a stats false positive) leaves the
-    originals alone and commits no version. Mutates `summary`."""
-    for part, (cand, marker) in sorted(cands.items()):
+def _plan_keys(committed: dict, meta: dict, key: str,
+               ids: list) -> tuple[dict, int]:
+    """The key-list deletes' plan: `_plan_files` for `key in ids`; an
+    empty `ids` targets nothing, so every file is untouched."""
+    if ids:
+        return _plan_files(committed, meta, (key, "in", ids))
+    return _plan_files(committed, meta, key_ranges=(key, {}))
+
+
+def _delete_parts(spark, out_dir, ledger, meta, committed: dict,
+                  files: dict, keep_fn, summary: dict) -> None:
+    """The key deletes' rewrite-and-commit over the planned candidates
+    {part: [file]}: rewrite every part's candidates keeping
+    `keep_fn(df)`, then publish all the `delete` swaps in ONE version
+    and check them once — a failure before that commit leaves the
+    table unchanged (the placed rewrites are orphans for vacuum), so a
+    right-to-be-forgotten request is never half-applied. A part whose
+    rewrite removes nothing (a stats false positive) keeps its
+    originals and stays out of the commit; no removal anywhere commits
+    no version. Mutates `summary`."""
+    now = datetime.now(timezone.utc).isoformat()
+    actions = []
+    for part, cand in sorted(files.items()):
         man, stats, before, after = _rewrite_files(
-            spark, out_dir, meta, part, marker, cand, keep_fn, len(cand),
-            "delete")
+            spark, out_dir, meta, part, committed[part] or {}, cand,
+            keep_fn, len(cand), "delete")
         if after > before:
             raise RuntimeError(
                 f"delete rewrite of part {part} produced {after} rows "
@@ -3390,12 +3471,20 @@ def _delete_parts(spark, out_dir, ledger, meta, cands: dict, keep_fn,
             for f in man:  # nothing to delete: the rewrites are orphans
                 os.remove(os.path.join(out_dir, "data", f"part={part}", f))
             continue
-        ver = ledger.delete_rewrite(part, cand, man, stats=stats)
-        _check_swaps(ledger, ver, {part: cand}, ConcurrentDeleteError,
-                     "delete")
+        actions.append({"type": "delete", "part": part,
+                        "remove_files": cand, "add_files": man,
+                        "stats": stats, "updated_at": now})
         summary["rows_deleted"] += before - after
         summary["files_rewritten"] += len(cand)
         summary["parts_touched"].append(part)
+    if actions:
+        # the stale-swap check runs BEFORE the version publishes, against
+        # exactly the state it applies to: a swap a concurrent rewrite
+        # made stale abandons the whole delete instead of committing the
+        # other parts' swaps
+        swaps = {a["part"]: a["remove_files"] for a in actions}
+        ledger.merge_commit(actions, precondition=lambda v: _check_swaps(
+            ledger, v, swaps, ConcurrentDeleteError, "delete"))
 
 
 def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
@@ -3417,11 +3506,11 @@ def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
     masks must refuse the whole table rather than resurrect deleted
     rows (exactly why Delta gates DVs behind a table feature).
 
-    Candidate files are pruned by the bucket transform + manifest
-    stats like the rewrite path; positions are found in ONE Spark job
-    over the candidates via `_metadata.file_path`/`row_index`.
-    Atomicity: ALL partitions' marks land in ONE log version (the
-    rewrite path commits per partition). Same conflict rule: if a
+    Candidate files are planned by `_plan_files` like the rewrite
+    path; positions are found in ONE Spark job over the candidates via
+    `_metadata.file_path`/`row_index`. Atomicity: ALL partitions' marks
+    land in ONE log version, as the rewrite path's swaps do. Same
+    conflict rule: if a
     concurrent rewrite displaced a candidate between snapshot and
     commit, replay ignored that mark — verified after commit, raising
     ConcurrentDeleteError rather than reporting rows deleted that are
@@ -3432,32 +3521,18 @@ def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
     ledger = make_ledger(out_dir)
     targets = sorted({str(c) for c in conv_ids})
     committed, _success, meta, _txns = ledger.snapshot()
-    bucket = meta.get("bucket") or {}
-    pkey = physical_name(meta, key)  # files + stats hold physical names
-    keep_parts = None
-    if bucket.get("col") == key and bucket.get("fn") in BUCKET_FNS \
-            and bucket.get("n_parts"):
-        fn = BUCKET_FNS[bucket["fn"]]
-        keep_parts = {fn(c, bucket["n_parts"]) for c in targets}
-
+    pkey = physical_name(meta, key)  # files hold physical names
     summary = {"rows_deleted": 0, "files_marked": 0,
                "files_untouched": 0, "parts_touched": []}
+    files, summary["files_untouched"] = _plan_keys(committed, meta, key,
+                                                   targets)
     data_dir = os.path.join(out_dir, "data")
     cand: list[tuple[int, str, str, set]] = []  # (part, fn, path, prior)
-    for part, marker in sorted(committed.items()):
-        files = (marker or {}).get("files") or {}
-        if keep_parts is not None and int(part) not in keep_parts:
-            summary["files_untouched"] += len(files)
-            continue
-        stats = (marker or {}).get("stats") or {}
-        dv = (marker or {}).get("dv") or {}
-        hit = [fn_ for fn_ in sorted(files)
-               if any(_file_may_match(stats.get(fn_), pkey, "=", c)
-                      for c in targets)]
-        summary["files_untouched"] += len(files) - len(hit)
-        for fn_ in hit:
-            cand.append((int(part), fn_,
-                         os.path.join(data_dir, f"part={int(part)}", fn_),
+    for part, fns in sorted(files.items()):
+        dv = (committed[part] or {}).get("dv") or {}
+        for fn_ in fns:
+            cand.append((part, fn_,
+                         os.path.join(data_dir, f"part={part}", fn_),
                          set(int(r) for r in (dv.get(fn_) or []))))
     if not cand:
         return summary
@@ -3506,29 +3581,23 @@ def delete_matching(spark: SparkSession, out_dir: str, keys: DataFrame,
     so the possibly-expensive producing plan — e.g. a fingerprint
     comparison join — runs exactly once, not once per partition), then:
     * partition pruning: each key's bucket is computed DISTRIBUTEDLY
-      with the table's recorded bucket transform (an Arrow-batched
-      pandas UDF over the same BUCKET_FNS registry the planner uses);
-      only per-part (min, max) key ranges ever reach the driver —
-      O(n_parts) state regardless of key volume;
-    * file pruning: a file is a candidate only if its manifest [min,
-      max] overlaps its partition's key range;
+      with the table's recorded bucket transform (`_key_ranges`); only
+      per-part (min, max) key ranges ever reach the driver — O(n_parts)
+      state regardless of key volume;
+    * file pruning (`_plan_files`): a file is a candidate only if its
+      manifest [min, max] overlaps its partition's key range;
     * the rewrite keeps survivors via LEFT ANTI join against the staged
       keys (NULL keys never match an anti-join probe, so NULL-key rows
       survive — same contract as delete_conversations), sharing the
-      same atomic swap + stale-swap verification core.
+      same one-version swap + stale-swap verification core.
 
     Returns {rows_deleted, files_rewritten, files_untouched,
     parts_touched, n_keys}."""
     import shutil
     import uuid
 
-    from pyspark.sql.functions import pandas_udf
-
     ledger = make_ledger(out_dir)
     committed, _success, meta, _txns = ledger.snapshot()
-    bucket = meta.get("bucket") or {}
-    pkey = physical_name(meta, key)  # footer stats hold physical names
-
     summary = {"rows_deleted": 0, "files_rewritten": 0,
                "files_untouched": 0, "parts_touched": [], "n_keys": 0}
     scratch = os.path.join(out_dir, f"_compact-{uuid.uuid4().hex[:12]}-keys")
@@ -3537,51 +3606,13 @@ def delete_matching(spark: SparkSession, out_dir: str, keys: DataFrame,
          .filter(F.col(key).isNotNull()).distinct()
          .write.parquet(scratch))
         kdf = spark.read.parquet(scratch)
-        n_keys = kdf.count()
-        summary["n_keys"] = int(n_keys)
-        if n_keys == 0:
-            summary["files_untouched"] = sum(
-                len((m or {}).get("files") or {})
-                for m in committed.values())
-            return summary
-
-        bucketed = (bucket.get("col") == key
-                    and bucket.get("fn") in BUCKET_FNS
-                    and bucket.get("n_parts"))
-        if bucketed:
-            fn_name, n_parts = bucket["fn"], int(bucket["n_parts"])
-
-            def _bucket_series(s):
-                f = BUCKET_FNS[fn_name]
-                return s.map(lambda v: f(v, n_parts)).astype("int32")
-
-            _bucket_of = pandas_udf(_bucket_series, "int")
-            ranges = {int(r["part"]): (r["kmin"], r["kmax"]) for r in
-                      (kdf.groupBy(_bucket_of(F.col(key)).alias("part"))
-                       .agg(F.min(key).alias("kmin"),
-                            F.max(key).alias("kmax")).collect())}
-        else:
-            r = kdf.agg(F.min(key).alias("kmin"),
-                        F.max(key).alias("kmax")).collect()[0]
-            ranges = {int(p): (r["kmin"], r["kmax"]) for p in committed}
-
-        cands = {}
-        for part, marker in sorted(committed.items()):
-            files = (marker or {}).get("files") or {}
-            if int(part) not in ranges:
-                summary["files_untouched"] += len(files)
-                continue
-            kmin, kmax = ranges[int(part)]
-            stats = (marker or {}).get("stats") or {}
-            # candidate iff the file's [min, max] overlaps the keys'
-            # [kmin, kmax]: may contain a row <= kmax AND a row >= kmin
-            cand = [fn_ for fn_ in sorted(files)
-                    if _file_may_match(stats.get(fn_), pkey, "<=", kmax)
-                    and _file_may_match(stats.get(fn_), pkey, ">=", kmin)]
-            summary["files_untouched"] += len(files) - len(cand)
-            if cand:
-                cands[int(part)] = (cand, marker)
-        _delete_parts(spark, out_dir, ledger, meta, cands,
+        summary["n_keys"] = n_keys = int(kdf.count())
+        # no key: every part is absent from the ranges, nothing is read
+        ranges = _key_ranges(kdf, key, _table_bucket(meta, key),
+                             committed) if n_keys else {}
+        files, summary["files_untouched"] = _plan_files(
+            committed, meta, key_ranges=(key, ranges))
+        _delete_parts(spark, out_dir, ledger, meta, committed, files,
                       lambda df: df.join(kdf, [key], "left_anti"), summary)
         return summary
     finally:

@@ -8,8 +8,7 @@ Cluster usage (the north_rule ship shape):
         -m curator_spark.cli  # or: path/to/cli.py
         --input  s3://bucket/transcripts/           \
         --output s3://bucket/curated/run1/          \
-        --partitions 4096                            \
-        --no-broadcast-aggs
+        --partitions 4096
 
 Local smoke:
 
@@ -53,9 +52,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--only-parts", type=str, default=None,
                    help="comma-separated subset of `part` buckets (sharded runs)")
     p.add_argument("--broadcast-aggs", dest="broadcast", action="store_true",
-                   default=None, help="force broadcast of conv aggregates")
-    p.add_argument("--no-broadcast-aggs", dest="broadcast", action="store_false",
-                   help="force shuffle join of conv aggregates (10^10-conv scale)")
+                   help="force broadcast of conv aggregates (default: AQE "
+                        "picks the join)")
     p.add_argument("--local-cores", type=int, default=None,
                    help="run on local[k] instead of an existing cluster session")
     p.add_argument("--strict", action="store_true",

@@ -7,11 +7,12 @@ MERGE (merge.py):
 
 * prune (metadata-only): when the predicate is a (col, op, value)
   triple — or an ANDed list of them, read_committed's `where=`
-  convention — files whose manifest [min, max] cannot match are
-  skipped without opening them. There is no bucket pruning: a
-  partition is skipped only when none of its files can match. An
-  arbitrary SQL string predicate skips this pass (nothing to prune
-  on) but still gets pass 2.
+  convention — the reads' planner (`checkpoint._plan_files`) skips
+  without opening them every partition the table's bucket transform
+  rules out (an `=`/`in` on the bucketed column) and every file whose
+  manifest stats or Bloom filter cannot match. An arbitrary SQL string
+  predicate skips this pass (nothing to prune on) but still gets
+  pass 2.
 * findTouchedFiles (one probe job): candidate rows are filtered by
   the predicate and counted per `_metadata.file_path` — only files
   actually HOLDING a matching row are rewritten.
@@ -43,9 +44,9 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .checkpoint import (
-    _check_constraints, _check_swaps, _file_may_match, _land_staged,
-    _normalize_where, _rewrite_files, _scan_committed, make_ledger,
-    physical_name, to_physical)
+    _bucket_column, _check_constraints, _check_swaps, _land_staged,
+    _plan_files, _rewrite_files, _scan_committed, _table_bucket,
+    _where_column, make_ledger, to_physical)
 
 __all__ = ["ConcurrentDMLError", "delete_where",
            "insert_overwrite_where", "update_where"]
@@ -60,46 +61,13 @@ class ConcurrentDMLError(RuntimeError):
 def _pred_column(where) -> Column:
     """Predicate from either read_committed's (col, op, value) triples
     (ANDed) or a raw Spark SQL boolean string."""
-    if isinstance(where, str):
-        return F.expr(where)
-    cond = None
-    for col, op, val in _normalize_where(where):
-        c = {"=": F.col(col) == F.lit(val),
-             "<": F.col(col) < F.lit(val),
-             "<=": F.col(col) <= F.lit(val),
-             ">": F.col(col) > F.lit(val),
-             ">=": F.col(col) >= F.lit(val)}[op]
-        cond = c if cond is None else (cond & c)
+    cond = F.expr(where) if isinstance(where, str) \
+        else _where_column(where)
     if cond is None:
         raise ValueError("empty predicate: refusing a whole-table "
                          "mutation without an explicit WHERE — pass "
                          "e.g. ('conv_id', '>=', '') to mean ALL")
     return cond
-
-
-def _stats_candidates(committed: dict, where,
-                      meta: dict | None = None) -> dict[int, tuple]:
-    """Pass 1: {part: (candidate files, marker)} via manifest stats.
-    String predicates keep every file (no structure to prune on).
-    Predicate columns arrive logical; footer stats are keyed by the
-    physical names files hold (identity until an ALTER renames)."""
-    triples = _normalize_where(where) if not isinstance(where, str) \
-        else []
-    if meta:
-        triples = [(physical_name(meta, c), op, v)
-                   for c, op, v in triples]
-    out: dict[int, tuple] = {}
-    skipped = 0
-    for part, marker in sorted(committed.items()):
-        files = (marker or {}).get("files") or {}
-        stats = (marker or {}).get("stats") or {}
-        cand = [fn for fn in sorted(files)
-                if all(_file_may_match(stats.get(fn), c, op, v)
-                       for c, op, v in triples)]
-        skipped += len(files) - len(cand)
-        if cand:
-            out[int(part)] = (cand, marker or {})
-    return out, skipped
 
 
 def _rewrite_where(spark: SparkSession, out_dir: str, where,
@@ -126,8 +94,9 @@ def _rewrite_where(spark: SparkSession, out_dir: str, where,
     summary = {"version": None, "rows_matched": 0, "files_rewritten": 0,
                "files_untouched": 0, "parts_touched": []}
     extra_actions = list(extra_actions or [])
-    cand_by_part, skipped = _stats_candidates(committed, where, meta)
-    summary["files_untouched"] += skipped
+    files, summary["files_untouched"] = _plan_files(
+        committed, meta, None if isinstance(where, str) else where)
+    cand_by_part = {p: (c, committed[p] or {}) for p, c in files.items()}
     if not cand_by_part and not extra_actions:
         return summary
 
@@ -216,8 +185,6 @@ def insert_overwrite_where(spark: SparkSession, out_dir: str,
     files_added, files_untouched, parts_touched}."""
     from pyspark.sql.types import StructType
 
-    from .checkpoint import BUCKET_FNS
-
     ledger = make_ledger(out_dir)
     _c, _s, meta, _t = ledger.snapshot()
     if not meta.get("schema"):
@@ -242,25 +209,15 @@ def insert_overwrite_where(spark: SparkSession, out_dir: str,
             "— they would land outside the replaced region (Delta "
             "raises identically)")
 
-    bucket = meta.get("bucket") or {}
+    bucket = _table_bucket(meta)
     dtypes = {f.name: f.dataType for f in declared.fields}
     staged = df.select(
         [F.col(c).cast(dtypes[c]).alias(c) for c in cols]
         + ([F.col("part").cast("int").alias("part")]
            if "part" in df.columns else []))
     if "part" not in staged.columns:
-        if bucket.get("col") in cols and bucket.get("fn") in BUCKET_FNS \
-                and bucket.get("n_parts"):
-            from pyspark.sql.functions import pandas_udf
-            fn_name, n_parts = bucket["fn"], int(bucket["n_parts"])
-
-            def _bucket_series(s):
-                f = BUCKET_FNS[fn_name]
-                return s.map(lambda v: f(v, n_parts)).astype("int32")
-
-            staged = staged.withColumn(
-                "part", pandas_udf(_bucket_series, "int")(
-                    F.col(bucket["col"])).cast("int"))
+        if bucket and bucket["col"] in cols:
+            staged = staged.withColumn("part", _bucket_column(bucket))
         else:
             raise ValueError("cannot route rows to partitions: give "
                              "df a `part` column or record a bucket "

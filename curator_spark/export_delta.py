@@ -540,22 +540,24 @@ def _delta_add_admits(a: dict, conj: list, part_cols: list) -> bool:
               for c in mins if c in maxs}
     pv = a.get("partitionValues") or {}
     for col, op, val in conj:
-        if col in part_cols:
-            raw = pv.get(col)
-            if raw in (None, ""):
-                return False  # partition value is NULL: no comparison
-            try:  # coerce the string partition value to the literal's
-                  # kind; un-coercible → keep the file (sound)
-                p = type(val)(raw) if not isinstance(val, str) else raw
-            except (TypeError, ValueError):
-                continue
-            ok = {"=": p == val, "<": p < val, "<=": p <= val,
-                  ">": p > val, ">=": p >= val}[op]
-            if not ok:
+        if col not in part_cols:
+            if not _file_may_match(shaped, col, op, val):
                 return False
             continue
-        if not _file_may_match(shaped, col, op, val):
-            return False
+        raw = pv.get(col)
+        if raw in (None, ""):
+            return False  # partition value is NULL: no comparison
+        for v in (val if op == "in" else [val]):
+            try:  # coerce the string partition value to each literal's
+                  # kind; un-coercible → keep the file (sound)
+                p = raw if isinstance(v, str) else type(v)(raw)
+            except (TypeError, ValueError):
+                break
+            if _file_may_match({col: {"min": p, "max": p}}, col,
+                               "=" if op == "in" else op, v):
+                break
+        else:
+            return False  # no literal admits the partition value
     return True
 
 
@@ -579,15 +581,13 @@ def read_delta(spark, table_root: str, version: int | None = None,
     other than the name-mode this package writes.
 
     `where` — one (col, op, literal) triple or a list (ANDed, ops
-    = < <= > >= ) — is applied BOTH as log-stats file skipping (adds
-    whose minValues/maxValues or partitionValues cannot match are
-    never handed to Spark — planned from the log alone, zero data
-    I/O) and as a residual DataFrame filter, so the result is exactly
-    the predicate's rows while the scan touches only surviving
-    files."""
-    from pyspark.sql import functions as F
-
-    from .checkpoint import _normalize_where
+    = < <= > >=, and `in` with a non-empty list) — is applied BOTH as
+    log-stats file skipping (adds whose minValues/maxValues or
+    partitionValues cannot match are never handed to Spark — planned
+    from the log alone, zero data I/O) and as a residual DataFrame
+    filter, so the result is exactly the predicate's rows while the
+    scan touches only surviving files."""
+    from .checkpoint import _normalize_where, _where_column
 
     log_dir = os.path.join(table_root, "_delta_log")
     state = _replay_delta_log(log_dir, upto=version)
@@ -599,11 +599,8 @@ def read_delta(spark, table_root: str, version: int | None = None,
     adds = [a for a in state["live"].values()
             if not conj or _delta_add_admits(a, conj, part_cols)]
     df = _scan_adds(spark, table_root, state, adds)
-    for col, op, val in conj:  # exactness: residual filter on top
-        c = F.col(col)
-        df = df.filter({"=": c == val, "<": c < val, "<=": c <= val,
-                        ">": c > val, ">=": c >= val}[op])
-    return df
+    cond = _where_column(conj)  # exactness: residual filter on top
+    return df if cond is None else df.filter(cond)
 
 
 def _check_readable(state: dict) -> None:

@@ -69,7 +69,7 @@ def conv_fingerprints(turns: DataFrame, text_col: str = "text") -> DataFrame:
 
 def append_new_conversations(spark: SparkSession, input_path: str,
                              out_dir: str, params: dict | None = None,
-                             broadcast_conv_aggs: bool | None = None) -> dict:
+                             broadcast_conv_aggs: bool = False) -> dict:
     """Score and append the batch's NOVEL conversations to a committed
     output table.
 
@@ -93,7 +93,7 @@ def append_new_conversations(spark: SparkSession, input_path: str,
 
 def upsert_conversations(spark: SparkSession, input_path: str,
                          out_dir: str, params: dict | None = None,
-                         broadcast_conv_aggs: bool | None = None) -> dict:
+                         broadcast_conv_aggs: bool = False) -> dict:
     """MERGE with replace-on-conflict by conv_id (the missing third verb
     next to append's INSERT-if-absent and delete_conversations'
     DELETE): a batch conversation whose conv_id exists in the table
@@ -138,7 +138,7 @@ def upsert_conversations(spark: SparkSession, input_path: str,
 def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
                     run_id: str, input_desc: str,
                     params: dict | None = None,
-                    broadcast_conv_aggs: bool | None = None,
+                    broadcast_conv_aggs: bool = False,
                     t0: float | None = None,
                     txn: tuple[str, int] | None = None) -> dict:
     """DataFrame-level core of the append: dedup → score → add-file

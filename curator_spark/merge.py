@@ -54,9 +54,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .checkpoint import (
-    BUCKET_FNS, _check_constraints, _check_swaps, _file_may_match,
-    _land_staged, _rewrite_files, _scan_committed, make_ledger,
-    physical_name, to_physical)
+    _bucket_column, _check_constraints, _check_swaps, _key_ranges,
+    _land_staged, _plan_files, _rewrite_files, _scan_committed,
+    _table_bucket, make_ledger, to_physical)
 
 __all__ = ["ConcurrentMergeError", "merge_dataframes", "merge_into"]
 
@@ -196,14 +196,13 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
     n_source_rows, txn_skipped}. A merge that changes nothing commits
     no version (version is None).
     """
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StructType
 
     _validate_clauses(when_matched, when_not_matched,
                       matched_delete_condition)
     ledger = make_ledger(out_dir)
     committed, _success, meta, _txns = ledger.snapshot()
-    bucket = meta.get("bucket") or {}
+    bucket = _table_bucket(meta, key)
     if not meta.get("schema"):
         raise ValueError("MERGE requires the table schema in table_meta "
                          "(tables written by run_checkpointed/append "
@@ -289,32 +288,8 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
                 for m in committed.values())
             return summary
 
-        # ---- touched-partition / touched-file pruning (delete shape)
-        bucketed = (bucket.get("col") == key
-                    and bucket.get("fn") in BUCKET_FNS
-                    and bucket.get("n_parts"))
-        if bucketed:
-            fn_name, n_parts = bucket["fn"], int(bucket["n_parts"])
-
-            def _bucket_series(s):
-                f = BUCKET_FNS[fn_name]
-                return s.map(lambda v: f(v, n_parts)).astype("int32")
-
-            _bucket_of = pandas_udf(_bucket_series, "int")
-            ranges = {int(r["part"]): (r["kmin"], r["kmax"]) for r in
-                      (src.groupBy(_bucket_of(F.col(key)).alias("part"))
-                       .agg(F.min(key).alias("kmin"),
-                            F.max(key).alias("kmax")).collect())}
-        else:
-            r = src.agg(F.min(key).alias("kmin"),
-                        F.max(key).alias("kmax")).collect()[0]
-            ranges = {int(p): (r["kmin"], r["kmax"]) for p in committed}
-
         actions: list[dict] = []
         swaps: dict[int, list[str]] = {}
-        # the whole merge dataflow speaks logical names; only the
-        # manifest stats are keyed physically
-        pkey = physical_name(eff_meta, key)
         cond = F.expr(matched_condition) if matched_condition \
             else F.lit(True)
         mdel = F.expr(matched_delete_condition) \
@@ -330,20 +305,11 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
             # covers EVERY source key in the bucket (insert keys
             # included), so it only bounds the probe read, never the
             # rewrite set.
-            cand_by_part: dict[int, tuple[list[str], dict]] = {}
-            for part, marker in sorted(committed.items()):
-                files = (marker or {}).get("files") or {}
-                if int(part) not in ranges:
-                    summary["files_untouched"] += len(files)
-                    continue
-                kmin, kmax = ranges[int(part)]
-                stats = (marker or {}).get("stats") or {}
-                cand = [fn for fn in sorted(files)
-                        if _file_may_match(stats.get(fn), pkey, "<=", kmax)
-                        and _file_may_match(stats.get(fn), pkey, ">=", kmin)]
-                summary["files_untouched"] += len(files) - len(cand)
-                if cand:
-                    cand_by_part[int(part)] = (cand, marker or {})
+            files, summary["files_untouched"] = _plan_files(
+                committed, eff_meta, key_ranges=(key, _key_ranges(
+                    src, key, bucket, committed)))
+            cand_by_part = {p: (c, committed[p] or {})
+                            for p, c in files.items()}
 
             # ---- pass 1b: findTouchedFiles — ONE probe job over all
             # coarse candidates (Delta's first MERGE pass): inner-join
@@ -453,9 +419,8 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
             if not_matched_condition:
                 ins = ins.filter(F.expr(not_matched_condition))
             ins = ins.join(tkeys, [key], "left_anti").select(*cols)
-            if bucketed:
-                ins = ins.withColumn(
-                    "part", _bucket_of(F.col(key)).cast("int"))
+            if bucket:
+                ins = ins.withColumn("part", _bucket_column(bucket))
             else:
                 home = max((int(p) for p in committed), default=0)
                 ins = ins.withColumn("part", F.lit(int(home)))

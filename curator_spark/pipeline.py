@@ -190,7 +190,7 @@ def _finalize(scored: DataFrame, conv: DataFrame) -> DataFrame:
 
 
 def run_pipeline_staged(spark, transcripts: DataFrame, scored_path: str,
-                        broadcast_conv_aggs: bool | None = None) -> DataFrame:
+                        broadcast_conv_aggs: bool = False) -> DataFrame:
     """Production (100 TB) shape of the pipeline: materialize the scored
     stage ONCE to columnar storage, then feed both consumers (the
     conversation aggregation and the final join) from re-scans of it.
@@ -206,19 +206,18 @@ def run_pipeline_staged(spark, transcripts: DataFrame, scored_path: str,
     score_turns(transcripts).write.mode("overwrite").parquet(scored_path)
     scored = spark.read.parquet(scored_path)
     conv = conversation_aggregates(scored)
-    if broadcast_conv_aggs is True:
+    if broadcast_conv_aggs:
         conv = F.broadcast(conv)
     return _finalize(scored, conv)
 
 
 def run_pipeline_df(transcripts: DataFrame,
-                    broadcast_conv_aggs: bool | None = None) -> DataFrame:
+                    broadcast_conv_aggs: bool = False) -> DataFrame:
     """Full quality-filter plan: transcripts → OUTPUT_SCHEMA columns.
 
     broadcast_conv_aggs: True forces a broadcast join of the per-conv
     aggregate table back to turns (right for small/medium conv counts);
-    False forces shuffle join (right at 10^10-conv scale); None (default)
-    leaves the choice to Catalyst/AQE statistics.
+    otherwise (the default) Catalyst/AQE statistics pick the join.
 
     The scored stage feeds BOTH the conversation aggregation and the
     final join, so it is persisted (MEMORY_AND_DISK) — without that the
@@ -230,6 +229,6 @@ def run_pipeline_df(transcripts: DataFrame,
     from pyspark import StorageLevel
     scored = score_turns(transcripts).persist(StorageLevel.MEMORY_AND_DISK)
     conv = conversation_aggregates(scored)
-    if broadcast_conv_aggs is True:
+    if broadcast_conv_aggs:
         conv = F.broadcast(conv)
     return _finalize(scored, conv)

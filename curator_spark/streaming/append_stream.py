@@ -43,7 +43,7 @@ def run_append_stream(spark: SparkSession, input_dir: str, out_dir: str,
                       checkpoint_dir: str, available_now: bool = True,
                       max_files_per_trigger: int | None = None,
                       trigger_interval: str | None = None,
-                      broadcast_conv_aggs: bool | None = None,
+                      broadcast_conv_aggs: bool = False,
                       params: dict | None = None,
                       cooldown=None):
     """Drain (available_now) or follow (not) a transcript-file stream

@@ -1,8 +1,8 @@
 """Row-level DELETE (checkpoint.delete_conversations): the
 right-to-be-forgotten operation — bucket-transform + manifest-stats
 pruning keep untouched files untouched, targeted files swap for their
-filtered rewrites in one `delete` log version per partition, time
-travel still shows the pre-delete table until vacuum makes the deletion
+filtered rewrites in ONE `delete` log version across all partitions,
+time travel still shows the pre-delete table until vacuum makes the deletion
 physical (Delta's DELETE semantics)."""
 
 from __future__ import annotations
@@ -128,15 +128,16 @@ def test_delete_conflicting_with_concurrent_compaction_raises(
     ids = sorted(pdf["conv_id"].unique())[:3]
     n_before = table_row_count(out)
 
-    orig = CommitLogLedger.delete_rewrite
+    orig = CommitLogLedger.merge_commit
 
-    def racing(self, part, remove_files, add_files, stats=None):
-        # a concurrent writer compacts the partition AFTER the delete
-        # read its snapshot and BEFORE its commit lands
-        compact_partition(spark, out, int(part), target_files=1)
-        return orig(self, part, remove_files, add_files, stats=stats)
+    def racing(self, actions, **kw):
+        # a concurrent writer compacts a touched partition AFTER the
+        # delete read its snapshot and BEFORE its commit lands
+        compact_partition(spark, out, int(actions[0]["part"]),
+                          target_files=1)
+        return orig(self, actions, **kw)
 
-    monkeypatch.setattr(CommitLogLedger, "delete_rewrite", racing)
+    monkeypatch.setattr(CommitLogLedger, "merge_commit", racing)
     with pytest.raises(ConcurrentDeleteError, match="concurrent"):
         delete_conversations(spark, out, ids)
     monkeypatch.undo()
@@ -148,6 +149,40 @@ def test_delete_conflicting_with_concurrent_compaction_raises(
     s = delete_conversations(spark, out, ids)
     assert s["rows_deleted"] == n_target
     assert table_row_count(out) == n_before - n_target
+
+
+def test_delete_failing_mid_way_leaves_table_unchanged(spark, table,
+                                                       monkeypatch):
+    """A key delete spanning partitions is all or nothing: a failure
+    rewriting the second partition must not leave the first one's
+    deletion committed (a half-applied right-to-be-forgotten request
+    visible to readers)."""
+    import curator_spark.checkpoint as ck
+    out, pdf = table["out"], table["pdf"]
+    # one target per partition, so the delete spans all four
+    ids = [pdf.loc[pdf["part"] == p, "conv_id"].iloc[0] for p in range(4)]
+    led = make_ledger(out)
+    v0, n0 = led.latest_version(), table_row_count(out)
+    orig, calls = ck._rewrite_files, []
+
+    def failing_second(*a, **k):
+        calls.append(a[3])
+        if len(calls) == 2:
+            raise RuntimeError("injected rewrite failure")
+        return orig(*a, **k)
+
+    monkeypatch.setattr(ck, "_rewrite_files", failing_second)
+    with pytest.raises(RuntimeError, match="injected"):
+        delete_conversations(spark, out, ids)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    assert led.latest_version() == v0
+    assert table_row_count(out) == n0
+    # the retry deletes every target in one version
+    s = delete_conversations(spark, out, ids)
+    assert s["rows_deleted"] == int(pdf["conv_id"].isin(ids).sum())
+    assert len(s["parts_touched"]) == 4
+    assert led.latest_version() == v0 + 1
 
 
 def test_rerun_after_delete_does_not_resurrect(spark, table):

@@ -82,6 +82,31 @@ def test_update_where_triple_prunes_files(spark, table):
     assert s["files_rewritten"] == 1
 
 
+def test_update_probe_reads_only_the_keys_bucket(spark, table,
+                                                 monkeypatch):
+    """DML plans through the reads' planner, bucket transform included:
+    an equality probe on the bucketed key hands its probe only files of
+    the key's bucket (stats alone keep one file per bucket here)."""
+    import curator_spark.dml as dml
+    from curator_spark.checkpoint import BUCKET_FNS
+    cid = "conv-000010"
+    seen = []
+    orig = dml._scan_committed
+
+    def recording(spark_, out_dir, meta, files, *a, **k):
+        seen.append(dict(files))
+        return orig(spark_, out_dir, meta, files, *a, **k)
+
+    monkeypatch.setattr(dml, "_scan_committed", recording)
+    s = update_where(spark, table, {"ppl": "0.0"},
+                     where=("conv_id", "=", cid))
+    assert s["rows_updated"] == 1 and s["files_rewritten"] == 1
+    bucket = make_ledger(table).table_meta()["bucket"]
+    want = BUCKET_FNS[bucket["fn"]](cid, bucket["n_parts"])
+    assert [sorted(f) for f in seen] == [[want]]
+    assert len(seen[0][want]) == 1
+
+
 def test_update_null_predicate_rows_untouched(spark, table):
     # role IS NULL for id % 7 == 0 → predicate over role is NULL there
     s = update_where(spark, table, {"turn_idx": "99"},

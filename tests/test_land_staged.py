@@ -92,3 +92,30 @@ def test_two_calls_never_share_a_name(tmp_path):
     assert len(set(names)) == 2
     assert sorted(os.listdir(os.path.join(out, "data", "part=1"))) \
         == sorted(names)
+
+
+def test_each_staged_footer_is_opened_once(tmp_path, monkeypatch):
+    """One ParquetFile per staged file, zero-row files included: rows,
+    bytes and column stats all come from the one footer read (on an
+    object store each open is a GET)."""
+    out = str(tmp_path / "t")
+    staging = str(tmp_path / "t" / "_compact-o")
+    staged = [os.path.join(staging, f) for f in
+              ("a.parquet", "b.parquet", "empty.parquet")]
+    for path, ids in zip(staged, (["c1", "c2"], ["c3"], [])):
+        _write(path, ids)
+    opened = []
+    real = pq.ParquetFile
+
+    class CountingParquetFile(real):
+        def __init__(self, source, *a, **k):
+            opened.append(str(source))
+            super().__init__(source, *a, **k)
+
+    monkeypatch.setattr(pq, "ParquetFile", CountingParquetFile)
+    (man, stats, n_rows), = _land_staged(out, staging, {}, "append",
+                                         part=0).values()
+    monkeypatch.undo()
+    assert sorted(opened) == sorted(staged)
+    assert n_rows == 3 and len(man) == 2
+    _check_manifest(out, 0, man, stats, "append")

@@ -89,6 +89,14 @@ def test_rebucket_pruning_uses_new_spec(spark, table):
     got = read_committed(spark, out, where=[("conv_id", "=", cid)])
     assert got.filter(got.conv_id == cid).count() == \
         int((pdf["conv_id"] == cid).sum())
+    # `in` keeps only the partitions its values hash to, and the
+    # residual filter returns exactly their rows
+    ids = sorted(pdf["conv_id"].unique())[:3]
+    paths = snapshot_files(out, where=("conv_id", "in", ids))
+    assert {int(p.split("part=")[1].split("/")[0]) for p in paths} \
+        <= {fn(c, NEW["n_parts"]) for c in ids}
+    got = read_committed(spark, out, where=("conv_id", "in", ids))
+    assert got.count() == int(pdf["conv_id"].isin(ids).sum())
 
 
 def test_rebucket_materializes_deletion_vectors(spark, table):
@@ -118,7 +126,7 @@ def test_stale_rebucket_raises_and_leaves_table_intact(spark, table,
     # its log append: wrap the ledger method run by rebucket_table
     real_append = type(ledger)._append
 
-    def racing_append(self, actions):
+    def racing_append(self, actions, *args):
         if actions and actions[0].get("type") == "rebucket" \
                 and not getattr(self, "_raced", False):
             self._raced = True
@@ -126,7 +134,7 @@ def test_stale_rebucket_raises_and_leaves_table_intact(spark, table,
             # rebucket's expectation
             ids = [sorted(pdf["conv_id"].unique())[-1]]
             delete_conversations(spark, out, ids)
-        return real_append(self, actions)
+        return real_append(self, actions, *args)
 
     import curator_spark.checkpoint as cp
     orig = cp.CommitLogLedger._append
