@@ -64,8 +64,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import rules, schema
 from .pipeline import run_pipeline_staged
 
-WRITE_SALTS = 8  # max output files per `part` from one run
-
 
 def run_fingerprint(input_path: str, params: dict | None = None) -> str:
     """Deterministic run id from (input, rule constants, code params) —
@@ -861,11 +859,12 @@ class CommitLogLedger:
         without the inserts (Delta writes MERGE the same way: one
         commit, many remove/add actions). Each action replays under its
         own existing rule, including the stale-swap conflict rule the
-        caller verifies post-commit, or before it with `precondition`
-        (see _append). Returns the version."""
+        caller checks before publishing with `precondition` (see
+        _append). Returns the version."""
         return self._append(list(actions), precondition)
 
-    def add_dv(self, marks: list[tuple[int, str, list[int]]]) -> int:
+    def add_dv(self, marks: list[tuple[int, str, list[int]]],
+               precondition=None) -> int:
         """Publish deletion vectors: for each (part, file, positions),
         mark those row indexes of the immutable file deleted — no data
         rewrite (Delta's deletion-vector action, inlined in the log:
@@ -873,13 +872,14 @@ class CommitLogLedger:
         right-to-be-forgotten costs O(k) bytes; bulk deletes belong to
         the rewrite path). ONE atomic commit across every touched
         partition; replay unions masks and ignores marks against
-        files no longer referenced (same stale rule as swaps).
-        Returns the committed version."""
+        files no longer referenced (same stale rule as swaps), which
+        the caller checks before publishing with `precondition` (see
+        _append). Returns the committed version."""
         now = datetime.now(timezone.utc).isoformat()
         return self._append([
             {"type": "add_dv", "part": int(p), "file": str(fn),
              "rows": sorted({int(r) for r in rows}), "updated_at": now}
-            for p, fn, rows in marks])
+            for p, fn, rows in marks], precondition)
 
     def restore(self, to_version: int, parts: dict[int, dict | None],
                 success: dict | None, meta: dict,
@@ -1562,18 +1562,6 @@ def stats_columns(meta: dict) -> tuple:
     return tuple(cm.get(c, c) for c in STATS_COLUMNS)
 
 
-def _refuse_mapped(meta: dict, verb: str) -> None:
-    """Write verbs that have not (yet) been taught the physical-name
-    projection must REFUSE on a mapped table rather than silently land
-    logically-named files the physical read schema would surface as
-    all-null columns."""
-    if meta.get("column_mapping"):
-        raise ProtocolError(
-            f"{verb} does not support tables with active column "
-            "mapping (ALTER history); operate via the mapping-aware "
-            "verbs or restore the table to its pre-ALTER schema")
-
-
 def revalidate_committed(out_dir: str, ledger=None) -> tuple[set[int], set[int]]:
     """Cache-integrity verification on resume (reference:
     base_request_processor.py:120-167 — per chunk: files exist, counts
@@ -1832,27 +1820,29 @@ def _scored_scratch(out_dir: str, run_id: str, salt: str
 
 
 def _stage_scored(spark: SparkSession, ledger, result: DataFrame,
-                  stage_out: str, n_out: int) -> tuple[dict, list]:
+                  stage_out: str) -> tuple[dict, list]:
     """Write scored rows to `stage_out` partitioned by `part` and count
     them per part. Returns (table_meta, counter rows {part, n_in,
     n_kept, n_scrubbed, n_errors, n_tokens}).
 
-    The salted repartition on (part, turn_idx mod WRITE_SALTS) into
-    `n_out` tasks lands each part in at most WRITE_SALTS files: without
-    it every upstream task can hold rows of every part, producing
-    n_tasks × n_parts tiny files, and no single task serializes a huge
-    part. On a mapped table (ALTER history) the schema is recorded
-    FIRST, so new logical columns get physical names minted, and the
-    files are written with physical names."""
+    The rebalance on `part` makes a part's file count follow its size:
+    AQE lands each small part in one file and splits a large one into
+    files of about `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    (64 MB by default), so no task serializes a huge part and no part
+    gets n_upstream_tasks tiny files. With AQE off it is a plain hash
+    exchange on `part`: one file per part, from the one hash partition
+    holding it (no split). On a mapped table (ALTER history) the schema
+    is recorded FIRST, so new logical columns get physical names
+    minted, and the files are written with physical names."""
     tmeta = ledger.table_meta()
     if tmeta.get("column_mapping"):
         record_table_schema(ledger, result.schema)
         tmeta = ledger.table_meta()
-    (to_physical(result.repartition(n_out, F.col("part"),
-                                    F.pmod(F.col("turn_idx"),
-                                           F.lit(WRITE_SALTS))), tmeta)
-     .write.mode("overwrite").partitionBy("part").parquet(stage_out))
-    mrows = to_logical(spark.read.parquet(stage_out), tmeta) \
+    staged = to_physical(result.hint("rebalance", "part"), tmeta)
+    staged.write.mode("overwrite").partitionBy("part").parquet(stage_out)
+    # re-read with the schema in hand: no footer-inference job
+    mrows = to_logical(spark.read.schema(staged.schema).parquet(stage_out),
+                       tmeta) \
         .groupBy("part").agg(
             F.count(F.lit(1)).alias("n_in"),
             F.sum(F.col("keep").cast("long")).alias("n_kept"),
@@ -2056,8 +2046,7 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
             result = run_pipeline_staged(
                 spark, pending, os.path.join(scratch_root, "scored"),
                 broadcast_conv_aggs=broadcast_conv_aggs)
-            tmeta, mrows = _stage_scored(spark, ledger, result, stage_out,
-                                         max(len(todo) * WRITE_SALTS, 8))
+            tmeta, mrows = _stage_scored(spark, ledger, result, stage_out)
 
             # Fail-all policy: raise BEFORE metrics append and marker
             # commit, so a strict failure leaves no trace to double-count
@@ -2336,26 +2325,27 @@ def _rewrite_files(spark: SparkSession, out_dir: str, meta: dict,
     return man, stats, before, after
 
 
-def _check_swaps(ledger, ver: int, swaps: dict, error: type,
-                 verb: str) -> None:
-    """The stale-swap check for a commit at `ver` — after it publishes,
-    or before as its precondition: replay honours a swap only while
-    every file it removes is still live at ver-1 and silently ignores
-    it otherwise (a concurrent compaction or recompute replaced the
-    file first). `swaps` is {part: removed files}; the log is replayed
-    once. Raises `error` rather than let the caller report a mutation
-    that never applied."""
-    prev = ledger.committed(version=ver - 1)
-    stale = {int(p): sorted(set(fs) - set(
-        (prev.get(int(p)) or {}).get("files") or {}))
-        for p, fs in swaps.items()}
-    stale = {p: fs for p, fs in sorted(stale.items()) if fs}
-    if stale:
-        raise error(
-            f"{verb} v{ver} conflicted with a concurrent rewrite: files "
-            f"{stale} (by part) were replaced between snapshot and "
-            "commit, so the swap does not apply — retry against the new "
-            "snapshot")
+def _swaps_precondition(ledger, swaps: dict, error: type, verb: str):
+    """The stale-swap check, as the `precondition` of the commit that
+    publishes `swaps` ({part: files it removes or marks}; see _append):
+    replay honours a swap only while every file it removes is still
+    live at v-1 and silently ignores it otherwise (a concurrent
+    compaction or recompute replaced the file first). Raises `error`
+    before version v publishes, so a stale swap abandons the whole
+    commit instead of half-applying it alongside the other parts."""
+    def check(ver: int) -> None:
+        prev = ledger.committed(version=ver - 1)
+        stale = {int(p): sorted(set(fs) - set(
+            (prev.get(int(p)) or {}).get("files") or {}))
+            for p, fs in swaps.items()}
+        stale = {p: fs for p, fs in sorted(stale.items()) if fs}
+        if stale:
+            raise error(
+                f"{verb} v{ver} conflicted with a concurrent rewrite: "
+                f"files {stale} (by part) were replaced between snapshot "
+                "and commit, so the swap does not apply — retry against "
+                "the new snapshot")
+    return check
 
 
 def _check_constraints(spark: SparkSession, out_dir: str, meta: dict,
@@ -3117,8 +3107,8 @@ def compact_partition(spark: SparkSession, out_dir: str, part: int,
     `target_files` outputs and sorted within each, so every output file
     owns a DISJOINT key range and its manifest min/max stats become
     surgical — a point/range probe via read_committed(where=…) then
-    skips all but one file of the partition, where the salted-write
-    layout left every file spanning the full key range. Row-identical
+    skips all but one file of the partition, where the staged write's
+    files each span the full key range. Row-identical
     to the unsorted compaction (same verify + same stale-swap rule);
     the clustering exists purely to sharpen data skipping.
 
@@ -3478,13 +3468,9 @@ def _delete_parts(spark, out_dir, ledger, meta, committed: dict,
         summary["files_rewritten"] += len(cand)
         summary["parts_touched"].append(part)
     if actions:
-        # the stale-swap check runs BEFORE the version publishes, against
-        # exactly the state it applies to: a swap a concurrent rewrite
-        # made stale abandons the whole delete instead of committing the
-        # other parts' swaps
         swaps = {a["part"]: a["remove_files"] for a in actions}
-        ledger.merge_commit(actions, precondition=lambda v: _check_swaps(
-            ledger, v, swaps, ConcurrentDeleteError, "delete"))
+        ledger.merge_commit(actions, precondition=_swaps_precondition(
+            ledger, swaps, ConcurrentDeleteError, "delete"))
 
 
 def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
@@ -3510,11 +3496,10 @@ def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
     path; positions are found in ONE Spark job over the candidates via
     `_metadata.file_path`/`row_index`. Atomicity: ALL partitions' marks
     land in ONE log version, as the rewrite path's swaps do. Same
-    conflict rule: if a
-    concurrent rewrite displaced a candidate between snapshot and
-    commit, replay ignored that mark — verified after commit, raising
-    ConcurrentDeleteError rather than reporting rows deleted that are
-    still live.
+    conflict rule: if a concurrent rewrite displaced a candidate
+    between snapshot and commit, replay would ignore that mark, so the
+    commit's precondition raises ConcurrentDeleteError and publishes no
+    mark at all rather than report rows deleted that are still live.
 
     Returns {rows_deleted, files_marked, files_untouched,
     parts_touched}."""
@@ -3559,11 +3544,11 @@ def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
             marks.append((part, fn_, sorted(pos)))
     if not marks:
         return summary
-    ver = ledger.add_dv(marks)
     swaps: dict[int, list[str]] = {}
     for part, fn_, _pos in marks:
         swaps.setdefault(part, []).append(fn_)
-    _check_swaps(ledger, ver, swaps, ConcurrentDeleteError, "dv delete")
+    ledger.add_dv(marks, precondition=_swaps_precondition(
+        ledger, swaps, ConcurrentDeleteError, "dv delete"))
     summary["rows_deleted"] = sum(len(pos) for _, _, pos in marks)
     summary["files_marked"] = len(marks)
     summary["parts_touched"] = sorted({p for p, _, _ in marks})

@@ -20,9 +20,10 @@ MERGE (merge.py):
   CASE WHEN pred THEN expr ELSE col END per SET column (row counts
   verified unchanged); DELETE keeps rows failing the predicate
   (verified against the probe's count). All swaps land in one log
-  version; the post-commit stale-swap verification raises
-  ConcurrentDMLError rather than silently dropping a mutation that
-  lost to a concurrent OPTIMIZE (Delta's conflict rule).
+  version; its precondition, the stale-swap check, raises
+  ConcurrentDMLError before anything publishes rather than silently
+  drop a mutation that lost to a concurrent OPTIMIZE (Delta's conflict
+  rule).
 
 The scan, the per-part rewrite, the file landing, the CHECK gate and
 the stale-swap check are checkpoint.py's copy-on-write core, shared
@@ -44,9 +45,9 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .checkpoint import (
-    _bucket_column, _check_constraints, _check_swaps, _land_staged,
-    _plan_files, _rewrite_files, _scan_committed, _table_bucket,
-    _where_column, make_ledger, to_physical)
+    _bucket_column, _check_constraints, _land_staged,
+    _plan_files, _rewrite_files, _scan_committed, _swaps_precondition,
+    _table_bucket, _where_column, make_ledger, to_physical)
 
 __all__ = ["ConcurrentDMLError", "delete_where",
            "insert_overwrite_where", "update_where"]
@@ -153,11 +154,11 @@ def _rewrite_where(spark: SparkSession, out_dir: str, where,
     actions += extra_actions  # e.g. replaceWhere's insert leg — one
     # atomic version carries the delete rewrites AND the new files
     _check_constraints(spark, out_dir, meta, actions, op_name.upper())
-    ver = ledger.merge_commit(actions)
+    ver = ledger.merge_commit(actions, precondition=_swaps_precondition(
+        ledger, {r["part"]: r["tfiles"] for r in results},
+        ConcurrentDMLError, op_name))
     summary["version"] = int(ver)
     summary["parts_touched"].sort()
-    _check_swaps(ledger, ver, {r["part"]: r["tfiles"] for r in results},
-                 ConcurrentDMLError, op_name)
     return summary
 
 

@@ -742,6 +742,12 @@ def delta_inserts(spark, table_root: str, since: int,
     "include" (their adds are fed; downstream dedups).
 
     Returns (DataFrame, head_version)."""
+    return _delta_inserts(spark, table_root, since, until, on_changes)[:2]
+
+
+def _delta_inserts(spark, table_root: str, since: int, until: int | None,
+                   on_changes: str):
+    """delta_inserts plus the window's add actions: (df, head, adds)."""
     if on_changes not in ("error", "skip", "include"):
         raise ValueError(f"bad on_changes {on_changes!r}")
     log_dir = os.path.join(table_root, "_delta_log")
@@ -751,7 +757,7 @@ def delta_inserts(spark, table_root: str, since: int,
     _check_readable(state)
     head = state["version"]
     adds = _delta_window_adds(log_dir, since, head, on_changes)
-    return _scan_adds(spark, table_root, state, adds), head
+    return _scan_adds(spark, table_root, state, adds), head, adds
 
 
 def consume_delta_inserts(spark, table_root: str, consumer_id: str,
@@ -763,7 +769,10 @@ def consume_delta_inserts(spark, table_root: str, consumer_id: str,
     until)`, and only THEN commits the cursor — a crash in between
     replays the same window (exactly-once end to end when the sink is
     idempotent). `state_dir` holds the cursor files (default: inside
-    the table dir; pass a local dir for a read-only upstream)."""
+    the table dir; pass a local dir for a read-only upstream).
+    `rows_fed` comes from the window adds' numRecords, so the window
+    is scanned only by the sink; a window with an add lacking stats is
+    counted with one extra scan."""
     from .feed import _commit_cursor, consumer_position
 
     sd = state_dir or table_root
@@ -771,11 +780,13 @@ def consume_delta_inserts(spark, table_root: str, consumer_id: str,
     # cursor stores head+1 = "the next version to read"; an absent
     # cursor (position 0) then correctly bootstraps version 0
     since = consumer_position(sd, consumer_id) - 1
-    df, head = delta_inserts(spark, table_root, since,
-                             on_changes=on_changes)
+    df, head, adds = _delta_inserts(spark, table_root, since, None,
+                                    on_changes)
     if head <= since:
         return {"since": since, "until": since, "rows_fed": 0}
-    n = df.count()
+    stats = [json.loads(a.get("stats") or "{}") for a in adds]
+    n = (sum(int(st["numRecords"]) for st in stats)
+         if all("numRecords" in st for st in stats) else df.count())
     fn(df, since, head)
     _commit_cursor(sd, consumer_id, head + 1, n)
     return {"since": since, "until": head, "rows_fed": n}

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schema
 from .checkpoint import (
-    WRITE_SALTS, _append_metrics, _land_staged, _scored_scratch,
+    _append_metrics, _land_staged, _scored_scratch,
     _stage_scored, make_ledger, read_committed, record_table_schema,
     run_fingerprint)
 from .pipeline import run_pipeline_df
@@ -197,8 +197,7 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
     scratch_root, shard = _scored_scratch(out_dir, run_id, run_id)
     stage_out = os.path.join(scratch_root, "out")
     try:
-        tmeta, mrows = _stage_scored(spark, ledger, result, stage_out,
-                                     max(8, WRITE_SALTS * 8))
+        tmeta, mrows = _stage_scored(spark, ledger, result, stage_out)
 
         # Per-partition add-file commits: place this batch's files under
         # their final dirs with unique names (one put per NEW file),

@@ -54,9 +54,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .checkpoint import (
-    _bucket_column, _check_constraints, _check_swaps, _key_ranges,
+    _bucket_column, _check_constraints, _key_ranges,
     _land_staged, _plan_files, _rewrite_files, _scan_committed,
-    _table_bucket, make_ledger, to_physical)
+    _swaps_precondition, _table_bucket, make_ledger, to_physical)
 
 __all__ = ["ConcurrentMergeError", "merge_dataframes", "merge_into"]
 
@@ -458,13 +458,13 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
             # or the data without the txn
             actions.append({"type": "txn", "app_id": str(txn[0]),
                             "txn_version": int(txn[1])})
-        ver = ledger.merge_commit(actions)
+        # Optimistic-concurrency check (Delta raises on MERGE-vs-
+        # OPTIMIZE) as the commit's precondition, so a stale swap
+        # publishes nothing; a retry converges against the new snapshot
+        ver = ledger.merge_commit(actions, precondition=_swaps_precondition(
+            ledger, swaps, ConcurrentMergeError, "MERGE"))
         summary["version"] = int(ver)
         summary["parts_touched"].sort()
-        # Optimistic-concurrency check (Delta raises on MERGE-vs-
-        # OPTIMIZE); a retry converges — inserts that landed re-match
-        # as same-value updates
-        _check_swaps(ledger, ver, swaps, ConcurrentMergeError, "MERGE")
         return summary
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

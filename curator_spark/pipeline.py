@@ -203,8 +203,10 @@ def run_pipeline_staged(spark, transcripts: DataFrame, scored_path: str,
     before the finalize pass (reference: src/bespokelabs/curator/
     request_processor/base_request_processor.py:305-428).
     """
-    score_turns(transcripts).write.mode("overwrite").parquet(scored_path)
-    scored = spark.read.parquet(scored_path)
+    scored = score_turns(transcripts)
+    scored.write.mode("overwrite").parquet(scored_path)
+    # re-read with the schema in hand: no footer-inference job
+    scored = spark.read.schema(scored.schema).parquet(scored_path)
     conv = conversation_aggregates(scored)
     if broadcast_conv_aggs:
         conv = F.broadcast(conv)

@@ -109,13 +109,6 @@ def _dup_line_frac(text: str) -> float:
     return 1.0 - len(set(lines)) / len(lines)
 
 
-def _stopword_frac(text: str) -> float:
-    words = text.lower().split()
-    if not words:
-        return 0.0
-    return sum(w.strip(".,!?;:") in EN_STOPWORDS for w in words) / len(words)
-
-
 def heuristic_flags(text: pd.Series, lang: pd.Series,
                     ppl: pd.Series) -> pd.DataFrame:
     """Vectorized turn-level rule evaluation → boolean DataFrame with one

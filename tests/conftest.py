@@ -5,6 +5,7 @@ conftest-provided parquet fixtures (reference: tests/conftest.py:51-64).
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -43,6 +44,39 @@ def copy_table(src: str, dst) -> str:
     import shutil
     shutil.copytree(src, str(dst), copy_function=shutil.copy)
     return str(dst)
+
+
+@contextlib.contextmanager
+def multi_file_parts(spark):
+    """Run the block with tiny parquet row groups and input splits and a
+    tiny AQE advisory partition size, so the re-read scored stage is
+    scanned by many tasks, each part's rows span several of them, and
+    the staged write's rebalance splits every part across several files
+    (a fresh small run otherwise lands one file per part). For tests
+    whose premise is a part with more than one file; restores the
+    settings."""
+    conf = {"parquet.block.size": "8192",
+            "spark.sql.files.maxPartitionBytes": "16k",
+            "spark.sql.files.openCostInBytes": "1k",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k"}
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def part_file_counts(out_dir: str) -> dict[int, int]:
+    """{part: number of live files} in the committed snapshot."""
+    from curator_spark.checkpoint import make_ledger
+    return {int(p): len((m or {}).get("files") or {})
+            for p, m in make_ledger(out_dir).committed().items()}
 
 
 def write_legacy_markers_dir(out_dir: str, committed: dict,

@@ -17,7 +17,7 @@ import random
 
 import pytest
 
-from conftest import copy_table
+from conftest import copy_table, multi_file_parts, part_file_counts
 from curator_spark import fixtures
 from curator_spark.cdf import (
     CHANGE_COL, _changed_file_sets, apply_row_changes, consume_into_view,
@@ -59,7 +59,10 @@ def built_table(spark, tmp_path_factory):
     p1 = str(tmp_path / "b1.parquet")
     fixtures.write_transcripts_parquet(p1, 700, seed=91, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out)
+    # several files per part: the compaction-only window needs a part
+    # that compaction actually rewrites
+    with multi_file_parts(spark):
+        run_checkpointed(spark, p1, out)
     v1 = make_ledger(out).latest_version()
     p2 = str(tmp_path / "b2.parquet")
     fixtures.to_spark_parquet(
@@ -236,6 +239,7 @@ def test_consume_into_view_matches_recompute_every_poll(spark, table,
     # snapshot carried forward
     led = make_ledger(out)
     part = max(led.committed(), key=lambda p: len(led.committed()[p]["files"]))
+    assert part_file_counts(out)[part] >= 2  # compaction rewrites it
     compact_partition(spark, out, part)
     r3 = poll()
     assert r3["advanced"] and r3["planned_files"] == 0

@@ -16,6 +16,7 @@ import os
 
 import pytest
 
+from conftest import multi_file_parts
 from curator_spark import fixtures
 from curator_spark.checkpoint import (ATOMIC_STORES, CommitLogLedger,
                                       committed_parts, make_ledger,
@@ -250,7 +251,8 @@ def test_commitlog_orphans_invisible_until_vacuum(spark, small_input,
     from curator_spark.checkpoint import vacuum
 
     out = str(tmp_path / "vac")
-    run_checkpointed(spark, small_input, out)
+    with multi_file_parts(spark):  # part 0 needs sibling files
+        run_checkpointed(spark, small_input, out)
     before = read_committed(spark, out).orderBy("conv_id", "turn_idx").toPandas()
 
     # delete ONE of part 0's files; its siblings become orphans after

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import copy_table
+from conftest import copy_table, multi_file_parts, part_file_counts
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     delete_conversations, make_ledger, read_committed, run_checkpointed,
@@ -22,9 +22,12 @@ def built_table(spark, tmp_path_factory):
     p = str(tmp_path / "in.parquet")
     pdf = fixtures.write_transcripts_parquet(p, 1200, seed=51, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p, out,
-                     bucket={"col": "conv_id", "n_parts": 4,
-                             "fn": "md5full"})
+    # several files per part: the concurrent-compaction tests need a
+    # part that compaction actually rewrites
+    with multi_file_parts(spark):
+        run_checkpointed(spark, p, out,
+                         bucket={"col": "conv_id", "n_parts": 4,
+                                 "fn": "md5full"})
     return {"out": out, "pdf": pdf, "inp": p}
 
 
@@ -133,8 +136,9 @@ def test_delete_conflicting_with_concurrent_compaction_raises(
     def racing(self, actions, **kw):
         # a concurrent writer compacts a touched partition AFTER the
         # delete read its snapshot and BEFORE its commit lands
-        compact_partition(spark, out, int(actions[0]["part"]),
-                          target_files=1)
+        part = int(actions[0]["part"])
+        assert part_file_counts(out)[part] >= 2  # compaction rewrites it
+        compact_partition(spark, out, part, target_files=1)
         return orig(self, actions, **kw)
 
     monkeypatch.setattr(CommitLogLedger, "merge_commit", racing)

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import copy_table
+from conftest import copy_table, multi_file_parts, part_file_counts
 from curator_spark import fixtures
 from curator_spark import cdf
 from curator_spark.checkpoint import (
@@ -34,7 +34,10 @@ def built_table(spark, tmp_path_factory):
     p1 = str(tmp_path / "b1.parquet")
     fixtures.write_transcripts_parquet(p1, 900, seed=31, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out)
+    # several files per part: the stale-mark tests need a part that
+    # compaction actually rewrites
+    with multi_file_parts(spark):
+        run_checkpointed(spark, p1, out)
     return out
 
 
@@ -214,12 +217,13 @@ def test_dv_stale_mark_raises_conflict(spark, table):
     vs = _victims(spark, table, 1)
     real_add_dv = cp.CommitLogLedger.add_dv
 
-    def racing_add_dv(self, marks):
+    def racing_add_dv(self, marks, **kw):
         # a concurrent compaction swaps the target partition's files
         # between our snapshot and our commit
         for p in sorted({m[0] for m in marks}):
+            assert part_file_counts(table)[p] >= 2  # compaction rewrites
             compact_partition(spark, table, p)
-        return real_add_dv(self, marks)
+        return real_add_dv(self, marks, **kw)
 
     try:
         cp.CommitLogLedger.add_dv = racing_add_dv
@@ -230,6 +234,35 @@ def test_dv_stale_mark_raises_conflict(spark, table):
     # and the rows are still live (nothing was silently lost)
     assert read_committed(spark, table) \
         .filter(f"conv_id = '{vs[0]}'").count() > 0
+
+
+def test_dv_stale_part_leaves_table_unchanged(spark, table):
+    """A dv delete spanning several parts is all or nothing under a
+    concurrent compaction of one of them: the stale mark abandons the
+    whole version, so no other part's mark publishes either."""
+    import curator_spark.checkpoint as cp
+    from pyspark.sql import functions as F
+    vs = [r[0] for r in read_committed(spark, table).groupBy("part")
+          .agg(F.min("conv_id")).select("min(conv_id)").collect()]
+    before = _ms(read_committed(spark, table))
+    real_add_dv = cp.CommitLogLedger.add_dv
+
+    def racing_add_dv(self, marks, **kw):
+        parts = sorted({m[0] for m in marks})
+        assert len(parts) >= 2
+        assert part_file_counts(table)[parts[-1]] >= 2
+        compact_partition(spark, table, parts[-1])
+        return real_add_dv(self, marks, **kw)
+
+    try:
+        cp.CommitLogLedger.add_dv = racing_add_dv
+        with pytest.raises(ConcurrentDeleteError):
+            delete_rows_dv(spark, table, vs)
+    finally:
+        cp.CommitLogLedger.add_dv = real_add_dv
+    assert _ms(read_committed(spark, table)) == before
+    assert not any((m or {}).get("dv")
+                   for m in make_ledger(table).committed().values())
 
 
 def test_dv_datasource_read_applies_masks(spark, table):

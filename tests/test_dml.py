@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import copy_table
+from conftest import copy_table, part_file_counts
 from curator_spark.checkpoint import (
     CommitLogLedger, compact_partition, make_ledger, read_committed,
     table_row_count, vacuum)
@@ -177,11 +177,11 @@ def test_dml_conflict_with_concurrent_compaction(spark, table,
     orig = CommitLogLedger.merge_commit
     fired = {}
 
-    def hijack(self, actions):
+    def hijack(self, actions, **kw):
         if not fired:
             fired["x"] = True
             compact_partition(spark, table, actions[0]["part"])
-        return orig(self, actions)
+        return orig(self, actions, **kw)
 
     monkeypatch.setattr(CommitLogLedger, "merge_commit", hijack)
     with pytest.raises(ConcurrentDMLError, match="retry"):
@@ -192,6 +192,38 @@ def test_dml_conflict_with_concurrent_compaction(spark, table,
     after = read_committed(spark, table)
     assert after.filter(F.col("ppl") > 90).count() == 0
     assert vacuum(table, min_age_s=0) > 0   # conflict debris reclaimed
+
+def test_dml_stale_part_leaves_table_unchanged(spark, table, monkeypatch):
+    """An UPDATE spanning several parts is all or nothing under a
+    concurrent compaction of one of them: the stale swap abandons the
+    whole version, so no other part's rewrite publishes either."""
+    def rows():
+        df = read_committed(spark, table)
+        cols = sorted(df.columns)  # conv_id first: unique, None-free
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    led = make_ledger(table)
+    v0, before = led.latest_version(), rows()
+    orig = CommitLogLedger.merge_commit
+    fired = {}
+
+    def hijack(self, actions, **kw):
+        if not fired:
+            fired["x"] = True
+            parts = sorted({a["part"] for a in actions
+                            if a["type"] == "delete"})
+            assert len(parts) >= 2
+            assert part_file_counts(table)[parts[-1]] >= 2
+            compact_partition(spark, table, parts[-1])
+        return orig(self, actions, **kw)
+
+    monkeypatch.setattr(CommitLogLedger, "merge_commit", hijack)
+    with pytest.raises(ConcurrentDMLError, match="retry"):
+        update_where(spark, table, {"ppl": "ppl + 1000"}, where="ppl > 90")
+    monkeypatch.setattr(CommitLogLedger, "merge_commit", orig)
+    assert led.latest_version() == v0 + 1  # the compaction alone
+    assert rows() == before
+
 
 def test_insert_overwrite_where_replaces_region_atomically(spark, table):
     from curator_spark.dml import insert_overwrite_where

@@ -536,6 +536,44 @@ def test_delta_insert_feed_and_durable_cursor(spark, table, tmp_path):
     assert replay["rows_fed"] > 0  # the same window replayed
 
 
+def test_consume_delta_inserts_counts_rows_from_add_stats(spark, table,
+                                                          tmp_path,
+                                                          monkeypatch):
+    """A poll takes rows_fed from the window adds' numRecords, so only
+    the sink scans the window; adds without stats (a foreign writer)
+    fall back to one count()."""
+    from curator_spark.export_delta import consume_delta_inserts
+    out = table["out"]
+    export_delta_log(out)
+    root = os.path.join(os.path.abspath(out), "data")
+    n_live = read_committed(spark, out).count()
+    counts = []
+    DataFrame = type(spark.range(1))  # the session's DataFrame class
+    real_count = DataFrame.count
+
+    def counting(self):
+        counts.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(DataFrame, "count", counting)
+    fed: list[int] = []
+
+    def sink(df, a, b):
+        fed.append(len(df.collect()))
+
+    sd = str(tmp_path / "state")
+    s = consume_delta_inserts(spark, root, "stats", sink, state_dir=sd)
+    assert counts == []  # no scan besides the sink's
+    assert s["rows_fed"] == fed[-1] == n_live
+
+    foreign = str(tmp_path / "foreign")
+    _foreign_log(foreign, 3)  # adds carry no stats
+    s = consume_delta_inserts(spark, foreign, "nostats", sink,
+                              state_dir=sd)
+    assert counts == [1]  # the fallback count
+    assert s["rows_fed"] == fed[-1] == 3
+
+
 def test_read_delta_where_prunes_files_and_stays_exact(spark, table):
     """where= pushes into log planning: the admitted add-set shrinks
     to files whose stats/partitionValues can match (zero data I/O to

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import copy_table
+from conftest import copy_table, multi_file_parts, part_file_counts
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
     compact_partition, make_ledger, read_committed, restore_table,
@@ -23,7 +23,10 @@ def built_table(spark, tmp_path_factory):
     p1 = str(tmp_path / "b1.parquet")
     pdf1 = fixtures.write_transcripts_parquet(p1, 700, seed=71, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out)
+    # several files per part: the maintenance test needs a part that
+    # compaction actually rewrites
+    with multi_file_parts(spark):
+        run_checkpointed(spark, p1, out)
     return {"out": out, "pdf1": pdf1}
 
 
@@ -97,6 +100,7 @@ def test_independent_consumers_and_maintenance_versions(spark, table):
     # compaction + restore produce versions but NO feed rows: the poll
     # advances the cursor without running a Spark job
     part = next(iter(make_ledger(out).committed()))
+    assert part_file_counts(out)[part] >= 2  # compaction rewrites it
     compact_partition(spark, out, part, target_files=1)
     r = consume_changes(spark, out, "A",
                         lambda df, s, u: pytest.fail("no-row window"))

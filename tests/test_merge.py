@@ -15,7 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import copy_table
+from conftest import copy_table, part_file_counts
 from curator_spark.checkpoint import (
     CommitLogLedger, compact_partition, make_ledger, read_committed,
     table_history, table_row_count)
@@ -342,7 +342,7 @@ def test_merge_crash_before_commit_leaves_table_unchanged(spark, table,
     before = _ms(read_committed(spark, table))
     v = make_ledger(table).latest_version()
 
-    def boom(self, actions):
+    def boom(self, actions, **kw):
         raise RuntimeError("simulated crash at commit")
 
     monkeypatch.setattr(CommitLogLedger, "merge_commit", boom)
@@ -467,13 +467,13 @@ def test_merge_into_concurrent_compaction_raises(spark, table,
     orig = CommitLogLedger.merge_commit
     fired = {}
 
-    def hijack(self, actions):
+    def hijack(self, actions, **kw):
         if not fired:
             fired["x"] = True
             for a in actions:
                 if a["type"] == "delete":
                     compact_partition(spark, table, a["part"])
-        return orig(self, actions)
+        return orig(self, actions, **kw)
 
     monkeypatch.setattr(CommitLogLedger, "merge_commit", hijack)
     with pytest.raises(ConcurrentMergeError, match="retry"):
@@ -487,3 +487,34 @@ def test_merge_into_concurrent_compaction_raises(spark, table,
     after = read_committed(spark, table)
     assert after.filter(F.col("ppl") >= 1000.0).count() == 20
     assert after.count() == N0
+
+
+def test_merge_stale_part_leaves_table_unchanged(spark, table, monkeypatch):
+    """A MERGE spanning several parts is all or nothing under a
+    concurrent compaction of one of them: the stale swap abandons the
+    whole version, so neither the other parts' updates nor the inserts
+    publish."""
+    led = make_ledger(table)
+    v0, before = led.latest_version(), _ms(read_committed(spark, table))
+    orig = CommitLogLedger.merge_commit
+    fired = {}
+
+    def hijack(self, actions, **kw):
+        if not fired:
+            fired["x"] = True
+            parts = sorted({a["part"] for a in actions
+                            if a["type"] == "delete"})
+            assert len(parts) >= 2
+            assert part_file_counts(table)[parts[-1]] >= 2
+            compact_partition(spark, table, parts[-1])
+        return orig(self, actions, **kw)
+
+    monkeypatch.setattr(CommitLogLedger, "merge_commit", hijack)
+    upd = _toy(spark, 20, ppl_base=1000.0)
+    ins = _toy(spark, 5).withColumn(
+        "conv_id", F.concat(F.lit("new-"), F.col("conv_id")))
+    with pytest.raises(ConcurrentMergeError, match="retry"):
+        merge_into(spark, table, upd.unionByName(ins))
+    monkeypatch.setattr(CommitLogLedger, "merge_commit", orig)
+    assert led.latest_version() == v0 + 1  # the compaction alone
+    assert _ms(read_committed(spark, table)) == before
