@@ -884,7 +884,9 @@ def measure_table_ops() -> dict:
         elif r == 63:                  # row-level delete of an old file
             m = led.committed().get(p)
             if m and m.get("files"):
-                led.delete_rewrite(p, [sorted(m["files"])[0]], {})
+                led._append([{"type": "delete", "part": p,
+                              "remove_files": [sorted(m["files"])[0]],
+                              "add_files": {}}])
                 actions["delete"] += 1
                 continue
         elif r == 62 and i % 512 == 62:  # rare partition drop
@@ -968,11 +970,11 @@ def measure_table_ops() -> dict:
                                    StructField, StructType)
 
     from curator_spark.alter import rename_column
-    from curator_spark.checkpoint import record_table_schema
-    record_table_schema(led, StructType([
+    from curator_spark.checkpoint import _evolve_meta
+    led.set_table_meta(_evolve_meta(led.table_meta(), StructType([
         StructField("conv_id", StringType()),
         StructField("turn_idx", LongType()),
-        StructField("ppl", DoubleType())]))
+        StructField("ppl", DoubleType())])))
     chain = iter([("ppl", "p1"), ("p1", "p2"), ("p2", "p3"),
                   ("p3", "p4"), ("p4", "p5")])
     with_ckpt["alter_rename"] = plan_cost(

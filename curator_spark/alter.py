@@ -39,7 +39,7 @@ from __future__ import annotations
 import re
 
 from .checkpoint import (
-    _mint_physical, column_mapping, make_ledger)
+    _evolve_meta, _protocol_action, column_mapping, make_ledger)
 
 __all__ = ["add_column", "drop_column", "rename_column"]
 
@@ -85,23 +85,15 @@ def _activate_mapping(meta: dict) -> dict:
     return {f["name"]: f["name"] for f in meta["schema"]["fields"]}
 
 
-def _commit(ledger, meta_patch: dict, need_feature: bool) -> int:
+def _commit(ledger, meta: dict, meta_patch: dict) -> int:
     """One atomic commit: the table_meta change, plus the
-    column-mapping protocol ratchet when this is the activating ALTER
-    (two actions, one version — a reader never observes a mapped table
-    that is not feature-gated)."""
-    actions = [{"type": "table_meta", "meta": meta_patch}]
-    if need_feature:
-        actions.append({"type": "protocol", "protocol": {
-            "min_reader": 1, "min_writer": 1,
-            "reader_features": ["column-mapping"],
-            "writer_features": ["column-mapping"]}})
-    return ledger._append(actions)
-
-
-def _feature_needed(meta: dict) -> bool:
-    proto = meta.get("_protocol") or {}
-    return "column-mapping" not in set(proto.get("reader_features") or [])
+    column-mapping protocol ratchet when the patch maps columns on a
+    table not yet gated (two actions, one version — a reader never
+    observes a mapped table that is not feature-gated)."""
+    return ledger.set_table_meta(meta_patch, protocol=_protocol_action(
+        meta, reader_features=["column-mapping"],
+        writer_features=["column-mapping"])
+        if meta_patch.get("column_mapping") else None)
 
 
 def rename_column(out_dir: str, old: str, new: str, ledger=None) -> int:
@@ -127,9 +119,9 @@ def rename_column(out_dir: str, old: str, new: str, ledger=None) -> int:
     for f in fields:
         if f["name"] == old:
             f["name"] = new
-    return _commit(ledger, {
+    return _commit(ledger, meta, {
         "schema": {"type": "struct", "fields": fields},
-        "column_mapping": cm}, _feature_needed(meta))
+        "column_mapping": cm})
 
 
 def drop_column(out_dir: str, col: str, ledger=None) -> int:
@@ -152,17 +144,17 @@ def drop_column(out_dir: str, col: str, ledger=None) -> int:
     cm = _activate_mapping(meta)
     retired = list(meta.get("retired_physical") or [])
     retired.append(cm.pop(col))
-    return _commit(ledger, {
+    return _commit(ledger, meta, {
         "schema": {"type": "struct",
                    "fields": [f for f in fields if f["name"] != col]},
         "column_mapping": cm,
-        "retired_physical": sorted(set(retired))}, _feature_needed(meta))
+        "retired_physical": sorted(set(retired))})
 
 
 def add_column(out_dir: str, col: str, ddl_type: str, ledger=None) -> int:
     """ALTER TABLE ADD COLUMN col ddl_type — the explicit-DDL face of
-    the additive evolution `record_table_schema` already performs
-    implicitly on widened writes. Always nullable (existing files hold
+    the additive evolution (`_evolve_meta`) every widened write
+    performs implicitly. Always nullable (existing files hold
     no values; they read NULL). Returns the commit version."""
     from pyspark.sql.types import (
         BinaryType, BooleanType, DataType, DateType, DoubleType,
@@ -191,14 +183,9 @@ def add_column(out_dir: str, col: str, ddl_type: str, ledger=None) -> int:
         from pyspark.sql.types import _parse_datatype_string
         dt = _parse_datatype_string(str(ddl_type))
     fields.append(StructField(col, dt, True).jsonValue())
-    patch: dict = {"schema": {"type": "struct", "fields": fields}}
-    cm = column_mapping(meta)
-    if cm:
-        taken = set(cm.values()) | \
-            set(meta.get("retired_physical") or [])
-        cm[col] = _mint_physical(col, taken)
-        patch["column_mapping"] = cm
     # ADD alone does not activate mapping: identity still holds for
     # every column (the new physical name equals the logical name and
-    # cannot collide with a retired one — none exist pre-activation)
-    return _commit(ledger, patch, False)
+    # cannot collide with a retired one — none exist pre-activation);
+    # on a mapped table the patch mints the new physical name
+    return _commit(ledger, meta, _evolve_meta(
+        meta, {"type": "struct", "fields": fields}))

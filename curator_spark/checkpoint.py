@@ -295,6 +295,23 @@ def _merge_protocol(cur: dict | None, new: dict | None) -> dict | None:
     }
 
 
+def _protocol_action(meta: dict, min_reader: int | None = None,
+                     min_writer: int | None = None, reader_features=(),
+                     writer_features=()) -> dict | None:
+    """The one place the `protocol` action is made: the ratchet to the
+    given requirement, or None when `meta`'s protocol already carries
+    it. The action rides the commit of the verb that needs the
+    feature, so an abandoned verb never leaves the table ratcheted."""
+    req = {"min_reader": int(min_reader or 1),
+           "min_writer": int(min_writer or 1),
+           "reader_features": sorted(set(reader_features or ())),
+           "writer_features": sorted(set(writer_features or ()))}
+    cur = meta.get("_protocol")
+    if cur and _merge_protocol(cur, req) == _merge_protocol(cur, cur):
+        return None
+    return {"type": "protocol", "protocol": req}
+
+
 def _check_reader_protocol(proto: dict | None) -> None:
     if not proto:
         return
@@ -706,8 +723,8 @@ class CommitLogLedger:
                     # delete/dv between the rebucket's snapshot read
                     # and its commit makes the whole swap a stale
                     # no-op (its outputs are orphans vacuum reclaims;
-                    # the writer verifies post-commit and raises
-                    # ConcurrentRebucketError). DVs are part of the
+                    # the writer's precondition raises
+                    # ConcurrentRebucketError first). DVs are part of the
                     # expectation because the rewrite MATERIALIZES
                     # them: a mask that landed concurrently would
                     # otherwise be resurrected by the swap.
@@ -776,8 +793,12 @@ class CommitLogLedger:
                 "history starts later")
         return best
 
-    def set_table_meta(self, meta: dict) -> None:
-        self._append([{"type": "table_meta", "meta": meta}])
+    def set_table_meta(self, meta: dict, protocol: dict | None = None
+                       ) -> int:
+        """Commit `meta` (and the `protocol` ratchet gating it) as one
+        version; returns it."""
+        return self._append(_meta_actions(meta)
+                            + ([protocol] if protocol else []))
 
     def latest_version(self) -> int | None:
         vs = self._versions()
@@ -835,51 +856,27 @@ class CommitLogLedger:
                        "updated_at":
                        datetime.now(timezone.utc).isoformat()}])
 
-    def delete_rewrite(self, part: int, remove_files: list[str],
-                       add_files: dict, stats: dict | None = None) -> int:
-        """Row-level delete as a file-set swap (Delta's DELETE shape):
-        the touched files' filtered rewrites replace them in one log
-        version; replay recomputes n_rows from the surviving manifest
-        and applies the same stale-swap conflict rule as compaction.
-        Returns the committed version so the caller can verify the swap
-        actually applied (DELETE, unlike compaction, is not
-        row-preserving — a silently-ignored stale swap loses a
-        right-to-be-forgotten request)."""
-        return self._append([{"type": "delete", "part": int(part),
-                              "remove_files": sorted(remove_files),
-                              "add_files": add_files, "stats": stats or {},
-                              "updated_at":
-                              datetime.now(timezone.utc).isoformat()}])
-
     def merge_commit(self, actions: list[dict], precondition=None) -> int:
-        """Publish a MERGE's full action set — per-partition file swaps
-        (``delete`` actions carrying the matched legs' rewrites) plus
-        ``add_files`` actions carrying the not-matched inserts — as ONE
-        atomic log version, so readers never observe the updates
-        without the inserts (Delta writes MERGE the same way: one
-        commit, many remove/add actions). Each action replays under its
-        own existing rule, including the stale-swap conflict rule the
-        caller checks before publishing with `precondition` (see
-        _append). Returns the version."""
+        """Publish a composite verb's action set — `delete` swaps,
+        `add_files` inserts, its table_meta patch and txn mark — as ONE
+        version (Delta writes MERGE the same way), under the caller's
+        `precondition` (see _append). Returns the version."""
         return self._append(list(actions), precondition)
 
     def add_dv(self, marks: list[tuple[int, str, list[int]]],
-               precondition=None) -> int:
-        """Publish deletion vectors: for each (part, file, positions),
-        mark those row indexes of the immutable file deleted — no data
-        rewrite (Delta's deletion-vector action, inlined in the log:
-        right-sized for targeted deletes, where a k-row
-        right-to-be-forgotten costs O(k) bytes; bulk deletes belong to
-        the rewrite path). ONE atomic commit across every touched
-        partition; replay unions masks and ignores marks against
-        files no longer referenced (same stale rule as swaps), which
-        the caller checks before publishing with `precondition` (see
-        _append). Returns the committed version."""
+               precondition=None, protocol: dict | None = None) -> int:
+        """Publish deletion vectors (see delete_rows_dv): for each
+        (part, file, positions), mark those row indexes of the immutable
+        file deleted, every touched partition and the `protocol` ratchet
+        in ONE version. Replay unions masks and ignores marks against
+        files no longer referenced (the stale rule of swaps), which the
+        caller's `precondition` checks. Returns the version."""
         now = datetime.now(timezone.utc).isoformat()
         return self._append([
             {"type": "add_dv", "part": int(p), "file": str(fn),
              "rows": sorted({int(r) for r in rows}), "updated_at": now}
-            for p, fn, rows in marks], precondition)
+            for p, fn, rows in marks] + ([protocol] if protocol else []),
+            precondition)
 
     def restore(self, to_version: int, parts: dict[int, dict | None],
                 success: dict | None, meta: dict,
@@ -894,26 +891,21 @@ class CommitLogLedger:
             "success": success, "meta": meta, "txns": txns or {},
             "updated_at": datetime.now(timezone.utc).isoformat()}])
 
-    def rebucket(self, expect: dict, parts: dict, bucket: dict) -> int:
-        """Publish a whole-table bucket-spec change (Iceberg's REPLACE
-        PARTITION SPEC, made EAGER by a full rewrite so the table never
-        holds two specs at once — this repo's partition pruning derives
-        from the ONE spec in table_meta): a single log version carrying
-        the expected live state it was computed from (file sets AND
-        deletion vectors per partition — the rewrite materializes
-        masks, so a concurrently-landed mask must invalidate the swap),
-        the complete new per-partition manifest, and the new spec.
-        Replay applies it only while the expectation still holds; any
-        concurrent mutation makes the WHOLE swap a stale no-op (the
-        caller verifies post-commit and raises ConcurrentRebucketError
-        — like DELETE, a silently-ignored rebucket would leave the
-        caller believing the new layout is live). Returns the version."""
+    def rebucket(self, expect: dict, parts: dict, bucket: dict,
+                 precondition=None, protocol: dict | None = None) -> int:
+        """Publish a whole-table bucket-spec change (see rebucket_table)
+        as one version: the expected live state it was computed from
+        (file sets AND deletion vectors per partition), the complete
+        new manifest, the new spec, and the `protocol` ratchet. Replay applies it only while the expectation holds;
+        the caller's `precondition` refuses to publish a stale one.
+        Returns the version."""
         return self._append([{
             "type": "rebucket",
             "expect": {str(k): e for k, e in expect.items()},
             "parts": {str(k): m for k, m in parts.items()},
             "bucket": dict(bucket),
-            "updated_at": datetime.now(timezone.utc).isoformat()}])
+            "updated_at": datetime.now(timezone.utc).isoformat()}]
+            + ([protocol] if protocol else []), precondition)
 
     def run_success(self) -> dict | None:
         return self._replay()[1]
@@ -1443,41 +1435,69 @@ def _merge_schema_json(old: dict, new: dict) -> dict:
     return {"type": "struct", "fields": out}
 
 
-def record_table_schema(ledger, spark_schema) -> None:
-    """Log the table's schema in table_meta (Delta's metaData action):
-    reads then PLAN with the declared schema — no footer-sampling
-    inference I/O — and old files simply read nulls for later-added
-    columns. Idempotent; widening commits one merged-meta version."""
-    old = ledger.table_meta().get("schema")
-    new = spark_schema.jsonValue()
-    merged = _merge_schema_json(old, new) if old else new
+def _evolve_meta(meta: dict, table_schema, bucket: dict | None = None
+                 ) -> dict:
+    """The one schema-evolution step of a write (pure): the table_meta
+    patch that lands `table_schema` (a StructType, its JSON, or None)
+    in a table whose metadata is `meta` — the additive schema merge,
+    fresh physical names for new fields on a mapped table (never a
+    retired one: a re-added column must not read a dropped one's
+    values), and `bucket` when it is not the recorded spec; {} when
+    nothing changes. The writer lands its files under
+    `{**meta, **patch}`'s physical names and commits the patch in its
+    data version under `_meta_precondition`."""
+    patch: dict = {}
+    old = meta.get("schema")
+    new = table_schema if isinstance(table_schema, dict) or \
+        table_schema is None else table_schema.jsonValue()
+    merged = _merge_schema_json(old, new) if old and new else new or old
     if merged != old:
-        meta_patch = {"schema": merged}
-        cm = ledger.table_meta().get("column_mapping")
+        patch["schema"] = merged
+        cm = column_mapping(meta)
         if cm and old:
-            # column mapping active (ALTER happened): implicit additive
-            # evolution must mint PHYSICAL names for the new logical
-            # fields — fresh (never a retired physical name), so a
-            # re-added column can never resurrect values a dropped
-            # column left behind in old files
+            taken = set(cm.values()) | set(meta.get("retired_physical")
+                                           or [])
             have = {f["name"] for f in old["fields"]}
-            added = [f["name"] for f in merged["fields"]
-                     if f["name"] not in have]
-            if added:
-                cm = dict(cm)
-                taken = set(cm.values()) | \
-                    set(ledger.table_meta().get("retired_physical") or [])
-                minted = False
-                for name in added:
-                    if name in cm:
-                        continue  # pre-minted by the writer (e.g. the
-                        # datasource sink stages files before commit)
-                    cm[name] = _mint_physical(name, taken)
-                    taken.add(cm[name])
-                    minted = True
-                if minted:
-                    meta_patch["column_mapping"] = cm
-        ledger.set_table_meta(meta_patch)
+            for f in merged["fields"]:
+                if f["name"] not in have:
+                    cm[f["name"]] = _mint_physical(f["name"], taken)
+                    taken.add(cm[f["name"]])
+            patch["column_mapping"] = cm
+    if bucket and meta.get("bucket") != bucket:
+        patch["bucket"] = dict(bucket)
+    return patch
+
+
+def _meta_actions(patch: dict) -> list[dict]:
+    """The table_meta action committing `patch` — none when empty."""
+    return [{"type": "table_meta", "meta": patch}] if patch else []
+
+
+class ConcurrentMetadataError(RuntimeError):
+    """A write's table_meta patch (schema, column mapping, bucket spec)
+    was computed from metadata a concurrent commit has since changed
+    to something else; committing it would silently undo that change.
+    Nothing was committed; retry against the new table metadata."""
+
+
+def _meta_precondition(ledger, base: dict, patch: dict):
+    """The `precondition` (see _append) of a commit carrying `patch`,
+    computed from the metadata `base`: every key the patch sets must
+    hold at v-1 either its base value or the patch's own value (a
+    concurrent shard that evolved identically). Anything else raises
+    ConcurrentMetadataError before v publishes."""
+    def check(ver: int) -> None:
+        if not patch:
+            return
+        cur = ledger.table_meta(version=ver - 1)
+        moved = sorted(k for k, v in patch.items()
+                       if cur.get(k) not in (base.get(k), v))
+        if moved:
+            raise ConcurrentMetadataError(
+                f"v{ver}: table metadata {moved} changed concurrently "
+                "since this write read it; nothing was committed — "
+                "retry against the new table metadata")
+    return check
 
 
 def _mint_physical(logical: str, taken: set[str]) -> str:
@@ -1565,17 +1585,27 @@ def stats_columns(meta: dict) -> tuple:
 def revalidate_committed(out_dir: str, ledger=None) -> tuple[set[int], set[int]]:
     """Cache-integrity verification on resume (reference:
     base_request_processor.py:120-167 — per chunk: files exist, counts
-    reconcile, else regenerate THAT chunk). For each committed
-    partition, every file its manifest names must exist with matching
-    footer rows + size; on mismatch/corruption the partition's commit is
-    dropped so it recomputes. EXTRA on-disk files are orphans of
-    superseded commits, not corruption (vacuum reclaims them), and an
-    empty manifest (zero-row commit) is trivially satisfied. Returns
-    (valid, invalidated)."""
+    reconcile, else regenerate THAT chunk): `_check_committed`, then
+    the invalidated partitions' `remove`s in ONE version, so each of
+    them recomputes. Returns (valid, invalidated)."""
     ledger = ledger or make_ledger(out_dir)
+    valid, invalid = _check_committed(out_dir, ledger.committed())
+    if invalid:
+        ledger._append([{"type": "remove", "part": p}
+                        for p in sorted(invalid)])
+    return valid, invalid
+
+
+def _check_committed(out_dir: str, committed: dict
+                     ) -> tuple[set[int], set[int]]:
+    """(valid, invalid) over the snapshot `committed`, committing
+    nothing: a partition is valid when every file its manifest names
+    exists with matching footer rows + size. EXTRA on-disk files are
+    orphans of superseded commits (vacuum reclaims them); an empty
+    manifest (zero-row commit) is trivially satisfied."""
     valid: set[int] = set()
     invalid: set[int] = set()
-    for part, marker in sorted(ledger.committed().items()):
+    for part, marker in sorted(committed.items()):
         files = (marker or {}).get("files")
         on_disk = part_manifest(out_dir, part) or {}
         if files is not None and all(on_disk.get(name) == meta
@@ -1594,15 +1624,14 @@ def revalidate_committed(out_dir: str, ledger=None) -> tuple[set[int], set[int]]
                 "from a single input would drop the appended rows — "
                 "rebuild it from the inputs recorded in _meta/ "
                 "lineage, or drop its marker explicitly")
-        ledger.drop_part(part)
         invalid.add(part)
     return valid, invalid
 
 
-def _part_marker(run_id: str | None, part: int, n_rows: int, files: dict,
-                 stats: dict | None = None) -> dict:
-    """The `add` action's marker for one committed partition."""
-    return {
+def _add_action(run_id: str | None, part: int, files: dict, stats: dict,
+                n_rows: int) -> dict:
+    """The `add` action committing one partition whole."""
+    return {"type": "add", "part": int(part), "marker": {
         "run_id": run_id, "part": int(part), "status": "COMMITTED",
         "n_rows": int(n_rows),
         # file-level manifest (name → rows/bytes from footers): exactly
@@ -1614,9 +1643,9 @@ def _part_marker(run_id: str | None, part: int, n_rows: int, files: dict,
         # skipping (read_committed where=). OPTIONAL and validation-
         # inert: integrity checks compare only `files`, so stats can't
         # invalidate a partition (files without them just never prune).
-        "stats": stats or {},
+        "stats": stats,
         "updated_at": datetime.now(timezone.utc).isoformat(),
-    }
+    }}
 
 
 def adopt_markers(out_dir: str) -> dict:
@@ -1677,11 +1706,10 @@ def adopt_markers(out_dir: str) -> dict:
                 summary["parts_dropped"].append(part)
                 continue
             d = os.path.join(out_dir, "data", f"part={part}")
-            actions.append({"type": "add", "part": part,
-                            "marker": _part_marker(
-                                marker.get("run_id"), part, n_rows, on_disk,
-                                {fn: file_column_stats(os.path.join(d, fn))
-                                 for fn in on_disk})})
+            actions.append(_add_action(
+                marker.get("run_id"), part, on_disk,
+                {fn: file_column_stats(os.path.join(d, fn))
+                 for fn in on_disk}, n_rows))
             summary["parts_adopted"].append(part)
             if table_schema is None and on_disk:
                 table_schema = from_arrow_schema(
@@ -1703,8 +1731,7 @@ def adopt_markers(out_dir: str) -> dict:
             table_schema = StructType(
                 table_schema.fields
                 + [StructField("part", IntegerType(), True)])
-            actions.append({"type": "table_meta",
-                            "meta": {"schema": table_schema.jsonValue()}})
+            actions += _meta_actions({"schema": table_schema.jsonValue()})
         summary["version"] = ledger._append(actions)
     shutil.rmtree(ledger_dir, ignore_errors=True)
     try:
@@ -1736,6 +1763,13 @@ def _gc_stale_scratch(out_dir: str) -> None:
             alive = True
         except PermissionError:
             alive = True             # exists, owned by another user
+        except FileNotFoundError:
+            # no OWNER yet: a concurrent _scored_scratch may be between
+            # creating the root and writing OWNER — spare a young root
+            try:
+                alive = time.time() - os.path.getmtime(d) < 60
+            except OSError:
+                alive = False
         except (OSError, ValueError):
             alive = False
         if not alive:
@@ -1819,11 +1853,12 @@ def _scored_scratch(out_dir: str, run_id: str, salt: str
     return root, shard
 
 
-def _stage_scored(spark: SparkSession, ledger, result: DataFrame,
-                  stage_out: str) -> tuple[dict, list]:
-    """Write scored rows to `stage_out` partitioned by `part` and count
-    them per part. Returns (table_meta, counter rows {part, n_in,
-    n_kept, n_scrubbed, n_errors, n_tokens}).
+def _stage_scored(spark: SparkSession, tmeta: dict, result: DataFrame,
+                  stage_out: str) -> list:
+    """Write scored rows to `stage_out` partitioned by `part`, under the
+    physical names of `tmeta` (the table_meta with the write's
+    evolution patch applied), and count them per part. Returns the
+    counter rows {part, n_in, n_kept, n_scrubbed, n_errors, n_tokens}.
 
     The rebalance on `part` makes a part's file count follow its size:
     AQE lands each small part in one file and splits a large one into
@@ -1831,13 +1866,7 @@ def _stage_scored(spark: SparkSession, ledger, result: DataFrame,
     (64 MB by default), so no task serializes a huge part and no part
     gets n_upstream_tasks tiny files. With AQE off it is a plain hash
     exchange on `part`: one file per part, from the one hash partition
-    holding it (no split). On a mapped table (ALTER history) the schema
-    is recorded FIRST, so new logical columns get physical names
-    minted, and the files are written with physical names."""
-    tmeta = ledger.table_meta()
-    if tmeta.get("column_mapping"):
-        record_table_schema(ledger, result.schema)
-        tmeta = ledger.table_meta()
+    holding it (no split)."""
     staged = to_physical(result.hint("rebalance", "part"), tmeta)
     staged.write.mode("overwrite").partitionBy("part").parquet(stage_out)
     # re-read with the schema in hand: no footer-inference job
@@ -1850,7 +1879,7 @@ def _stage_scored(spark: SparkSession, ledger, result: DataFrame,
             .alias("n_scrubbed"),
             F.sum((~F.col("role_valid")).cast("long")).alias("n_errors"),
             F.sum("n_tokens").alias("n_tokens")).collect()
-    return tmeta, mrows
+    return mrows
 
 
 def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
@@ -1891,6 +1920,7 @@ def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
     run_id = run_fingerprint(input_path, params)
     os.makedirs(out_dir, exist_ok=True)
     ledger = make_ledger(out_dir, ledger_backend)
+    snap = ledger.snapshot()
 
     if bucket is not None:
         if bucket.get("fn") not in BUCKET_FNS or not bucket.get("col") \
@@ -1898,9 +1928,9 @@ def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
             raise ValueError(
                 f"bucket spec needs col/n_parts/fn with fn in "
                 f"{sorted(BUCKET_FNS)}; got {bucket}")
-        recorded = ledger.table_meta().get("bucket")
+        recorded = snap[2].get("bucket")
         if recorded != bucket:
-            if recorded is not None and ledger.committed():
+            if recorded is not None and snap[0]:
                 # the table's committed layout was built under ANOTHER
                 # spec: silently overwriting the planning truth would
                 # make pruning against the existing partitions unsound
@@ -1931,7 +1961,6 @@ def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
                         f"input: {bucket['col']}={r[bucket['col']]!r} "
                         f"hashes to part {want} but the row carries "
                         f"part {int(r['part'])}")
-            ledger.set_table_meta({"bucket": dict(bucket)})
 
     # Every Spark job this invocation schedules carries the run's job
     # group, so cancel_run(spark, run_id) can abort the run from any
@@ -1951,7 +1980,7 @@ def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
     try:
         return _run_checkpointed_grouped(
             spark, input_path, out_dir, params, only_parts,
-            broadcast_conv_aggs, strict, ledger, run_id, t0)
+            broadcast_conv_aggs, strict, ledger, snap, bucket, run_id, t0)
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description",
                      "spark.job.interruptOnCancel"):
@@ -1960,7 +1989,9 @@ def run_checkpointed(spark: SparkSession, input_path: str, out_dir: str,
 
 def _run_checkpointed_grouped(spark, input_path, out_dir, params,
                               only_parts, broadcast_conv_aggs, strict,
-                              ledger, run_id, t0) -> dict:
+                              ledger, snap, bucket, run_id, t0) -> dict:
+    """Commits at most: the revalidation `remove`s, the table_meta
+    patch + one `add` per todo part, `run_success` (PROTOCOL.md §3)."""
 
     # Resume trusts no marker blindly: each committed partition's footer
     # manifest must reconcile with its ledger entry, else its marker is
@@ -1969,19 +2000,26 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
     # whole-run memo short-circuit, so corruption introduced after a
     # completed run is detected on every later invocation too — the
     # per-reuse contract of the reference's
-    # _verify_existing_request_files.
-    done, invalidated = revalidate_committed(out_dir, ledger)
+    # _verify_existing_request_files. The drops commit FIRST, so a
+    # concurrent shard's fresh commit of a dropped part is never removed.
+    committed, prev, meta, _txns = snap
+    done, invalidated = _check_committed(out_dir, committed)
+    # a bucket spec the table does not record yet rides the data version
+    patch = _evolve_meta(meta, None, bucket)
 
     # Whole-run memoization: same fingerprint + completed marker + every
     # committed partition still validating → no-op.
-    prev = ledger.run_success()
-    if prev is not None and prev.get("run_id") == run_id:
-        if not invalidated:
-            return {"run_id": run_id, "parts_committed": 0,
-                    "parts_skipped": prev.get("n_parts", 0),
-                    "parts_invalidated": 0,
-                    "wall_ms": 0, "memoized": True}
-        ledger.drop_run_success()  # stale memo: data no longer reconciles
+    memo = prev is not None and prev.get("run_id") == run_id
+    if memo and not invalidated and not patch:
+        return {"run_id": run_id, "parts_committed": 0,
+                "parts_skipped": prev.get("n_parts", 0),
+                "parts_invalidated": 0,
+                "wall_ms": 0, "memoized": True}
+    drops = [{"type": "remove", "part": p} for p in sorted(invalidated)]
+    if memo and invalidated:  # stale memo: data no longer reconciles
+        drops.append({"type": "clear_run_success"})
+    if drops:
+        ledger._append(drops)
 
     if os.path.isdir(os.path.join(input_path, "_delta_log")):
         # Delta-table input: the curation job points straight at an
@@ -2046,7 +2084,9 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
             result = run_pipeline_staged(
                 spark, pending, os.path.join(scratch_root, "scored"),
                 broadcast_conv_aggs=broadcast_conv_aggs)
-            tmeta, mrows = _stage_scored(spark, ledger, result, stage_out)
+            patch = _evolve_meta(meta, result.schema, bucket)
+            tmeta = {**meta, **patch}
+            mrows = _stage_scored(spark, tmeta, result, stage_out)
 
             # Fail-all policy: raise BEFORE metrics append and marker
             # commit, so a strict failure leaves no trace to double-count
@@ -2062,31 +2102,30 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
                         "no partitions committed this invocation "
                         f"(staged output kept at {stage_out})")
 
-            # Publish: files into data/, then metrics, then one commit
-            # per partition — any prefix of this sequence is recoverable
-            # (a partition without a commit recomputes on rerun; scratch
-            # is preserved once publish begins so new rows are never the
-            # casualty of a failed move). Each staged file lands under
-            # its final partition dir with a unique name — one put per
-            # NEW file, never a rename/copy of existing data (the
-            # object-store-safe shape) — and the commit's manifest
-            # defines the partition. A crash between file placement and
-            # commit leaves only invisible orphans (read_committed
-            # ignores them; vacuum reclaims them).
+            # Publish: files into data/ (each under a unique name — one
+            # put per NEW file, never a rename/copy of existing data: the
+            # object-store-safe shape), metrics, then ONE commit of the
+            # table_meta patch and every todo part's `add`, whose
+            # manifests define the parts. A crash before the commit
+            # leaves the table as it was (placed files are orphans for
+            # vacuum) and the rerun recomputes the same parts; scratch
+            # is kept once publish begins.
             keep_scratch = True  # publish started: scratch holds new data
-            record_table_schema(ledger, result.schema)
             landed = _land_staged(out_dir, stage_out, tmeta, "run")
 
             wall_ms = int((time.monotonic() - t0) * 1000)
             _append_metrics(out_dir, run_id, shard, mrows, wall_ms)
 
             # A todo partition that produced ZERO output rows still gets
-            # a commit (n_rows=0, empty manifest) — without one it would
+            # an `add` (n_rows=0, empty manifest) — without one it would
             # re-enter todo on every rerun and the whole-run marker
             # could never be written
-            for p in todo:
-                man, stats, n = landed.get(int(p), ({}, {}, 0))
-                ledger.commit_part(_part_marker(run_id, p, n, man, stats))
+            adds = [_add_action(run_id, p, *landed.get(int(p), ({}, {}, 0)))
+                    for p in todo]
+            ledger._append(_meta_actions(patch) + adds,
+                           precondition=_meta_precondition(ledger, meta,
+                                                           patch))
+            patch = {}
             keep_scratch = False  # fully published + committed
         finally:
             # scratch is removed on full success and on pre-publish
@@ -2112,8 +2151,13 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
     # Whole-run marker whenever ALL parts are committed — including when
     # the final commit arrived via a sharded only_parts invocation, so
     # the production sharding path still gets run-level memoization.
+    tail = _meta_actions(patch)  # a new bucket spec with nothing to add
     if set(all_parts) <= set(ledger.committed()):
-        ledger.mark_run_success(run_id, len(all_parts))
+        tail.append({"type": "run_success", "run_id": run_id,
+                     "n_parts": len(all_parts)})
+    if tail:
+        ledger._append(tail, precondition=_meta_precondition(
+            ledger, meta, patch))
 
     return {"run_id": run_id, "parts_committed": len(todo),
             "parts_skipped": len(done),
@@ -2891,10 +2935,10 @@ def upgrade_protocol(out_dir: str, min_reader: int | None = None,
     honor: an upgrade beyond the running code would brick the table
     for its own writer. Returns the commit version."""
     ledger = make_ledger(out_dir)
-    req = {"min_reader": int(min_reader or 1),
-           "min_writer": int(min_writer or 1),
-           "reader_features": sorted(set(reader_features)),
-           "writer_features": sorted(set(writer_features))}
+    # against the floor ({}), so an explicit upgrade always commits
+    action = _protocol_action({}, min_reader, min_writer,
+                              reader_features, writer_features)
+    req = action["protocol"]
     if req["min_reader"] > READER_VERSION \
             or req["min_writer"] > WRITER_VERSION \
             or set(req["reader_features"]) - SUPPORTED_READER_FEATURES \
@@ -2904,7 +2948,7 @@ def upgrade_protocol(out_dir: str, min_reader: int | None = None,
             f"{READER_VERSION} / writer {WRITER_VERSION} with features "
             f"{sorted(SUPPORTED_READER_FEATURES)} / "
             f"{sorted(SUPPORTED_WRITER_FEATURES)}")
-    return ledger._append([{"type": "protocol", "protocol": req}])
+    return ledger._append([action])
 
 
 def restore_table(out_dir: str, version: int | None = None, as_of=None) -> dict:
@@ -3252,9 +3296,10 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
       pre-state, the full new manifest, and the new spec (see
       CommitLogLedger.rebucket). Readers see the old layout or the new
       one, never a mix; a crash leaves only orphans for vacuum;
-    * verify the swap APPLIED (replay honors it only while the
-      expectation holds) and raise ConcurrentRebucketError on a stale
-      swap rather than reporting a layout that is not live.
+    * check the expectation against v-1 as the commit's precondition
+      (replay honors the swap only while it holds): a stale swap raises
+      ConcurrentRebucketError and publishes nothing, rather than
+      reporting a layout that is not live.
 
     Time travel and RESTORE cross the spec change transparently: a
     pre-rebucket version replays with the old parts AND the old spec
@@ -3265,9 +3310,10 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
     repartition + partitionBy write, no driver-side rows beyond the
     manifest) — then O(files) manifest bookkeeping.
 
-    Protocol: the first rebucket ratchets reader AND writer features —
-    a build that would skip the action would mis-state the table; a
-    writer unaware of spec changes could append under the wrong layout.
+    Protocol: the first rebucket ratchets reader AND writer features in
+    its own version — a build that would skip the action would
+    mis-state the table; a writer unaware of spec changes could append
+    under the wrong layout.
 
     Returns {rebucketed, version, n_rows, parts_before, parts_after,
     files_written, bucket}."""
@@ -3296,24 +3342,25 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
                                            or {}).items() if v}}
               for p, m in committed.items()}
 
-    # ratchet BEFORE the swap lands: a reader that would silently skip
-    # the action must be refused from the first rebucketed version on
-    proto = meta.get("_protocol") or {}
-    if "rebucket" not in set(proto.get("reader_features") or []) \
-            or "rebucket" not in set(proto.get("writer_features") or []):
-        upgrade_protocol(out_dir, reader_features=["rebucket"],
-                         writer_features=["rebucket"])
+    # the ratchet rides the swap's version: a reader that would
+    # silently skip the action is refused from that version on, and a
+    # swap that never lands ratchets nothing
+    ratchet = _protocol_action(meta, reader_features=["rebucket"],
+                               writer_features=["rebucket"])
+
+    def fresh(ver: int) -> None:  # a stale swap publishes nothing
+        if not _rebucket_expectation_met(
+                ledger.committed(version=ver - 1), {"expect": expect}):
+            raise ConcurrentRebucketError(
+                f"rebucket of {out_dir} conflicted with a concurrent "
+                f"commit before v{ver}; nothing was committed — retry")
 
     live_files = {int(p): sorted((m or {}).get("files") or {})
                   for p, m in committed.items() if (m or {}).get("files")}
     if not live_files:
         # empty table: the spec change is metadata-only but still one
         # atomic, replayable, time-travelable version
-        ver = ledger.rebucket(expect, {}, bucket)
-        if ledger.table_meta(version=ver).get("bucket") != bucket:
-            raise ConcurrentRebucketError(
-                f"rebucket of empty {out_dir} was invalidated by a "
-                f"concurrent commit at v{ver}; retry")
+        ver = ledger.rebucket(expect, {}, bucket, fresh, ratchet)
         return {"rebucketed": True, "version": ver, "n_rows": 0,
                 "parts_before": len(committed), "parts_after": 0,
                 "files_written": 0, "bucket": dict(bucket)}
@@ -3352,21 +3399,7 @@ def rebucket_table(spark: SparkSession, out_dir: str, bucket: dict) -> dict:
         raise RuntimeError(
             f"rebucket rewrote {n_rows} rows but the manifests record "
             f"{live} live — aborted, table unchanged")
-    ver = ledger.rebucket(expect, new_markers, bucket)
-    # verify the swap APPLIED: replay honored it only if the live state
-    # at ver-1 still matched the expectation — re-check the committed
-    # outcome rather than trusting our (possibly stale) snapshot
-    after = ledger.committed(version=ver)
-    applied = (ledger.table_meta(version=ver).get("bucket") == bucket
-               and {int(p): sorted((m or {}).get("files") or {})
-                    for p, m in after.items()}
-               == {p: sorted(m["files"]) for p, m in new_markers.items()})
-    if not applied:
-        raise ConcurrentRebucketError(
-            f"rebucket of {out_dir} conflicted with a concurrent "
-            f"commit between snapshot and v{ver}; the swap was ignored "
-            "by replay (its outputs are orphans for vacuum) — retry "
-            "against the new snapshot")
+    ver = ledger.rebucket(expect, new_markers, bucket, fresh, ratchet)
     return {"rebucketed": True, "version": ver, "n_rows": n_rows,
             "parts_before": len(committed),
             "parts_after": len(new_markers),
@@ -3488,9 +3521,10 @@ def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
     point of physical deletion.
 
     Protocol: the first dv on a table ratchets the reader requirement
-    with the `deletion-vectors` feature — a build that would not apply
-    masks must refuse the whole table rather than resurrect deleted
-    rows (exactly why Delta gates DVs behind a table feature).
+    with the `deletion-vectors` feature, in the marks' own version — a
+    build that would not apply masks must refuse the whole table rather
+    than resurrect deleted rows (exactly why Delta gates DVs behind a
+    table feature).
 
     Candidate files are planned by `_plan_files` like the rewrite
     path; positions are found in ONE Spark job over the candidates via
@@ -3522,12 +3556,6 @@ def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
     if not cand:
         return summary
 
-    # ratchet BEFORE the first mask lands: a reader that would not
-    # apply dvs must refuse the table wholesale from this point on
-    proto = meta.get("_protocol") or {}
-    if "deletion-vectors" not in set(proto.get("reader_features") or []):
-        upgrade_protocol(out_dir, reader_features=["deletion-vectors"])
-
     hits = (spark.read.option("basePath", data_dir)
             .parquet(*[c[2] for c in cand])
             .where(F.col(pkey).isin(targets))
@@ -3547,8 +3575,13 @@ def delete_rows_dv(spark: SparkSession, out_dir: str, conv_ids,
     swaps: dict[int, list[str]] = {}
     for part, fn_, _pos in marks:
         swaps.setdefault(part, []).append(fn_)
+    # the ratchet rides the first masks' version: a reader that would
+    # not apply dvs refuses the table from that version on, and marks
+    # that never land ratchet nothing
     ledger.add_dv(marks, precondition=_swaps_precondition(
-        ledger, swaps, ConcurrentDeleteError, "dv delete"))
+        ledger, swaps, ConcurrentDeleteError, "dv delete"),
+        protocol=_protocol_action(meta,
+                                  reader_features=["deletion-vectors"]))
     summary["rows_deleted"] = sum(len(pos) for _, _, pos in marks)
     summary["files_marked"] = len(marks)
     summary["parts_touched"] = sorted({p for p, _, _ in marks})

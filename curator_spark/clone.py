@@ -35,7 +35,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from .checkpoint import make_ledger
+from .checkpoint import _meta_actions, _protocol_action, make_ledger
 
 
 def clone_table(src_dir: str, dst_dir: str, version: int | None = None,
@@ -94,10 +94,9 @@ def clone_table(src_dir: str, dst_dir: str, version: int | None = None,
     # everything else is one table_meta merge.
     meta = dict(meta or {})
     protocol = meta.pop("_protocol", None)
-    if meta:
-        actions.append({"type": "table_meta", "meta": meta})
+    actions += _meta_actions(meta)
     if protocol:
-        actions.append({"type": "protocol", "protocol": protocol})
+        actions.append(_protocol_action({}, **protocol))
     if success:
         actions.append({"type": "run_success",
                         "run_id": success["run_id"],

@@ -130,13 +130,14 @@ def add_constraint(spark: SparkSession, out_dir: str, name: str,
                    expr: str) -> int:
     """ALTER TABLE ADD CONSTRAINT name CHECK (expr): verifies the
     existing table satisfies `expr` (raises ConstraintViolation
-    otherwise — the invariant must be total), ratchets the
-    `check-constraints` writer feature, and commits the constraint
-    into table_meta. Returns the commit version."""
-    from .checkpoint import table_protocol, upgrade_protocol
+    otherwise — the invariant must be total), then commits the
+    constraint into table_meta with the `check-constraints` writer
+    feature ratchet in the same version. Returns that version."""
+    from .checkpoint import _protocol_action
 
     ledger = make_ledger(out_dir)
-    cons = dict(ledger.table_meta().get("constraints") or {})
+    meta = ledger.table_meta()
+    cons = dict(meta.get("constraints") or {})
     if name in cons:
         raise ValueError(f"constraint {name!r} already exists "
                          f"({cons[name]}); drop it first")
@@ -146,14 +147,10 @@ def add_constraint(spark: SparkSession, out_dir: str, name: str,
         .filter(_failed(expr)).collect()
     check_df(read_committed(spark, out_dir), {name: expr},
              where=" by existing rows")
-    proto = table_protocol(out_dir)
-    if "check-constraints" not in set(
-            proto.get("writer_features") or []):
-        # writers that would not enforce must refuse the table
-        upgrade_protocol(out_dir, writer_features=["check-constraints"])
     cons[name] = str(expr)
-    return ledger.set_table_meta({"constraints": cons}) or \
-        ledger.latest_version()
+    # writers that would not enforce must refuse the table
+    return ledger.set_table_meta({"constraints": cons}, protocol=(
+        _protocol_action(meta, writer_features=["check-constraints"])))
 
 
 def drop_constraint(out_dir: str, name: str) -> int:
@@ -166,5 +163,4 @@ def drop_constraint(out_dir: str, name: str) -> int:
         raise ValueError(f"no constraint named {name!r}; have "
                          f"{sorted(cons)}")
     cons.pop(name)
-    ledger.set_table_meta({"constraints": cons})
-    return ledger.latest_version()
+    return ledger.set_table_meta({"constraints": cons})

@@ -353,27 +353,9 @@ class _LedgerWriter(DataSourceArrowWriter):
         self._dir = table_dir
         self._overwrite = overwrite
         ledger = make_ledger(table_dir)
-        existing = bool(ledger.committed())
-        meta = ledger.table_meta()
-        # column mapping (ALTER history): tasks stage files under the
-        # immutable PHYSICAL names. New columns this write introduces
-        # get physical names minted ONCE here on the driver (tasks must
-        # agree), committed alongside the widened schema.
-        from .checkpoint import _mint_physical, stats_columns
-        self._cm = dict(meta.get("column_mapping") or {})
-        self._cm_patch = False
-        if self._cm:
-            taken = set(self._cm.values()) | set(
-                meta.get("retired_physical") or [])
-            for f in schema.fields:
-                if f.name != "part" and f.name not in self._cm:
-                    self._cm[f.name] = _mint_physical(f.name, taken)
-                    taken.add(self._cm[f.name])
-                    self._cm_patch = True
-        self._stats_cols = stats_columns(
-            {**meta, "column_mapping": self._cm} if self._cm else meta)
+        existing, _success, meta, _txns = ledger.snapshot()
         self._bucket = meta.get("bucket")
-        self._new_bucket = False
+        new_bucket = None
         if "part" in schema.fieldNames():
             self._route = "column"
         else:
@@ -386,8 +368,8 @@ class _LedgerWriter(DataSourceArrowWriter):
                         "dataframe a `part` column, or set "
                         ".option('bucketBy', <col>).option('buckets', "
                         "<n>) to (create and) use a bucket spec")
-                self._bucket = {"col": col, "n_parts": n, "fn": "md5full"}
-                self._new_bucket = not existing
+                self._bucket = new_bucket = {"col": col, "n_parts": n,
+                                             "fn": "md5full"}
                 if existing:
                     raise ValueError(
                         "table exists without a bucket spec; appends "
@@ -395,6 +377,18 @@ class _LedgerWriter(DataSourceArrowWriter):
             if self._bucket["fn"] not in BUCKET_FNS:
                 raise ValueError(f"unknown bucket fn {self._bucket['fn']}")
             self._route = "bucket"
+        # the write's table_meta patch (widened schema, physical names
+        # minted ONCE here, before any task runs, so every task agrees,
+        # a new bucket spec), committed in the data version: tasks stage
+        # files under the patched table's immutable PHYSICAL names
+        from .checkpoint import _evolve_meta, column_mapping, stats_columns
+        declared = StructType(
+            [f for f in schema.fields if f.name != "part"]
+            + [StructField("part", IntegerType(), False)])
+        self._base = meta
+        self._patch = _evolve_meta(meta, declared, new_bucket)
+        self._cm = column_mapping({**meta, **self._patch})
+        self._stats_cols = stats_columns({**meta, **self._patch})
 
     # -- executor side -------------------------------------------------
     def write(self, iterator):
@@ -441,8 +435,8 @@ class _LedgerWriter(DataSourceArrowWriter):
         return _StagedFiles(entries=out)
 
     # -- driver side ----------------------------------------------------
-    def _actions(self, messages) -> tuple[list, int]:
-        """Manifest actions for one atomic commit, + rows staged."""
+    def _actions(self, messages) -> list:
+        """The staged files' add-file actions, one per partition."""
         from datetime import datetime, timezone
         import uuid
         by_part: dict[int, dict] = {}
@@ -456,35 +450,16 @@ class _LedgerWriter(DataSourceArrowWriter):
                 slot["n_rows"] += int(n_rows)
         run_id = uuid.uuid4().hex[:16]
         now = datetime.now(timezone.utc).isoformat()
-        actions = [{"type": "add_files", "part": p, "files": s["files"],
-                    "n_rows": s["n_rows"], "run_id": run_id,
-                    "stats": s["stats"], "updated_at": now}
-                   for p, s in sorted(by_part.items())]
-        return actions, sum(s["n_rows"] for s in by_part.values())
+        return [{"type": "add_files", "part": p, "files": s["files"],
+                 "n_rows": s["n_rows"], "run_id": run_id,
+                 "stats": s["stats"], "updated_at": now}
+                for p, s in sorted(by_part.items())]
 
-    def _ledger(self):
-        from .checkpoint import make_ledger, record_table_schema
-        ledger = make_ledger(self._dir)
-        if self._new_bucket:
-            ledger.set_table_meta({"bucket": dict(self._bucket)})
-            self._new_bucket = False
-        if self._cm_patch:
-            # publish the driver-minted physical names BEFORE the
-            # schema widens (inert for columns not yet in the schema;
-            # record_table_schema then skips re-minting them)
-            ledger.set_table_meta({"column_mapping": dict(self._cm)})
-            self._cm_patch = False
-        declared = StructType(
-            [f for f in self._schema.fields if f.name != "part"]
-            + [StructField("part", IntegerType(), False)])
-        record_table_schema(ledger, declared)
-        return ledger
-
-    def _enforce_constraints(self, ledger, messages) -> None:
+    def _enforce_constraints(self, meta: dict, messages) -> None:
         """CHECK enforcement at the sink: staged files validate before
         the commit publishes; a violation unlinks them and raises, so
         the table never holds a row failing a committed constraint."""
-        cons = dict(ledger.table_meta().get("constraints") or {})
+        cons = dict(meta.get("constraints") or {})
         if not cons:
             return
         from pyspark.sql import SparkSession
@@ -501,19 +476,35 @@ class _LedgerWriter(DataSourceArrowWriter):
             _unlink_staged(self._dir, messages)
             raise
 
-    def commit(self, messages) -> None:
-        ledger = self._ledger()
-        self._enforce_constraints(ledger, messages)
-        actions, _ = self._actions(messages)
+    def commit(self, messages, batchId: int | None = None) -> None:
+        """One version, after the CHECK gate: the table_meta patch, an
+        overwrite's `remove`s (readers see the old table or the new
+        one, never a mix — Delta's overwrite), a streaming epoch's txn
+        and every staged file's add-file action."""
+        from .checkpoint import _meta_actions, _meta_precondition, make_ledger
+        ledger = make_ledger(self._dir)
+        committed, _success, meta, txns = ledger.snapshot()
+        head = []
+        if batchId is not None:
+            last = txns.get(str(self._app_id))
+            if last is not None and int(batchId) <= last:
+                # replayed epoch: the log already carries this batch —
+                # this attempt's staged files are orphans
+                _unlink_staged(self._dir, messages)
+                return
+            head = [{"type": "txn", "app_id": str(self._app_id),
+                     "txn_version": int(batchId)}]
+        self._enforce_constraints(meta, messages)
+        actions = self._actions(messages)
         if self._overwrite:
-            # remove-all + add in the SAME log version: readers see the
-            # old table or the new one, never a mix (Delta's overwrite)
             actions = [{"type": "remove", "part": int(p)}
-                       for p in sorted(ledger.committed())] + actions
+                       for p in sorted(committed)] + actions
+        actions = _meta_actions(self._patch) + head + actions
         if actions:
-            ledger._append(actions)
+            ledger._append(actions, precondition=_meta_precondition(
+                ledger, self._base, self._patch))
 
-    def abort(self, messages) -> None:
+    def abort(self, messages, batchId: int | None = None) -> None:
         _unlink_staged(self._dir, messages)
 
 
@@ -534,23 +525,6 @@ class _LedgerStreamWriter(_LedgerWriter, DataSourceStreamArrowWriter):
                 "streaming writes need .option('txnAppId', <stable "
                 "unique id per query>) — the idempotence key that "
                 "makes epoch replays exactly-once (Delta's txnAppId)")
-
-    def commit(self, messages, batchId: int) -> None:
-        ledger = self._ledger()
-        last = ledger.last_txn(self._app_id)
-        if last is not None and int(batchId) <= last:
-            # replayed epoch: the log already carries this batch —
-            # this attempt's staged files are orphans
-            _unlink_staged(self._dir, messages)
-            return
-        self._enforce_constraints(ledger, messages)
-        actions, _ = self._actions(messages)
-        ledger._append(
-            [{"type": "txn", "app_id": str(self._app_id),
-              "txn_version": int(batchId)}] + actions)
-
-    def abort(self, messages, batchId: int) -> None:
-        _unlink_staged(self._dir, messages)
 
 
 def _unlink_staged(table_dir: str, messages) -> None:

@@ -47,6 +47,14 @@ cannot carry (Delta DVs need reader v3 + the binary DV file format).
 An export of a snapshot with live DV masks REFUSES with instructions
 to materialize first (compact/OPTIMIZE rewrites masked files) —
 exporting the raw files would silently resurrect deleted rows.
+
+Exported tables are READ-ONLY for foreign writers. The commit log stays
+the table's one source of truth: re-exports diff the commitlog snapshot
+against the Delta log and never read a foreign writer's commits back,
+and the Delta parquet checkpoints carry no `remove` tombstones (they
+exist for VACUUM coordination, which exported tables delegate to the
+commitlog's own `vacuum`), so a foreign writer's concurrent VACUUM
+could not see which files are still needed.
 """
 
 from __future__ import annotations

@@ -13,10 +13,11 @@ completed requests.
 
 Commit shape: an append adds files to partitions that already have
 committed data — precisely Delta's add-file commit: one put per new
-file plus one atomic `add_files` log entry merging the partition
-manifest; a crash between the two leaves only invisible orphans
-(read_committed ignores them, vacuum reclaims them) and the re-run
-appends the batch cleanly.
+file, then ONE log version carrying the schema-evolution patch, an
+`add_files` action per touched partition (merging its manifest) and the
+writer's `txn` mark; a crash before that version leaves only invisible
+orphans (read_committed ignores them, vacuum reclaims them) and the
+re-run appends the batch cleanly.
 
 Safety: a multi-run partition records every contributing run in its
 marker (`runs`); checkpoint.revalidate_committed REFUSES to auto-
@@ -41,9 +42,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schema
 from .checkpoint import (
-    _append_metrics, _land_staged, _scored_scratch,
-    _stage_scored, make_ledger, read_committed, record_table_schema,
-    run_fingerprint)
+    _append_metrics, _evolve_meta, _land_staged, _meta_actions,
+    _meta_precondition, _scored_scratch, _stage_scored, make_ledger,
+    read_committed, run_fingerprint)
 from .pipeline import run_pipeline_df
 
 # unit separator: cannot occur in role/text tokens, so the fingerprint
@@ -141,20 +142,20 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
                     broadcast_conv_aggs: bool = False,
                     t0: float | None = None,
                     txn: tuple[str, int] | None = None) -> dict:
-    """DataFrame-level core of the append: dedup → score → add-file
-    commits. Shared by the path-based entry above and the streaming
+    """DataFrame-level core of the append: dedup → score → one add-file
+    commit. Shared by the path-based entry above and the streaming
     ingestion sink (streaming/append_stream.py), which feeds each
     micro-batch through here with an epoch-deterministic run_id.
 
     txn=(app_id, txn_version): idempotent-writer marker (Delta's txn
     action). If the log already records txn_version (or higher) for
     app_id, the whole batch is skipped BEFORE any Spark work — the
-    cheap fast path for a replayed streaming epoch; the content-level
-    dedup below remains the correctness backstop for replays whose txn
-    never got recorded (crash between data commit and the txn commit)
-    and for source-side re-deliveries no transaction id can see. The
-    marker is committed only after every partition's add-file commit
-    and the metrics/lineage writes have landed."""
+    cheap fast path for a replayed streaming epoch. The marker rides
+    the SAME log version as the batch's data (after the metrics and
+    lineage writes), so the log never holds the data without the mark
+    or the mark without the data. The content-level dedup below stays
+    the backstop for source-side re-deliveries no transaction id can
+    see."""
     t0 = time.monotonic() if t0 is None else t0
     ledger = make_ledger(out_dir)
     if txn is not None:
@@ -192,22 +193,18 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
     pending = new.join(novel, "conv_id", "left_semi")
     result = run_pipeline_df(pending,
                              broadcast_conv_aggs=broadcast_conv_aggs)
+    meta = ledger.table_meta()
+    patch = _evolve_meta(meta, result.schema)
 
     import shutil
     scratch_root, shard = _scored_scratch(out_dir, run_id, run_id)
     stage_out = os.path.join(scratch_root, "out")
     try:
-        tmeta, mrows = _stage_scored(spark, ledger, result, stage_out)
+        tmeta = {**meta, **patch}
+        mrows = _stage_scored(spark, tmeta, result, stage_out)
 
-        # Per-partition add-file commits: place this batch's files under
-        # their final dirs with unique names (one put per NEW file),
-        # then publish ONE atomic log entry per partition. A crash
-        # before a partition's entry leaves its placed files as
-        # orphans, invisible to read_committed until vacuum.
-        record_table_schema(ledger, result.schema)
+        # one put per NEW file: orphans until the one commit below
         landed = _land_staged(out_dir, stage_out, tmeta, "append")
-        for p, (man, stats, n_rows) in sorted(landed.items()):
-            ledger.append_part(p, man, n_rows, run_id, stats=stats)
 
         wall_ms = int((time.monotonic() - t0) * 1000)
         _append_metrics(out_dir, run_id, shard, mrows, wall_ms)
@@ -223,12 +220,20 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
                 "parts_touched": sorted(landed),
             }, f, indent=2)
 
+        # ONE version: the schema patch, every touched partition's
+        # add-file action and the txn mark
+        now = datetime.now(timezone.utc).isoformat()
+        actions = _meta_actions(patch) + [
+            {"type": "add_files", "part": p, "files": man,
+             "n_rows": n_rows, "run_id": run_id, "stats": stats,
+             "updated_at": now}
+            for p, (man, stats, n_rows) in sorted(landed.items())]
         if txn is not None:
-            # recorded LAST: a crash anywhere above leaves the txn
-            # unrecorded, the epoch replays, and content dedup absorbs
-            # what already landed — then this mark makes the NEXT
-            # replay free
-            ledger.set_txn(txn[0], int(txn[1]))
+            actions.append({"type": "txn", "app_id": str(txn[0]),
+                            "txn_version": int(txn[1])})
+        if actions:
+            ledger._append(actions, precondition=_meta_precondition(
+                ledger, meta, patch))
         summary["rows_appended"] = sum(n for _m, _s, n in landed.values())
         summary["wall_ms"] = wall_ms
         return summary

@@ -54,9 +54,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .checkpoint import (
-    _bucket_column, _check_constraints, _key_ranges,
-    _land_staged, _plan_files, _rewrite_files, _scan_committed,
-    _swaps_precondition, _table_bucket, make_ledger, to_physical)
+    _bucket_column, _check_constraints, _evolve_meta, _key_ranges,
+    _land_staged, _meta_actions, _meta_precondition, _plan_files,
+    _rewrite_files, _scan_committed, _swaps_precondition, _table_bucket,
+    make_ledger, to_physical)
 
 __all__ = ["ConcurrentMergeError", "merge_dataframes", "merge_into"]
 
@@ -218,33 +219,19 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
     if need_full_row and missing:
         raise ValueError(f"source lacks target columns {missing}")
 
-    schema_action = None
-    eff_meta = meta  # meta whose schema + mapping cover this merge
+    patch: dict = {}
     if evolve_schema:
         from pyspark.sql.types import StructField
         add = [StructField(f.name, f.dataType, True)
                for f in source.schema.fields if f.name not in cols]
         if add:
-            from .checkpoint import (
-                _merge_schema_json, _mint_physical, column_mapping)
-            merged_json = _merge_schema_json(
-                meta["schema"],
-                StructType(declared.fields + add).jsonValue())
-            patch = {"schema": merged_json}
-            cm = column_mapping(meta)
-            if cm:
-                # mapped table: the evolved columns need physical
-                # names minted in the SAME commit as the schema
-                taken = set(cm.values()) | set(
-                    meta.get("retired_physical") or [])
-                for f_ in add:
-                    cm[f_.name] = _mint_physical(f_.name, taken)
-                    taken.add(cm[f_.name])
-                patch["column_mapping"] = cm
-            eff_meta = {**meta, **patch}
-            schema_action = {"type": "table_meta", "meta": patch}
             declared = StructType(declared.fields + add)
             cols = cols + [f.name for f in add]
+            # the widened schema (and, on a mapped table, the new
+            # columns' physical names) commits IN the merge's version
+            patch = _evolve_meta(meta, declared)
+    # the meta whose schema + mapping cover this merge
+    eff_meta = {**meta, **patch}
 
     summary = {"version": None, "rows_updated": 0, "rows_deleted": 0,
                "rows_inserted": 0, "files_rewritten": 0, "files_added": 0,
@@ -447,22 +434,25 @@ def merge_into(spark: SparkSession, out_dir: str, source: DataFrame,
         # the table is fully valid by induction (add_constraint scanned
         # existing rows), so only genuinely new values can fail.
         _check_constraints(spark, out_dir, eff_meta, actions, "MERGE")
-        if schema_action is not None:
-            # the widened schema and the data that needs it land in
-            # ONE version (Delta commits metaData + adds together); a
-            # no-op merge never evolves the schema
-            actions.insert(0, schema_action)
+        # the widened schema and the data that needs it land in ONE
+        # version (Delta commits metaData + adds together); a no-op
+        # merge never evolves the schema
+        actions = _meta_actions(patch) + actions
         if txn is not None:
             # the idempotence mark rides the SAME atomic version as the
             # merge: a crash can never record the txn without the data
             # or the data without the txn
             actions.append({"type": "txn", "app_id": str(txn[0]),
                             "txn_version": int(txn[1])})
-        # Optimistic-concurrency check (Delta raises on MERGE-vs-
-        # OPTIMIZE) as the commit's precondition, so a stale swap
-        # publishes nothing; a retry converges against the new snapshot
-        ver = ledger.merge_commit(actions, precondition=_swaps_precondition(
-            ledger, swaps, ConcurrentMergeError, "MERGE"))
+        # Optimistic-concurrency checks as the commit's precondition —
+        # a stale swap (Delta raises on MERGE-vs-OPTIMIZE) or a schema
+        # a concurrent ALTER moved under the patch publishes nothing; a
+        # retry converges against the new snapshot
+        swaps_ok = _swaps_precondition(ledger, swaps, ConcurrentMergeError,
+                                       "MERGE")
+        meta_ok = _meta_precondition(ledger, meta, patch)
+        ver = ledger.merge_commit(actions, precondition=lambda v: (
+            swaps_ok(v), meta_ok(v)))
         summary["version"] = int(ver)
         summary["parts_touched"].sort()
         return summary

@@ -6,13 +6,14 @@ conversations the committed table has never seen.
 Exactly-once story, layered:
 * foreachBatch gives at-least-once micro-batch delivery with a
   deterministic epoch id persisted in the stream checkpoint;
-* a txn marker in the table's own log (Delta's txn action, recorded
-  after the epoch's last commit) makes a replayed epoch a no-op BEFORE
-  any Spark work — the cheap fast path;
-* the append itself is idempotent BY CONTENT — a replayed epoch whose
-  txn never landed (crash between data and marker), or a whole re-run
-  with a fresh checkpoint directory, re-derives the same conversation
-  fingerprints, finds them committed, and appends nothing.
+* a txn marker in the table's own log (Delta's txn action, committed
+  in the SAME log version as the epoch's data, so the log never holds
+  one without the other) makes a replayed epoch a no-op BEFORE any
+  Spark work — the cheap fast path;
+* the append itself is idempotent BY CONTENT — a whole re-run with a
+  fresh checkpoint directory (a new txn app id) re-derives the same
+  conversation fingerprints, finds them committed, and appends
+  nothing.
   Content-keyed dedup is thus a stronger dedup key than the sink
   transaction id alone: it also absorbs duplicates the SOURCE
   re-delivers under new file names, which no transaction id can see.

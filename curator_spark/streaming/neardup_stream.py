@@ -17,8 +17,9 @@ make replays safe), in this exact order:
      lineage — a lazy plan would be silently recomputed against the
      post-append index and every novel doc would flag itself);
   2. survivors + verdicts written under epoch=<id>/ dirs;
-  3. the epoch's _COMMITTED marker (data-then-marker, the batch
-     ledger's discipline, checkpoint.py::_commit_part);
+  3. the epoch's _COMMITTED marker (data-then-marker: the files are
+     placed before the marker that makes them count, as a commit-log
+     writer places its files before the version naming them);
   4. the index append.
 
 A replayed epoch short-circuits on the marker, so rows are never

@@ -52,7 +52,8 @@ import shutil
 from datetime import datetime, timezone
 from typing import Callable
 
-from .checkpoint import _check_writer_protocol, make_ledger
+from .checkpoint import (
+    _check_writer_protocol, _meta_actions, _protocol_action, make_ledger)
 from .clone import clone_table
 
 
@@ -137,11 +138,11 @@ def publish_branch(src_dir: str, branch_dir: str,
                   if k not in ("_wap", "_protocol")
                   and json.dumps(v, sort_keys=True)
                   != json.dumps((meta_s or {}).get(k), sort_keys=True)}
-    if meta_delta:
-        actions.append({"type": "table_meta", "meta": meta_delta})
+    actions += _meta_actions(meta_delta)
     proto_b = (meta_b or {}).get("_protocol")
-    if proto_b and proto_b != (meta_s or {}).get("_protocol"):
-        actions.append({"type": "protocol", "protocol": proto_b})
+    ratchet = proto_b and _protocol_action(meta_s or {}, **proto_b)
+    if ratchet:
+        actions.append(ratchet)
     for app, v in sorted((txns_b or {}).items()):
         if int(v) > int((txns_s or {}).get(app, -1)):
             actions.append({"type": "txn", "app_id": str(app),

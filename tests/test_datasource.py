@@ -43,7 +43,10 @@ def built_table(spark, tmp_path_factory):
     p1 = str(tmp_path / "b1.parquet")
     fixtures.write_transcripts_parquet(p1, 600, seed=81, n_parts=4)
     out = str(tmp_path / "out")
-    run_checkpointed(spark, p1, out)
+    # one shard per part: a backlog of several insert versions for the
+    # rate-limited stream tests (a whole run commits its parts as one)
+    for part in range(4):
+        run_checkpointed(spark, p1, out, only_parts=[part])
     return out
 
 
@@ -417,7 +420,7 @@ def test_batched_read_masks_dv_across_row_groups(spark, tmp_path):
     from pyspark.sql.types import (IntegerType, StringType, StructField,
                                    StructType)
 
-    from curator_spark.checkpoint import record_table_schema
+    from curator_spark.checkpoint import _evolve_meta
     from curator_spark.datasource import _BATCH_ROWS, _declared_schema
 
     out = str(tmp_path / "rg")
@@ -429,10 +432,10 @@ def test_batched_read_masks_dv_across_row_groups(spark, tmp_path):
         "turn_idx": pa.array(range(n), type=pa.int32())}),
         os.path.join(d, fn), row_group_size=6000)
     led = make_ledger(out)
-    record_table_schema(led, StructType([
+    led.set_table_meta(_evolve_meta(led.table_meta(), StructType([
         StructField("conv_id", StringType()),
         StructField("turn_idx", IntegerType()),
-        StructField("part", IntegerType(), False)]))
+        StructField("part", IntegerType(), False)])))
     led.append_part(2, {fn: {"n_rows": n, "n_bytes": os.path.getsize(
         os.path.join(d, fn))}}, n, run_id="rg")
     dv = [5999, 6000, _BATCH_ROWS - 1, _BATCH_ROWS, n - 1]

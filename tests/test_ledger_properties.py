@@ -88,7 +88,8 @@ def _apply(led, op):
         m = parts.get(p)
         if m and m.get("files"):
             victim = sorted(m["files"])[0]
-            led.delete_rewrite(p, [victim], {})
+            led.merge_commit([{"type": "delete", "part": p,
+                               "remove_files": [victim], "add_files": {}}])
     elif kind == "delete_partial":
         # filtered rewrite keeping some survivors — the delete shape
         # row-level right-to-be-forgotten actually produces
@@ -98,9 +99,10 @@ def _apply(led, op):
             victim = sorted(m["files"])[-1]
             n = int(m["files"][victim].get("n_rows", 0))
             if n > 1:
-                led.delete_rewrite(p, [victim],
-                                   {f"d{next(_seq)}.parquet":
-                                    {"n_rows": n - 1}})
+                led.merge_commit([{"type": "delete", "part": p,
+                                   "remove_files": [victim],
+                                   "add_files": {f"d{next(_seq)}.parquet":
+                                                 {"n_rows": n - 1}}}])
     elif kind == "dv":
         # deletion vector: mark one row position of one live file —
         # repeats hit already-marked positions (union idempotence)

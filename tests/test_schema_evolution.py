@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 from conftest import copy_table
 from curator_spark import fixtures
 from curator_spark.checkpoint import (
-    _merge_schema_json, compact_partition, file_column_stats, make_ledger,
-    read_committed, record_table_schema, run_checkpointed)
+    _evolve_meta, _merge_schema_json, compact_partition, file_column_stats,
+    make_ledger, read_committed, run_checkpointed)
 
 
 @pytest.fixture(scope="module")
@@ -34,7 +34,7 @@ def table(spark, tmp_path_factory):
 def _gold_rows(spark, table: str, part: int):
     """20 rows of `part` carrying a NEW column quality_tag = 'gold'.
     when() keeps the new column nullable — a bare lit() is non-nullable
-    and record_table_schema rightly refuses it."""
+    and the schema evolution rightly refuses it."""
     return (read_committed(spark, table).filter(f"part = {part}").limit(20)
             .withColumn("quality_tag",
                         F.when(F.col("conv_id").isNotNull(), "gold"))
@@ -52,7 +52,7 @@ def _append_file(ledger, table: str, part: int, df, name: str) -> None:
                   "n_bytes": os.path.getsize(src)}}
     stats = {name: file_column_stats(src)}
     os.replace(src, os.path.join(table, "data", f"part={part}", name))
-    record_table_schema(ledger, df.schema)
+    ledger.set_table_meta(_evolve_meta(ledger.table_meta(), df.schema))
     ledger.append_part(part, man, man[name]["n_rows"], f"wide-{name}",
                        stats=stats)
 
