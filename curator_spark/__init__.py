@@ -16,6 +16,11 @@ DataFrame plan whose physical strategy Catalyst picks.
 
 __version__ = "0.1.0"
 
+# first, so a Python worker's later tasks skip the zip-directory re-read
+from . import worker_hook as _worker_hook               # noqa: E402
+
+_worker_hook.install()
+
 # Public API — the stable user-facing surface. Deeper internals
 # (pipeline stages, checkpoint internals, query batteries) are
 # importable from their modules but may change shape between versions.

@@ -14,7 +14,7 @@ exactly that admission control — so a 1000-executor cluster runs
 coordination (the driver-side global alternative serializes the job).
 
 This is the I/O-bound sibling of the CPU-bound scoring lane
-(pipeline.score_turns): use pandas UDFs when the payload is local
+(pipeline.score_turns): use Arrow UDFs when the payload is local
 math, this bridge when the payload awaits something — an HTTP model
 endpoint, an object-store fetch, a subprocess.
 

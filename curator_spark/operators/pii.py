@@ -11,7 +11,7 @@ Everything here is built from JVM-side column expressions —
 regexp_extract_all, a sequence/substr integer fold for the checksum,
 an aggregate fold for the masking — so the whole operator lives inside
 whole-stage codegen: no Python boundary, no UDF, scales as a narrow
-map at any corpus size (contrast rules.scrub_series, which pays the
+map at any corpus size (contrast rules.scrub_array, which pays the
 Arrow hop because byte-exact reference parity pins it to Python `re`).
 
 Cross-engine determinism notes (the oracle replays this in DuckDB):

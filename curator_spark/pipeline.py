@@ -2,7 +2,7 @@
 
 Spark-first re-expression of the reference's per-row curation lifecycle
 (reference: src/bespokelabs/curator/llm/llm.py:165-239 +
-request_processor/*): scan → vectorized scoring (scalar pandas UDF,
+request_processor/*): scan → vectorized scoring (scalar Arrow UDF,
 models loaded once per Python worker) → conversation-level aggregates
 via SALTED multi-phase groupBy (defuses 10^3–10^6-turn conversation
 skew) → join aggregates back to turns → keep/scrub columns.
@@ -24,7 +24,7 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from . import rules, schema, scoring
@@ -35,21 +35,22 @@ SALT_BUCKETS = 16  # salt cardinality for the two-phase aggregation
 _SCORE_STRUCT = schema.T.StructType(schema.SCORED_EXTRA_FIELDS)
 
 
-@F.pandas_udf(_SCORE_STRUCT)
-def _score_udf(text: pd.Series) -> pd.DataFrame:
-    return scoring.score_text_series(text)
+@F.arrow_udf(_SCORE_STRUCT)
+def _score_udf(text: pa.Array) -> pa.Array:
+    return scoring.score_text_array(text)
 
 
 def score_turns(df: DataFrame) -> DataFrame:
     """Per-turn scoring: langid, perplexity, scrub, heuristic rules.
 
-    A scalar Arrow-batched pandas UDF over ONLY the text column — every
-    other column (ids, timestamps, tool payloads) stays JVM-side and
-    never pays Arrow serialization; Catalyst column pruning through the
-    plan is preserved. The models are executor-process singletons
-    (lru_cache in curator_spark.models.*) — the Spark analogue of the
-    reference loading the vLLM model once per chunk (reference:
-    vllm_offline_request_processor.py:43-54).
+    A scalar Arrow UDF over ONLY the text column — every other column
+    (ids, timestamps, tool payloads) stays JVM-side and never pays Arrow
+    serialization; Catalyst column pruning through the plan is
+    preserved. The batch stays a `pa.Array` end to end (no pandas
+    conversion on either side of the payload). The models are
+    executor-process singletons (lru_cache in curator_spark.models.*) —
+    the Spark analogue of the reference loading the vLLM model once per
+    chunk (reference: vllm_offline_request_processor.py:43-54).
     """
     return df.withColumn("_s", _score_udf(F.col("text"))).select(
         *df.columns, "_s.*")
@@ -64,36 +65,34 @@ def score_turns_safe(df: DataFrame, scorer=None) -> DataFrame:
     """score_turns with the reference's terminal-failure semantics
     (reference: base_online_request_processor.py:446-462 — after
     retries, emit an error row instead of data, never kill the run):
-    if a batch throws, re-score row-by-row to isolate the poison rows,
-    which come out with null scores and an `errors` message while every
-    healthy row still produces data.
+    if a batch throws, re-score it one-row slice by slice to isolate the
+    poison rows, which come out with null scores and an `errors`
+    message while every healthy row still produces data.
 
-    `scorer` overrides the batch scoring callable (dependency injection
-    for fault testing; defaults to scoring.score_text_series)."""
-    import traceback
+    `scorer` overrides the batch scoring callable, `pa.Array` →
+    `pa.StructArray` (dependency injection for fault testing; defaults
+    to scoring.score_text_array)."""
+    fn = scorer or scoring.score_text_array
+    safe_type = pa.struct([*scoring.SCORE_TYPE, pa.field("errors", pa.string())])
 
-    fn = scorer or scoring.score_text_series
-    null_row = {c: None for c, _ in scoring.SCORE_COLUMNS}
+    def scored(text: pa.Array) -> pa.StructArray:
+        return pa.StructArray.from_arrays(
+            [*fn(text).flatten(), pa.nulls(len(text), pa.string())],
+            fields=list(safe_type))
 
-    @F.pandas_udf(_SCORE_SAFE_STRUCT)
-    def _safe_udf(text: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(_SCORE_SAFE_STRUCT)
+    def _safe_udf(text: pa.Array) -> pa.Array:
         try:
-            out = fn(text)
-            out["errors"] = None
-            return out
+            return scored(text)
         except Exception:
             rows = []
-            for t in text:
+            for i in range(len(text)):
                 try:
-                    r = fn(pd.Series([t]))
-                    r["errors"] = None
+                    rows.append(scored(text.slice(i, 1)))
                 except Exception as e:  # noqa: BLE001 — error-row semantics
-                    r = pd.DataFrame([{**null_row,
-                                       "errors": f"{type(e).__name__}: {e}"}])
-                rows.append(r)
-            out = pd.concat(rows, ignore_index=True)
-            out.index = text.index
-            return out
+                    rows.append(pa.array([{"errors": f"{type(e).__name__}: {e}"}],
+                                         type=safe_type))
+            return pa.concat_arrays(rows)
 
     return df.withColumn("_s", _safe_udf(F.col("text"))).select(
         *df.columns, "_s.*")

@@ -151,15 +151,16 @@ def test_dedup_decisions_end_to_end(docs_df):
 def test_score_turns_safe_error_rows(spark):
     """A15 semantics: poison rows become error rows; healthy rows in the
     same batch still score; the job never fails."""
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from curator_spark import scoring
     from curator_spark.pipeline import score_turns_safe
 
-    def poison_scorer(text: pd.Series) -> pd.DataFrame:
-        if text.str.contains("POISON").any():
+    def poison_scorer(text: pa.Array) -> pa.StructArray:
+        if pc.any(pc.match_substring(text, "POISON")).as_py():
             raise RuntimeError("scorer blew up")
-        return scoring.score_text_series(text)
+        return scoring.score_text_array(text)
 
     df = spark.createDataFrame(
         [("c1", 0, "user", "a perfectly ordinary sentence here"),

@@ -55,6 +55,20 @@ def test_pruning_through_scoring_udf(spark):
     assert "lang" not in read and "source" not in read
 
 
+def test_score_turns_sends_only_text_to_python(spark, transcripts_path):
+    """The scoring payload is ONE Arrow UDF whose only input column is
+    `text`: the bytes each turn ships to the Python worker are its text
+    and nothing else (ids, timestamps and tool payloads stay JVM-side)."""
+    import re
+    plan = plan_of(score_turns(spark.read.parquet(transcripts_path)))
+    assert plan.count("ArrowEvalPython") == 1
+    assert "BatchEvalPython" not in plan
+    udfs = re.findall(r"ArrowEvalPython \[(.*?)\], \[", plan)[0]
+    args = re.findall(r"\w+\(([^()]*)\)#\d+", udfs)
+    assert len(args) == 1
+    assert [a.split("#")[0] for a in args[0].split(", ")] == ["text"]
+
+
 def test_resume_filter_reaches_scan(spark, transcripts_path):
     from pyspark.sql import functions as F
 
